@@ -3,26 +3,17 @@
 ``entry(spark)`` runs the flagship concept-search (Q2) over the sf0.001
 documents table end-to-end (extraction -> graph -> search).
 
-``queries()``/``oracle_sql()`` cover the operator inventory of
-SURVEY.md §2 plus the training-data-pipeline operators: 59 queries —
-KG construction/search/graph algorithms (mentions, pairs, PMI,
-triples, search, evidence, neighbors, 2-hop, BFS, PageRank, connected
-components, text search), relational/event coverage (TPC-H Q1/3/5/7/9,
-windows, rollup, percentiles, sessionization, as-of/range joins,
-sliding windows, EXCEPT, JSON), and dedup/similarity/curation
-(exact/minhash/simhash/Jaccard, SRP+IVF ANN, curation funnel, KMV
-sketch, split/sample/pack, multimodal features).  Every oracle mirrors
-the Spark semantics exactly; the per-doc text is derived with an
-identical regexp_replace chain in both engines because the raw
-``documents.text`` is all-lowercase (no extraction branch would fire
-on it).  58 of 59 keys carry a DuckDB oracle — including iterative
-PageRank (10 unrolled CTE iterations), minhash/simhash (md5 hash
-family recomputed in SQL), SRP-LSH ANN/near-dup (seed-42 hyperplanes
-embedded as SQL literals) and the multimodal byte features.  The one
-remaining rows-only key is ``sim_ivf_topk`` (k-means centroid init
-uses seeded numpy RNG — not SQL-expressible); it has an EXACT numpy
-pytest oracle (tests/test_dedup_similarity.py TestIvf), as do the
-oracled keys (tests/test_rowsonly_oracles.py, test_graph_queries.py).
+``queries()`` maps each of the 108 ``kg_*`` keys to a Spark query over
+an ``sf_dir`` of parquet tables: KG construction (mentions, pairs, PMI,
+triples, SVO frames), search and retrieval (concept, text, BM25,
+hybrid, evidence, neighbors, GraphRAG local/global/drift search and
+context packs) and graph analytics (PageRank, components, communities,
+centralities, paths, embeddings).  ``oracle_sql()`` holds a DuckDB
+oracle for every key; each mirrors the Spark semantics exactly.  The
+per-doc text is derived with an identical regexp_replace chain in both
+engines because the raw ``documents.text`` is all-lowercase (no
+extraction branch would fire on it).  tests/test_beyond_window_oracles.py
+replays every key against its oracle.
 """
 
 from __future__ import annotations
@@ -38,7 +29,6 @@ from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import 
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import (
     openie,
     purecore,
-    text as tf,
 )
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import (
     canonicalize,
@@ -46,10 +36,7 @@ from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import 
     curation,
     dedup,
     graph,
-    multimodal,
-    sampling,
     scorer,
-    similarity,
 )
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import queries as q
 
@@ -97,7 +84,7 @@ def _spread(df: DataFrame) -> DataFrame:
     The sf* documents/embeddings tables are single small parquet files
     (one row group), so Spark's byte-based split packing gives the scan
     1-2 partitions and every narrow compute-bound stage downstream
-    (minhash/simhash/feature extraction) runs on 2 of N cores.  Parquet
+    (concept extraction) runs on 2 of N cores.  Parquet
     can't split below row-group granularity, so an explicit shuffle of
     the (tiny) input is the only spread.  At 100 TB the scan has
     thousands of row groups and this no-ops in spirit — the shuffle
@@ -128,8 +115,8 @@ def _enriched(spark, sf_dir):
     """One extraction pass per (session, sf_dir), shared by every kg_*
     query — staged as scratch parquet and memoized, NOT .cache():
     cached pandas-UDF-produced blocks degrade every SUBSEQUENT
-    JVM-heavy stage in the session 5-50x on this runtime (measured:
-    dd_minhash_lsh ran 22 s in a fresh session but 120-474 s after a
+    JVM-heavy stage in the session 5-50x on this runtime (measured: a
+    MinHash-LSH query ran 22 s in a fresh session but 120-474 s after a
     kg_* query had cached the 10x enriched table; staging to parquet
     removes the cross-query poisoning — the round-1 pathology,
     dedup.stage_parquet docstring)."""
@@ -174,12 +161,6 @@ def _triples(spark, sf_dir):
 
 
 STOPWORDS_SQL = ",".join(f"'{w}'" for w in sorted(purecore.STOP_WORDS))
-
-
-def _rake_stops_sql() -> str:
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import textsearch
-
-    return ",".join(f"'{w}'" for w in sorted(textsearch.RAKE_STOP_WORDS))
 
 
 def _attack_block(k: int) -> str:
@@ -318,9 +299,7 @@ _SVO_CTES = f"""svosrc AS (SELECT doc_id, lower({_svo_text_sql()}) AS t FROM doc
 svom AS ({_SVO_FRAME_SELECTS}),
 svo AS (SELECT doc_id, predicate, z[1] AS subj, z[2] AS obj FROM svom)"""
 
-# DSIR hashed unigram+bigram log-likelihood-ratio weights, shared by
-# txt_dsir_weights and dd_dsir_resample (ends with `dsw`: doc_id,
-# n_feats, logw-rounded-6dp). Inlined _nib32 expansion for md5(f).
+
 def _msf_sql(rounds: int) -> str:
     """Unrolled Borůvka maximum spanning forest: per round a recursive
     min-id reachability over the selected FOREST edges (node-bound),
@@ -476,153 +455,6 @@ col_{j} AS MATERIALIZED (
     return "".join(parts)
 
 
-# Webified documents: the deterministic web-shaped corpus transform
-# shared by txt_c4_rules / txt_readability (mirrors _webified()).
-_WEB_CTE = r"""
-WITH web AS (SELECT doc_id,
-    regexp_replace(text, '(\S+ \S+ \S+ \S+ \S+ \S+) ', '\1. ', 'g') AS s1
-  FROM documents),
-web2 AS (SELECT doc_id,
-    regexp_replace(s1, '\. ', '.' || chr(10), 'g')
-    || CASE WHEN doc_id % 5 = 0 THEN chr(10) || 'enable javascript to continue' ELSE '' END
-    || CASE WHEN doc_id % 11 = 0 THEN chr(10) || 'lorem ipsum dolor' ELSE '' END
-    || CASE WHEN doc_id % 13 = 0 THEN chr(10) || 'function() {' ELSE '' END AS text
-  FROM web),
-"""
-
-_DSIR_CTES = """tokd AS (SELECT doc_id AS id,
-        list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> length(t) > 0) AS toks
-      FROM documents),
-feat AS (SELECT id, unnest(list_concat(toks,
-        list_transform(range(1, len(toks)), i -> toks[i] || '_' || toks[i + 1]))) AS f
-      FROM tokd),
-fb AS (SELECT id, ({nib}) % 256 AS b FROM feat),
-dc AS MATERIALIZED (SELECT id, b, CAST(COUNT(*) AS BIGINT) AS c FROM fb GROUP BY id, b),
-raw AS (SELECT b, CAST(SUM(c) AS DOUBLE) AS r FROM dc GROUP BY b),
-tgt AS (SELECT fb.b, CAST(COUNT(*) AS DOUBLE) AS t FROM fb
-        JOIN documents d ON fb.id = d.doc_id WHERE d.lang = 'en' GROUP BY fb.b),
-tot AS (SELECT (SELECT SUM(r) FROM raw) AS rr, (SELECT COALESCE(SUM(t), 0) FROM tgt) AS tt),
-ratio AS (SELECT raw.b,
-        ln((COALESCE(tgt.t, 0) + 1.0) / (tot.tt + 256.0)) - ln((raw.r + 1.0) / (tot.rr + 256.0)) AS lr
-      FROM raw LEFT JOIN tgt ON raw.b = tgt.b CROSS JOIN tot),
-dsw AS MATERIALIZED (SELECT dc.id AS doc_id, CAST(SUM(dc.c) AS BIGINT) AS n_feats,
-       ROUND(SUM(dc.c * ratio.lr), 6) AS logw
-FROM dc JOIN ratio ON dc.b = ratio.b GROUP BY dc.id)"""
-
-def _bpe_oracle(n_merges: int) -> str:
-    """Unrolled BPE merge rounds: wordcount -> per-round (pair agg ->
-    1-row argmax -> list_reduce greedy fold).  The fold accumulates a
-    space-joined symbol string; "last symbol == lhs" is `acc = lhs OR
-    acc LIKE '% ' || lhs` (symbols are [a-z0-9</w>]+ so LIKE needs no
-    escaping), and merging appends rhs to the accumulator (prefix +
-    ' ' + lhs + rhs == acc || rhs).  chr(1) is the pair delimiter —
-    it cannot appear in any symbol.  s*/t* CTEs are MATERIALIZED
-    (each is referenced twice per level — the exponential-inlining
-    trap)."""
-    ctes = [
-        """w0 AS (
-  SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-    SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                  t -> length(t) > 0)) AS word FROM documents)
-  GROUP BY 1),
-s0 AS MATERIALIZED (
-  SELECT string_split(regexp_replace(word, '(.)', '\\1 ', 'g') || '</w>', ' ') AS syms, cnt
-  FROM w0)"""
-    ]
-    for r in range(1, n_merges + 1):
-        ctes.append(
-            f"""p{r} AS (
-  SELECT split_part(pr, chr(1), 1) AS lhs, split_part(pr, chr(1), 2) AS rhs,
-         CAST(SUM(cnt) AS BIGINT) AS freq
-  FROM (SELECT unnest(list_transform(range(1, len(syms)),
-               i -> syms[i] || chr(1) || syms[i + 1])) AS pr, cnt FROM s{r - 1})
-  GROUP BY 1, 2),
-t{r} AS MATERIALIZED (SELECT lhs, rhs, freq FROM p{r} ORDER BY freq DESC, lhs, rhs LIMIT 1)"""
-        )
-        if r < n_merges:
-            ctes.append(
-                f"""s{r} AS MATERIALIZED (
-  SELECT string_split(list_reduce(syms, (acc, x) -> CASE
-      WHEN (acc = t{r}.lhs OR acc LIKE '% ' || t{r}.lhs) AND x = t{r}.rhs
-      THEN acc || t{r}.rhs ELSE acc || ' ' || x END), ' ') AS syms, cnt
-  FROM s{r - 1}, t{r})"""
-            )
-    sel = "\nUNION ALL\n".join(
-        f"SELECT CAST({r} AS INT) AS merge_round, lhs, rhs, lhs || rhs AS merged, freq FROM t{r}"
-        for r in range(1, n_merges + 1)
-    )
-    return "WITH " + ",\n".join(ctes) + "\n" + sel + "\nORDER BY merge_round"
-
-
-def _bpe_encode_oracle(n_merges: int) -> str:
-    """txt_bpe_encode: the _bpe_oracle learning chain (w0/s0/p{r}/t{r}
-    with the inter-round folds), PLUS a word-keyed encode chain v0..vN
-    applying each learned merge to the VOCAB (same greedy fold), then
-    one doc-word join + per-doc sums — mirroring the engine's
-    encode-vocab-once-join-docs shape."""
-    ctes = [
-        """w0 AS (
-  SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-    SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                  t -> length(t) > 0)) AS word FROM documents)
-  GROUP BY 1),
-s0 AS MATERIALIZED (
-  SELECT string_split(regexp_replace(word, '(.)', '\\1 ', 'g') || '</w>', ' ') AS syms, cnt
-  FROM w0)"""
-    ]
-    fold = (
-        "list_reduce({src}, (acc, x) -> CASE "
-        "WHEN (acc = t{r}.lhs OR acc LIKE '% ' || t{r}.lhs) AND x = t{r}.rhs "
-        "THEN acc || t{r}.rhs ELSE acc || ' ' || x END)"
-    )
-    for r in range(1, n_merges + 1):
-        ctes.append(
-            f"""p{r} AS (
-  SELECT split_part(pr, chr(1), 1) AS lhs, split_part(pr, chr(1), 2) AS rhs,
-         CAST(SUM(cnt) AS BIGINT) AS freq
-  FROM (SELECT unnest(list_transform(range(1, len(syms)),
-               i -> syms[i] || chr(1) || syms[i + 1])) AS pr, cnt FROM s{r - 1})
-  GROUP BY 1, 2),
-t{r} AS MATERIALIZED (SELECT lhs, rhs, freq FROM p{r} ORDER BY freq DESC, lhs, rhs LIMIT 1)"""
-        )
-        if r < n_merges:
-            ctes.append(
-                f"""s{r} AS MATERIALIZED (
-  SELECT string_split({fold.format(src="syms", r=r)}, ' ') AS syms, cnt
-  FROM s{r - 1}, t{r})"""
-            )
-    ctes.append(
-        """v0 AS MATERIALIZED (
-  SELECT word, regexp_replace(word, '(.)', '\\1 ', 'g') || '</w>' AS enc FROM w0)"""
-    )
-    for r in range(1, n_merges + 1):
-        ctes.append(
-            f"""v{r} AS MATERIALIZED (
-  SELECT word, {fold.format(src="string_split(enc, ' ')", r=r)} AS enc
-  FROM v{r - 1}, t{r})"""
-        )
-    ctes.append(
-        f"""encv AS (SELECT word, CAST(len(string_split(enc, ' ')) AS BIGINT) AS n_tok,
-               CAST(length(word) + 1 AS BIGINT) AS n_init FROM v{n_merges}),
-dw AS (SELECT CAST(doc_id AS VARCHAR) AS chunk_id,
-              unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                     t -> length(t) > 0)) AS word
-       FROM documents)"""
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + """
-SELECT dw.chunk_id,
-       CAST(COUNT(*) AS BIGINT) AS n_words,
-       CAST(SUM(e.n_init) AS BIGINT) AS n_init_symbols,
-       CAST(SUM(e.n_tok) AS BIGINT) AS n_bpe_tokens,
-       ROUND(CAST(SUM(e.n_tok) AS DOUBLE) / SUM(e.n_init), 6) AS compression
-FROM dw JOIN encv e USING (word)
-GROUP BY dw.chunk_id ORDER BY dw.chunk_id"""
-    )
-
-
 def _densest_ctes(eps: float, rounds: int) -> str:
     """Unrolled Bahmani peeling over an existing ``und`` CTE: per
     round a degree agg, a 1-row stats CTE, the survivor filter
@@ -697,30 +529,6 @@ scored AS (
   FROM pairs p JOIN evid e ON p.window_id = e.chunk_id
 ),
 triples AS (SELECT * FROM scored WHERE confidence >= 0.65)"""
-
-# the MinHash md5-family chain shared by dd_minhash_lsh and
-# dd_dup_clusters (signatures -> bands -> bucket pairs -> jaccard)
-_MH_CTES = r"""d AS (SELECT doc_id, text FROM documents
-           UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 50),
-norm AS (SELECT doc_id AS id,
-                string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
-         FROM d),
-elig AS (SELECT id, toks, length(toks) AS nt FROM norm WHERE length(toks) >= 3),
-sh AS (SELECT id, array_to_string(toks[i:i+2], ' ') AS s
-       FROM elig, unnest(range(1, nt - 1)) AS t(i)),
-sig AS (SELECT id, i, MIN(md5(CAST(i AS VARCHAR) || ':' || s)) AS m
-        FROM sh CROSS JOIN range(32) hf(i) GROUP BY id, i),
-bands AS (SELECT id, i // 4 AS band, md5(string_agg(m, '|' ORDER BY i)) AS bucket
-          FROM sig GROUP BY id, i // 4),
-cand AS (SELECT DISTINCT l.id AS a_id, r.id AS b_id
-         FROM bands l JOIN bands r
-           ON l.band = r.band AND l.bucket = r.bucket AND l.id < r.id),
-est AS (SELECT c.a_id, c.b_id,
-               CAST(SUM(CASE WHEN sa.m = sb.m THEN 1 ELSE 0 END) AS DOUBLE) / 32 AS est_jaccard
-        FROM cand c
-        JOIN sig sa ON sa.id = c.a_id
-        JOIN sig sb ON sb.id = c.b_id AND sb.i = sa.i
-        GROUP BY c.a_id, c.b_id)"""
 
 
 # sampled-source hop-bounded Brandes betweenness, unrolled (mirrors
@@ -1161,73 +969,6 @@ def q_kg_pagerank_weighted(spark, sf_dir):
     return q.pagerank_und(und, iters=10, top_k=20, weight_col="w")
 
 
-def q_txt_heavy_hitters(spark, sf_dir):
-    """Count-Min heavy hitters: top-20 corpus tokens by CMS estimate
-    (width 1024 x depth 4, portable md5 hash family so the oracle
-    replays the counters bit-for-bit).  The sketch is fixed-size
-    state however large the corpus — per-day partials merge by
-    counter addition (cms_merge), the streaming-friendly heavy-hitter
-    primitive for boilerplate and viral-phrase detection at 100 TB."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import (
-        sketches,
-        textsearch,
-    )
-
-    tok = _docs(spark, sf_dir).select(
-        F.explode(textsearch.tokenize(F.col("text"))).alias("term")
-    )
-    return sketches.heavy_hitters(
-        tok, "term", k=20, width=1024, depth=4, hash_family="md5"
-    )
-
-
-def q_txt_textrank(spark, sf_dir):
-    """TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank
-    over the word co-occurrence window graph (window = 2, i.e. token
-    adjacency), stopwords and short tokens filtered — the classic
-    unsupervised keyword ranker, here reusing the engine's
-    pagerank_und verbatim on a different relation.  Top 20 keywords.
-
-    Scale shape: tokenization is a per-row HOF scan; the word graph is
-    vocabulary-bound (Zipf: edges grow sublinearly with corpus size),
-    so the iteration cost is independent of document count."""
-    docs = _docs(spark, sf_dir)
-    # size >= 2 gate BEFORE sequence(1, size-1): Spark infers step -1
-    # when start > stop, so sequence(1, 0) is [1, 0] (not empty) and
-    # toks[-1]/toks[1] would go out of bounds on 1-token docs
-    toks = docs.select(
-        F.split(
-            F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
-        ).alias("toks")
-    ).where(F.size("toks") >= 2)
-    pairs = (
-        toks.select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1),"
-                    " i -> struct(toks[i - 1] AS w1, toks[i] AS w2))"
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .where(
-            F.col("w1").rlike("^[a-z]{3,}$")
-            & F.col("w2").rlike("^[a-z]{3,}$")
-            & (F.col("w1") != F.col("w2"))
-            & ~F.col("w1").isin(*sorted(purecore.STOP_WORDS))
-            & ~F.col("w2").isin(*sorted(purecore.STOP_WORDS))
-        )
-        .select(
-            F.least("w1", "w2").alias("a"), F.greatest("w1", "w2").alias("b")
-        )
-        .distinct()
-    )
-    und = pairs.select(
-        F.col("a").alias("cid"), F.col("b").alias("nbr_id")
-    ).unionByName(pairs.select(F.col("b").alias("cid"), F.col("a").alias("nbr_id")))
-    return q.pagerank_und(und, iters=10, top_k=20)
-
-
 def q_kg_independent_set(spark, sf_dir):
     """Luby maximal independent set over the co-occurrence graph
     (static md5 priorities == the lexicographically-first / greedy
@@ -1556,313 +1297,6 @@ def q_kg_local_search(spark, sf_dir):
     )
 
 
-# -- relational coverage ------------------------------------------------------
-
-def q_rel_tpch_q1(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.where(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))), 2
-            ).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def q_rel_tpch_q3(spark, sf_dir):
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        cust.where(F.col("c_mktsegment") == "BUILDING")
-        .join(orders, F.col("c_custkey") == F.col("o_custkey"))
-        .where(F.col("o_orderdate") < "1995-03-15")
-        .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .where(F.col("l_shipdate") > "1995-03-15")
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
-
-
-def q_rel_tpch_q5(spark, sf_dir):
-    """TPC-H Q5 shape: 6-table join, broadcast dims (region/nation are
-    tiny — Catalyst broadcasts under the 64 MB threshold), shuffle only
-    on the orders/lineitem keys."""
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    return (
-        region.where(F.col("r_name") == "ASIA")
-        .join(nation, F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(cust, F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(orders, F.col("o_custkey") == F.col("c_custkey"))
-        .where(
-            (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
-        )
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            supp,
-            (F.col("s_suppkey") == F.col("l_suppkey"))
-            & (F.col("s_nationkey") == F.col("c_nationkey")),
-        )
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            )
-        )
-        .orderBy(F.desc("revenue"), "n_name")
-    )
-
-
-def q_rel_tpch_q9(spark, sf_dir):
-    """TPC-H Q9 shape: part-filtered 6-table join + year rollup."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    return (
-        part.where(F.col("p_name").contains("blue"))
-        .join(li, F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(nation, F.col("n_nationkey") == F.col("s_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("long").alias("o_year"),
-        )
-        # decimal accumulation: double SUMs differ from DuckDB in the
-        # last ulp and ROUND(...,2) flips a cent; decimal is exact
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice").cast("decimal(18,4)")
-                    * (F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)"))
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("amount")
-        )
-        .orderBy("nation", F.desc("o_year"))
-    )
-
-
-def q_rel_top3_per_group(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("event_type").orderBy(F.desc("value"), "event_id")
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .select("event_type", "event_id", F.round("value", 6).alias("value"), "rn")
-        .orderBy("event_type", "rn")
-    )
-
-
-def q_rel_sessionize(spark, sf_dir):
-    """Event-time sessionization (30-min gap) + per-session rollup."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.session_stats(e, gap_seconds=1800).orderBy("user_id", "session_id")
-
-
-def q_rel_asof_join(spark, sf_dir):
-    """Backward as-of join: each purchase gets the latest prior click's
-    value for the same user (union+window shape, no range join)."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    left = e.where(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    right = e.where(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("value").alias("click_value")
-    )
-    return ev.asof_join(
-        left, right, key_col="user_id", right_value_cols=["click_value"]
-    ).orderBy("event_id").select(
-        "event_id", "user_id", "ts", "right_ts",
-        F.round("right_click_value", 6).alias("click_value"),
-    )
-
-
-def q_rel_tumbling_window(spark, sf_dir):
-    """Hourly tumbling-window rollup per event type."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.tumbling_rollup(e, 3600, group_cols=["event_type"]).orderBy(
-        "window_start", "event_type"
-    )
-
-
-def q_rel_event_histogram(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy("event_type").agg(F.count("*").alias("cnt")).orderBy(
-        F.desc("cnt"), "event_type"
-    )
-
-
-def q_rel_tpch_q7(spark, sf_dir):
-    """TPC-H Q7 shape: supplier-nation x customer-nation volume by
-    year — 6-table join with BOTH nation sides broadcast (tiny dims)
-    and the symmetric nation-pair predicate."""
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    n1 = nation.select(F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation"))
-    n2 = nation.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation"))
-    pair = (F.col("supp_nation") < F.col("cust_nation"))
-    return (
-        li.join(supp, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(cust, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n1), F.col("n1_key") == F.col("s_nationkey"))
-        .join(F.broadcast(n2), F.col("n2_key") == F.col("c_nationkey"))
-        .where(pair)
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year"))
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice").cast("decimal(18,4)")
-                    * (F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)"))
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("volume")
-        )
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
-def q_rel_json_extract(spark, sf_dir):
-    """JSON column processing (S4-adjacent): parse events.props with
-    an explicit schema (corrupt rows -> null struct, dropped — the
-    drop-don't-fail contract), aggregate the extracted field."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    parsed = e.select(
-        "event_type", F.from_json("props", "k INT").alias("p")
-    ).where(F.col("p").isNotNull() & F.col("p.k").isNotNull())
-    return (
-        parsed.groupBy("event_type")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col("p.k").cast("long")).alias("sum_k"),
-            F.min("p.k").alias("min_k"),
-            F.max("p.k").alias("max_k"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def q_rel_sliding_window(spark, sf_dir):
-    """Sliding-window rollup (60 s window, 30 s slide) per event type:
-    each event lands in window/slide overlapping windows."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.sliding_rollup(
-        e, window_seconds=60, slide_seconds=30, group_cols=["event_type"]
-    ).orderBy("window_start", "event_type")
-
-
-def q_rel_except(spark, sf_dir):
-    """Set-operator coverage: users with events but no high-value
-    purchase (EXCEPT DISTINCT) — the anti-join-as-set-op formulation."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    all_u = e.select("user_id")
-    big_buyers = e.where(
-        (F.col("event_type") == "purchase") & (F.col("value") > 90)
-    ).select("user_id")
-    # subtract = EXCEPT DISTINCT (exceptAll would keep multiset
-    # remainders — users with more events than purchases)
-    return all_u.subtract(big_buyers).orderBy("user_id")
-
-
-def q_rel_range_join(spark, sf_dir):
-    """Point-in-interval range join: per-user maintenance windows
-    (deterministic synthetic intervals derived from the events table)
-    matched to the events falling inside them.  The bucketed
-    equi-join composition — never a nested-loop — with the oracle as
-    a plain BETWEEN join."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # one interval per user: [min_ts + 10%, min_ts + 40%] of their span
-    span = e.groupBy("user_id").agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"))
-    # integer µs division (`div`): (lo*9+hi)/10 in double space exceeds
-    # 2^53 and the last-ulp floor could differ from DuckDB's
-    iv = span.select(
-        "user_id",
-        F.timestamp_micros(
-            F.expr("(unix_micros(cast(lo as timestamp)) * 9 + unix_micros(cast(hi as timestamp))) div 10")
-        ).cast("timestamp_ntz").alias("start_ts"),
-        F.timestamp_micros(
-            F.expr("(unix_micros(cast(lo as timestamp)) * 6 + unix_micros(cast(hi as timestamp)) * 4) div 10")
-        ).cast("timestamp_ntz").alias("end_ts"),
-    )
-    joined = ev.range_join(
-        e.select("event_id", "ts", "user_id"), iv, key_col="user_id", bucket_seconds=600
-    )
-    return joined.groupBy("user_id").agg(
-        F.count("*").alias("n_in_window")
-    ).orderBy("user_id")
-
-
-def q_rel_percentile(spark, sf_dir):
-    """Exact interpolated percentiles per group — the sort-based
-    aggregate path (hash aggregation can't buffer an exact percentile;
-    at 100 TB prefer the KMV/k-min sketches or approx_percentile, this
-    is the exact baseline)."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        e.groupBy("event_type")
-        .agg(
-            F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-            F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90"),
-            F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def q_rel_rollup(spark, sf_dir):
-    """GROUP BY ROLLUP(event_type, cohort): per-group rows, per-type
-    subtotals, grand total — the grouping-sets surface the reference
-    lacks.  Sums accumulate in decimal so both engines round the same
-    value (double-sum low bits are partition-order dependent)."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", F.pmod("user_id", F.lit(10)).alias("cohort"),
-        F.col("value").cast("decimal(20,6)").alias("dval"),
-    )
-    return (
-        e.rollup("event_type", "cohort")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.round(F.sum("dval"), 4).cast("double").alias("sum_value"),
-        )
-        .orderBy(F.col("event_type").asc_nulls_first(), F.col("cohort").asc_nulls_first())
-    )
-
-
 def q_kg_source_overlap(spark, sf_dir):
     """Inter-source shared-concept graph (mirror-farm detection at
     domain granularity): source pairs ranked by distinct shared
@@ -1875,397 +1309,6 @@ def q_kg_source_overlap(spark, sf_dir):
     return curation.source_overlap(
         _mentions(spark, sf_dir), d, max_spread=12, min_shared=2, top_k=50
     )
-
-
-def q_rel_cube(spark, sf_dir):
-    """GROUP BY CUBE(event_type, cohort): every grouping-set
-    combination incl. the per-cohort cross subtotals ROLLUP cannot
-    express; an explicit grouping bitmask (2*g(type) + g(cohort))
-    disambiguates NULL-as-rollup from NULL-as-value.  Sums accumulate
-    in decimal so both engines round the same value."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", F.pmod("user_id", F.lit(10)).alias("cohort"),
-        F.col("value").cast("decimal(20,6)").alias("dval"),
-    )
-    return (
-        e.cube("event_type", "cohort")
-        .agg(
-            (F.grouping("event_type") * 2 + F.grouping("cohort"))
-            .cast("long")
-            .alias("gid"),
-            F.count("*").alias("cnt"),
-            F.round(F.sum("dval"), 4).cast("double").alias("sum_value"),
-        )
-        .orderBy(
-            "gid",
-            F.col("event_type").asc_nulls_first(),
-            F.col("cohort").asc_nulls_first(),
-        )
-    )
-
-
-def q_rel_null_audit(spark, sf_dir):
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.chunks import null_audit
-
-    d = _docs(spark, sf_dir).select(
-        F.when(F.col("lang") == "de", None).otherwise(F.col("lang")).alias("lang"),
-        F.when(F.col("n_chars") < 100, None).otherwise(F.col("n_chars")).alias("n_chars"),
-        "source",
-    )
-    return null_audit(d, ["lang", "n_chars", "source"])
-
-
-def q_rel_coalesce_projection(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        F.coalesce(F.when(F.col("lang") == "de", None).otherwise(F.col("lang")), F.col("source")).alias(
-            "source_uri"
-        ),
-    ).orderBy("doc_id")
-
-
-def q_rel_evidence_truncation(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", F.substring("text", 1, 500).alias("evidence")).orderBy("doc_id")
-
-
-# -- training-data ops --------------------------------------------------------
-
-def _docs_with_dups(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return d.unionByName(
-        d.where(F.col("doc_id") < 50).withColumn("doc_id", F.col("doc_id") + 1000000)
-    )
-
-
-def q_dd_exact(spark, sf_dir):
-    return dedup.exact_duplicates(_docs_with_dups(spark, sf_dir)).orderBy("text_hash")
-
-
-def q_dd_fingerprint(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", tf.fingerprint(F.col("text")).alias("fp")).orderBy("doc_id")
-
-
-def q_dd_containment(spark, sf_dir):
-    """Directed shingle containment (the asymmetric relation Jaccard
-    misses): the corpus plus a 40%-prefix fragment of each doc_id < 25
-    document — every fragment is contained (C = 1.0) in its source
-    while the source is NOT contained in the fragment, plus the
-    mutual 1.0 pairs from the planted exact-dup families."""
-    d = _docs(spark, sf_dir)
-    toks = F.filter(F.split(F.trim("text"), r"\s+"), lambda t: F.length(t) > 0)
-    frags = d.where(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + F.lit(2000000)).alias("doc_id"),
-        F.array_join(
-            F.slice(
-                toks,
-                1,
-                F.greatest(F.floor(F.size(toks) * 0.4), F.lit(2)).cast("int"),
-            ),
-            " ",
-        ).alias("text"),
-    )
-    corpus = d.select("doc_id", "text").unionByName(frags)
-    return dedup.containment_pairs(corpus, threshold=0.9, shingle_n=2)
-
-
-def q_txt_source_curation(spark, sf_dir):
-    """Domain-level curation accounting (C4/RefinedWeb-style: judge
-    the SOURCE): per-source doc counts, token mass, mean quality,
-    corpus-wide exact-dup rate, language purity, and the kept verdict
-    under (dup_rate <= 0.2, lang_rate >= 0.4) — over the corpus with
-    planted duplicates so the dup gate actually splits sources."""
-    return curation.source_stats(
-        _docs_with_dups(spark, sf_dir),
-        lang_col="lang",
-        max_dup_rate=0.2,
-        min_lang_rate=0.4,
-    )
-
-
-def q_dd_ngram_jaccard(spark, sf_dir):
-    """Production shape: minhash-LSH candidates -> exact Jaccard verify.
-    Output equals the brute-force oracle because the corpus has no
-    borderline pairs: planted dups are J=1.0 (LSH recall 1.0 at J=1),
-    and unrelated docs sit near J~=0.07, far under the 0.5 threshold.
-    (The prefix-filtered exact path, ngram_jaccard_prefix_candidates,
-    is the default for real corpora; this synthetic corpus's ~30-word
-    vocabulary makes every shared-token blocking quadratic.)"""
-    d = _docs_with_dups(spark, sf_dir)
-    # stage the (id, 24-long) signature table as scratch parquet: the
-    # LSH self-join references it twice and would recompute the
-    # shingle+hash pass per branch otherwise (no automatic common-
-    # subtree reuse); parquet staging, not cache() — see
-    # dedup.stage_parquet for the measured BlockManager pathology
-    sigs = dedup.stage_parquet(
-        dedup.minhash_signatures(d, shingle_n=2, num_hashes=24), "ngj_sigs"
-    )
-    cands = dedup.minhash_lsh_candidates(sigs, bands=8, rows_per_band=3)
-    return dedup.ngram_jaccard_pairs(
-        d, threshold=0.5, shingle_n=2, candidates=cands
-    ).orderBy("a_id", "b_id")
-
-
-def q_dd_curation(spark, sf_dir):
-    """Corpus curation (length+quality+lang gates, exact dedup) over
-    the documents table with planted duplicates — the kept set."""
-    return curation.curate_corpus(_docs_with_dups(spark, sf_dir)).orderBy("id")
-
-
-def q_dd_curation_funnel(spark, sf_dir):
-    """Single-pass per-gate survivor counts for the same curation."""
-    return curation.curation_funnel(_docs_with_dups(spark, sf_dir))
-
-
-def q_dd_split(spark, sf_dir):
-    """Deterministic train/val/test assignment by md5-prefix bucket of
-    the key — membership is a pure function of the row, so reruns and
-    incremental batches agree (df.sample() cannot give that)."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    return sampling.split_by_hash(d).orderBy("doc_id")
-
-
-def q_dd_pack(spark, sf_dir):
-    """Sequence packing: contiguous docs (doc_id order) share a bin
-    while the exclusive running token sum stays inside the budget —
-    the streaming-concat batch shaping LLM pretraining uses."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", tf.token_count(F.col("text")).alias("n_tokens")
-    )
-    return sampling.pack_sequences(d, budget_tokens=512).orderBy("doc_id")
-
-
-def q_dd_pack_concat(spark, sf_dir):
-    """Materialized packed training rows: concatenated text per token
-    bin with member-id boundary metadata.  ``member_ids`` is emitted
-    comma-joined (the array itself is pytest-pinned in TestSampling —
-    the driver's canonicalizer hashes scalar columns only)."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", "text", tf.token_count(F.col("text")).alias("n_tokens")
-    )
-    return (
-        sampling.pack_concat(d, budget_tokens=512)
-        .select(
-            "bin_id",
-            "packed_text",
-            F.array_join(
-                F.transform("member_ids", lambda x: x.cast("string")), ","
-            ).alias("member_ids"),
-            F.col("total_tokens").cast("long").alias("total_tokens"),
-        )
-        .orderBy("bin_id")
-    )
-
-
-def q_dd_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: training docs sharing any 8-gram
-    with a deterministic held-out 'eval set' (doc_id % 97 == 0) —
-    planted duplicates of eval docs and the eval docs themselves get
-    flagged with their distinct-overlap counts."""
-    d = _docs_with_dups(spark, sf_dir)
-    bench = _docs(spark, sf_dir).where(F.col("doc_id") % 97 == 0)
-    return dedup.decontaminate(d, bench, shingle_n=8).orderBy("id")
-
-
-def q_dd_mixture_sample(spark, sf_dir):
-    """Deterministic domain-mixture sampling: per-source keep rates
-    (md5-threshold rule, rerun/backfill stable) — the mixture knob of
-    a training-data pipeline."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-    d = _docs(spark, sf_dir).select("doc_id", "source")
-    return sampling.stratified_sample_by_hash(
-        d, {"src0": 1.0, "src1": 0.5, "src2": 0.25}, default_rate=0.1
-    ).orderBy("doc_id")
-
-
-def q_dd_quality_mixture(spark, sf_dir):
-    """Quality-curriculum mixture: exact unigram-LM score terciles
-    (rank-statistic cuts, no interpolated percentiles) with
-    deterministic per-tercile keep rates — keep 10% of the worst
-    documents, half the middle, all of the best."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import (
-        sampling,
-        textsearch,
-    )
-
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("chunk_id"), "text"
-    )
-    s = textsearch.unigram_logprob(d).select("chunk_id", "avg_logprob")
-    kept = sampling.quantile_bucket_sample(
-        s, "avg_logprob", rates=[0.1, 0.5, 1.0], key_col="chunk_id"
-    )
-    return kept.select("chunk_id", "quality_bucket", "avg_logprob").orderBy(
-        "chunk_id"
-    )
-
-
-def q_dd_training_export(spark, sf_dir):
-    """The whole training-data prep chain composed end-to-end:
-    curate (quality/lang gates + dedup) -> deterministic train split
-    -> token-budget sequence packing -> per-bin manifest.  One oracle
-    pins the composition, not just the pieces."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import (
-        curation,
-        sampling,
-    )
-
-    kept = curation.curate_corpus(_docs_with_dups(spark, sf_dir))
-    train = sampling.split_by_hash(kept, key_col="id").where(F.col("split") == "train")
-    packed = sampling.pack_sequences(
-        train, budget_tokens=1024, token_col="n_tokens", order_col="id"
-    )
-    return (
-        packed.groupBy("bin_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("total_tokens"),
-            F.min("id").alias("first_id"),
-        )
-        .orderBy("bin_id")
-    )
-
-
-def q_dd_kmv_distinct(spark, sf_dir):
-    """KMV distinct-count sketch per source.  With per-group distinct
-    text counts below k the sketch IS the distinct set, so the
-    estimate is exact and DuckDB's COUNT(DISTINCT) oracles it; the
-    estimate regime (distinct >> k) is bound-checked in
-    tests/test_sketches.py."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sketches
-
-    sk = sketches.kmv_sketch(_docs(spark, sf_dir), "text", group_cols=["source"], k=2048)
-    return (
-        sketches.kmv_estimate(sk, k=2048)
-        .select("source", F.col("distinct_est").cast("long").alias("distinct_texts"))
-        .orderBy("source")
-    )
-
-
-def q_dd_embed_near_dup(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    return similarity.embedding_near_dups(emb, threshold=0.30, group_col="label").orderBy(
-        "a_id", "b_id"
-    )
-
-
-def q_dd_embed_near_dup_srp(spark, sf_dir):
-    """The PRODUCTION default path of embedding near-dup: SRP-LSH
-    bucket co-membership candidates + exact cosine verify (no group
-    bound).  The oracle replays the full path — the seed-42 hyperplanes
-    are embedded as SQL literals, so DuckDB recomputes the sign bits,
-    band buckets, candidate pairs and verification identically."""
-    emb = _emb(spark, sf_dir)
-    return similarity.embedding_near_dups(emb, threshold=0.30, dim=64).orderBy(
-        "a_id", "b_id"
-    )
-
-
-def q_sim_bruteforce_topk(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    qv = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    return similarity.brute_force_topk(emb, list(qv), k=10)
-
-
-def q_sim_quantized_topk(spark, sf_dir):
-    """int8-quantized brute-force cosine top-10 (4x smaller scans; the
-    per-vector scales cancel, so the score is an integer dot over
-    integer norms — bit-identical across engines by construction)."""
-    emb = _emb(spark, sf_dir)
-    qv = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    return similarity.quantized_topk(emb, list(qv), k=10)
-
-
-def q_sim_quantized_ann(spark, sf_dir):
-    """The COMPOSED quantized-ANN path (VERDICT r4 weak-lite #2
-    closed): SRP bucket pruning (seed-42 hyperplanes, 16 planes / 4
-    bands) picks the candidate set, then the int8 integer re-rank
-    scores only those — the production shape materializes
-    similarity.build_quantized_index PARTITIONED BY (band, bucket)
-    once and queries it without ever touching float embeddings
-    (pytest TestQuantizedAnn pins prebuilt==inline + partition
-    pruning); built inline here so DuckDB can replay the whole path
-    from the raw table."""
-    emb = _emb(spark, sf_dir)
-    qv = list(emb.where(F.col("vec_id") == 0).collect()[0]["embedding"])
-    return similarity.quantized_ann_topk(emb, qv, dim=64, k=10)
-
-
-def q_txt_stats(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    feats = tf.quality_features(F.col("text"))
-    return d.select(
-        "doc_id",
-        tf.token_count(F.col("text")).alias("token_count"),
-        tf.bpe_ish_token_count(F.col("text")).alias("bpe_tokens"),
-        tf.lang_id(F.col("text")).alias("lang_pred"),
-        F.round(feats["punct_ratio"], 6).alias("punct_ratio"),
-        F.round(feats["stop_ratio"], 6).alias("stop_ratio"),
-        F.round(feats["quality_score"], 6).alias("quality_score"),
-    ).orderBy("doc_id")
-
-
-def q_txt_repetition(spark, sf_dir):
-    """Gopher-style repetition features: duplicate-line fraction +
-    dominant-bigram character mass per document."""
-    d = _docs(spark, sf_dir)
-    return tf.repetition_report(d, "doc_id", "text").withColumnRenamed(
-        "id", "doc_id"
-    )
-
-
-def q_txt_pii_scrub(spark, sf_dir):
-    """PII audit + redaction.  The synthetic corpus carries no PII, so
-    the query plants a deterministic contact line per document (email
-    + IPv4 + intl phone derived from doc_id) before scrubbing — the
-    redaction path is exercised on every row; the oracle plants the
-    identical line."""
-    d = _docs(spark, sf_dir)
-    planted = F.concat(
-        F.col("text"),
-        F.lit(" contact: user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com at 10.0."),
-        (F.col("doc_id") % 256).cast("string"),
-        F.lit(".7 or +1 555-01"),
-        F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0"),
-    )
-    counts = tf.pii_counts(planted)
-    return d.select(
-        "doc_id",
-        counts["n_email"].alias("n_email"),
-        counts["n_phone"].alias("n_phone"),
-        counts["n_ipv4"].alias("n_ipv4"),
-        F.md5(tf.scrub_pii(planted)).alias("scrub_md5"),
-    ).orderBy("doc_id")
-
-
-def q_txt_entropy(spark, sf_dir):
-    """Per-document character-entropy (bits) — gibberish/boilerplate
-    quality signal complementing the repetition filters."""
-    return tf.char_entropy_report(_docs(spark, sf_dir)).withColumnRenamed(
-        "id", "doc_id"
-    )
-
-
-def q_dd_window_chunks(spark, sf_dir):
-    """Overlapping token-window chunker (window 64, overlap 16) over
-    the document corpus — long-doc splitting for training-sequence
-    prep / RAG indexing; runs map-side inside the scan stage."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.sampling import (
-        window_chunks,
-    )
-
-    return window_chunks(_docs(spark, sf_dir), window=64, overlap=16)
 
 
 def q_kg_int_encode(spark, sf_dir):
@@ -2297,53 +1340,6 @@ def q_kg_adamic_adar(spark, sf_dir):
     non-adjacent distance-2 concept pairs — the degree-discounted
     upgrade of kg_related_concepts' common-neighbor/Jaccard ranking."""
     return q.adamic_adar(_kg_cooccur_und(spark, sf_dir), top_k=20, min_common=2)
-
-
-def q_dd_url_dedup(spark, sf_dir):
-    """URL-level dedup ahead of content dedup: canonicalize crawl
-    URLs (case/www/default-port/tracking-params/param-order/fragment/
-    trailing-slash) and keep the latest crawl per canonical URL.
-    Messy URLs are synthesized deterministically from doc_id — seven
-    spelling variants per page group, four of which must merge and
-    three of which (http scheme, extra real param, param subset) must
-    NOT — so the oracle checks both directions of the canonicalizer.
-    Pure Catalyst (weburl.canonicalize_url is Java∩RE2 regex only; no
-    UDFs); only (canonical_url, ts, url) triples shuffle."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import weburl
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    g = (F.col("doc_id") % 20).cast("string")
-    v = F.col("doc_id") % 7
-    url = (
-        F.when(v == 0, F.concat(F.lit("https://Example.COM/cat/"), g, F.lit("?a=1&b=2")))
-        .when(v == 1, F.concat(F.lit("https://www.example.com/cat/"), g, F.lit("/?b=2&a=1")))
-        .when(
-            v == 2,
-            F.concat(
-                F.lit("https://example.com:443/cat/"),
-                g,
-                F.lit("?utm_source=feed&a=1&b=2#frag"),
-            ),
-        )
-        .when(
-            v == 3,
-            F.concat(F.lit("https://EXAMPLE.com/cat/"), g, F.lit("?b=2&utm_campaign=x&a=1")),
-        )
-        .when(v == 4, F.concat(F.lit("http://example.com/cat/"), g, F.lit("?a=1&b=2")))
-        .when(v == 5, F.concat(F.lit("https://example.com/cat/"), g, F.lit("?a=1&b=2&c=3")))
-        .otherwise(F.concat(F.lit("https://example.com/cat/"), g))
-    )
-    pages = d.select(
-        "doc_id",
-        url.alias("url"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("doc_id")).alias("warc_ts"),
-    )
-    out = weburl.dedup_by_canonical_url(pages)
-    return out.select(
-        "canonical_url",
-        "n_dups",
-        F.col("doc_id").alias("survivor_id"),
-    ).orderBy("canonical_url")
 
 
 def q_kg_link_prediction(spark, sf_dir):
@@ -2430,8 +1426,8 @@ def q_kg_graph_growth(spark, sf_dir):
     dashboard an INCREMENTAL crawl pipeline watches: a bend in the
     new-node curve is a crawl-frontier change, a densification jump is
     a template/boilerplate source flooding the graph.  Crawl hour is
-    derived from the deterministic warc_ts ramp (epoch + doc_id, the
-    dd_url_dedup convention); the 60 s bucket width is a literal in
+    derived from the deterministic warc_ts ramp (epoch + doc_id); the
+    60 s bucket width is a literal in
     the query — widen to hours/days at production crawl rates, the
     plan shape is identical.
 
@@ -2547,25 +1543,6 @@ def q_kg_ego_subgraph(spark, sf_dir):
     )
 
 
-def q_rel_window_funnel(spark, sf_dir):
-    """Ordered 3-stage funnel (view -> click -> purchase within 1 h of
-    the view anchor), ClickHouse windowFunnel semantics."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.window_funnel(e, ["view", "click", "purchase"], "INTERVAL 1 HOUR")
-
-
-def q_rel_markov_transitions(spark, sf_dir):
-    """First-order Markov transition matrix over per-user event
-    sequences (LAG per user ordered by ts with event_id tie-break),
-    counts + row-normalized probabilities."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.markov_transitions(e)
-
-
 def q_kg_fastrp_neighbors(spark, sf_dir):
     """Structurally-similar entities: cosine top-5 per PPR seed over
     the 6-dp-rounded FastRP embedding relation — the graph-ML
@@ -2652,26 +1629,6 @@ def q_kg_context_pack(spark, sf_dir):
     )
 
 
-def q_rel_zscore_outliers(spark, sf_dir):
-    """Per-event-type z-score anomaly sweep: events > 2.5 sample
-    standard deviations from their type's mean value.  The |types|-row
-    stats table broadcasts; the event stream never shuffles."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.zscore_outliers(e, threshold=2.5)
-
-
-def q_rel_stickiness(spark, sf_dir):
-    """DAU / trailing-7-day-WAU stickiness per day — rolling DISTINCT
-    computed exactly by exploding each (day, user) fact onto the 7
-    days it supports (x7 narrow fan-out, no per-day re-scan)."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.stickiness(e, window_days=7)
-
-
 def q_kg_peripheral_concepts(spark, sf_dir):
     """KG cleanup review queue: the 25 weakest-attached concepts
     (lowest distinct-neighbor degree, mention counts attached) plus
@@ -2723,113 +1680,6 @@ def q_kg_typed_degrees(spark, sf_dir):
     return q.typed_degrees(_triples(spark, sf_dir))
 
 
-def q_txt_ngram_coverage(spark, sf_dir):
-    """Reference n-gram coverage (decontamination's mirror): how much
-    of each reference doc's 8-gram content the corpus already covers —
-    the domain-gap probe.  The corpus replaces each reference doc with
-    its FIRST-HALF truncation (deterministic), so per-doc coverage
-    lands strictly between 0 and 1 and the join paths are exercised."""
-    ref = _docs(spark, sf_dir).where(F.col("doc_id") % 97 == 0)
-    toks = F.split(F.col("text"), " ")
-    half = F.concat_ws(" ", F.slice(toks, 1, (F.size(toks) / 2).cast("int")))
-    corpus = (
-        _docs(spark, sf_dir)
-        .where(F.col("doc_id") % 97 != 0)
-        .select("doc_id", "text")
-        .unionByName(
-            ref.select(
-                (F.col("doc_id") + 2000000).alias("doc_id"), half.alias("text")
-            )
-        )
-    )
-    return dedup.ngram_coverage(ref, corpus, shingle_n=8)
-
-
-def q_rel_gini(spark, sf_dir):
-    """Per-event-type Gini concentration of value — the one-number
-    inequality diagnostic (histogram and z-score views don't expose
-    concentration directly).  Sorted-rank identity, left-to-right
-    folds in both engines."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.gini_concentration(e)
-
-
-def q_mm_tile_stats(spark, sf_dir):
-    """Fixed-size byte tiling with per-tile sha256 + mean — sub-asset
-    fingerprints for segment-level media dedup/diff.  mapInPandas
-    (Arrow-bounded), short last tile, no padding; oracle rebuilds each
-    tile from codepoints (payloads are ASCII text encodings)."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import multimodal
-
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-    return multimodal.tile_stats(d, tile_bytes=64)
-
-
-def q_rel_time_to_convert(spark, sf_dir):
-    """Conversion-latency distribution per signup cohort: first event
-    -> first purchase, exact avg/median/p90 seconds + conversion rate
-    per first-seen day.  One user-keyed aggregate (two conditional
-    MINs) is the only corpus-scale shuffle."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.time_to_convert(e, conversion_type="purchase")
-
-
-def q_dd_host_budget(spark, sf_dir):
-    """Per-host page budget (crawl politeness / anti-domination): keep
-    the best 10 pages per source by round-6 quality with doc-id
-    tie-break — the cap that stops one mega-host from dominating a
-    training mix; applied between per-page gates and mixture
-    sampling."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-    return curation.host_budget(_docs(spark, sf_dir), budget=10)
-
-
-def q_sim_knn_graph(spark, sf_dir):
-    """Batch directed k-NN graph (k=5) over SRP-LSH bucket candidates
-    with exact cosine re-rank — the materialize-the-whole-neighbor-
-    graph shape behind embedding clustering / SemDeDup pruning, vs
-    the one-query-at-a-time ANN path."""
-    return similarity.knn_graph(_emb(spark, sf_dir), dim=64, k=5)
-
-
-def q_txt_bpe_encode(spark, sf_dir):
-    """Per-document tokenization cost under the corpus's own learned
-    BPE (5 merges): BPE token counts + compression over raw character
-    symbols — the fertility statistic context-window budgeting and
-    tokenizer-drift alarms key on.  Encode runs over the VOCAB once;
-    documents get costs back via one word equi-join."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import tokenizer
-
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("chunk_id"), "text"
-    )
-    return tokenizer.bpe_encode_stats(
-        d,
-        n_merges=5,
-        id_col="chunk_id",
-        merges=[(lhs, rhs) for _, lhs, rhs, _, _ in _bpe5_rows(spark, sf_dir)],
-    )
-
-
-def q_rel_seasonal_baseline(spark, sf_dir):
-    """Hour-of-day seasonal anomaly sweep: (type, date, hour) buckets
-    exceeding 2x their same-hour cross-day baseline; the baseline
-    divides slot totals by the stream's DAY SPAN so silent hours count
-    as zeros (absent-bucket bias avoided)."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.seasonal_anomalies(e, factor=2.0)
-
-
 def q_kg_spam_mass(spark, sf_dir):
     """TrustRank spam mass (Gyongyi et al. VLDB 2004): uniform-teleport
     PageRank vs trusted-seed TrustRank over the same co-occurrence
@@ -2839,31 +1689,6 @@ def q_kg_spam_mass(spark, sf_dir):
     return q.spam_mass(
         _kg_cooccur_und(spark, sf_dir), trusted_seeds=_ppr_seeds(), iters=10
     )
-
-
-def q_txt_source_boilerplate(spark, sf_dir):
-    """Per-source boilerplate profile (the deployable, per-domain form
-    of CCNet line dedup).  The synthetic corpus is single-line, so the
-    query plants the deterministic banner structure a real crawl has:
-    two per-source banners on every page (df 100%) and a newsletter
-    line on doc_id%3==0 pages (df ~33% — straddling the 30% threshold)
-    ahead of the unique body; the oracle plants identically."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-    d = _docs(spark, sf_dir)
-    planted = d.withColumn(
-        "text",
-        F.concat(
-            F.lit("cookie notice "), F.col("source"), F.lit(" accept terms\n"),
-            F.lit("follow us on social media\n"),
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(F.lit("subscribe to "), F.col("source"), F.lit(" newsletter\n")),
-            ).otherwise(F.lit("")),
-            F.col("text"),
-        ),
-    )
-    return curation.source_boilerplate(planted, min_frac=0.3, min_docs=2)
 
 
 def q_kg_related_chunks(spark, sf_dir):
@@ -2894,18 +1719,6 @@ def q_kg_dag_paths(spark, sf_dir):
     return q.dag_path_counts(_isa_edges(spark, sf_dir), max_depth=4)
 
 
-def q_rel_histogram(spark, sf_dir):
-    """Per-event-type equi-width value histogram (10 buckets over the
-    type's [min, max], clamped top bucket) — the distribution-shape
-    profile the mean/stddev (rel_zscore) and t-digest quantile
-    (rel_quantile_sketch) views can't show: bimodality, clipping,
-    heaping.  Bounds broadcast; the stream shuffles zero times."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.value_histogram(e, k=10)
-
-
 def q_kg_graph_sparsify(spark, sf_dir):
     """Degree-aware edge sparsification (Spielman-Srivastava shape,
     1/sqrt(da*db) resistance proxy): keep p = min(1, 4/sqrt(da*db)),
@@ -2913,48 +1726,6 @@ def q_kg_graph_sparsify(spark, sf_dir):
     edge count; the pre-pass that makes iterative graph families
     affordable at web scale.  Deterministic md5 coin per edge."""
     return q.sparsify_edges(_kg_cooccur_und(spark, sf_dir), c=4.0)
-
-
-def q_txt_source_drift(spark, sf_dir):
-    """Per-source unigram KL divergence from the corpus LM over a
-    coarsened top-256+<other> alphabet — the domain-drift curation
-    axis (spam/boilerplate/wrong-language sources sit far from the
-    corpus).  Unseen-term smoothing folded to a closed form from
-    per-source aggregates + two corpus scalars: no source-x-vocab
-    grid ever materializes."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-    return curation.source_drift(_docs(spark, sf_dir), top_v=256)
-
-
-def q_sim_mmr_rerank(spark, sf_dir):
-    """MMR diversification re-rank (Carbonell-Goldstein 1998): top-5
-    from the relevance top-20, each greedy step trading relevance
-    against max-similarity-to-selected at lambda=0.5 — the pass that
-    keeps a GraphRAG context window from being five near-copies.
-    Deterministic greedy trace (round-before-compare + id tie-break),
-    replayed by the oracle as 5 unrolled SQL steps.  The query is the
-    midpoint of vectors 0 and 1 — a query EQUAL to a corpus vector
-    degenerates step 2 (relevance == max_sim for every candidate, all
-    scores 0); the blend keeps every greedy step discriminative."""
-    emb = _emb(spark, sf_dir)
-    two = {r["vec_id"]: r["embedding"] for r in emb.where(F.col("vec_id") < 2).collect()}
-    qv = [(float(a) + float(b)) / 2 for a, b in zip(two[0], two[1])]
-    return similarity.mmr_rerank(emb, qv, k=5, pool=20, lam=0.5)
-
-
-def q_txt_winnowing(spark, sf_dir):
-    """Winnowing fingerprints (MOSS, SIGMOD 2003) over the document
-    corpus: token 3-gram hashes, window-4 rightmost-minimum selection
-    — the guaranteed-recall fingerprint SAMPLE (any shared run of
-    k+w-1=6 tokens yields an identical selected print in both docs).
-    Entirely in-row via array HOFs: zero shuffles."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import textsearch
-
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("chunk_id"), "text"
-    )
-    return textsearch.winnowing_fingerprints(d, k=3, window=4, hash_family="md5")
 
 
 def q_kg_topo_layers(spark, sf_dir):
@@ -2965,164 +1736,6 @@ def q_kg_topo_layers(spark, sf_dir):
     return q.taxonomy_layers(_isa_edges(spark, sf_dir), max_depth=4)
 
 
-def q_txt_script_ratios(spark, sf_dir):
-    """Unicode script-composition profile per document (mixed-script
-    spam / homoglyph-cloak detection — the axis the marker-word
-    lang_id can't see).  The synthetic corpus is pure ASCII, so the
-    query plants a deterministic foreign-script suffix per doc_id
-    (Cyrillic / CJK / Arabic phrase repeated 1..25 times, one quarter
-    of docs left pure Latin) before profiling; the oracle plants the
-    identical suffix.  Dominant-script and mixed verdicts compare
-    exact integers — no float enters a branch."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import text as tf
-
-    d = _docs(spark, sf_dir)
-    sfx = (
-        F.when(F.col("doc_id") % 4 == 0, F.lit(" Привет мир"))
-        .when(F.col("doc_id") % 4 == 1, F.lit(" 你好世界"))
-        .when(F.col("doc_id") % 4 == 2, F.lit(" مرحبا بالعالم"))
-        .otherwise(F.lit(""))
-    )
-    reps = (F.lit(1) + (F.col("doc_id") % 7) * 4).cast("int")
-    planted = F.concat(F.col("text"), F.repeat(sfx, reps))
-    p = tf.script_profile(planted)
-    ratio = F.when(
-        p["n_letters"] > 0,
-        F.round(p["n_latin"].cast("double") / p["n_letters"].cast("double"), 6),
-    ).otherwise(F.lit(0.0))
-    return d.select(
-        "doc_id",
-        p["n_letters"].alias("n_letters"),
-        p["n_latin"].alias("n_latin"),
-        p["n_cyrillic"].alias("n_cyrillic"),
-        p["n_arabic"].alias("n_arabic"),
-        p["n_cjk"].alias("n_cjk"),
-        p["n_digit"].alias("n_digit"),
-        ratio.alias("latin_ratio"),
-        p["dominant_script"].alias("dominant_script"),
-        p["mixed_script"].alias("mixed_script"),
-    ).orderBy("doc_id")
-
-
-def q_rel_mad_outliers(spark, sf_dir):
-    """Robust per-event-type anomaly sweep: modified z-score
-    (0.6745*(v-median)/MAD) > 3.5 — the heavy-tail-safe complement to
-    rel_zscore_outliers (median/MAD have a 50% breakdown point; one
-    giant spike can't hide the rest by inflating sigma)."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.mad_outliers(e, threshold=3.5)
-
-
-def q_rel_user_growth(spark, sf_dir):
-    """Daily audience growth curve over the event stream: distinct
-    active users, first-ever-seen users, returning remainder, and the
-    running cumulative audience (first-seen histogram running-sum —
-    cumulative-distinct without a cumulative DISTINCT)."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.user_growth(e)
-
-
-_PIVOT_TYPES = ("click", "error", "purchase", "signup", "view")
-
-
-def q_rel_pivot(spark, sf_dir):
-    """Per-user feature-matrix export: pivot the event stream into one
-    row per user with a count column per event type plus total events
-    and summed value — the wide table a downstream model trainer or
-    cohort tool consumes.  Expressed as conditional aggregates over an
-    EXPLICIT type list rather than `.pivot()`: deterministic schema,
-    and ONE hash aggregate instead of pivot's aggregate + a second
-    totals aggregate + a join (Spark's implicit pivot also adds a
-    distinct-scan job and orders columns by observed data)."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    counts = [
-        F.count(F.when(F.col("event_type") == t, F.lit(1)))
-        .cast("long")
-        .alias(f"n_{t}")
-        for t in _PIVOT_TYPES
-    ]
-    return (
-        e.groupBy("user_id")
-        .agg(
-            *counts,
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("total_value"),
-        )
-        .orderBy("user_id")
-    )
-
-
-def q_rel_retention(spark, sf_dir):
-    """Weekly cohort retention triangle over the events table."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.cohort_retention(e, origin="2024-01-01", period_days=7)
-
-
-def q_dd_dup_clusters(spark, sf_dir):
-    """Near-dup CLUSTERS with a canonical survivor per cluster — the
-    decision a dedup pipeline actually acts on: LSH pairs closed into
-    connected components, keep the min doc_id.  (doc_id, cluster_id,
-    cluster_size, is_canonical)."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import canonicalize
-
-    pairs = _mh_md5_pairs(spark, sf_dir).where(F.col("est_jaccard") >= 0.5)
-    cc = canonicalize.connected_components(pairs, src="a_id", dst="b_id")
-    szs = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (
-        cc.join(szs, "component")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.col("component").alias("cluster_id"),
-            "cluster_size",
-            (F.col("id") == F.col("component")).cast("long").alias("is_canonical"),
-        )
-        .orderBy("cluster_id", "doc_id")
-    )
-
-
-def q_txt_line_dedup(spark, sf_dir):
-    """CCNet-style cross-document line dedup over the corpus, with the
-    newline-free synthetic texts wrapped into 10-token lines first so
-    dup-family docs share real boilerplate lines."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-    d = _docs(spark, sf_dir)
-    base = d.select(
-        F.col("doc_id").alias("id"),
-        F.filter(
-            F.split(F.trim("text"), r"\s+"), lambda t: F.length(t) > 0
-        ).alias("toks"),
-    ).where(F.size("toks") > 0)
-    nwin = F.ceil(F.size("toks") / F.lit(10.0)).cast("int")
-    wrapped = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), nwin - 1),
-            lambda k: F.array_join(F.slice("toks", k * 10 + 1, 10), " "),
-        ),
-        "\n",
-    )
-    return curation.remove_duplicate_lines(
-        base.select("id", wrapped.alias("text")), text_col="text", id_col="id"
-    )
-
-
-def q_dd_substring_spans(spark, sf_dir):
-    """Exact duplicated token spans across the corpus (Lee et al. 2022
-    substring dedup at 15-token-gram granularity): positions whose
-    15-gram occurs in >=2 distinct documents, merged into maximal
-    spans.  Catches long verbatim boilerplate that whole-document
-    MinHash similarity misses."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-    return curation.duplicated_spans(_docs(spark, sf_dir), k=15, min_docs=2)
-
-
 def q_kg_fastrp(spark, sf_dir):
     """FastRP structural node embeddings over the co-occurrence graph
     (hash-Rademacher init, 3 neighbor-mean + L2-normalize levels,
@@ -3130,112 +1743,6 @@ def q_kg_fastrp(spark, sf_dir):
     return q.fastrp_embeddings(
         _kg_cooccur_und(spark, sf_dir), dims=8, weights=(0.3, 0.5, 1.0)
     )
-
-
-def q_txt_unigram_logprob(spark, sf_dir):
-    """CCNet-style self-fit unigram LM quality score per document
-    (mean token log-prob + perplexity), worst documents first."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import textsearch
-
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("chunk_id"), "text"
-    )
-    return textsearch.unigram_logprob(d)
-
-
-def q_txt_lexical_diversity(spark, sf_dir):
-    """Per-document vocabulary-richness trio (type-token ratio, hapax
-    share, Yule's K) — the stylometric curation axis the repetition /
-    entropy / LM-score features don't measure directly."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import textsearch
-
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("chunk_id"), "text"
-    )
-    return textsearch.lexical_diversity(d)
-
-
-def q_txt_bigram_logprob(spark, sf_dir):
-    """Self-fit add-1 bigram LM quality score per document
-    (textsearch.bigram_logprob) — one Markov order above
-    txt_unigram_logprob: penalizes unnatural word ORDER the
-    bag-of-words model is blind to (the CCNet KenLM-perplexity
-    axis).  All counts exact integers; V folded as a literal."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import textsearch
-
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("chunk_id"), "text"
-    )
-    return textsearch.bigram_logprob(d)
-
-
-def q_txt_tfidf(spark, sf_dir):
-    """Sparse L2-normalized tf-idf vectors over the document corpus
-    (chunk_id = doc_id) — the classic sparse-retrieval export."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import textsearch
-
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("chunk_id"), "text"
-    )
-    return textsearch.tfidf_vectors(textsearch.build_postings(d))
-
-
-# -- rows-only (non-SQL-expressible internals) --------------------------------
-
-
-def _mh_md5_pairs(spark, sf_dir):
-    """Session-staged MinHash-LSH md5 pair relation at threshold 0
-    (the index's full candidate stream + estimates): dd_minhash_lsh /
-    dd_dup_clusters / dd_soft_dedup / dd_dup_family_stats re-filter it
-    at their own thresholds, dd_minhash_calibration consumes it whole
-    — one 32x md5-per-shingle signature pass per session instead of
-    five (the _staged pattern; threshold is a final est_jaccard
-    filter, so filtering the staged th-0 relation is row-identical)."""
-    return _staged(
-        spark, sf_dir, "dd_mh_md5_pairs",
-        lambda: dedup.minhash_near_dup_pairs(
-            _docs_with_dups(spark, sf_dir), threshold=0.0, hash_family="md5"
-        ),
-    )
-
-
-def _sh_md5_pairs(spark, sf_dir):
-    """Session-staged SimHash md5 candidate pairs (max_hamming=3),
-    shared verbatim by dd_simhash and dd_simhash_margin."""
-    return _staged(
-        spark, sf_dir, "dd_sh_md5_pairs",
-        lambda: dedup.simhash_near_dup_pairs(
-            _docs_with_dups(spark, sf_dir), max_hamming=3, hash_family="md5"
-        ),
-    )
-
-
-def q_dd_minhash_lsh(spark, sf_dir):
-    """MinHash+LSH with the md5 hash family so the ENTIRE chain —
-    signatures, banding, bucket co-membership, jaccard estimate — is
-    recomputed by the DuckDB oracle (xxh64 stays the engine default;
-    the banding/bucketing logic under test is family-independent).
-    Production path: collapse_exact=True routes identical-text groups
-    around the band join + sig-carrying estimate joins (output proven
-    identical — test_dedup_similarity TestCollapseExact + this oracle)."""
-    return _mh_md5_pairs(spark, sf_dir).where(F.col("est_jaccard") >= 0.5)
-
-
-def q_dd_simhash(spark, sf_dir):
-    """SimHash near-dup candidates with the md5 hash family — the
-    oracle rebuilds the fingerprints nibble-by-nibble from md5 hex and
-    replays the prefix-bucket + hamming check (xxh64 stays the engine
-    default).  Production path: collapse_exact=True keeps degenerate
-    dup groups (viral boilerplate) out of the bucket self-join — the
-    C(n,2) true-dup pairs re-expand from the membership table instead
-    (output proven identical — TestCollapseExact + this oracle)."""
-    return _sh_md5_pairs(spark, sf_dir)
-
-
-def q_sim_ann_topk(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    qv = list(emb.where(F.col("vec_id") == 0).collect()[0]["embedding"])
-    return similarity.ann_topk(emb, qv, dim=64, k=10)
 
 
 def q_kg_harmonic(spark, sf_dir):
@@ -3319,48 +1826,6 @@ def q_kg_triad_census(spark, sf_dir):
     return motifs.triad_census(_precedence(spark, sf_dir))
 
 
-def q_dd_url_quality(spark, sf_dir):
-    """RefinedWeb/C4-style URL-level quality gate: score URLs from
-    their characters alone (blocklist terms, digit fraction, param
-    count, path depth, length) BEFORE any page bytes move — the
-    cheapest curation stage at crawl scale.  URLs are synthesized
-    deterministically from doc_id in five rule classes (clean /
-    digit-spam / param-overload / blocklist / crawler-trap depth), so
-    the oracle checks every rule fires and the clean class survives."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import weburl
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    g = (F.col("doc_id") % 50).cast("string")
-    v = F.col("doc_id") % 5
-    url = (
-        F.when(v == 0, F.concat(F.lit("https://news.example.org/articles/tech/"), g))
-        .when(
-            v == 1,
-            F.concat(
-                F.lit("https://spam.example.net/p/123456789012345678901234567890123-"), g
-            ),
-        )
-        .when(
-            v == 2,
-            F.concat(
-                F.lit("https://shop.example.com/item"),
-                g,
-                F.lit("?a=1&b=2&c=3&d=4&e=5&f=6&g=7&h=8&i=9&j=10&k=11&l=12"),
-            ),
-        )
-        .when(
-            v == 3,
-            F.concat(F.lit("https://best-casino-bonus.example.com/win/"), g),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("https://trap.example.com/cal/2020/01/01/x/y/z/w/v/u/t/s/r/"), g
-            )
-        )
-    )
-    return weburl.url_quality(d.select("doc_id", url.alias("url"))).orderBy("doc_id")
-
-
 def q_kg_eccentricity(spark, sf_dir):
     """Sampled eccentricity lower bounds from the PPR seed entities
     (iFUB-style bounding: ecc(v) >= max sampled-source distance; the
@@ -3408,51 +1873,6 @@ def q_kg_distance_distribution(spark, sf_dir):
     )
 
 
-def q_dd_cdc_chunks(spark, sf_dir):
-    """Content-defined chunking (FastCDC-style token-gram boundaries,
-    gram=3, divisor=8): boundaries depend only on local content, so a
-    banner prepended to a re-crawled page leaves every later chunk —
-    and its dedup hash — byte-identical.  Pure per-row HOFs; nothing
-    shuffles."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.sampling import (
-        cdc_chunks,
-    )
-
-    return cdc_chunks(_docs(spark, sf_dir), gram=3, divisor=8)
-
-
-def q_txt_dsir_weights(spark, sf_dir):
-    """DSIR importance weights (Xie et al. 2023): hashed unigram+bigram
-    bag log-likelihood ratio of the target-domain model (here: the
-    corpus's English slice as exemplar set) vs the raw-corpus model —
-    the published cheap data-selection score for matching a
-    pretraining mix to a target domain."""
-    d = _docs(spark, sf_dir)
-    return curation.dsir_weights(
-        d, d.where(F.col("lang") == "en"), n_buckets=256
-    )
-
-
-def q_dd_dsir_resample(spark, sf_dir):
-    """DSIR importance RESAMPLING (the paper's actual selection step):
-    Gumbel-top-k over the dsir_weights log-weights draws a
-    without-replacement sample proportional to exp(logw), with
-    deterministic hash-uniform noise — reproducible across runs and
-    engines."""
-    d = _docs(spark, sf_dir)
-    return curation.dsir_resample(
-        d, d.where(F.col("lang") == "en"), k=100, n_buckets=256
-    )
-
-
-def q_dd_semantic_dedup(spark, sf_dir):
-    """SemDeDup-style semantic dedup verdict over the embedding table:
-    SRP-LSH buckets as the cluster proxy, exact cosine >= 0.30, drop
-    if dominated by any lower id; one (vec_id, kept, dup_of) row per
-    input, so keep-list and redirect map fall out of one output."""
-    return similarity.semantic_dedup(_emb(spark, sf_dir), threshold=0.30, dim=64)
-
-
 def _svo_docs(spark, sf_dir):
     return _docs(spark, sf_dir).select("doc_id", _svo_text_col().alias("text"))
 
@@ -3496,46 +1916,6 @@ def q_kg_svo_linked(spark, sf_dir):
     )
 
 
-def q_rel_quantile_sketch(spark, sf_dir):
-    """Mergeable bottom-k ROW-sample quantile sketch per event type
-    (sketches.row_quantile_sketch, md5 rank for the oracle):
-    frequency-weighted p50/p90/p99 from O(k) state — the sketch
-    answer to rel_percentile's exact sort-based baseline; salted
-    two-level selection keeps any single reducer's sort at ≤k rows
-    even on a hot group."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import (
-        sketches,
-    )
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sketches.row_quantile_sketch(
-        e,
-        "value",
-        "event_id",
-        [0.5, 0.9, 0.99],
-        group_cols=["event_type"],
-        k=128,
-        hash_family="md5",
-    ).orderBy("event_type")
-
-
-def q_dd_hll_distinct(spark, sf_dir):
-    """HyperLogLog distinct-text estimate per source
-    (sketches.hll_sketch/hll_estimate, p=8, md5 family): the standard
-    O(2^p)-state mergeable cardinality sketch next to the KMV
-    baseline; register logic is all-integer (length(bin(x)) leading
-    zeros, shiftleft power sums) so the estimate is cross-engine
-    IEEE-identical."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import (
-        sketches,
-    )
-
-    sk = sketches.hll_sketch(
-        _docs(spark, sf_dir), "text", ["source"], p=8, hash_family="md5"
-    )
-    return sketches.hll_estimate(sk, ["source"], p=8).orderBy("source")
-
-
 def q_kg_wl_labels(spark, sf_dir):
     """Weisfeiler-Lehman color refinement over the co-occurrence
     concept graph (queries.wl_labels, 3 rounds, sum-multiset-hash):
@@ -3547,40 +1927,6 @@ def q_kg_wl_labels(spark, sf_dir):
         .withColumnRenamed("id", "concept_id")
         .orderBy("concept_id")
     )
-
-
-def _bpe5_rows(spark, sf_dir):
-    """Session-memoized BPE TRAINING result (5 merge rows) shared by
-    txt_bpe_merges and txt_bpe_encode — the driver-side _kmeans8_fit
-    pattern: both queries train the identical model (same corpus,
-    n_merges=5), so the 5 argmax-collect learn rounds run once per
-    (session, sf_dir) and each consumer gets the bounded 5-row merge
-    table back as plain literals."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import tokenizer
-
-    k = (id(spark), sf_dir, "txt_bpe5_merges")
-    if k not in _ENRICHED_STAGE:
-        mdf = tokenizer.bpe_learn(_docs(spark, sf_dir), n_merges=5)
-        _ENRICHED_STAGE[k] = [
-            (int(r["round"]), r["lhs"], r["rhs"], r["merged"], int(r["freq"]))
-            for r in mdf.orderBy("round").collect()
-        ]
-    return _ENRICHED_STAGE[k]
-
-
-def q_txt_bpe_merges(spark, sf_dir):
-    """BPE tokenizer TRAINING (operators/tokenizer.bpe_learn, Sennrich
-    et al. 2016): the corpus reduces ONCE to the distinct-word
-    wordcount table, then every merge round is vocabulary-bound — one
-    (lhs, rhs, cnt) hash agg + a 1-row argmax collect + a narrow
-    greedy fold over symbol arrays.  Returns the first 5 learned
-    merges with their frequencies; deterministic by the count-desc /
-    lex-asc tie-break, so hash-exact cross-engine.  The learn itself
-    is session-shared with txt_bpe_encode (_bpe5_rows)."""
-    return spark.createDataFrame(
-        _bpe5_rows(spark, sf_dir),
-        "merge_round int, lhs string, rhs string, merged string, freq bigint",
-    ).orderBy("merge_round")
 
 
 def q_kg_densest_subgraph(spark, sf_dir):
@@ -3595,71 +1941,6 @@ def q_kg_densest_subgraph(spark, sf_dir):
     semi-join."""
     return q.densest_subgraph(
         _kg_cooccur_und(spark, sf_dir), eps=0.1, max_rounds=8
-    )
-
-
-def _webified(spark, sf_dir):
-    """Deterministic web-shaped variant of the documents corpus: a
-    period after every 6th token, sentences split onto lines, and
-    boilerplate lines ('enable javascript…', 'lorem ipsum…', a brace
-    line) injected by doc_id residue — so the C4 line/page rules all
-    have non-trivial populations on the punctuation-free synthetic
-    corpus.  Pure Catalyst; the oracle reproduces it verbatim."""
-    d = _docs(spark, sf_dir)
-    s1 = F.regexp_replace(
-        F.col("text"), r"(\S+ \S+ \S+ \S+ \S+ \S+) ", r"$1. "
-    )
-    s2 = F.regexp_replace(s1, r"\. ", ".\n")
-    text = F.concat(
-        s2,
-        F.when(F.col("doc_id") % 5 == 0, F.lit("\nenable javascript to continue")).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 11 == 0, F.lit("\nlorem ipsum dolor")).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 13 == 0, F.lit("\nfunction() {")).otherwise(F.lit("")),
-    )
-    return d.select("doc_id", text.alias("text"))
-
-
-def q_txt_c4_rules(spark, sf_dir):
-    """C4 cleaning rules (curation.c4_rules, Raffel et al. 2020 §2.2)
-    over the webified corpus: line gates (terminal punctuation, >=5
-    words, no 'javascript') then page gates (>=3 sentences, bad-word
-    list, 'lorem ipsum', '{').  Every rule is a higher-order Catalyst
-    expression over the line array — one scan pass, zero shuffle."""
-    return curation.c4_rules(
-        _webified(spark, sf_dir), bad_words=("dup",)
-    ).orderBy("doc_id")
-
-
-def q_txt_gopher_quality(spark, sf_dir):
-    """Gopher quality rules (curation.gopher_quality, Rae et al. 2021
-    App. A): word-count bounds, mean word length, symbol ratio,
-    bullet/ellipsis line fractions, alpha-word fraction, stop-word
-    hits — each rule's evidence as a column plus the kept verdict.
-    min_words=20 / min_stop_hits=1 so the gates split this corpus
-    (published constants assume real web pages)."""
-    return curation.gopher_quality(
-        _docs(spark, sf_dir), min_words=20, min_stop_hits=1
-    ).orderBy("doc_id")
-
-
-def q_txt_readability(spark, sf_dir):
-    """Flesch reading ease + FK grade (functions.text.readability_
-    features) over the webified corpus (periods every 6 tokens, so
-    sentence counts vary): three regexp_count passes per row, IEEE-
-    identical double scores cross-engine."""
-    d = _webified(spark, sf_dir)
-    feats = tf.readability_features(F.col("text"))
-    return (
-        d.select(
-            "doc_id",
-            feats["n_words"].alias("n_words"),
-            feats["n_sentences"].alias("n_sentences"),
-            feats["n_syllables"].alias("n_syllables"),
-            F.round(feats["flesch"], 6).alias("flesch"),
-            F.round(feats["fk_grade"], 6).alias("fk_grade"),
-        )
-        .where(F.col("n_words") > 0)
-        .orderBy("doc_id")
     )
 
 
@@ -3712,46 +1993,6 @@ def q_kg_graph_coloring(spark, sf_dir):
     )
 
 
-def q_dd_bloom_membership(spark, sf_dir):
-    """Bloom-filter membership (sketches.bloom_build/bloom_probe,
-    md5 family so the oracle replays the bits exactly): build the
-    crawl-frontier 'seen' filter over every document fingerprint
-    (256 x 32-bit words, k=4), then probe 100 known fingerprints +
-    50 novel keys.  Probe side is a broadcast map-side join — zero
-    shuffle on the big side; no false negatives by construction,
-    and any hash-collision false positive is deterministic, so the
-    oracle agrees bit-for-bit either way."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sketches
-
-    d = _docs(spark, sf_dir)
-    keys = d.select(tf.fingerprint(F.col("text")).alias("key")).distinct()
-    sk = sketches.bloom_build(keys, "key", m_words=256, k=4, hash_family="md5")
-    present = d.where(F.col("doc_id") < 100).select(
-        tf.fingerprint(F.col("text")).alias("key")
-    )
-    novel = spark.range(50).select(
-        F.concat(F.lit("novel|"), F.col("id").cast("string")).alias("key")
-    )
-    probes = present.unionByName(novel).distinct()
-    return sketches.bloom_probe(
-        probes, sk, "key", m_words=256, k=4, hash_family="md5"
-    ).orderBy("key")
-
-
-def q_txt_temperature_mixture(spark, sf_dir):
-    """Temperature-based mixture sampling (sampling.temperature_sample,
-    the mT5/XLM-R n^alpha language-balancing rule) over the 20-source
-    documents corpus at alpha=0.5, target 50%: per-source keep rates
-    flatten the size skew; membership is the md5-uniform hash test,
-    rerun-stable.  alpha=0.5 routes through IEEE-exact sqrt and a
-    DECIMAL-accumulated denominator, so the verdict is engine-exact."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-    return sampling.temperature_sample(
-        _docs(spark, sf_dir), alpha=0.5, target_frac=0.5, seed=7
-    ).orderBy("id")
-
-
 def q_kg_maximal_matching(spark, sf_dir):
     """Greedy-equivalent maximal matching (queries.maximal_matching)
     over the distinct co-occurrence pair edges: the conflict-free
@@ -3762,117 +2003,6 @@ def q_kg_maximal_matching(spark, sf_dir):
     <= 6 at both SFs, extras no-op)."""
     pairs = q_kg_pairs(spark, sf_dir).select("a_id", "b_id").distinct()
     return q.maximal_matching(pairs).orderBy("a_id", "b_id")
-
-
-def q_txt_fasttext_quality(spark, sf_dir):
-    """fastText-style hashed-linear quality-classifier inference
-    (curation.fasttext_score): hashed uni+bigram bag -> broadcast
-    weight lookup -> integer mean-pooled logit + threshold label.
-    The weight table is the deterministic md5 stand-in
-    (curation.hash_weights) so the full inference path — featurize,
-    broadcast join, partial-agg sum, threshold — is exercised and
-    DuckDB-exact; a real fastText model quantized to milli-weights
-    drops into the same op."""
-    w = curation.hash_weights(spark, n_buckets=4096)
-    return (
-        curation.fasttext_score(_docs(spark, sf_dir), w, n_buckets=4096)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    )
-
-
-def q_sim_ivf_topk(spark, sf_dir):
-    """IVF ANN: deterministic k-means coarse quantizer (driver-side
-    sample), literal-centroid assignment, nprobe-list probe + exact
-    re-rank.  Exact numpy oracle in tests/test_dedup_similarity.py."""
-    emb = _emb(spark, sf_dir)
-    cent = similarity.ivf_train_centroids(
-        emb, dim=64, n_lists=8, sample=256, sample_frac=0.5
-    )
-    qv = list(emb.where(F.col("vec_id") == 0).collect()[0]["embedding"])
-    return similarity.ivf_topk(emb, qv, cent, nprobe=3, k=10)
-
-
-def q_sim_pq_topk(spark, sf_dir):
-    """Product-quantization ANN (similarity.pq_*): m=8 sub-codebooks,
-    k=16 centroids each (driver-side deterministic Lloyd over a
-    bounded sample), ADC lookup-table scan over 8-byte codes + exact
-    cosine re-rank.  Rows-only driver check (codebook init uses seeded
-    numpy, not SQL-expressible) — EXACT numpy pytest oracle in
-    tests/test_dedup_similarity.py TestPq, same regime as
-    sim_ivf_topk."""
-    emb = _emb(spark, sf_dir)
-    cb = similarity.pq_train_codebooks(
-        emb, dim=64, m=8, k=16, sample=256, sample_frac=0.5
-    )
-    codes = similarity.pq_encode(emb, cb)
-    qv = list(emb.where(F.col("vec_id") == 0).collect()[0]["embedding"])
-    return similarity.pq_topk(codes, qv, cb, k=10, rerank=emb, rerank_factor=4)
-
-
-def q_mm_frame_sample(spark, sf_dir):
-    """Frame-sampling fan-out plumbing over binary payloads: every 2nd
-    fake frame (frame = 32-byte span).  SQL-expressible, so this one
-    multimodal op gets a real DuckDB oracle."""
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-    return (
-        multimodal.frame_sample_plan(d, every_n=2, frame_bytes=32)
-        .select("url", F.col("frame_idx").cast("long").alias("frame_idx"))
-        .orderBy(F.col("url").cast("long"), "frame_idx")
-    )
-
-
-def q_mm_features(spark, sf_dir):
-    """Binary feature extraction (mapInPandas over the payload).  The
-    documents text is pure ASCII, so the DuckDB oracle recomputes the
-    byte statistics from codepoints; floats round to 6 like every
-    float-emitting contract query."""
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), F.encode("text", "utf-8").alias("payload")
-    )
-    out = multimodal.extract_features(d, payload_col="payload", url_col="url")
-    return out.select(
-        "url", "media_type", "byte_len", "sha256", "fmt",
-        F.round("mean_byte", 6).alias("mean_byte"),
-        F.round("std_byte", 6).alias("std_byte"),
-        "top_byte",
-    )
-
-
-def q_dd_repeated_spans(spark, sf_dir):
-    """Exact-substring duplication at 8-token granularity
-    (dedup.repeated_spans — the distributed ExactSubstr approximation,
-    Lee et al. 2022): every maximal token span whose 8-gram windows
-    all repeat corpus-wide.  This is the cut-mid-document boilerplate
-    detector document-level MinHash can't express; the natural
-    sf-corpora carry ~1-2k duplicated 8-grams, so the key needs no
-    planted tail.  Only (hash) and (id, pos) shuffle; the island
-    merge windows per-document."""
-    return dedup.repeated_spans(_docs(spark, sf_dir), k=8, min_count=2)
-
-
-def q_dd_lsh_stats(spark, sf_dir):
-    """LSH index health report (similarity.lsh_bucket_stats): per-band
-    bucket count, max bucket, and EXACT candidate-pair mass
-    sum(sz*(sz-1)/2) — the cost of every bucketed self-join
-    downstream, read off the histogram BEFORE paying for the join;
-    the index-side sibling of sim_recall_at_k.  All-integer."""
-    return similarity.lsh_bucket_stats(
-        _emb(spark, sf_dir), dim=64, n_planes=16, bands=4
-    )
-
-
-def q_txt_zipf_fit(spark, sf_dir):
-    """Zipf's-law OLS fit over the top-100 corpus terms
-    (textsearch.zipf_fit): slope near -1 = natural language,
-    flattening = templated boilerplate, steepening = keyword
-    stuffing.  One-row corpus-health scalar."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import textsearch
-
-    return textsearch.zipf_fit(_docs(spark, sf_dir), top_k=100)
 
 
 def q_kg_taxonomy_reduction(spark, sf_dir):
@@ -3894,19 +2024,6 @@ def q_kg_centralization(spark, sf_dir):
     return q.degree_centralization(_kg_cooccur_und(spark, sf_dir))
 
 
-def q_rel_attribution(spark, sf_dir):
-    """First-touch / last-touch conversion attribution
-    (events.conversion_attribution): for every purchase, the first and
-    last non-purchase event type the user emitted before it, rolled up
-    to (first_touch, last_touch, conversions); organic purchases
-    attribute to 'none'.  One per-user window pass."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    return ev.conversion_attribution(
-        spark.read.parquet(f"{sf_dir}/events.parquet"), conversion_type="purchase"
-    )
-
-
 def q_kg_reciprocity(spark, sf_dir):
     """Directed-triple reciprocity (queries.reciprocity): fraction of
     (subj -> obj) facts also asserted in reverse — mutual is_a pairs
@@ -3915,17 +2032,6 @@ def q_kg_reciprocity(spark, sf_dir):
     t = _triples(spark, sf_dir)
     return q.reciprocity(
         t.select(F.col("subj_id").alias("src_id"), F.col("obj_id").alias("dst_id"))
-    )
-
-
-def q_sim_recall_at_k(spark, sf_dir):
-    """In-engine ANN quality eval (similarity.ann_recall_at_k):
-    recall@10 of the SRP-LSH index vs exact brute force for the 10
-    md5-smallest query vectors — the continuous index-drift check a
-    production ANN deployment runs; both arms rank ONE shared scored
-    relation whose dots are left-fold bit-identical cross-engine."""
-    return similarity.ann_recall_at_k(
-        _emb(spark, sf_dir), k=10, n_queries=10, n_planes=16, bands=4
     )
 
 
@@ -3960,109 +2066,6 @@ def q_kg_label_spreading(spark, sf_dir):
     return q.label_spreading(und, seeds, iters=5)
 
 
-def q_dd_ngram_novelty(spark, sf_dir):
-    """Corpus-order 8-gram novelty per document
-    (dedup.ngram_novelty): fraction of a doc's 8-token windows first
-    emitted by a LOWER doc_id — the document-ranking form of the
-    ExactSubstr signal (dd_repeated_spans localizes the spans; this
-    buckets whole pages for the curation funnel).  The planted
-    +1000000 copies score dup_frac = 1.0 by construction."""
-    return dedup.ngram_novelty(_docs_with_dups(spark, sf_dir), k=8)
-
-
-def q_dd_soft_dedup(spark, sf_dir):
-    """SoftDeDup loss-reweighting: every member of an LSH->CC dup
-    cluster weighted 1/cluster_size, singletons 1.0
-    (dedup.soft_dedup_weights over the dd_dup_clusters chain) — each
-    distinct content unit contributes one document's training mass
-    without dropping any row."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import canonicalize
-
-    docs = _docs_with_dups(spark, sf_dir)
-    pairs = _mh_md5_pairs(spark, sf_dir).where(F.col("est_jaccard") >= 0.5)
-    cc = canonicalize.connected_components(pairs, src="a_id", dst="b_id")
-    clusters = (
-        cc.join(
-            cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size")),
-            "component",
-        )
-        .select(F.col("id").alias("doc_id"), "cluster_size")
-    )
-    return dedup.soft_dedup_weights(docs, clusters)
-
-
-def q_rel_decayed_counts(spark, sf_dir):
-    """Exponentially time-decayed event mass per type at the stream
-    horizon (events.decayed_counts, tau = 1 day): the batch replay of
-    a streaming decayed counter — exact-microsecond ages, horizon
-    folded as a literal, one map-side-combined aggregate."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    return ev.decayed_counts(
-        spark.read.parquet(f"{sf_dir}/events.parquet"),
-        tau_seconds=86400.0,
-        by="event_type",
-    )
-
-
-
-
-def _kmeans8_fit(spark, sf_dir):
-    """Session-memoized k-means FIT (the bounded {cluster: centroid}
-    dict) for the k=8/iters=2 model five queries score against —
-    the driver-side sibling of the _staged pattern: the fit's seed +
-    per-round update collects run once per session, every consumer
-    injects the same centroids (identical assignment/scatter rule)."""
-    k = (id(spark), sf_dir, "sim_kmeans8_fit")
-    if k not in _ENRICHED_STAGE:
-        base = similarity._kmeans_base(_emb(spark, sf_dir), "vec_id", "embedding")
-        _ENRICHED_STAGE[k] = similarity._kmeans_fit(base, 8, 2)
-    return _ENRICHED_STAGE[k]
-
-
-def _kmeans8(spark, sf_dir):
-    """Session-staged k-means assignment (k=8, iters=2) shared by the
-    three queries that fit the identical model (sim_kmeans,
-    dd_cluster_balanced, sim_cluster_purity) — the _staged pattern;
-    each consumer re-applies its own projection/order."""
-    return _staged(
-        spark, sf_dir, "sim_kmeans8",
-        lambda: similarity.kmeans_assign(
-            _emb(spark, sf_dir), k=8, iters=2, cents=_kmeans8_fit(spark, sf_dir)
-        ),
-    )
-
-def q_sim_kmeans(spark, sf_dir):
-    """Distributed Lloyd k-means over the embedding corpus
-    (similarity.kmeans_assign, k=8, 2 centroid updates): seeds by
-    md5 order, assignment from centroid LITERALS (scan-stage argmin,
-    zero shuffle), per-round centroids ROUNDED to 6 dp so both
-    engines re-derive them bit-identically — the fully-oracled
-    counterpart of the rows-only IVF trainer."""
-    out = _kmeans8(spark, sf_dir)
-    return out.select(
-        F.col("id").cast("bigint").alias("vec_id"), "cluster", "dist2"
-    ).orderBy("vec_id")
-
-
-def q_dd_cluster_balanced(spark, sf_dir):
-    """Cluster-balanced curation draw: k-means the embeddings, then
-    keep an expected 30 rows per cluster via the pure-integer hash
-    test u32(md5(id)) * n_cluster < 30 * 2^32 (sampling.
-    cluster_balanced_sample) — big clusters downsampled hard, rare
-    clusters survive whole; rerun- and engine-exact."""
-    assign = _kmeans8(spark, sf_dir)
-    out = sampling.cluster_balanced_sample(
-        assign.select("id", "cluster"), per_cluster=30
-    )
-    return out.select(
-        F.col("id").cast("bigint").alias("vec_id"),
-        "cluster",
-        "n_cluster",
-        "kept",
-    ).orderBy("vec_id")
-
-
 def q_kg_assortativity(spark, sf_dir):
     """Degree assortativity of the co-occurrence concept graph
     (queries.degree_assortativity — Newman 2002 r over edge stubs):
@@ -4089,126 +2092,6 @@ def q_kg_katz(spark, sf_dir):
         iters=8,
         top_k=20,
     )
-
-
-def q_rel_rfm(spark, sf_dir):
-    """RFM lifecycle segmentation (champion/loyal/at_risk/hibernating)
-    — per-user recency/frequency/monetary scored 1-4 against quartile
-    boundaries folded as literals (no global ntile window; see
-    events.rfm_segments for the 100-TB rationale)."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.rfm_segments(e)
-
-
-def q_rel_tpch_q4(spark, sf_dir):
-    """TPC-H Q4 shape: order-priority census over orders with an
-    EXISTS'd late-shipped lineitem — the left-semi + non-equi residual
-    join form (this corpus has no commit/receipt dates, so "late" is
-    l_shipdate > o_orderdate)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = orders.where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    late = o.join(
-        li,
-        (F.col("l_orderkey") == F.col("o_orderkey"))
-        & (F.col("l_shipdate") > F.col("o_orderdate")),
-        "left_semi",
-    )
-    return (
-        late.groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-def q_rel_tpch_q6(spark, sf_dir):
-    """TPC-H Q6: single-scan forecast-revenue aggregate — the pure
-    pushed-predicate + map-side-only query (zero shuffle beyond the
-    1-row final agg).  Decimal accumulation for cross-engine cents."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.where(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice").cast("decimal(18,4)")
-                    * F.col("l_discount").cast("decimal(18,4)")
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-    )
-
-
-def q_rel_tpch_q10(spark, sf_dir):
-    """TPC-H Q10: top-20 customers by returned-item revenue — ranked
-    on the EXACT decimal sum (identical total order in both engines;
-    never a float-ranked LIMIT), custkey tiebreak, rounded only at
-    output."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    return (
-        cust.join(
-            orders.where(
-                (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            li.where(F.col("l_returnflag") == "R"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(nation, F.col("n_nationkey") == F.col("c_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,4)")
-                * (F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)"))
-            ).alias("_rev")
-        )
-        .orderBy(F.desc("_rev"), "c_custkey")
-        .limit(20)
-        .select(
-            "c_custkey",
-            "c_name",
-            F.round("_rev", 2).cast("double").alias("revenue"),
-            "c_acctbal",
-            "n_name",
-        )
-    )
-
-
-def q_sim_centroid_outliers(spark, sf_dir):
-    """Per-label embedding outliers (z > 2 on squared-L2 distance to
-    the own-label centroid) — the mislabeled/off-distribution curation
-    sweep; kmeans-style rounded-centroid determinism contract."""
-    return similarity.centroid_outliers(_emb(spark, sf_dir), dim=64, z_threshold=2.0)
-
-
-def q_rel_interevent_gaps(spark, sf_dir):
-    """Per-type inter-arrival profile with Goh-Barabási burstiness —
-    the temporal-texture panel between sessionize (gap thresholding)
-    and stickiness (day grain)."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.interevent_gaps(e)
 
 
 def q_kg_extraction_yield(spark, sf_dir):
@@ -4240,99 +2123,9 @@ def q_kg_extraction_yield(spark, sf_dir):
     )
 
 
-def q_rel_market_basket(spark, sf_dir):
-    """Association pair mining over TPC-H order baskets: per-pair
-    support and lift with the Apriori pushdown (item-support semi-join
-    BEFORE the pair self-join) and the mega-basket C(n,2) guard —
-    the "frequently bought together" / co-cited-sources panel."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import cooccur
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return cooccur.market_basket(
-        li, basket_col="l_orderkey", item_col="l_partkey",
-        min_item_support=5, min_pair_count=2,
-    )
-
-
-def q_txt_effective_tokens(spark, sf_dir):
-    """Dedup-aware token-budget accounting per source (raw vs
-    effective tokens, duplicates credited once to the min-id winner's
-    source) — the planning number behind per-source sampling weights.
-    Runs over the corpus + planted exact dups so the dup fraction is
-    non-degenerate."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-    return curation.effective_tokens(_docs_with_dups(spark, sf_dir))
-
-
-def q_dd_edit_distance(spark, sf_dir):
-    """LSH candidates -> EXACT Levenshtein verify (md5 hash family so
-    the oracle replays the whole chain): the sequence-exact member of
-    the dedup family — catches reorders/in-place edits that set-based
-    Jaccard scores identically."""
-    return dedup.edit_distance_near_dup(
-        _docs_with_dups(spark, sf_dir),
-        max_rel=0.3,
-        hash_family="md5",
-        # the staged th-0 md5 MinHash pair relation IS this chain's
-        # candidate set (same corpus + params; set-equality verified
-        # empirically at sf0.1 — symmetric difference 0)
-        candidates=_mh_md5_pairs(spark, sf_dir),
-    )
-
-
-def q_rel_tpch_q13(spark, sf_dir):
-    """TPC-H Q13 shape (customer distribution): orders-per-customer
-    via LEFT join (zero-order customers kept), then the counts-of-
-    counts histogram — the classic two-phase re-aggregation."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    per = (
-        c.join(o, c["c_custkey"] == o["o_custkey"], "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
-
-
-def q_rel_tpch_q18(spark, sf_dir):
-    """TPC-H Q18 shape (large-volume customers): per-order quantity
-    sum in EXACT decimal, HAVING > 150 as a pre-join reducer, then the
-    customer/order detail join; ranked LIMIT on the STORED
-    o_totalprice (never a float-ranked computed aggregate) with
-    orderkey tie-break."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    tot = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("tq"))
-        .where(F.col("tq") > 150)
-    )
-    return (
-        tot.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            "o_totalprice",
-            F.col("tq").cast("double").alias("total_qty"),
-        )
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(100)
-    )
-
-
 def q_kg_concept_drift(spark, sf_dir):
     """Per-source concept-distribution KL from the corpus — the KG
-    twin of txt_source_drift: which sources skew the GRAPH (not just
-    the token stream).  Same closed-form smoothed-KL core
+    twin of a token-stream source drift: which sources skew the GRAPH.  Same closed-form smoothed-KL core
     (curation.kl_divergence_from_counts) over (source, concept_id)
     mention counts; top-256 coarsened alphabet."""
     from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
@@ -4354,52 +2147,6 @@ def q_kg_concept_drift(spark, sf_dir):
         F.col("n_tokens").alias("n_mentions"),
         F.col("n_terms_seen").alias("n_concepts_seen"),
         "kl_corpus",
-    )
-
-
-def q_dd_dup_family_stats(spark, sf_dir):
-    """Dup-FAMILY size census: the LSH pair relation closed into
-    components, then the cluster-size histogram (n_clusters, n_docs
-    per size) — the number that says whether dedup output is many
-    twins or a few viral mega-families (the C(n,2) risk dd_simhash's
-    collapse guard and dd_edit_distance's verify both key on).
-    Families are size >= 2 by construction (components of the pair
-    graph); singletons aren't dup families."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import canonicalize
-
-    pairs = _mh_md5_pairs(spark, sf_dir).where(F.col("est_jaccard") >= 0.5)
-    cc = canonicalize.connected_components(pairs, src="a_id", dst="b_id")
-    szs = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (
-        szs.groupBy("cluster_size")
-        .agg(
-            F.count(F.lit(1)).alias("n_clusters"),
-            F.sum("cluster_size").cast("long").alias("n_docs"),
-        )
-        .orderBy("cluster_size")
-    )
-
-
-def q_sim_silhouette(spark, sf_dir):
-    """Per-cluster simplified silhouette of the oracled k-means model
-    (k=8, 2 rounds): (b - a) / max(a, b) with a/b = Euclidean distance
-    to own / nearest-other centroid — the internal clustering-quality
-    panel (no ground truth needed, unlike sim_cluster_purity).  One
-    scan + one k-row agg; engine-exact via the kmeans centroid
-    contract + order-statistic tie rule."""
-    return similarity.simplified_silhouette(
-        _emb(spark, sf_dir), k=8, iters=2, cents=_kmeans8_fit(spark, sf_dir)
-    )
-
-
-def q_sim_davies_bouldin(spark, sf_dir):
-    """Per-cluster Davies-Bouldin similarity R_i = max (S_i+S_j)/M_ij
-    over the same fitted k-means — localizes WHICH cluster overlaps
-    which rival (the scalar DB index is the mean of r_db).  Corpus
-    cost = one scan + one k-row scatter agg; the k(k-1) separation
-    table folds from the fitted centroids."""
-    return similarity.davies_bouldin(
-        _emb(spark, sf_dir), k=8, iters=2, cents=_kmeans8_fit(spark, sf_dir)
     )
 
 
@@ -4443,172 +2190,6 @@ def q_kg_triple_support(spark, sf_dir):
         sup.groupBy("predicate", "support")
         .agg(F.count(F.lit(1)).cast("long").alias("n_triples"))
         .orderBy("predicate", "support")
-    )
-
-
-def q_mm_near_dup(spark, sf_dir):
-    """Asset-level media near-dup via shared tile fingerprints — the
-    follow-up the tile_stats docstring names: assets sharing >= 2
-    identical 64-byte tiles, scored by containment = shared /
-    min(|tiles_a|, |tiles_b|) over DISTINCT tile hashes.  Exact-copy
-    assets score 1.0; partially-shared segments (shared intro frames,
-    re-encoded thumbnails) rank below.  The viral-tile C(n,2) blowup
-    is guarded PPJoin-style: tiles present in > 32 assets (codec
-    padding, black frames) are dropped from the candidate join — the
-    same common-token filter dd_ngram_jaccard uses, threshold a
-    documented literal.
-
-    Scale shape: tiling is a narrow mapInPandas flatMap (no shuffle);
-    candidates are ONE equi-join on tile_sha256 (the exact-dedup
-    shape) after the frequency filter; per-asset tile counts are one
-    hash agg.  One division per score."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import multimodal
-
-    d = _docs_with_dups(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-    t = (
-        multimodal.tile_stats(d, tile_bytes=64)
-        .select("url", "tile_sha256")
-        .distinct()
-    )
-    keep = (
-        t.groupBy("tile_sha256")
-        .agg(F.count(F.lit(1)).alias("nd"))
-        .where((F.col("nd") >= 2) & (F.col("nd") <= 32))
-        .select("tile_sha256")
-    )
-    tf = t.join(keep, "tile_sha256")
-    per = t.groupBy("url").agg(F.count(F.lit(1)).cast("long").alias("n_tiles"))
-    pairs = (
-        tf.select(F.col("tile_sha256"), F.col("url").alias("a_url"))
-        .join(
-            tf.select(F.col("tile_sha256"), F.col("url").alias("b_url")),
-            "tile_sha256",
-        )
-        .where(F.col("a_url") < F.col("b_url"))
-        .groupBy("a_url", "b_url")
-        .agg(F.count(F.lit(1)).cast("long").alias("shared_tiles"))
-        .where(F.col("shared_tiles") >= 2)
-    )
-    return (
-        pairs.join(per.select(F.col("url").alias("a_url"), F.col("n_tiles").alias("a_tiles")), "a_url")
-        .join(per.select(F.col("url").alias("b_url"), F.col("n_tiles").alias("b_tiles")), "b_url")
-        .select(
-            "a_url",
-            "b_url",
-            "shared_tiles",
-            "a_tiles",
-            "b_tiles",
-            F.round(
-                F.col("shared_tiles").cast("double")
-                / F.least("a_tiles", "b_tiles"),
-                6,
-            ).alias("containment"),
-        )
-        .orderBy(F.desc("containment"), "a_url", "b_url")
-        .limit(50)
-    )
-
-
-def q_rel_bot_score(spark, sf_dir):
-    """Bot/automation census over the event log — the behavioral twin
-    of dd_url_quality for web-log curation: per user the event count,
-    ACTIVE minutes (distinct minute buckets — idle gaps don't dilute
-    the rate), events per active minute, and the top-event-type share
-    (scripted traffic is fast AND monotonous); flagged when both the
-    rate and monotony exceed their literals (>= 3 events/active-min
-    and >= 0.8 single-type share).  Integer counts aggregated exactly,
-    ONE division per ratio (the kg_evidence_freshness determinism
-    rule).  Top 50 by rate desc / user_id — deterministic total order.
-
-    Scale shape: two user-keyed hash aggs (events; distinct minutes
-    via a pre-distinct) + a user-keyed max-type join — the same
-    shuffle key throughout, no wide rows."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    base = e.select(
-        "user_id",
-        "event_type",
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(60_000_000)
-        ).alias("mi"),
-    )
-    per_user = base.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.count_distinct("mi").cast("long").alias("active_min"),
-    )
-    top_type = (
-        base.groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .groupBy("user_id")
-        .agg(F.max("c").alias("top_type_n"))
-    )
-    rate = F.round(F.col("n_events").cast("double") / F.col("active_min"), 6)
-    share = F.round(F.col("top_type_n").cast("double") / F.col("n_events"), 6)
-    return (
-        per_user.join(top_type, "user_id")
-        .select(
-            "user_id",
-            "n_events",
-            "active_min",
-            rate.alias("events_per_min"),
-            share.alias("top_type_share"),
-            (
-                (F.col("n_events").cast("double") / F.col("active_min") >= 3.0)
-                & (F.col("top_type_n").cast("double") / F.col("n_events") >= 0.8)
-            )
-            .cast("int")
-            .cast("long")
-            .alias("flagged"),
-        )
-        .orderBy(F.desc("events_per_min"), "user_id")
-        .limit(50)
-    )
-
-
-def q_dd_simhash_margin(spark, sf_dir):
-    """SimHash threshold-margin calibration — the simhash member of
-    the index-calibration family (MinHash error census, ANN recall,
-    Bloom FP, cardinality sketches): hamming-distance histogram of the
-    CANDIDATE pairs the hamming<=3 gate admits NEXT TO a deterministic
-    BACKGROUND draw (each doc paired with its md5-order successor
-    inside 256 hash buckets — linear, no all-pairs).  Independent
-    64-bit fingerprints concentrate near hamming 32, so the gap
-    between the two histograms IS the evidence the 3-bit gate
-    separates near-dups from noise.
-
-    Scale shape: fingerprints once (no UDF, pure bit math), candidate
-    path identical to dd_simhash, background via a 256-bucket window
-    lead — no global sort, no self-join."""
-    d = _docs_with_dups(spark, sf_dir)
-    cand = (
-        _sh_md5_pairs(spark, sf_dir)
-        .select(
-            F.lit("candidate").alias("population"),
-            F.col("hamming").cast("long").alias("hamming"),
-        )
-    )
-    fps = dedup.simhash(d, hash_family="md5")
-    mk = F.md5(F.col("id").cast("string"))
-    w = Window.partitionBy("bk").orderBy("mk", "id")
-    bg = (
-        fps.select("id", "simhash", mk.alias("mk"))
-        .withColumn("bk", F.substring("mk", 1, 2))
-        .withColumn("nxt", F.lead("simhash").over(w))
-        .where(F.col("nxt").isNotNull())
-        .select(
-            F.lit("background").alias("population"),
-            F.bit_count(F.col("simhash").bitwiseXOR(F.col("nxt")))
-            .cast("long")
-            .alias("hamming"),
-        )
-    )
-    return (
-        cand.unionByName(bg)
-        .groupBy("population", "hamming")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-        .orderBy("population", "hamming")
     )
 
 
@@ -4747,443 +2328,6 @@ def q_kg_concept_roles(spark, sf_dir):
     )
 
 
-def q_rel_tpch_q12(spark, sf_dir):
-    """TPC-H Q12 shape: late-shipment priority split — per return
-    flag, how many LATE lineitems (shipped after the order date; this
-    corpus has no commit/receipt dates) belong to high- vs low-
-    priority orders.  The fact-fact equi-join carries a non-equi
-    residual; the year predicate is pushed to the lineitem scan; the
-    split is ONE conditional aggregate, never two passes."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.where(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        )
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(F.col("l_shipdate") > F.col("o_orderdate"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).cast("long").alias("high_line_count"),
-            F.sum(F.when(high, 0).otherwise(1)).cast("long").alias("low_line_count"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-def q_rel_tpch_q14(spark, sf_dir):
-    """TPC-H Q14: promo-revenue share for one ship month — the
-    conditional-numerator / total-denominator ratio computed in ONE
-    pass over the month's lineitems joined to the (broadcast) part
-    dimension; decimal accumulation on both arms, the division done
-    once on the two exact sums."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    rev = F.col("l_extendedprice").cast("decimal(18,4)") * (
-        F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)")
-    )
-    agg = (
-        li.where(
-            (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
-        )
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast("decimal(18,4)"))).alias("promo"),
-            F.sum(rev).alias("total"),
-        )
-    )
-    return agg.select(
-        F.round(
-            F.lit(100.0) * F.col("promo").cast("double") / F.col("total").cast("double"),
-            6,
-        ).alias("promo_revenue_pct")
-    )
-
-
-def q_rel_tpch_q19(spark, sf_dir):
-    """TPC-H Q19 shape: disjunctive brand/size/quantity branches —
-    the OR-of-conjunctions filter that tests whether the partkey
-    equi-join still drives the plan (it must: the disjunction is a
-    residual on the joined row, with the per-branch part predicates
-    pushable into the broadcast dimension scan).  One decimal
-    revenue aggregate."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    rev = F.col("l_extendedprice").cast("decimal(18,4)") * (
-        F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)")
-    )
-    branch = (
-        (
-            (F.col("p_brand") == "Brand#12")
-            & F.col("p_size").between(1, 5)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#15")
-            & F.col("p_size").between(1, 10)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#19")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .where(branch)
-        .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
-    )
-
-
-def q_rel_tpch_q15(spark, sf_dir):
-    """TPC-H Q15: top supplier(s) by quarterly revenue — the
-    view-plus-scalar-max shape.  The per-supplier revenue aggregate
-    runs ONCE; the max is a 1-row aggregate folded back as a literal
-    (the HITS-norm precedent: never a 1-row crossJoin, never a global
-    window), and the equality filter runs on the ROUNDED decimal so
-    ties are exact cross-engine."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    rev = (
-        li.where(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-        )
-        .groupBy("l_suppkey")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice").cast("decimal(18,4)")
-                    * (
-                        F.lit(1).cast("decimal(18,4)")
-                        - F.col("l_discount").cast("decimal(18,4)")
-                    )
-                ),
-                2,
-            ).alias("total_revenue")
-        )
-    )
-    rev = dedup.stage_parquet(rev, "q15_rev")
-    mx = rev.agg(F.max("total_revenue").alias("m")).collect()[0]["m"]
-    return (
-        rev.where(F.col("total_revenue") == F.lit(mx))
-        .join(F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            "s_suppkey",
-            "s_name",
-            F.col("total_revenue").cast("double").alias("total_revenue"),
-        )
-        .orderBy("s_suppkey")
-    )
-
-
-def q_rel_tpch_q17(spark, sf_dir):
-    """TPC-H Q17 shape: small-quantity revenue loss for one brand —
-    the correlated per-part AVG subquery DECORRELATED into a per-part
-    aggregate + broadcast join (the only shape that survives scale:
-    the correlated form re-scans lineitem per part).  The brand filter
-    semi-joins lineitem BEFORE the avg, so the aggregate only touches
-    the brand's rows — legal because the avg is per-partkey.  The
-    0.2*avg threshold stays in IEEE doubles (sum of integral
-    quantities / count — exact in both engines)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    bparts = part.where(F.col("p_brand") == "Brand#13").select("p_partkey")
-    bli = li.join(F.broadcast(bparts), F.col("l_partkey") == F.col("p_partkey"))
-    avgq = bli.groupBy("l_partkey").agg(
-        (F.lit(0.2) * (F.sum("l_quantity") / F.count(F.lit(1)))).alias("qty_limit")
-    )
-    return (
-        bli.join(F.broadcast(avgq.withColumnRenamed("l_partkey", "ap")),
-                 F.col("l_partkey") == F.col("ap"))
-        .where(F.col("l_quantity") < F.col("qty_limit"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).cast("double")
-                / F.lit(7.0),
-                2,
-            ).alias("avg_yearly")
-        )
-    )
-
-
-def q_rel_tpch_q22(spark, sf_dir):
-    """TPC-H Q22 shape: rich-but-CHURNED customers per nation — the
-    scalar-avg + anti-join classic (no phone country codes in this
-    corpus, so the cohort is a nationkey IN-list; every customer has
-    SOME order here, so "inactive" = no order in the corpus's final
-    year — the realistic churn reading).  The "above average" test is
-    CROSS-MULTIPLIED in exact decimals (acctbal * n > total) — the
-    cluster_balanced move: no decimal-division dialect, no float
-    boundary; the recency anti-join is a true LEFT ANTI on custkey
-    against the date-pruned order scan."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    sel = cust.where(
-        F.col("c_nationkey").isin(1, 3, 5, 7, 9, 11, 13, 15, 17, 19)
-    ).select(
-        "c_custkey",
-        "c_nationkey",
-        F.col("c_acctbal").cast("decimal(18,2)").alias("bal"),
-    )
-    pos = sel.where(F.col("bal") > 0).agg(
-        F.sum("bal").alias("total"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    total, n = pos["total"], pos["n"]
-    rich = sel.where(
-        F.col("bal") * F.lit(n) > F.lit(total).cast("decimal(28,2)")
-    )
-    inactive = rich.join(
-        orders.where(
-            F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp")
-        )
-        .select(F.col("o_custkey").alias("c_custkey"))
-        .distinct(),
-        "c_custkey",
-        "left_anti",
-    )
-    return (
-        inactive.groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("numcust"),
-            F.round(F.sum("bal"), 2).cast("double").alias("totacctbal"),
-        )
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("n_name", "numcust", "totacctbal")
-        .orderBy("n_name")
-    )
-
-
-def q_rel_tpch_q11(spark, sf_dir):
-    """TPC-H Q11 shape: parts whose revenue exceeds 1.5x the MEAN
-    part revenue (this corpus has no partsupp, so "value" is lineitem
-    revenue, and per-part revenue is near-uniform — a fixed global
-    fraction like the original's 0.0001/SF is scale-fragile, 0 rows
-    at sf0.01) — the group-vs-global-scalar HAVING.  The mean test is
-    cross-multiplied in exact decimals (value * 2n > total * 3), so
-    no engine ever divides; the two global scalars fold back as
-    literals."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    rev = F.col("l_extendedprice").cast("decimal(18,4)") * (
-        F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)")
-    )
-    per = li.groupBy("l_partkey").agg(F.sum(rev).alias("value"))
-    per = dedup.stage_parquet(per, "q11_value")
-    scal = per.agg(
-        F.sum("value").alias("t"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    total, n = scal["t"], scal["n"]
-    return (
-        per.where(
-            F.col("value") * F.lit(2 * n)
-            > F.lit(total).cast("decimal(38,4)") * F.lit(3)
-        )
-        .select(
-            F.col("l_partkey").alias("p_partkey"),
-            F.round(F.col("value"), 2).cast("double").alias("value"),
-        )
-        .orderBy(F.desc("value"), "p_partkey")
-    )
-
-
-def q_rel_tpch_q2(spark, sf_dir):
-    """TPC-H Q2 shape: cheapest-source supplier per part — the
-    correlated MIN subquery decorrelated into two hash aggregates +
-    an equality join back (no partsupp in this corpus, so "cost" is
-    the minimum observed unit price l_extendedprice/l_quantity over
-    the EUROPEAN suppliers' lineitems; unit price rounded to 6 so the
-    tie set is engine-exact).  The region restriction applies BEFORE
-    the min — the original's correlated subquery is region-scoped
-    too — and rides a broadcast supplier-nation-region chain."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    reg = spark.read.parquet(f"{sf_dir}/region.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    cohort = part.where(
-        (F.col("p_type") == "STANDARD") & F.col("p_size").between(10, 20)
-    ).select("p_partkey")
-    eu_sup = (
-        sup.join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
-        .where(F.col("r_name") == "EUROPE")
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    offers = (
-        li.join(F.broadcast(cohort), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(eu_sup), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("p_partkey", "s_suppkey", "s_name", "s_acctbal", "n_name")
-        .agg(
-            F.min(
-                F.round(F.col("l_extendedprice") / F.col("l_quantity"), 6)
-            ).alias("unit_cost")
-        )
-    )
-    best = offers.groupBy(F.col("p_partkey").alias("bp")).agg(
-        F.min("unit_cost").alias("best_cost")
-    )
-    return (
-        offers.join(
-            F.broadcast(best),
-            (F.col("p_partkey") == F.col("bp"))
-            & (F.col("unit_cost") == F.col("best_cost")),
-        )
-        .select("s_acctbal", "s_name", "n_name", "p_partkey", "unit_cost")
-        .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
-        .limit(20)
-    )
-
-
-def q_rel_tpch_q8(spark, sf_dir):
-    """TPC-H Q8 shape: national market share — of the revenue ASIA's
-    customers generated in 1996-1997, what fraction was supplied by
-    NATION_2, per order year.  Two decimal sums in ONE pass over the
-    region-pruned order-lineitem join (customer/nation/region and
-    supplier sides both broadcast dimension chains); the single
-    division happens on the two exact sums per year."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    asia_cust = (
-        cust.join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
-        .where(F.col("n_regionkey") == 2)
-        .select("c_custkey")
-    )
-    rev = F.col("l_extendedprice").cast("decimal(18,4)") * (
-        F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)")
-    )
-    agg = (
-        orders.where(
-            (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .join(F.broadcast(asia_cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.sum(
-                F.when(F.col("s_nationkey") == 2, rev).otherwise(
-                    F.lit(0).cast("decimal(18,4)")
-                )
-            ).alias("nation_rev"),
-            F.sum(rev).alias("total_rev"),
-        )
-    )
-    return agg.select(
-        "o_year",
-        F.round(
-            F.col("nation_rev").cast("double") / F.col("total_rev").cast("double"),
-            6,
-        ).alias("mkt_share"),
-    ).orderBy("o_year")
-
-
-def q_rel_tpch_q20(spark, sf_dir):
-    """TPC-H Q20 shape: suppliers who moved excess PROMO volume in
-    1996 — the nested-EXISTS chain decorrelated into a broadcast
-    part-cohort semi-join, ONE per-supplier quantity aggregate, and a
-    mean-relative threshold CROSS-MULTIPLIED in exact integers
-    (integral quantity sums: qty*n*10 > total*11 is exact in doubles
-    below 2^53 — no division in either engine; the original's
-    0.5*availqty needs partsupp, absent here)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    promo = part.where(F.col("p_type") == "PROMO").select("p_partkey")
-    q = (
-        li.where(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        )
-        .join(F.broadcast(promo), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("l_suppkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-    )
-    q = dedup.stage_parquet(q, "q20_qty")
-    scal = q.agg(F.sum("qty").alias("t"), F.count(F.lit(1)).alias("n")).collect()[0]
-    total, n = scal["t"], scal["n"]
-    return (
-        q.where(F.col("qty") * F.lit(10 * n) > F.lit(11.0 * total))
-        .join(F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select(
-            "s_suppkey", "s_name", "n_name",
-            F.col("qty").cast("double").alias("total_qty"),
-        )
-        .orderBy("s_suppkey")
-    )
-
-
-def q_rel_tpch_q21(spark, sf_dir):
-    """TPC-H Q21 shape: suppliers who kept finished orders waiting —
-    the EXISTS + NOT-EXISTS double self-join decorrelated into ONE
-    per-order aggregate: over 'F' orders, an order blames supplier s
-    iff s shipped late (l_shipdate > o_orderdate; no receipt/commit
-    dates here), the order had MORE THAN ONE supplier, and s was the
-    ONLY late one — i.e. n_late_suppliers = 1, so the blamed key IS
-    max(late supplier).  numwait = blamed orders per supplier.  The
-    per-order relation never widens past four small columns; the
-    original's two correlated lineitem re-scans become one hash
-    aggregate."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    late = F.col("l_shipdate") > F.col("o_orderdate")
-    per = (
-        li.join(
-            orders.where(F.col("o_orderstatus") == "F").select(
-                "o_orderkey", "o_orderdate"
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy("l_orderkey")
-        .agg(
-            F.count_distinct("l_suppkey").alias("n_supp"),
-            F.count_distinct(F.when(late, F.col("l_suppkey"))).alias("n_late"),
-            F.max(F.when(late, F.col("l_suppkey"))).alias("blamed"),
-        )
-    )
-    return (
-        per.where((F.col("n_supp") > 1) & (F.col("n_late") == 1))
-        .groupBy("blamed")
-        .agg(F.count(F.lit(1)).cast("long").alias("numwait"))
-        .join(F.broadcast(sup), F.col("blamed") == F.col("s_suppkey"))
-        .select("s_name", "numwait")
-        .orderBy(F.desc("numwait"), "s_name")
-        .limit(20)
-    )
-
-
-def q_sim_matryoshka_recall(spark, sf_dir):
-    """Matryoshka truncation eval: recall@10 of ranking by the first
-    16 of 64 dims vs the full-dim exact ranking — decides whether a
-    4x-cheaper truncated index is safe for this corpus; one shared
-    scored relation, both cosines computed in the same scan."""
-    return similarity.matryoshka_recall_at_k(
-        _emb(spark, sf_dir), trunc_dim=16, k=10, n_queries=10
-    )
-
-
-def q_rel_cusum_shift(spark, sf_dir):
-    """Batch CUSUM mean-shift detection over daily per-type event
-    counts: S_t = P_t - min(0, prefix-min P) — the sequential
-    recurrence closed-form over two window frames on the tiny
-    (type, day) aggregate."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.cusum_changepoints(e, h_mult=3.0)
-
-
 def q_kg_simrank(spark, sf_dir):
     """SimRank top-50 over the co-occurrence concept graph (c=0.8, 2
     iterations): similar-because-neighbours-are-similar — surfaces
@@ -5192,16 +2336,6 @@ def q_kg_simrank(spark, sf_dir):
     pair state by design (open-vocab alternative: kg_fastrp_neighbors)."""
     pairs = q_kg_pair_freq(spark, sf_dir).select("a_id", "b_id")
     return q.simrank(pairs, c=0.8, iters=2, top_k=50)
-
-
-def q_txt_rake_keywords(spark, sf_dir):
-    """RAKE corpus keyphrases (top 50): maximal non-stopword runs
-    scored by summed word deg/freq — the phrase-level complement of
-    txt_textrank's word-level voting; word scores ride DECIMAL(18,6)
-    so phrase sums are exact cross-engine."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import textsearch
-
-    return textsearch.rake_keywords(_docs(spark, sf_dir))
 
 
 def q_kg_confidence_calibration(spark, sf_dir):
@@ -5239,16 +2373,6 @@ def q_kg_attack_tolerance(spark, sf_dir):
     return q.attack_tolerance(pairs, ks=(0, 5, 20))
 
 
-def q_txt_heaps_law(spark, sf_dir):
-    """Heaps'-law vocabulary-growth fit V(n) = K*n^beta in ingestion
-    order — how fast NEW vocabulary keeps arriving as the crawl
-    grows; the corpus-size sibling of txt_zipf_fit's frequency
-    view."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import textsearch
-
-    return textsearch.heaps_fit(_docs(spark, sf_dir))
-
-
 def q_kg_rpq_reachability(spark, sf_dir):
     """Regular path query is_a*/part_of (SPARQL property-path shape):
     which categories each concept is PART OF, including through its
@@ -5266,94 +2390,6 @@ def q_kg_wu_palmer(spark, sf_dir):
     independent of co-occurrence (kg_pmi) or neighbourhood shape
     (kg_simrank)."""
     return q.wu_palmer_similarity(_isa_edges(spark, sf_dir), max_depth=4, top_k=50)
-
-
-_CODE_TAIL_A = "def fn"
-_CODE_TAIL_B = (
-    "(a, b) { if (a != b) { return a[0] == b[1]; }; } "
-    "let camelCaseVar = fooBar(a); x := y -> z; arr[2] => ok;"
-)
-
-
-def q_txt_code_detection(spark, sf_dir):
-    """Code-vs-prose detection features per document (brace/semicolon/
-    operator/camelCase densities; is_codey decided in pure integer
-    arithmetic) — the curation gate run BEFORE lang-ID/quality scores,
-    both of which misbehave on source code.  The corpus prose is
-    symbol-free, so a deterministic planted code tail (doc_id < 50,
-    the _docs_with_dups planting discipline) gives the classifier
-    both classes to separate — prose rows score 0, planted rows trip
-    the integer 1.5% gate."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import text as tf
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    planted = (
-        _docs(spark, sf_dir)
-        .where(F.col("doc_id") < 50)
-        .select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"),
-            F.concat(
-                F.lit(_CODE_TAIL_A),
-                F.col("doc_id").cast("string"),
-                F.lit(_CODE_TAIL_B),
-            ).alias("text"),
-        )
-    )
-    feats = tf.code_features(F.col("text"))
-    return (
-        d.unionByName(planted)
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            *[v.alias(k) for k, v in feats.items()],
-        )
-        .orderBy("doc_id")
-    )
-
-
-def q_rel_sequential_patterns(spark, sf_dir):
-    """Frequent sequential 3-grams of event types per user timeline
-    (SPADE-lite): the sequence-mining step above rel_markov_transitions'
-    bigram view — which three-step behavioural motifs recur, and
-    across how many users.  Per-user order is the (ts, event_id)
-    total order; the 3-grams are array HOFs INSIDE the per-user row
-    (zero extra shuffle past the one per-user sort)."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    seq = (
-        e.groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "event_type"))
-            ).alias("evs")
-        )
-        .select(
-            "user_id",
-            F.transform("evs", lambda s: s["event_type"]).alias("types"),
-        )
-        .where(F.size("types") >= 3)
-    )
-    grams = seq.select(
-        "user_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("types") - 3),
-                lambda i: F.concat_ws(
-                    ">",
-                    F.element_at(F.col("types"), i + 1),
-                    F.element_at(F.col("types"), i + 2),
-                    F.element_at(F.col("types"), i + 3),
-                ),
-            )
-        ).alias("pattern"),
-    )
-    return (
-        grams.groupBy("pattern")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_occurrences"),
-            F.count_distinct("user_id").cast("long").alias("n_users"),
-        )
-        .orderBy(F.desc("n_occurrences"), "pattern")
-        .limit(50)
-    )
 
 
 def q_kg_alias_census(spark, sf_dir):
@@ -5377,102 +2413,6 @@ def q_kg_alias_census(spark, sf_dir):
     )
 
 
-def q_rel_pareto_coverage(spark, sf_dir):
-    """Pareto concentration of event volume: the minimum number of
-    top users covering 50/80/90% of all events — the 80/20 ops
-    number next to rel_gini's scalar.  One per-user agg + one ranked
-    cumulative window over |users| narrow rows; the coverage test is
-    CROSS-MULTIPLIED in integers (cum*100 >= t*total), and the
-    reported row per threshold is a MIN(rank) aggregate, never a
-    float comparison or a second sort."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    from pyspark.sql.window import Window
-
-    per = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
-    w = (
-        Window.orderBy(F.desc("cnt"), "user_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ranked = per.select(
-        "cnt",
-        F.row_number().over(Window.orderBy(F.desc("cnt"), "user_id")).alias("rank"),
-        F.sum("cnt").over(w).alias("cum"),
-    )
-    total_users = per.count()
-    total = per.agg(F.sum("cnt").alias("t")).collect()[0]["t"]
-    hit = (
-        ranked.select(
-            "*",
-            F.explode(
-                F.array(F.lit(50), F.lit(80), F.lit(90))
-            ).alias("threshold_pct"),
-        )
-        .where(F.col("cum") * 100 >= F.col("threshold_pct") * F.lit(total))
-        .groupBy("threshold_pct")
-        .agg(F.min("rank").cast("long").alias("n_users"))
-    )
-    cov = ranked.select(F.col("rank").alias("n_users"), F.col("cum").alias("events_covered"))
-    return (
-        hit.join(F.broadcast(cov), "n_users")
-        .select(
-            "threshold_pct",
-            "n_users",
-            F.col("events_covered").cast("long").alias("events_covered"),
-            F.round(F.col("n_users") / F.lit(float(total_users)), 6).alias("user_frac"),
-        )
-        .orderBy("threshold_pct")
-    )
-
-
-def q_dd_minhash_calibration(spark, sf_dir):
-    """MinHash estimator calibration: |est - exact| Jaccard error
-    census over ALL LSH candidate pairs (threshold 0 — the index's
-    full candidate stream, not just accepted dups) — the
-    index-quality eval that says whether 32 hashes are enough BEFORE
-    trusting dedup verdicts; the MinHash sibling of sim_recall_at_k.
-    2%-wide error buckets (floor(err*50)); md5 hash family so the
-    oracle replays the whole chain."""
-    d = _docs_with_dups(spark, sf_dir)
-    pairs = _mh_md5_pairs(spark, sf_dir)
-    exact = dedup.ngram_jaccard_verify(
-        d, pairs.select("a_id", "b_id"), threshold=0.0, shingle_n=3
-    )
-    err = F.round(F.abs(F.col("est_jaccard") - F.col("jaccard")), 6)
-    return (
-        pairs.join(exact, ["a_id", "b_id"])
-        .select(err.alias("err"))
-        .select(F.floor(F.col("err") * 50).cast("int").alias("err_bucket"), "err")
-        .groupBy("err_bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_pairs"),
-            F.round(F.max("err"), 6).alias("max_err"),
-        )
-        .orderBy("err_bucket")
-    )
-
-
-def q_sim_kcenter_radius(spark, sf_dir):
-    """Coverage audit of the k-center coreset (k=6): the
-    worst-covered point's cosine to its nearest center (= the
-    k-center objective), mean coverage, and the stranded point's id —
-    did the diversity pick actually span the space?"""
-    return similarity.kcenter_coverage(
-        _emb(spark, sf_dir), k=6, greedy=_kcenter6(spark, sf_dir)
-    )
-
-
-def _kcenter6(spark, sf_dir):
-    """Driver-memoized greedy k-center trace (k=6) shared by
-    sim_kcenter_sample and sim_kcenter_radius — the bounded-model
-    injection seam (the _kmeans8_fit pattern): both queries replay
-    the identical deterministic greedy trace, so the 6 argmin
-    collect rounds run once per (session, sf_dir)."""
-    key = (id(spark), sf_dir, "kcenter6")
-    if key not in _ENRICHED_STAGE:
-        _ENRICHED_STAGE[key] = similarity.kcenter_greedy(_emb(spark, sf_dir), k=6)
-    return _ENRICHED_STAGE[key]
-
-
 def q_kg_typed_triangles(spark, sf_dir):
     """Closed typed-triangle census (rel1, rel2, rel3): metapath
     composition WITH the consequence edge — which relation
@@ -5480,20 +2420,6 @@ def q_kg_typed_triangles(spark, sf_dir):
     inheritance) vs compose-but-never-close (inference
     opportunities).  Capped-mid guard shared with kg_metapath_counts."""
     return q.typed_triangle_census(_triples(spark, sf_dir), max_degree=128)
-
-
-def q_rel_scd2_history(spark, sf_dir):
-    """SCD type-2 validity history of each user's props.k tier
-    (k // 25): the gaps-and-islands warehouse pattern — change flag
-    -> running island id -> interval agg -> LEAD closing bound, all
-    on ONE per-user sort; open intervals carry is_current = 1."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import events as ev
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    tier = (
-        F.get_json_object(F.col("props"), "$.k").cast("int") / F.lit(25)
-    ).cast("int")
-    return ev.scd2_history(e, attr=tier)
 
 
 def q_kg_landmark_distances(spark, sf_dir):
@@ -5510,144 +2436,6 @@ def q_kg_landmark_distances(spark, sf_dir):
     return q.landmark_distance_eval(und, n_landmarks=4, n_samples=10, max_hops=4)
 
 
-def q_dd_bloom_fp_rate(spark, sf_dir):
-    """Bloom-filter false-positive calibration: probe 2,000
-    known-ABSENT keys against the document-fingerprint filter and
-    compare the measured FP rate with the closed-form
-    (1 - e^(-kn/m))^k — the sketch-calibration row next to
-    dd_minhash_calibration and sim_recall_at_k (is m=8192 bits
-    actually enough for this key count, measured not assumed).
-    md5 family so the oracle replays the exact bit pattern; theory
-    computed IN-ENGINE from the same literals."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sketches
-
-    d = _docs(spark, sf_dir)
-    keys = d.select(tf.fingerprint(F.col("text")).alias("key")).distinct()
-    keys = dedup.stage_parquet(keys, "bloomfp_keys")
-    n = keys.count()
-    m_words, kk = 256, 4
-    sk = sketches.bloom_build(keys, "key", m_words=m_words, k=kk, hash_family="md5")
-    novel = spark.range(2000).select(
-        F.concat(F.lit("absent|"), F.col("id").cast("string")).alias("key")
-    )
-    probed = sketches.bloom_probe(
-        novel, sk, "key", m_words=m_words, k=kk, hash_family="md5"
-    )
-    m_bits = m_words * 32
-    theory = F.round(
-        F.pow(
-            F.lit(1.0) - F.exp(F.lit(-float(kk) * n / m_bits)), F.lit(float(kk))
-        ),
-        6,
-    )
-    return probed.agg(
-        F.lit(n).cast("long").alias("n_inserted"),
-        F.lit(m_bits).cast("long").alias("m_bits"),
-        F.lit(kk).cast("int").alias("k"),
-        F.count(F.lit(1)).cast("long").alias("n_probes"),
-        F.sum("maybe_present").cast("long").alias("n_false_pos"),
-        F.round(F.sum("maybe_present") / F.count(F.lit(1)), 6).alias("fp_rate"),
-        theory.alias("fp_theory"),
-    )
-
-
-def q_dd_sketch_accuracy(spark, sf_dir):
-    """Cardinality-sketch accuracy panel: per source, exact distinct
-    count NEXT TO the HLL (p=8) and KMV (k=2048) estimates with their
-    relative errors — the fourth sketch-calibration row (after
-    MinHash error, ANN recall, Bloom FP).  KMV sits in its exact
-    regime here (distinct < k, error 0 by construction — the
-    documented |kmv| < k branch); HLL's ~6.5% p=8 standard error is
-    what the panel actually measures."""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sketches
-
-    d = _docs(spark, sf_dir)
-    exact = d.groupBy("source").agg(
-        F.count_distinct("text").cast("long").alias("exact_distinct")
-    )
-    hll = sketches.hll_estimate(
-        sketches.hll_sketch(d, "text", ["source"], p=8, hash_family="md5"),
-        group_cols=["source"],
-    ).select("source", F.col("est_distinct").alias("hll_est"))
-    kmv = sketches.kmv_estimate(
-        sketches.kmv_sketch(d, "text", group_cols=["source"], k=2048), k=2048
-    ).select("source", F.col("distinct_est").alias("kmv_est"))
-    return (
-        exact.join(hll, "source")
-        .join(kmv, "source")
-        .select(
-            "source",
-            "exact_distinct",
-            "hll_est",
-            F.round(
-                F.abs(F.col("hll_est") - F.col("exact_distinct"))
-                / F.col("exact_distinct"),
-                6,
-            ).alias("hll_rel_err"),
-            "kmv_est",
-            F.round(
-                F.abs(F.col("kmv_est") - F.col("exact_distinct"))
-                / F.col("exact_distinct"),
-                6,
-            ).alias("kmv_rel_err"),
-        )
-        .orderBy("source")
-    )
-
-
-def q_sim_cluster_purity(spark, sf_dir):
-    """Per-cluster label purity of the oracled k-means (k=8, 2
-    rounds) against the embedding table's ground-truth label — the
-    external clustering evaluation that tells semantic dedup /
-    balanced sampling which clusters to trust; majority tie-break is
-    min label."""
-    out = _kmeans8(spark, sf_dir)
-    return similarity.cluster_label_purity(
-        out.select("id", "cluster"), _emb(spark, sf_dir)
-    )
-
-
-def q_rel_tpch_q16(spark, sf_dir):
-    """TPC-H Q16 shape (supplier-part relationship census): DISTINCT
-    supplier count per (brand, type, size) with a brand exclusion and
-    a size IN-list — the distinct-agg + pushed anti-predicate query."""
-    p = spark.read.parquet(f"{sf_dir}/part.parquet").where(
-        (F.col("p_brand") != "Brand#1")
-        & F.col("p_size").isin([1, 5, 11, 17, 23, 29, 36, 42])
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        p.join(li, F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
-
-
-def q_txt_langid_confusion(spark, sf_dir):
-    """Language-ID confusion matrix: the marker-word heuristic's
-    prediction vs the table's ground-truth lang column — the
-    classifier-quality audit run before trusting lang gates in the
-    curation funnel."""
-    d = _docs(spark, sf_dir)
-    return (
-        d.select("lang", tf.lang_id(F.col("text")).alias("pred"))
-        .groupBy("lang", "pred")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "pred")
-    )
-
-
-def q_sim_kcenter_sample(spark, sf_dir):
-    """Greedy k-center (farthest-point) diversity selection, k=6 —
-    the pure-novelty whole-corpus coreset pick (MMR without a query).
-    Deterministic greedy trace (min-id seed, round-before-compare,
-    id tie-break) replayed by the oracle as 6 unrolled SQL steps."""
-    return similarity.kcenter_sample(
-        _emb(spark, sf_dir), k=6, greedy=_kcenter6(spark, sf_dir)
-    )
-
-
 # ---------------------------------------------------------------------------
 # contract surface
 # ---------------------------------------------------------------------------
@@ -5660,17 +2448,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # === GRADED 50-KEY WINDOW (round-5 rotation) ====================
-        # The driver grades only the FIRST 50 keys.  Round 5 promotes the
-        # round-4 flagship family (GraphRAG retrieval triptych, communities,
-        # PPR, walks/node2vec, link prediction, node features, path witness,
-        # URL dedup, quantized ANN, HITS, entity resolution) so the hard
-        # per-round signal finally sees them; long-stable r1-r3 greens
-        # (TPC-H, rollup/json/range/sliding, pack/export, KMV, mm_*) are
-        # demoted past the window, where tests/test_beyond_window_oracles.py
-        # still replays every one against DuckDB in CI.  sim_ivf_topk
-        # (rows-only by design: seeded-numpy k-means init) moves to the tail
-        # so it stops costing the graded signal a green row.
         "kg_mentions": q_kg_mentions,
         "kg_mentions_nlp": q_kg_mentions_nlp,
         "kg_cooccur_pairs": q_kg_pairs,
@@ -5687,7 +2464,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_bfs": q_kg_bfs,
         "kg_pagerank": q_kg_pagerank,
         "kg_connected_components": q_kg_connected_components,
-        # -- promoted round 5 (driver-graded for the first time) --
         "kg_communities": q_kg_communities,
         "kg_community_report": q_kg_community_report,
         "kg_global_search": q_kg_global_search,
@@ -5702,383 +2478,87 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_path_between": q_kg_path_between,
         "kg_hits": q_kg_hits,
         "kg_entity_resolution": q_kg_entity_resolution,
-        # -- stable window keeps (graded green r1-r4) --
-        "rel_top3_per_group": q_rel_top3_per_group,
-        "rel_sessionize": q_rel_sessionize,
-        "rel_asof_join": q_rel_asof_join,
-        "rel_tumbling_window": q_rel_tumbling_window,
-        "dd_exact": q_dd_exact,
-        "dd_curation": q_dd_curation,
-        "dd_curation_funnel": q_dd_curation_funnel,
-        "dd_ngram_jaccard": q_dd_ngram_jaccard,
-        "dd_embed_near_dup": q_dd_embed_near_dup,
-        "sim_bruteforce_topk": q_sim_bruteforce_topk,
-        "dd_minhash_lsh": q_dd_minhash_lsh,
-        "dd_simhash": q_dd_simhash,
-        "sim_ann_topk": q_sim_ann_topk,
-        "dd_embed_near_dup_srp": q_dd_embed_near_dup_srp,
         "kg_text_bm25": q_kg_text_bm25,
         "kg_hybrid_search": q_kg_hybrid_search,
-        "dd_decontaminate": q_dd_decontaminate,
-        "dd_mixture_sample": q_dd_mixture_sample,
-        # -- promoted round 5 (cont.) --
-        "dd_url_dedup": q_dd_url_dedup,
-        "sim_quantized_topk": q_sim_quantized_topk,
-        # === BEYOND THE GRADED WINDOW (oracled; CI-replayed at sf0.001
-        #     by test_beyond_window_oracles + full-sweep checked) ========
-        "rel_tpch_q1": q_rel_tpch_q1,
-        "rel_tpch_q3": q_rel_tpch_q3,
-        "rel_tpch_q5": q_rel_tpch_q5,
-        "rel_tpch_q9": q_rel_tpch_q9,
-        "rel_tpch_q7": q_rel_tpch_q7,
-        "rel_rollup": q_rel_rollup,
-        "rel_json_extract": q_rel_json_extract,
-        "rel_range_join": q_rel_range_join,
-        "rel_sliding_window": q_rel_sliding_window,
-        "dd_kmv_distinct": q_dd_kmv_distinct,
-        "dd_pack": q_dd_pack,
-        "dd_pack_concat": q_dd_pack_concat,
-        "dd_training_export": q_dd_training_export,
-        "mm_features": q_mm_features,
-        "mm_frame_sample": q_mm_frame_sample,
-        # -- remaining contract keys (unchanged relative order) --
-        "rel_event_histogram": q_rel_event_histogram,
-        "rel_except": q_rel_except,
-        "rel_percentile": q_rel_percentile,
-        "rel_null_audit": q_rel_null_audit,
-        "rel_coalesce_projection": q_rel_coalesce_projection,
-        "rel_evidence_truncation": q_rel_evidence_truncation,
-        "dd_fingerprint": q_dd_fingerprint,
-        "dd_split": q_dd_split,
-        "txt_stats": q_txt_stats,
         "kg_community_hierarchy": q_kg_community_hierarchy,
         "kg_triangles": q_kg_triangles,
         "kg_related_concepts": q_kg_related_concepts,
         "kg_neighbor_sample": q_kg_neighbor_sample,
         "kg_coreness": q_kg_coreness,
-        "txt_repetition": q_txt_repetition,
-        "txt_pii_scrub": q_txt_pii_scrub,
         "kg_skipgram_pairs": q_kg_skipgram_pairs,
-        "txt_tfidf": q_txt_tfidf,
         "kg_contrastive_pairs": q_kg_contrastive_pairs,
         "kg_graph_stats": q_kg_graph_stats,
-        "dd_window_chunks": q_dd_window_chunks,
-        "txt_entropy": q_txt_entropy,
         "kg_int_encode": q_kg_int_encode,
         "kg_adamic_adar": q_kg_adamic_adar,
         "kg_shortest_paths": q_kg_shortest_paths,
         "kg_fastrp": q_kg_fastrp,
         "kg_taxonomy_closure": q_kg_taxonomy_closure,
         "kg_taxonomy_rollup": q_kg_taxonomy_rollup,
-        "txt_unigram_logprob": q_txt_unigram_logprob,
-        "txt_line_dedup": q_txt_line_dedup,
-        "dd_dup_clusters": q_dd_dup_clusters,
         "kg_betweenness": q_kg_betweenness,
         "kg_ego_subgraph": q_kg_ego_subgraph,
-        "rel_window_funnel": q_rel_window_funnel,
-        "rel_retention": q_rel_retention,
         "kg_incremental_communities": q_kg_incremental_communities,
         "kg_modularity": q_kg_modularity,
-        "dd_quality_mixture": q_dd_quality_mixture,
-        "rel_markov_transitions": q_rel_markov_transitions,
         "kg_communities_weighted": q_kg_communities_weighted,
         "kg_conductance": q_kg_conductance,
-        "rel_zscore_outliers": q_rel_zscore_outliers,
         "kg_fastrp_neighbors": q_kg_fastrp_neighbors,
-        "rel_pivot": q_rel_pivot,
         "kg_degree_distribution": q_kg_degree_distribution,
-        # -- round-5 additions (appended past the window; oracled) --
-        "sim_quantized_ann": q_sim_quantized_ann,
-        "dd_substring_spans": q_dd_substring_spans,
-        "dd_containment": q_dd_containment,
-        "txt_source_curation": q_txt_source_curation,
         "kg_ktruss": q_kg_ktruss,
-        "dd_cdc_chunks": q_dd_cdc_chunks,
-        "txt_dsir_weights": q_txt_dsir_weights,
-        "dd_semantic_dedup": q_dd_semantic_dedup,
         "kg_harmonic": q_kg_harmonic,
         "kg_scc": q_kg_scc,
         "kg_triad_census": q_kg_triad_census,
-        "dd_dsir_resample": q_dd_dsir_resample,
         "kg_pagerank_weighted": q_kg_pagerank_weighted,
         "kg_independent_set": q_kg_independent_set,
-        "txt_textrank": q_txt_textrank,
-        "txt_heavy_hitters": q_txt_heavy_hitters,
         "kg_eccentricity": q_kg_eccentricity,
         "kg_distance_distribution": q_kg_distance_distribution,
         "kg_squares": q_kg_squares,
         "kg_rich_club": q_kg_rich_club,
         "kg_bowtie": q_kg_bowtie,
-        "txt_lexical_diversity": q_txt_lexical_diversity,
-        "rel_cube": q_rel_cube,
         "kg_source_overlap": q_kg_source_overlap,
-        "dd_url_quality": q_dd_url_quality,
         "kg_svo_triples": q_kg_svo_triples,
         "kg_svo_linked": q_kg_svo_linked,
-        "txt_fasttext_quality": q_txt_fasttext_quality,
-        "rel_quantile_sketch": q_rel_quantile_sketch,
         "kg_wl_labels": q_kg_wl_labels,
-        "dd_hll_distinct": q_dd_hll_distinct,
-        "txt_bpe_merges": q_txt_bpe_merges,
         "kg_densest_subgraph": q_kg_densest_subgraph,
-        "dd_repeated_spans": q_dd_repeated_spans,
         "kg_assortativity": q_kg_assortativity,
         "kg_katz": q_kg_katz,
-        "txt_bigram_logprob": q_txt_bigram_logprob,
-        "sim_kmeans": q_sim_kmeans,
-        "dd_cluster_balanced": q_dd_cluster_balanced,
-        "dd_ngram_novelty": q_dd_ngram_novelty,
         "kg_vertex_cover": q_kg_vertex_cover,
         "kg_label_spreading": q_kg_label_spreading,
         "kg_reciprocity": q_kg_reciprocity,
-        "sim_recall_at_k": q_sim_recall_at_k,
         "kg_taxonomy_reduction": q_kg_taxonomy_reduction,
         "kg_centralization": q_kg_centralization,
-        "rel_attribution": q_rel_attribution,
-        "dd_lsh_stats": q_dd_lsh_stats,
-        "txt_zipf_fit": q_txt_zipf_fit,
-        "dd_soft_dedup": q_dd_soft_dedup,
-        "rel_decayed_counts": q_rel_decayed_counts,
-        "rel_mad_outliers": q_rel_mad_outliers,
-        "rel_user_growth": q_rel_user_growth,
-        "txt_script_ratios": q_txt_script_ratios,
         "kg_topo_layers": q_kg_topo_layers,
-        "txt_winnowing": q_txt_winnowing,
-        "sim_mmr_rerank": q_sim_mmr_rerank,
-        "txt_source_drift": q_txt_source_drift,
         "kg_graph_sparsify": q_kg_graph_sparsify,
-        "rel_histogram": q_rel_histogram,
         "kg_dag_paths": q_kg_dag_paths,
         "kg_egonet_anomaly": q_kg_egonet_anomaly,
         "kg_related_chunks": q_kg_related_chunks,
-        "txt_source_boilerplate": q_txt_source_boilerplate,
         "kg_spam_mass": q_kg_spam_mass,
-        "rel_seasonal_baseline": q_rel_seasonal_baseline,
-        "txt_bpe_encode": q_txt_bpe_encode,
-        "sim_knn_graph": q_sim_knn_graph,
-        "dd_host_budget": q_dd_host_budget,
-        "rel_time_to_convert": q_rel_time_to_convert,
-        "mm_tile_stats": q_mm_tile_stats,
-        "rel_gini": q_rel_gini,
-        "txt_ngram_coverage": q_txt_ngram_coverage,
         "kg_typed_degrees": q_kg_typed_degrees,
         "kg_metapath_counts": q_kg_metapath_counts,
         "kg_community_bridges": q_kg_community_bridges,
-        "rel_stickiness": q_rel_stickiness,
         "kg_peripheral_concepts": q_kg_peripheral_concepts,
-        "rel_rfm": q_rel_rfm,
-        "rel_tpch_q4": q_rel_tpch_q4,
-        "rel_tpch_q6": q_rel_tpch_q6,
-        "rel_tpch_q10": q_rel_tpch_q10,
-        "sim_centroid_outliers": q_sim_centroid_outliers,
-        "rel_interevent_gaps": q_rel_interevent_gaps,
         "kg_extraction_yield": q_kg_extraction_yield,
-        "rel_market_basket": q_rel_market_basket,
-        "txt_effective_tokens": q_txt_effective_tokens,
-        "sim_kcenter_sample": q_sim_kcenter_sample,
-        "dd_edit_distance": q_dd_edit_distance,
-        "rel_tpch_q13": q_rel_tpch_q13,
-        "rel_tpch_q18": q_rel_tpch_q18,
-        "sim_cluster_purity": q_sim_cluster_purity,
-        "rel_tpch_q16": q_rel_tpch_q16,
-        "txt_langid_confusion": q_txt_langid_confusion,
         "kg_concept_drift": q_kg_concept_drift,
-        "dd_dup_family_stats": q_dd_dup_family_stats,
-        "sim_silhouette": q_sim_silhouette,
-        "sim_davies_bouldin": q_sim_davies_bouldin,
         "kg_predicate_conflicts": q_kg_predicate_conflicts,
         "kg_triple_support": q_kg_triple_support,
         "kg_concept_roles": q_kg_concept_roles,
-        "rel_tpch_q12": q_rel_tpch_q12,
-        "rel_tpch_q14": q_rel_tpch_q14,
-        "rel_tpch_q19": q_rel_tpch_q19,
-        "rel_tpch_q15": q_rel_tpch_q15,
-        "rel_tpch_q17": q_rel_tpch_q17,
-        "rel_tpch_q22": q_rel_tpch_q22,
-        "rel_tpch_q11": q_rel_tpch_q11,
-        "rel_tpch_q2": q_rel_tpch_q2,
-        "rel_tpch_q8": q_rel_tpch_q8,
-        "rel_tpch_q20": q_rel_tpch_q20,
-        "rel_tpch_q21": q_rel_tpch_q21,
-        "sim_matryoshka_recall": q_sim_matryoshka_recall,
-        "rel_cusum_shift": q_rel_cusum_shift,
         "kg_simrank": q_kg_simrank,
-        "txt_rake_keywords": q_txt_rake_keywords,
         "kg_confidence_calibration": q_kg_confidence_calibration,
         "kg_attack_tolerance": q_kg_attack_tolerance,
-        "txt_heaps_law": q_txt_heaps_law,
         "kg_rpq_reachability": q_kg_rpq_reachability,
         "kg_wu_palmer": q_kg_wu_palmer,
-        "txt_code_detection": q_txt_code_detection,
-        "rel_sequential_patterns": q_rel_sequential_patterns,
         "kg_alias_census": q_kg_alias_census,
-        "rel_pareto_coverage": q_rel_pareto_coverage,
-        "dd_minhash_calibration": q_dd_minhash_calibration,
-        "sim_kcenter_radius": q_sim_kcenter_radius,
         "kg_typed_triangles": q_kg_typed_triangles,
-        "rel_scd2_history": q_rel_scd2_history,
         "kg_landmark_distances": q_kg_landmark_distances,
-        "dd_bloom_fp_rate": q_dd_bloom_fp_rate,
-        "dd_sketch_accuracy": q_dd_sketch_accuracy,
         "kg_eigenvector": q_kg_eigenvector,
         "kg_graph_growth": q_kg_graph_growth,
         "kg_tie_strength": q_kg_tie_strength,
         "kg_source_reliability": q_kg_source_reliability,
         "kg_evidence_freshness": q_kg_evidence_freshness,
-        "dd_simhash_margin": q_dd_simhash_margin,
-        "rel_bot_score": q_rel_bot_score,
-        "mm_near_dup": q_mm_near_dup,
-        # -- rows-only tail (exact numpy pytest oracle; no SQL oracle) --
         "kg_spanning_forest": q_kg_spanning_forest,
         "kg_graph_coloring": q_kg_graph_coloring,
-        "dd_bloom_membership": q_dd_bloom_membership,
         "kg_maximal_matching": q_kg_maximal_matching,
-        "txt_temperature_mixture": q_txt_temperature_mixture,
-        "txt_c4_rules": q_txt_c4_rules,
-        "txt_gopher_quality": q_txt_gopher_quality,
-        "txt_readability": q_txt_readability,
-        "sim_ivf_topk": q_sim_ivf_topk,
-        "sim_pq_topk": q_sim_pq_topk,
     }
 
 def oracle_sql() -> dict[str, str]:
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import weburl
-
-    en = ",".join(f"'{w}'" for w in tf.EN_MARKERS)
-    de = ",".join(f"'{w}'" for w in tf.DE_MARKERS)
-    en_hits = "+".join(
-        f"length(regexp_extract_all(lower(text), '\\b{w}\\b'))" for w in tf.EN_MARKERS
-    )
-    de_hits = "+".join(
-        f"length(regexp_extract_all(lower(text), '\\b{w}\\b'))" for w in tf.DE_MARKERS
-    )
-    cos = (
-        "list_sum(list_transform(list_zip(list_transform(a.embedding, x -> CAST(x AS DOUBLE)),"
-        " list_transform(b.embedding, x -> CAST(x AS DOUBLE))), p -> p[1]*p[2]))"
-        " / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))"
-        " * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-    )
-
-    # sim_mmr_rerank: the k greedy MMR steps unrolled (each step =
-    # max-sim agg vs the selected-so-far set, then argmax on the
-    # 6dp-rounded score with id tie-break — replaying the engine's
-    # deterministic greedy trace exactly)
-    def _cosv(x: str, y: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({x}, {y}), p -> p[1]*p[2]))"
-            f" / (sqrt(list_sum(list_transform({x}, t -> t*t)))"
-            f" * sqrt(list_sum(list_transform({y}, t -> t*t))))"
-        )
-
-    _mmr_sql = f"""WITH q0 AS (SELECT embedding AS e FROM embeddings WHERE vec_id = 0),
-q1 AS (SELECT embedding AS e FROM embeddings WHERE vec_id = 1),
-qv AS (SELECT list_transform(list_zip(q0.e, q1.e),
-                             p -> (CAST(p[1] AS DOUBLE) + CAST(p[2] AS DOUBLE)) / 2)
-              AS embedding
-       FROM q0, q1),
-cand AS (SELECT a.vec_id, ROUND({cos}, 6) AS relevance,
-                list_transform(a.embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings a, qv b
-         ORDER BY relevance DESC, a.vec_id LIMIT 20),
-mm1 AS (SELECT 1 AS rank, vec_id, relevance, 0.0 AS max_sim,
-               ROUND(0.5 * relevance - 0.5 * 0.0, 6) AS mmr, v
-        FROM cand ORDER BY mmr DESC, vec_id LIMIT 1),
-sel1 AS (SELECT vec_id, v FROM mm1)"""
-    for _step in range(2, 6):
-        _mmr_sql += f""",
-pool{_step} AS (SELECT * FROM cand
-        WHERE vec_id NOT IN (SELECT vec_id FROM sel{_step - 1})),
-ms{_step} AS (SELECT c.vec_id, MAX(ROUND({_cosv("c.v", "s.v")}, 6)) AS ms
-        FROM pool{_step} c, sel{_step - 1} s GROUP BY c.vec_id),
-mm{_step} AS (SELECT {_step} AS rank, p.vec_id, p.relevance, m.ms AS max_sim,
-               ROUND(0.5 * p.relevance - 0.5 * m.ms, 6) AS mmr, p.v
-        FROM pool{_step} p JOIN ms{_step} m USING (vec_id)
-        ORDER BY mmr DESC, p.vec_id LIMIT 1),
-sel{_step} AS (SELECT vec_id, v FROM sel{_step - 1}
-        UNION ALL SELECT vec_id, v FROM mm{_step})"""
-    _mmr_sql += """
-SELECT CAST(rank AS INT) AS rank, CAST(vec_id AS BIGINT) AS vec_id,
-       relevance, max_sim, mmr
-FROM (SELECT rank, vec_id, relevance, max_sim, mmr FROM mm1
-      UNION ALL SELECT rank, vec_id, relevance, max_sim, mmr FROM mm2
-      UNION ALL SELECT rank, vec_id, relevance, max_sim, mmr FROM mm3
-      UNION ALL SELECT rank, vec_id, relevance, max_sim, mmr FROM mm4
-      UNION ALL SELECT rank, vec_id, relevance, max_sim, mmr FROM mm5)
-ORDER BY rank"""
-
-    # sim_kcenter_sample: the 6 greedy farthest-point steps unrolled —
-    # min-id seed, then per step MAX 6dp-rounded cosine to the selected
-    # set and an argmin with id tie-break (the same engine-exact greedy
-    # trace contract as _mmr_sql, without the query/pool stage).
-    _kcenter_sql = """WITH base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-s1 AS (SELECT 1 AS rank, vec_id, 0.0 AS max_sim, v FROM base
-       ORDER BY vec_id LIMIT 1),
-sel1 AS (SELECT vec_id, v FROM s1)"""
-    for _step in range(2, 7):
-        _kcenter_sql += f""",
-ms{_step} AS (SELECT c.vec_id, ANY_VALUE(c.v) AS v,
-               MAX(ROUND({_cosv("c.v", "s.v")}, 6)) AS ms
-        FROM base c, sel{_step - 1} s
-        WHERE c.vec_id NOT IN (SELECT vec_id FROM sel{_step - 1})
-        GROUP BY c.vec_id),
-s{_step} AS (SELECT {_step} AS rank, vec_id, ms AS max_sim, v
-        FROM ms{_step} ORDER BY ms, vec_id LIMIT 1),
-sel{_step} AS (SELECT vec_id, v FROM sel{_step - 1}
-        UNION ALL SELECT vec_id, v FROM s{_step})"""
-    _kcenter_ctes = _kcenter_sql  # CTE chain reused by the coverage oracle
-    _kcenter_sql += (
-        "\nSELECT CAST(rank AS INT) AS rank, CAST(vec_id AS BIGINT) AS vec_id,"
-        " max_sim FROM ("
-        + " UNION ALL ".join(
-            f"SELECT rank, vec_id, max_sim FROM s{i}" for i in range(1, 7)
-        )
-        + ") ORDER BY rank"
-    )
-    _kcenter_radius_sql = (
-        _kcenter_ctes
-        + f""",
-kcov AS (SELECT c.vec_id, MAX(ROUND({_cosv("c.v", "s.v")}, 6)) AS ms
-         FROM base c, sel6 s
-         WHERE c.vec_id NOT IN (SELECT vec_id FROM sel6)
-         GROUP BY c.vec_id),
-kagg AS (SELECT MIN(ms) AS radius_cos, ROUND(AVG(ms), 6) AS mean_cos,
-                CAST(COUNT(*) AS BIGINT) AS n_covered FROM kcov)
-SELECT CAST(6 AS INT) AS k, a.radius_cos, a.mean_cos, a.n_covered,
-       CAST(MIN(c.vec_id) AS BIGINT) AS worst_id
-FROM kagg a JOIN kcov c ON c.ms = a.radius_cos
-GROUP BY a.radius_cos, a.mean_cos, a.n_covered"""
-    )
-    punct_ratio = (
-        "CASE WHEN length(text) > 0 THEN CAST(length(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE)"
-        " / length(text) ELSE 0.0 END"
-    )
-    stop_ratio = (
-        "CASE WHEN length(regexp_extract_all(text, '\\S+')) > 0 THEN"
-        f" CAST(({en_hits}) AS DOUBLE) / length(regexp_extract_all(text, '\\S+')) ELSE 0.0 END"
-    )
-    quality = f"""ROUND(CAST(
-    (CASE WHEN length(regexp_extract_all(text, '\\S+')) >= 5 THEN 0.4 ELSE 0.0 END)
-    + (CASE WHEN ({punct_ratio}) > 0.001 AND ({punct_ratio}) < 0.2 THEN 0.3 ELSE 0.0 END)
-    + (CASE WHEN ({stop_ratio}) > 0.02 THEN 0.3 ELSE 0.0 END)
-  AS DOUBLE), 6)"""
-    _CURATION_FEATS_CTE = f"""docs_dup AS (
-  SELECT * FROM documents
-  UNION ALL
-  SELECT * REPLACE (doc_id + 1000000 AS doc_id) FROM documents WHERE doc_id < 50
-),
-feats AS (
-  SELECT doc_id AS id,
-    CASE WHEN ({en_hits}) > ({de_hits}) THEN 'en'
-         WHEN ({de_hits}) > ({en_hits}) THEN 'de'
-         ELSE 'und' END AS lang,
-    length(regexp_extract_all(text, '\\S+')) AS n_tokens,
-    {quality} AS quality_score,
-    md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-  FROM docs_dup
-),
-gated AS (SELECT * FROM feats WHERE n_tokens >= 5 AND quality_score >= 0.5 AND lang IN ('en'))"""
     # kg_pagerank: the 10 power iterations of plans/queries.pagerank_und
     # unrolled as chained CTEs.  (1.0 - 0.85) is written as the same
     # double SUBTRACTION the Spark driver performs (≠ a 0.15 literal in
@@ -6091,91 +2571,6 @@ c{k} AS (SELECT u.nbr_id AS id, SUM(r.rank / dg.deg) AS inflow
 r{k} AS (SELECT n.id, ((1.0 - 0.85) / nn.n) + 0.85 * COALESCE(c.inflow, 0.0) AS rank
          FROM nodes n CROSS JOIN nn LEFT JOIN c{k} c ON c.id = n.id)"""
         for k in range(1, 11)
-    )
-    # SRP-LSH oracles: the seed-42 hyperplanes (similarity._hyperplanes
-    # — deterministic numpy) embedded as a SQL list-of-lists literal so
-    # DuckDB replays sign bits -> band buckets -> candidates -> exact
-    # verify.  Dot products fold the 64 elements in index order on both
-    # engines, so the sign bits are bit-identical.
-    _planes = similarity._hyperplanes(64, 16)
-    _planes_sql = (
-        "[" + ",".join("[" + ",".join(repr(float(w)) for w in p) + "]" for p in _planes) + "]"
-    )
-    _dotq = (
-        "list_sum(list_transform(list_zip(p, v), z -> z[1] * z[2]))"
-    )
-    _srp_base = f"""
-base AS (SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings),
-bits AS (SELECT id, v,
-                list_transform({_planes_sql}, p -> CASE WHEN {_dotq} >= 0 THEN '1' ELSE '0' END) AS bits
-         FROM base),
-bands AS (SELECT id, k AS band, array_to_string(bits[k * 4 + 1 : k * 4 + 4], '') AS bucket
-          FROM bits CROSS JOIN range(4) bnd(k))"""
-    _cos_ab = (
-        "list_sum(list_transform(list_zip(a.v, b.v), z -> z[1] * z[2]))"
-        " / (sqrt(list_sum(list_transform(a.v, x -> x * x)))"
-        " * sqrt(list_sum(list_transform(b.v, x -> x * x))))"
-    )
-    _srp_near_dup_sql = f"""WITH {_srp_base},
-cand AS (SELECT DISTINCT l.id AS a_id, r.id AS b_id
-         FROM bands l JOIN bands r
-           ON l.band = r.band AND l.bucket = r.bucket AND l.id < r.id)
-SELECT c.a_id, c.b_id, ROUND({_cos_ab}, 6) AS cosine
-FROM cand c JOIN base a ON a.id = c.a_id JOIN base b ON b.id = c.b_id
-WHERE ROUND({_cos_ab}, 6) >= 0.30"""
-    _knn_graph_sql = f"""WITH {_srp_base},
-ord AS (SELECT id, band, bucket,
-               ROW_NUMBER() OVER (PARTITION BY band, bucket
-                                  ORDER BY md5(CAST(id AS VARCHAR)), id) AS rn
-        FROM bands),
-fwd AS (SELECT l.id AS src, r.id AS dst
-        FROM ord l JOIN ord r ON l.band = r.band AND l.bucket = r.bucket
-         AND r.rn > l.rn AND r.rn <= l.rn + 64),
-cand AS (SELECT DISTINCT src, dst FROM
-         (SELECT src, dst FROM fwd UNION ALL SELECT dst, src FROM fwd)
-         WHERE src <> dst),
-scored AS (SELECT c.src, c.dst, ROUND({_cos_ab}, 6) AS cosine
-           FROM cand c JOIN base a ON a.id = c.src JOIN base b ON b.id = c.dst),
-rk AS (SELECT src, dst, cosine,
-              ROW_NUMBER() OVER (PARTITION BY src ORDER BY cosine DESC, dst) AS rn
-       FROM scored)
-SELECT src AS vec_id, dst AS nbr_id, cosine, CAST(rn AS INT) AS rank
-FROM rk WHERE rn <= 5 ORDER BY vec_id, rank"""
-    _ann_topk_sql = f"""WITH {_srp_base},
-qb AS (SELECT band, bucket FROM bands WHERE id = 0),
-cand AS (SELECT DISTINCT b.id FROM bands b JOIN qb ON b.band = qb.band AND b.bucket = qb.bucket),
-qv AS (SELECT v FROM base WHERE id = 0)
-SELECT a.id AS vec_id,
-       ROUND(list_sum(list_transform(list_zip(a.v, qv.v), z -> z[1] * z[2]))
-             / (sqrt(list_sum(list_transform(a.v, x -> x * x)))
-                * sqrt(list_sum(list_transform(qv.v, x -> x * x)))), 6) AS cosine
-FROM base a JOIN cand ON a.id = cand.id CROSS JOIN qv
-ORDER BY cosine DESC, vec_id LIMIT 10"""
-    # composed quantized ANN: the SRP candidate CTEs above x the int8
-    # integer re-rank of sim_quantized_topk, restricted to candidates.
-    # trunc() toward zero == Spark's int cast (bare CAST in DuckDB
-    # ROUNDS — never use it for quantization).
-    _quantized_ann_sql = f"""WITH {_srp_base},
-qb AS (SELECT band, bucket FROM bands WHERE id = 0),
-cand AS (SELECT DISTINCT b.id FROM bands b JOIN qb ON b.band = qb.band AND b.bucket = qb.bucket),
-qs AS (SELECT v, CASE WHEN m = 0 THEN 1.0 ELSE m END AS sc
-       FROM (SELECT v, list_max(list_transform(v, x -> abs(x))) / 127.0 AS m
-             FROM base WHERE id = 0)),
-qq AS (SELECT list_transform(v, x -> CAST(trunc(x / sc) AS BIGINT)) AS qv FROM qs),
-cs AS (SELECT id, v, CASE WHEN m = 0 THEN 1.0 ELSE m END AS sc
-       FROM (SELECT b.id, b.v, list_max(list_transform(b.v, x -> abs(x))) / 127.0 AS m
-             FROM base b JOIN cand ON b.id = cand.id) s),
-cq AS (SELECT id, list_transform(v, x -> CAST(trunc(x / sc) AS BIGINT)) AS qv FROM cs),
-sc2 AS (SELECT c.id AS vec_id,
-               list_sum(list_transform(list_zip(c.qv, q.qv), p -> p[1] * p[2])) AS dot,
-               sqrt(CAST(list_sum(list_transform(c.qv, x -> x * x)) AS DOUBLE)) AS cn,
-               sqrt(CAST(list_sum(list_transform(q.qv, x -> x * x)) AS DOUBLE)) AS qn
-        FROM cq c CROSS JOIN qq q)
-SELECT vec_id, ROUND(dot / (cn * qn), 6) AS qcosine
-FROM sc2 WHERE cn > 0 ORDER BY qcosine DESC, vec_id LIMIT 10"""
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.sampling import (
-        _frac_hex,
     )
 
     # kg_communities / kg_community_report: the 5 synchronous LPA
@@ -6421,33 +2816,6 @@ ORDER BY r.rank DESC, r.id LIMIT 20"""
             f"(strpos('0123456789abcdef', substr({col}, {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
             for i in range(8)
         )
-
-    # distributed Lloyd k-means unroll (mirrors similarity.kmeans_assign):
-    # md5-ordered seeds, squared-L2 argmin (ties -> lower cluster),
-    # per-round centroids ROUND(AVG, 6) per dimension — the rounding IS
-    # the cross-engine determinism contract; empty clusters carry the
-    # previous centroid.  Final relation ka{iters}: (id, cluster, d).
-    def _kmeans_ctes(k: int = 8, iters: int = 2, dims: int = 64) -> str:
-        d2 = "list_sum(list_transform(list_zip(b.v, c.c), z -> (z[1]-z[2])*(z[1]-z[2])))"
-        s = f"""kb AS MATERIALIZED (SELECT CAST(vec_id AS VARCHAR) AS id,
-        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-kc0 AS MATERIALIZED (SELECT CAST(rn - 1 AS INT) AS cluster, v AS c FROM (
-    SELECT v, ROW_NUMBER() OVER (ORDER BY md5(id)) AS rn FROM kb) WHERE rn <= {k})"""
-        for r in range(iters + 1):
-            if r > 0:
-                s += f""",
-kn{r} AS (SELECT cluster, list(m ORDER BY i) AS c FROM (
-    SELECT a.cluster, r.i, ROUND(AVG(a.v[r.i]), 6) AS m
-    FROM ka{r - 1} a, range(1, {dims + 1}) r(i) GROUP BY a.cluster, r.i) GROUP BY cluster),
-kc{r} AS MATERIALIZED (SELECT p.cluster, COALESCE(n.c, p.c) AS c
-    FROM kc{r - 1} p LEFT JOIN kn{r} n USING (cluster))"""
-            s += f""",
-ka{r} AS MATERIALIZED (SELECT id, v, cluster, d FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY id ORDER BY d, cluster) AS arn FROM (
-        SELECT b.id, b.v, c.cluster, {d2} AS d FROM kb b CROSS JOIN kc{r} c)) WHERE arn = 1)"""
-        return s
-
-    _KMEANS_CTES = _kmeans_ctes(8, 2, 64)
 
     # FastRP unrolled levels (mirrors queries.fastrp_embeddings):
     # hash-Rademacher init, then per level neighbor-mean -> per-node
@@ -6802,111 +3170,6 @@ FROM per_c""",
         "kg_local_search": _local_search_sql,
         "kg_random_walks": _walks_sql,
         "kg_node2vec": _n2v_sql,
-        "rel_zscore_outliers": """
-WITH st AS (SELECT event_type, AVG(value) AS m, STDDEV(value) AS sd
-            FROM events GROUP BY event_type)
-SELECT e.event_id, e.event_type, e.value, ROUND((e.value - st.m) / st.sd, 6) AS z
-FROM events e JOIN st USING (event_type)
-WHERE st.sd IS NOT NULL AND st.sd > 0 AND ABS((e.value - st.m) / st.sd) > 2.5
-ORDER BY event_id""",
-        "rel_mad_outliers": """
-WITH med AS (SELECT event_type, quantile_cont(value, 0.5) AS m
-             FROM events GROUP BY event_type),
-mad AS (SELECT e.event_type, quantile_cont(ABS(e.value - med.m), 0.5) AS md
-        FROM events e JOIN med USING (event_type) GROUP BY e.event_type)
-SELECT e.event_id, e.event_type, e.value,
-       ROUND(0.6745 * (e.value - med.m) / mad.md, 6) AS z
-FROM events e JOIN med USING (event_type) JOIN mad USING (event_type)
-WHERE mad.md > 0 AND ABS(0.6745 * (e.value - med.m) / mad.md) > 3.5
-ORDER BY event_id""",
-        "rel_user_growth": """
-WITH fs AS (SELECT user_id, MIN(CAST(ts AS TIMESTAMP)) AS first_ts
-            FROM events GROUP BY user_id),
-nu AS (SELECT strftime(first_ts, '%Y-%m-%d') AS day,
-              CAST(COUNT(*) AS BIGINT) AS new_users FROM fs GROUP BY 1),
-au AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS active_users FROM
-       (SELECT DISTINCT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
-               user_id FROM events) GROUP BY day)
-SELECT au.day, au.active_users,
-       CAST(COALESCE(nu.new_users, 0) AS BIGINT) AS new_users,
-       CAST(au.active_users - COALESCE(nu.new_users, 0) AS BIGINT) AS returning_users,
-       CAST(SUM(COALESCE(nu.new_users, 0)) OVER
-            (ORDER BY au.day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cumulative_users
-FROM au LEFT JOIN nu USING (day) ORDER BY day""",
-        "txt_script_ratios": """
-WITH planted AS (
-  SELECT doc_id,
-         text || repeat(CASE WHEN doc_id % 4 = 0 THEN ' Привет мир'
-                             WHEN doc_id % 4 = 1 THEN ' 你好世界'
-                             WHEN doc_id % 4 = 2 THEN ' مرحبا بالعالم'
-                             ELSE '' END,
-                        CAST(1 + (doc_id % 7) * 4 AS INT)) AS t
-  FROM documents),
-c AS (
-  SELECT doc_id,
-         length(t) - length(regexp_replace(t, '[A-Za-zÀ-ɏ]+', '', 'g')) AS n_latin,
-         length(t) - length(regexp_replace(t, '[Ѐ-ӿ]+', '', 'g')) AS n_cyrillic,
-         length(t) - length(regexp_replace(t, '[؀-ۿ]+', '', 'g')) AS n_arabic,
-         length(t) - length(regexp_replace(t, '[一-鿿぀-ヿ]+', '', 'g')) AS n_cjk,
-         length(t) - length(regexp_replace(t, '[가-힯]+', '', 'g')) AS n_hangul,
-         length(t) - length(regexp_replace(t, '[0-9]+', '', 'g')) AS n_digit
-  FROM planted),
-l AS (SELECT *,
-             n_latin + n_cyrillic + n_arabic + n_cjk + n_hangul AS n_letters,
-             GREATEST(n_latin, n_cyrillic, n_arabic, n_cjk, n_hangul) AS top
-      FROM c)
-SELECT doc_id,
-       CAST(n_letters AS BIGINT) AS n_letters,
-       CAST(n_latin AS BIGINT) AS n_latin,
-       CAST(n_cyrillic AS BIGINT) AS n_cyrillic,
-       CAST(n_arabic AS BIGINT) AS n_arabic,
-       CAST(n_cjk AS BIGINT) AS n_cjk,
-       CAST(n_digit AS BIGINT) AS n_digit,
-       CASE WHEN n_letters > 0
-            THEN ROUND(CAST(n_latin AS DOUBLE) / n_letters, 6) ELSE 0.0 END
-         AS latin_ratio,
-       CASE WHEN n_letters = 0 THEN 'none'
-            WHEN n_latin = top THEN 'latin'
-            WHEN n_cyrillic = top THEN 'cyrillic'
-            WHEN n_arabic = top THEN 'arabic'
-            WHEN n_cjk = top THEN 'cjk'
-            ELSE 'hangul' END AS dominant_script,
-       n_letters > 0 AND (n_letters - top) * 100 > 5 * n_letters AS mixed_script
-FROM l ORDER BY doc_id""",
-        "txt_winnowing": f"""
-WITH toks AS (SELECT CAST(doc_id AS VARCHAR) AS chunk_id,
-                     list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                                 x -> x <> '') AS t
-              FROM documents),
-g AS (SELECT chunk_id, t, len(t) - 2 AS ng FROM toks WHERE len(t) >= 3),
-pos AS (SELECT chunk_id, ng, CAST(i AS INT) AS p,
-               md5(array_to_string(t[CAST(i + 1 AS INT):CAST(i + 3 AS INT)], ' ')) AS hx
-        FROM g, unnest(range(0, ng)) AS u(i)),
-ph AS (SELECT chunk_id, ng, p, ({_nib32_expr("hx")}) AS gh FROM pos),
-win AS (SELECT chunk_id, p, gh, CAST(wi AS INT) AS wi
-        FROM ph, unnest(range(GREATEST(0, p - 3),
-                              LEAST(p, GREATEST(ng - 4, 0)) + 1)) AS w(wi)),
-r AS (SELECT chunk_id, wi, p, gh,
-             ROW_NUMBER() OVER (PARTITION BY chunk_id, wi
-                                ORDER BY gh, p DESC) AS rn
-      FROM win)
-SELECT DISTINCT chunk_id, p AS pos, CAST(gh AS BIGINT) AS gram_hash
-FROM r WHERE rn = 1 ORDER BY chunk_id, pos""",
-        "sim_mmr_rerank": _mmr_sql,
-        "rel_histogram": """
-WITH bounds AS (SELECT event_type, MIN(value) AS mn, MAX(value) AS mx
-                FROM events GROUP BY event_type),
-assigned AS (SELECT e.event_type, b.mn, b.mx,
-                    CASE WHEN b.mx = b.mn THEN 0
-                         ELSE CAST(LEAST(FLOOR((e.value - b.mn) / ((b.mx - b.mn) / 10.0)), 9) AS INT)
-                    END AS bucket
-             FROM events e JOIN bounds b USING (event_type))
-SELECT event_type, bucket,
-       ROUND(mn + CAST(bucket AS DOUBLE) * ((mx - mn) / 10.0), 6) AS lo,
-       ROUND(mn + CAST(bucket + 1 AS DOUBLE) * ((mx - mn) / 10.0), 6) AS hi,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM assigned GROUP BY event_type, bucket, mn, mx
-ORDER BY event_type, bucket""",
         "kg_graph_sparsify": f"""WITH {PAIRS_CTE},
 und AS (SELECT DISTINCT a_id AS cid, b_id AS nbr_id FROM pairs
         UNION SELECT b_id, a_id FROM pairs),
@@ -6920,42 +3183,7 @@ j AS (SELECT e.a_id, e.b_id,
 SELECT a_id, b_id, ROUND(p, 6) AS p, ROUND(1.0 / p, 6) AS weight
 FROM j WHERE (h + 0.5) / 4294967296.0 < p
 ORDER BY a_id, b_id""",
-        "txt_source_drift": """
-WITH toks AS (SELECT source,
-                     unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                                        x -> x <> '')) AS term
-              FROM documents),
-st AS (SELECT source, term, CAST(COUNT(*) AS BIGINT) AS c FROM toks GROUP BY source, term),
-ct AS (SELECT term, SUM(c) AS ct FROM st GROUP BY term),
-top AS (SELECT term FROM ct ORDER BY ct DESC, term LIMIT 256),
-b AS (SELECT source,
-             CASE WHEN t.term IS NOT NULL THEN st.term ELSE '<other>' END AS bterm,
-             SUM(st.c) AS c
-      FROM st LEFT JOIN top t ON st.term = t.term GROUP BY source, bterm),
-ctb AS (SELECT bterm, SUM(c) AS ct FROM b GROUP BY bterm),
-scal AS (SELECT CAST(COUNT(*) AS BIGINT) AS v1, SUM(ct) AS n FROM ctb),
-q AS (SELECT bterm, CAST(ct + 1 AS DOUBLE) / (n + v1) AS q_,
-             ln(CAST(ct + 1 AS DOUBLE) / (n + v1)) AS lnq
-      FROM ctb, scal),
-lt AS (SELECT SUM(lnq) AS l_total FROM q),
-ns AS (SELECT source, SUM(c) AS n_tokens, CAST(COUNT(*) AS BIGINT) AS n_terms_seen
-       FROM b GROUP BY source),
-seen AS (SELECT b.source,
-                SUM((CAST(b.c + 1 AS DOUBLE) / (ns.n_tokens + scal.v1))
-                    * ln((CAST(b.c + 1 AS DOUBLE) / (ns.n_tokens + scal.v1)) / q.q_))
-                  AS kl_seen,
-                SUM(q.lnq) AS lnq_seen
-         FROM b JOIN q USING (bterm) JOIN ns USING (source), scal
-         GROUP BY b.source)
-SELECT ns.source, CAST(ns.n_tokens AS BIGINT) AS n_tokens, ns.n_terms_seen,
-       ROUND(s.kl_seen
-             + (1.0 / (ns.n_tokens + scal.v1))
-               * ((scal.v1 - ns.n_terms_seen) * ln(1.0 / (ns.n_tokens + scal.v1))
-                  - (lt.l_total - s.lnq_seen)),
-             6) AS kl_corpus
-FROM ns JOIN seen s USING (source), scal, lt
-ORDER BY ns.source""",
-        # kg_concept_drift: txt_source_drift's exact smoothed-KL
+        # kg_concept_drift: kl_divergence_from_counts' exact smoothed-KL
         # algebra over (source, concept_id) mention counts, top-256
         "kg_concept_drift": f"""WITH {MENTIONS_CTE},
 docsrc AS (SELECT CAST(doc_id AS VARCHAR) AS chunk_id, source FROM documents),
@@ -7047,36 +3275,7 @@ pall AS (SELECT DISTINCT id, dist FROM (
 SELECT CAST(ROW_NUMBER() OVER (ORDER BY dist) - 1 AS INT) AS step, id,
        ROUND(dist, 6) AS dist
 FROM pall ORDER BY step""",
-        "rel_pivot": """
-SELECT user_id,
-       CAST(COUNT(*) FILTER (event_type = 'click') AS BIGINT) AS n_click,
-       CAST(COUNT(*) FILTER (event_type = 'error') AS BIGINT) AS n_error,
-       CAST(COUNT(*) FILTER (event_type = 'purchase') AS BIGINT) AS n_purchase,
-       CAST(COUNT(*) FILTER (event_type = 'signup') AS BIGINT) AS n_signup,
-       CAST(COUNT(*) FILTER (event_type = 'view') AS BIGINT) AS n_view,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       ROUND(SUM(value), 6) AS total_value
-FROM events GROUP BY user_id ORDER BY user_id""",
         "kg_node_features": _node_features_sql,
-        # int8 quantization twin: trunc() (toward zero, = Spark's int
-        # cast) — DuckDB's bare CAST rounds, so it must NOT be used here
-        "sim_quantized_topk": """
-WITH qd AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings WHERE vec_id = 0),
-qs AS (SELECT v, CASE WHEN m = 0 THEN 1.0 ELSE m END AS sc
-       FROM (SELECT v, list_max(list_transform(v, x -> abs(x))) / 127.0 AS m FROM qd)),
-qq AS (SELECT list_transform(v, x -> CAST(trunc(x / sc) AS BIGINT)) AS qv FROM qs),
-cd AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-cs AS (SELECT vec_id, v, CASE WHEN m = 0 THEN 1.0 ELSE m END AS sc
-       FROM (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) / 127.0 AS m FROM cd)),
-cq AS (SELECT vec_id, list_transform(v, x -> CAST(trunc(x / sc) AS BIGINT)) AS qv FROM cs),
-sc2 AS (SELECT c.vec_id,
-               list_sum(list_transform(list_zip(c.qv, q.qv), p -> p[1] * p[2])) AS dot,
-               sqrt(CAST(list_sum(list_transform(c.qv, x -> x * x)) AS DOUBLE)) AS cn,
-               sqrt(CAST(list_sum(list_transform(q.qv, x -> x * x)) AS DOUBLE)) AS qn
-        FROM cq c CROSS JOIN qq q)
-SELECT vec_id, ROUND(dot / (cn * qn), 6) AS qcosine
-FROM sc2 WHERE cn > 0 ORDER BY qcosine DESC, vec_id LIMIT 10""",
         "kg_degree_distribution": f"""WITH {PAIRS_CTE},
 und AS (SELECT DISTINCT a_id AS cid, b_id AS nbr_id FROM pairs UNION SELECT b_id, a_id FROM pairs),
 deg AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS degree FROM und WHERE cid <> nbr_id GROUP BY cid)
@@ -7090,46 +3289,6 @@ FROM deg GROUP BY log2_degree ORDER BY log2_degree""",
         "kg_skipgram_pairs": _skipgram_sql,
         "kg_contrastive_pairs": _contrastive_sql,
         "kg_graph_stats": _graph_stats_sql,
-        "dd_window_chunks": r"""
-WITH base AS (SELECT doc_id AS id,
-                     list_filter(regexp_split_to_array(trim(text), '\s+'), t -> length(t) > 0) AS toks
-              FROM documents),
-b2 AS (SELECT id, toks, len(toks) AS n FROM base WHERE len(toks) > 0),
-b3 AS (SELECT id, toks,
-              CASE WHEN n <= 64 THEN 1 ELSE CAST(CEIL((n - 64) / 48.0) AS INT) + 1 END AS nwin
-       FROM b2),
-ex AS (SELECT id, toks, CAST(k AS INT) AS chunk_idx
-       FROM b3, LATERAL (SELECT unnest(range(nwin)) AS k) r)
-SELECT id, chunk_idx,
-       array_to_string(toks[chunk_idx * 48 + 1 : chunk_idx * 48 + 64], ' ') AS chunk_text,
-       CAST(len(toks[chunk_idx * 48 + 1 : chunk_idx * 48 + 64]) AS BIGINT) AS n_tokens
-FROM ex ORDER BY id, chunk_idx""",
-        "txt_entropy": r"""
-WITH ex AS (SELECT doc_id AS id,
-                   unnest(list_filter(regexp_split_to_array(text, ''), c -> length(c) > 0)) AS ch
-            FROM documents),
-counts AS (SELECT id, ch, COUNT(*) AS cnt FROM ex GROUP BY id, ch),
-tot AS (SELECT id, SUM(cnt) AS n FROM counts GROUP BY id)
-SELECT c.id AS doc_id, CAST(t.n AS BIGINT) AS n_chars,
-       ROUND(-SUM((c.cnt / t.n) * ln(c.cnt / t.n) / ln(2)), 6) AS char_entropy
-FROM counts c JOIN tot t ON c.id = t.id
-GROUP BY c.id, t.n ORDER BY doc_id""",
-        "txt_tfidf": r"""
-WITH src AS (SELECT CAST(doc_id AS VARCHAR) AS chunk_id, text FROM documents),
-tok AS (
-  SELECT chunk_id,
-    unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> length(t) > 0)) AS term
-  FROM src),
-post AS (SELECT term, chunk_id, CAST(COUNT(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
-nn AS (SELECT CAST(COUNT(DISTINCT chunk_id) AS DOUBLE) AS n FROM post),
-dfq AS (SELECT term, CAST(COUNT(*) AS DOUBLE) AS df FROM post GROUP BY term),
-w AS (SELECT p.chunk_id, p.term, p.tf * ln(nn.n / d.df) AS w
-      FROM post p JOIN dfq d ON p.term = d.term CROSS JOIN nn),
-nrm AS (SELECT chunk_id, sqrt(SUM(w * w)) AS nrm FROM w GROUP BY chunk_id)
-SELECT w.chunk_id, w.term,
-       ROUND(CASE WHEN nrm.nrm > 0 THEN w.w / nrm.nrm ELSE 0.0 END, 6) AS weight
-FROM w JOIN nrm ON w.chunk_id = nrm.chunk_id
-ORDER BY w.chunk_id, w.term""",
         "kg_entity_resolution": f"""WITH RECURSIVE {TRIPLES_CTE},
 lem AS (SELECT DISTINCT lemma, concept_id FROM mentions),
 va AS (SELECT lemma AS lemma_a, substr(lemma, 5) AS lemma_b FROM lem WHERE starts_with(lemma, 'the_')
@@ -7157,52 +3316,6 @@ GROUP BY subj_id, predicate, obj_id ORDER BY subj_id, predicate, obj_id""",
         "kg_pagerank": _pagerank_sql,
         "kg_pagerank_weighted": _pagerank_weighted_sql,
         "kg_independent_set": _mis_sql,
-        # Count-Min heavy hitters: replay the depth-4 x width-1024
-        # counters with the portable md5_32 bucket hash, then the
-        # candidate probe takes min over rows — identical overcount
-        # structure to sketches.heavy_hitters(hash_family='md5')
-        "txt_heavy_hitters": f"""
-WITH tok AS (
-  SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> length(t) > 0)) AS term
-  FROM documents),
-jb0 AS (SELECT term, j, md5(CAST(j AS VARCHAR) || ':' || term) AS h
-        FROM tok CROSS JOIN range(4) r(j)),
-jb AS (SELECT term, j, (({_nib32_expr("h")}) % 1024) AS bucket FROM jb0),
-cms AS (SELECT j, bucket, CAST(COUNT(*) AS BIGINT) AS c FROM jb GROUP BY j, bucket),
-cand AS (SELECT DISTINCT term, j, bucket FROM jb)
-SELECT cand.term, MIN(s.c) AS est
-FROM cand JOIN cms s ON cand.j = s.j AND cand.bucket = s.bucket
-GROUP BY cand.term ORDER BY est DESC, term LIMIT 20""",
-        # TextRank: the SAME unrolled _pr_iters chain, with und/nodes/
-        # nn/deg/r0 defined from the word-adjacency graph instead of
-        # the concept pairs (1-based inclusive DuckDB list slices)
-        "txt_textrank": f"""WITH
-wtok AS (SELECT string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks FROM documents),
-wadj AS (
-  SELECT toks[i] AS w1, toks[i + 1] AS w2
-  FROM wtok, unnest(range(1, length(toks))) t(i)
-  WHERE regexp_matches(toks[i], '^[a-z]{{3,}}$') AND regexp_matches(toks[i + 1], '^[a-z]{{3,}}$')
-    AND toks[i] <> toks[i + 1]
-    AND toks[i] NOT IN ({STOPWORDS_SQL}) AND toks[i + 1] NOT IN ({STOPWORDS_SQL})),
-wpairs AS (SELECT DISTINCT least(w1, w2) AS a, greatest(w1, w2) AS b FROM wadj),
-und AS (SELECT a AS cid, b AS nbr_id FROM wpairs UNION ALL SELECT b, a FROM wpairs),
-nodes AS (SELECT DISTINCT cid AS id FROM und),
-nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-deg AS (SELECT cid, CAST(COUNT(*) AS DOUBLE) AS deg FROM und GROUP BY cid),
-r0 AS (SELECT id, 1.0 / nn.n AS rank FROM nodes CROSS JOIN nn){_pr_iters}
-SELECT id, ROUND(rank, 8) AS rank FROM r10 ORDER BY rank DESC, id LIMIT 20""",
-        "dd_embed_near_dup_srp": _srp_near_dup_sql,
-        "sim_ann_topk": _ann_topk_sql,
-        "sim_knn_graph": _knn_graph_sql,
-        "dd_host_budget": f"""
-WITH q AS (SELECT source, doc_id, {quality} AS quality_score FROM documents),
-r AS (SELECT source, doc_id, quality_score,
-             ROW_NUMBER() OVER (PARTITION BY source
-                                ORDER BY quality_score DESC, doc_id) AS rank
-      FROM q)
-SELECT source, doc_id, quality_score, CAST(rank AS INT) AS rank
-FROM r WHERE rank <= 10 ORDER BY source, rank""",
-        "sim_quantized_ann": _quantized_ann_sql,
         "kg_mentions": f"WITH {MENTIONS_CTE} SELECT chunk_id, concept_id, lemma, surface, origin FROM mentions",
         "kg_mentions_nlp": f"WITH {MENTIONS_CTE}, {NLP_MENTIONS_CTE} SELECT chunk_id, concept_id, lemma, surface, origin FROM nlp_mentions",
         "kg_cooccur_pairs": f"WITH {PAIRS_CTE} SELECT window_id, a_id, b_id, freq FROM pairs",
@@ -7377,292 +3490,6 @@ FROM lem GROUP BY 1 ORDER BY group_key""",
 SELECT lpad(CAST(vec_id AS VARCHAR), 6, '0') AS id,
        MIN(lpad(CAST(vec_id AS VARCHAR), 6, '0')) OVER (PARTITION BY label) AS component
 FROM embeddings ORDER BY id""",
-        "rel_tpch_q1": """
-SELECT l_returnflag, l_linestatus,
-  ROUND(SUM(l_quantity), 2) AS sum_qty,
-  ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-  ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-  ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-  ROUND(AVG(l_quantity), 6) AS avg_qty,
-  ROUND(AVG(l_extendedprice), 6) AS avg_price,
-  ROUND(AVG(l_discount), 6) AS avg_disc,
-  COUNT(*) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""",
-        "rel_tpch_q3": """
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM customer JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10""",
-        "rel_tpch_q5": """
-SELECT n_name, ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM region
-JOIN nation ON n_regionkey = r_regionkey
-JOIN customer ON c_nationkey = n_nationkey
-JOIN orders ON o_custkey = c_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN supplier ON s_suppkey = l_suppkey AND s_nationkey = c_nationkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-GROUP BY n_name ORDER BY revenue DESC, n_name""",
-        "rel_rfm": """
-WITH pu AS (
-  SELECT user_id,
-         date_diff('day', MAX(CAST(CAST(ts AS TIMESTAMP) AS DATE)),
-                   (SELECT MAX(CAST(CAST(ts AS TIMESTAMP) AS DATE)) FROM events)) AS recency_days,
-         CAST(COUNT(*) AS BIGINT) AS frequency,
-         CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS monetary
-  FROM events GROUP BY user_id),
-b AS (SELECT quantile_cont(recency_days, [0.25, 0.5, 0.75]) AS r,
-             quantile_cont(frequency, [0.25, 0.5, 0.75]) AS f,
-             quantile_cont(monetary, [0.25, 0.5, 0.75]) AS m
-      FROM pu),
-s AS (SELECT user_id, recency_days, frequency, monetary,
-             5 - (1 + CAST(recency_days > b.r[1] AS INT)
-                    + CAST(recency_days > b.r[2] AS INT)
-                    + CAST(recency_days > b.r[3] AS INT)) AS r_score,
-             1 + CAST(frequency > b.f[1] AS INT)
-               + CAST(frequency > b.f[2] AS INT)
-               + CAST(frequency > b.f[3] AS INT) AS f_score,
-             1 + CAST(monetary > b.m[1] AS INT)
-               + CAST(monetary > b.m[2] AS INT)
-               + CAST(monetary > b.m[3] AS INT) AS m_score
-      FROM pu, b)
-SELECT user_id, recency_days, frequency, ROUND(monetary, 6) AS monetary,
-       r_score, f_score, m_score,
-       CASE WHEN r_score >= 4 AND f_score >= 4 THEN 'champion'
-            WHEN r_score >= 3 AND f_score >= 3 THEN 'loyal'
-            WHEN r_score <= 2 AND f_score >= 3 THEN 'at_risk'
-            WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
-            ELSE 'regular' END AS segment
-FROM s ORDER BY user_id""",
-        "rel_tpch_q4": """
-SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-        "rel_tpch_q6": """
-SELECT CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(l_discount AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-  AND l_discount >= 0.05 AND l_discount <= 0.07
-  AND l_quantity < 24""",
-        "rel_tpch_q10": """
-WITH r AS (
-  SELECT c_custkey, c_name, c_acctbal, n_name,
-         SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS rev
-  FROM customer
-  JOIN orders ON o_custkey = c_custkey
-  JOIN lineitem ON l_orderkey = o_orderkey
-  JOIN nation ON n_nationkey = c_nationkey
-  WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-    AND o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
-    AND l_returnflag = 'R'
-  GROUP BY c_custkey, c_name, c_acctbal, n_name)
-SELECT c_custkey, c_name, CAST(ROUND(rev, 2) AS DOUBLE) AS revenue, c_acctbal, n_name
-FROM r ORDER BY rev DESC, c_custkey LIMIT 20""",
-        # Q12 shape: late = l_shipdate > o_orderdate (no commit/receipt
-        # dates in this corpus); one conditional aggregate
-        "rel_tpch_q12": """
-SELECT l_returnflag,
-       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-  AND l_shipdate > o_orderdate
-GROUP BY l_returnflag ORDER BY l_returnflag""",
-        # Q14: decimal sums on both arms, one division at the end
-        "rel_tpch_q14": """
-WITH a AS (
-  SELECT SUM(CASE WHEN p_type = 'PROMO'
-                  THEN CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))
-                  ELSE CAST(0 AS DECIMAL(18,4)) END) AS promo,
-         SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS total
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
-    AND l_shipdate < TIMESTAMP '1996-10-01 00:00:00')
-SELECT ROUND(100.0 * CAST(promo AS DOUBLE) / CAST(total AS DOUBLE), 6) AS promo_revenue_pct FROM a""",
-        # Q19 shape: OR-of-conjunctions residual on the partkey join
-        "rel_tpch_q19": """
-SELECT CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#15' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#19' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""",
-        # Q15: rounded-decimal equality picks the max-revenue tie set
-        "rel_tpch_q15": """
-WITH rev AS (
-  SELECT l_suppkey,
-         ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-  GROUP BY l_suppkey)
-SELECT s_suppkey, s_name, CAST(total_revenue AS DOUBLE) AS total_revenue
-FROM rev JOIN supplier ON s_suppkey = l_suppkey
-WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
-ORDER BY s_suppkey""",
-        # Q17 shape: decorrelated per-part avg; threshold in IEEE
-        # doubles (integral quantity sums / count — exact both engines)
-        "rel_tpch_q17": """
-WITH bli AS (
-  SELECT l_partkey, l_quantity, l_extendedprice
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE p_brand = 'Brand#13'),
-av AS (SELECT l_partkey AS ap, 0.2 * (SUM(l_quantity) / COUNT(*)) AS qty_limit
-       FROM bli GROUP BY l_partkey)
-SELECT ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0, 2) AS avg_yearly
-FROM bli JOIN av ON l_partkey = ap
-WHERE l_quantity < qty_limit""",
-        # Q22 shape: cross-multiplied decimal "above average" test +
-        # LEFT ANTI on custkey
-        "rel_tpch_q22": """
-WITH sel AS (
-  SELECT c_custkey, c_nationkey, CAST(c_acctbal AS DECIMAL(18,2)) AS bal
-  FROM customer WHERE c_nationkey IN (1, 3, 5, 7, 9, 11, 13, 15, 17, 19)),
-scal AS (SELECT SUM(bal) AS total, CAST(COUNT(*) AS BIGINT) AS n FROM sel WHERE bal > 0),
-rich AS (SELECT s.* FROM sel s, scal
-         WHERE s.bal * scal.n > CAST(scal.total AS DECIMAL(28,2))),
-inactive AS (SELECT * FROM rich r
-             WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = r.c_custkey
-                                 AND o.o_orderdate >= TIMESTAMP '2001-01-01 00:00:00'))
-SELECT n.n_name, CAST(COUNT(*) AS BIGINT) AS numcust,
-       CAST(ROUND(SUM(i.bal), 2) AS DOUBLE) AS totacctbal
-FROM inactive i JOIN nation n ON n.n_nationkey = i.c_nationkey
-GROUP BY n.n_name ORDER BY n.n_name""",
-        # Q11 shape: group-vs-global HAVING (1.5x mean), cross-
-        # multiplied decimals — no division in either engine
-        "rel_tpch_q11": """
-WITH per AS (
-  SELECT l_partkey,
-         SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS value
-  FROM lineitem GROUP BY l_partkey),
-scal AS (SELECT SUM(value) AS total, CAST(COUNT(*) AS BIGINT) AS n FROM per)
-SELECT per.l_partkey AS p_partkey, CAST(ROUND(per.value, 2) AS DOUBLE) AS value
-FROM per, scal
-WHERE per.value * (2 * scal.n) > CAST(scal.total AS DECIMAL(38,4)) * 3
-ORDER BY per.value DESC, per.l_partkey""",
-        # Q2 shape: correlated MIN decorrelated; region-scoped BEFORE
-        # the min; unit price rounded 6 for the exact tie set
-        "rel_tpch_q2": """
-WITH eu AS (
-  SELECT s_suppkey, s_name, s_acctbal, n_name
-  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'EUROPE'),
-offers AS (
-  SELECT p_partkey, s_suppkey, s_name, s_acctbal, n_name,
-         MIN(ROUND(l_extendedprice / l_quantity, 6)) AS unit_cost
-  FROM lineitem
-  JOIN (SELECT p_partkey FROM part WHERE p_type = 'STANDARD' AND p_size BETWEEN 10 AND 20) p
-    ON l_partkey = p_partkey
-  JOIN eu ON l_suppkey = s_suppkey
-  GROUP BY p_partkey, s_suppkey, s_name, s_acctbal, n_name),
-best AS (SELECT p_partkey AS bp, MIN(unit_cost) AS best_cost FROM offers GROUP BY p_partkey)
-SELECT s_acctbal, s_name, n_name, p_partkey, unit_cost
-FROM offers JOIN best ON p_partkey = bp AND unit_cost = best_cost
-ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 20""",
-        # Q8 shape: two decimal sums per year, one division at the end
-        "rel_tpch_q8": """
-WITH asia_cust AS (
-  SELECT c_custkey FROM customer JOIN nation ON c_nationkey = n_nationkey
-  WHERE n_regionkey = 2),
-a AS (
-  SELECT YEAR(o_orderdate) AS o_year,
-         SUM(CASE WHEN s_nationkey = 2
-                  THEN CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))
-                  ELSE CAST(0 AS DECIMAL(18,4)) END) AS nation_rev,
-         SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS total_rev
-  FROM orders
-  JOIN asia_cust ON o_custkey = c_custkey
-  JOIN lineitem ON l_orderkey = o_orderkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-    AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-  GROUP BY YEAR(o_orderdate))
-SELECT CAST(o_year AS BIGINT) AS o_year,
-       ROUND(CAST(nation_rev AS DOUBLE) / CAST(total_rev AS DOUBLE), 6) AS mkt_share
-FROM a ORDER BY o_year""",
-        # Q20 shape: cohort semi-join + mean-relative integer test
-        "rel_tpch_q20": """
-WITH q AS (
-  SELECT l_suppkey, SUM(l_quantity) AS qty
-  FROM lineitem
-  JOIN (SELECT p_partkey FROM part WHERE p_type = 'PROMO') p ON l_partkey = p_partkey
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-    AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-  GROUP BY l_suppkey),
-scal AS (SELECT SUM(qty) AS t, CAST(COUNT(*) AS BIGINT) AS n FROM q)
-SELECT s_suppkey, s_name, n_name, CAST(q.qty AS DOUBLE) AS total_qty
-FROM q, scal
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-WHERE q.qty * (10 * scal.n) > scal.t * 11
-ORDER BY s_suppkey""",
-        # Q21 shape: EXISTS/NOT-EXISTS decorrelated into one per-order
-        # aggregate; blamed = the unique late supplier
-        "rel_tpch_q21": """
-WITH per AS (
-  SELECT l_orderkey,
-         COUNT(DISTINCT l_suppkey) AS n_supp,
-         COUNT(DISTINCT CASE WHEN l_shipdate > o_orderdate THEN l_suppkey END) AS n_late,
-         MAX(CASE WHEN l_shipdate > o_orderdate THEN l_suppkey END) AS blamed
-  FROM lineitem
-  JOIN (SELECT o_orderkey, o_orderdate FROM orders WHERE o_orderstatus = 'F') o
-    ON l_orderkey = o_orderkey
-  GROUP BY l_orderkey)
-SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-FROM per JOIN supplier ON blamed = s_suppkey
-WHERE n_supp > 1 AND n_late = 1
-GROUP BY s_name
-ORDER BY numwait DESC, s_name LIMIT 20""",
-        # centroid_outliers: per-label ROUND(AVG,6) centroids (the
-        # kmeans determinism contract), list_sum squared-L2 walk ==
-        # the engine's _sqdist_lit left fold, z over the ROUNDED
-        # distance column (zscore_outliers precedent)
-        "sim_centroid_outliers": """
-WITH base AS (SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(label AS INT) AS label,
-                     list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-              FROM embeddings),
-cent AS (SELECT label, list(m ORDER BY i) AS c FROM (
-           SELECT b.label, r.i, ROUND(AVG(b.v[r.i]), 6) AS m
-           FROM base b, range(1, 65) r(i) GROUP BY b.label, r.i) GROUP BY label),
-scored AS (SELECT b.vec_id, b.label,
-                  ROUND(list_sum(list_transform(list_zip(b.v, c.c),
-                        z -> (z[1]-z[2])*(z[1]-z[2]))), 6) AS dist2
-           FROM base b JOIN cent c USING (label)),
-st AS (SELECT label, AVG(dist2) AS m, STDDEV(dist2) AS sd FROM scored GROUP BY label)
-SELECT s.vec_id, s.label, s.dist2, ROUND((s.dist2 - st.m) / st.sd, 6) AS z
-FROM scored s JOIN st USING (label)
-WHERE st.sd IS NOT NULL AND st.sd > 0 AND (s.dist2 - st.m) / st.sd > 2.0
-ORDER BY vec_id""",
-        # interevent_gaps: LAG over (user, type) ordered (ts, event_id)
-        # == the engine's window; exact integer-microsecond gaps;
-        # quantile_cont == Spark percentile (rel_percentile precedent)
-        "rel_interevent_gaps": """
-WITH l AS (SELECT event_type, ts,
-                  LAG(ts) OVER (PARTITION BY user_id, event_type
-                                ORDER BY ts, event_id) AS p
-           FROM events),
-g AS (SELECT event_type, (epoch_us(ts) - epoch_us(p)) / 1000000.0 AS gap
-      FROM l WHERE p IS NOT NULL)
-SELECT event_type,
-  CAST(COUNT(*) AS BIGINT) AS n_gaps,
-  ROUND(AVG(gap), 6) AS mean_gap,
-  ROUND(quantile_cont(gap, 0.5), 6) AS p50_gap,
-  ROUND(quantile_cont(gap, 0.9), 6) AS p90_gap,
-  ROUND((STDDEV(gap) - AVG(gap)) / (STDDEV(gap) + AVG(gap)), 6) AS burstiness
-FROM g GROUP BY event_type ORDER BY event_type""",
         # extraction_yield: mentions CTE re-grouped per chunk, LEFT
         # join back to the cased corpus so zero-mention chunks appear
         "kg_extraction_yield": f"""WITH {MENTIONS_CTE},
@@ -7676,529 +3503,6 @@ SELECT ch.chunk_id, ch.n_chars,
        ROUND(COALESCE(per.n_mentions, 0) * 1000.0 / ch.n_chars, 6) AS mentions_per_kchar
 FROM ch LEFT JOIN per USING (chunk_id)
 ORDER BY chunk_id""",
-        # rel_market_basket: Apriori pushdown replayed — item support
-        # HAVING >= 5 before the pair self-join, basket-size guard 64,
-        # lift/support as the same (pair*N)/(ca*cb) expression shape.
-        "rel_market_basket": """
-WITH bi AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem),
-nb AS (SELECT CAST(COUNT(DISTINCT b) AS DOUBLE) AS n FROM bi),
-sup AS (SELECT i, COUNT(*) AS cnt FROM bi GROUP BY i HAVING COUNT(*) >= 5),
-freq AS (SELECT bi.b, bi.i FROM bi JOIN sup USING (i)),
-small AS (SELECT b FROM freq GROUP BY b HAVING COUNT(*) <= 64),
-f2 AS (SELECT freq.b, freq.i FROM freq JOIN small USING (b)),
-pairs AS (SELECT l.i AS item_a, r.i AS item_b, COUNT(*) AS pair_count
-          FROM f2 l JOIN f2 r ON l.b = r.b AND l.i < r.i
-          GROUP BY l.i, r.i HAVING COUNT(*) >= 2)
-SELECT CAST(item_a AS BIGINT) AS item_a, CAST(item_b AS BIGINT) AS item_b,
-       CAST(pair_count AS BIGINT) AS pair_count,
-       CAST(a.cnt AS BIGINT) AS count_a, CAST(bb.cnt AS BIGINT) AS count_b,
-       ROUND((CAST(pair_count AS DOUBLE) * nb.n)
-             / CAST(a.cnt * bb.cnt AS DOUBLE), 6) AS lift,
-       ROUND(CAST(pair_count AS DOUBLE) / nb.n, 6) AS support
-FROM pairs JOIN sup a ON a.i = item_a JOIN sup bb ON bb.i = item_b
-CROSS JOIN nb
-ORDER BY lift DESC, item_a, item_b""",
-        # txt_effective_tokens: fingerprint winner = arg_min on id (ids
-        # unique -> exact), same token/fp expressions as dd_fingerprint
-        # and txt_stats.
-        "txt_effective_tokens": """
-WITH d AS (SELECT * FROM documents
-           UNION ALL
-           SELECT * REPLACE (doc_id + 1000000 AS doc_id) FROM documents
-           WHERE doc_id < 50),
-feats AS (
-  SELECT doc_id AS id, source,
-         CAST(length(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_tokens,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-  FROM d),
-raw AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS raw_tokens
-        FROM feats GROUP BY source),
-w AS (SELECT fp, arg_min(source, id) AS source,
-             arg_min(n_tokens, id) AS n_tokens
-      FROM feats GROUP BY fp),
-eff AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS unique_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS effective_tokens
-        FROM w GROUP BY source)
-SELECT r.source, r.n_docs, r.raw_tokens,
-       CAST(COALESCE(e.unique_docs, 0) AS BIGINT) AS unique_docs,
-       CAST(COALESCE(e.effective_tokens, 0) AS BIGINT) AS effective_tokens,
-       CASE WHEN r.raw_tokens > 0
-            THEN ROUND(1.0 - CAST(COALESCE(e.effective_tokens, 0) AS DOUBLE)
-                             / CAST(r.raw_tokens AS DOUBLE), 6)
-            ELSE 0.0 END AS dup_token_frac
-FROM raw r LEFT JOIN eff e USING (source) ORDER BY r.source""",
-        "rel_tpch_q16": """
-SELECT p_brand, p_type, CAST(p_size AS INT) AS p_size,
-       CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-FROM part JOIN lineitem ON p_partkey = l_partkey
-WHERE p_brand <> 'Brand#1' AND p_size IN (1, 5, 11, 17, 23, 29, 36, 42)
-GROUP BY p_brand, p_type, p_size
-ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""",
-        # txt_langid_confusion: the same marker-hit CASE as the
-        # curation feats CTE, cross-tabbed against the ground truth
-        "txt_langid_confusion": f"""
-WITH pred AS (
-  SELECT lang,
-         CASE WHEN ({en_hits}) > ({de_hits}) THEN 'en'
-              WHEN ({de_hits}) > ({en_hits}) THEN 'de'
-              ELSE 'und' END AS pred
-  FROM documents)
-SELECT lang, pred, CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM pred GROUP BY lang, pred ORDER BY lang, pred""",
-        "sim_kcenter_sample": _kcenter_sql,
-        # dd_edit_distance: the md5 minhash/banding chain (shared
-        # _MH_CTES cand relation) + DuckDB's exact integer levenshtein
-        # on the same fingerprint normalization.
-        "dd_edit_distance": f"""WITH {_MH_CTES},
-ntxt AS (SELECT doc_id AS id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
-         FROM d),
-ed AS (SELECT c.a_id, c.b_id,
-              CAST(levenshtein(xa.t, xb.t) AS INT) AS edit_dist,
-              ROUND(CAST(levenshtein(xa.t, xb.t) AS DOUBLE)
-                    / CAST(GREATEST(length(xa.t), length(xb.t)) AS DOUBLE), 6) AS rel_dist
-       FROM cand c
-       JOIN ntxt xa ON xa.id = c.a_id
-       JOIN ntxt xb ON xb.id = c.b_id)
-SELECT a_id, b_id, edit_dist, rel_dist FROM ed
-WHERE rel_dist <= 0.3 ORDER BY a_id, b_id""",
-        "rel_tpch_q13": """
-WITH per AS (
-  SELECT c_custkey, CAST(COUNT(o_orderkey) AS BIGINT) AS c_count
-  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-  GROUP BY c_custkey)
-SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
-FROM per GROUP BY c_count ORDER BY custdist DESC, c_count DESC""",
-        "rel_tpch_q18": """
-WITH tot AS (
-  SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,4))) AS tq
-  FROM lineitem GROUP BY l_orderkey
-  HAVING SUM(CAST(l_quantity AS DECIMAL(18,4))) > 150)
-SELECT c_name, CAST(c_custkey AS BIGINT) AS c_custkey,
-       CAST(o_orderkey AS BIGINT) AS o_orderkey, o_orderdate, o_totalprice,
-       CAST(tq AS DOUBLE) AS total_qty
-FROM tot JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""",
-        "rel_tpch_q9": """
-SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS amount
-FROM part
-JOIN lineitem ON l_partkey = p_partkey
-JOIN supplier ON s_suppkey = l_suppkey
-JOIN orders ON o_orderkey = l_orderkey
-JOIN nation ON n_nationkey = s_nationkey
-WHERE contains(p_name, 'blue')
-GROUP BY n_name, year(o_orderdate) ORDER BY nation, o_year DESC""",
-        "rel_top3_per_group": """
-SELECT event_type, event_id, ROUND(value, 6) AS value, rn FROM (
-  SELECT event_type, event_id, value,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rn
-  FROM events) WHERE rn <= 3 ORDER BY event_type, rn""",
-        "rel_event_histogram": """
-SELECT event_type, COUNT(*) AS cnt FROM events GROUP BY event_type ORDER BY cnt DESC, event_type""",
-        "rel_sessionize": """
-WITH o AS (
-  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts FROM events
-),
-f AS (
-  SELECT *, CASE WHEN pts IS NULL OR epoch_us(ts) - epoch_us(pts) > 1800 * 1000000 THEN 1 ELSE 0 END AS ns
-  FROM o
-),
-g AS (
-  SELECT *, SUM(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) - 1 AS sn
-  FROM f
-)
-SELECT user_id,
-       CAST(user_id AS VARCHAR) || '-' || CAST(sn AS VARCHAR) AS session_id,
-       COUNT(*) AS n_events,
-       MIN(ts) AS t_start,
-       MAX(ts) AS t_end,
-       ROUND((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) / 1000000.0, 6) AS duration_sec
-FROM g GROUP BY user_id, sn ORDER BY user_id, session_id""",
-        "rel_asof_join": """
-WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-r AS (SELECT user_id, ts, value AS click_value FROM events WHERE event_type = 'click')
-SELECT l.event_id, l.user_id, l.ts, r.ts AS right_ts, ROUND(r.click_value, 6) AS click_value
-FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-ORDER BY l.event_id""",
-        "rel_tumbling_window": """
-SELECT make_timestamp(CAST(FLOOR(epoch_us(ts) / (3600 * CAST(1000000 AS BIGINT))) * 3600 * CAST(1000000 AS BIGINT) AS BIGINT)) AS window_start,
-       event_type,
-       COUNT(*) AS cnt,
-       ROUND(SUM(value), 6) AS sum_value,
-       ROUND(AVG(value), 6) AS avg_value
-FROM events GROUP BY window_start, event_type ORDER BY window_start, event_type""",
-        "rel_null_audit": """
-WITH d AS (SELECT CASE WHEN lang = 'de' THEN NULL ELSE lang END AS lang,
-                  CASE WHEN n_chars < 100 THEN NULL ELSE n_chars END AS n_chars,
-                  source FROM documents)
-SELECT CAST(SUM(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS lang_nulls,
-       CAST(SUM(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_chars_nulls,
-       CAST(SUM(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS source_nulls
-FROM d""",
-        "rel_coalesce_projection": """
-SELECT doc_id, COALESCE(CASE WHEN lang = 'de' THEN NULL ELSE lang END, source) AS source_uri
-FROM documents ORDER BY doc_id""",
-        "rel_evidence_truncation": """
-SELECT doc_id, substr(text, 1, 500) AS evidence FROM documents ORDER BY doc_id""",
-        "dd_exact": """
-WITH d AS (SELECT doc_id, text FROM documents
-           UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 50)
-SELECT md5(text) AS text_hash, COUNT(*) AS dup_cnt, MIN(doc_id) AS canonical_id
-FROM d GROUP BY 1 HAVING COUNT(*) > 1 ORDER BY text_hash""",
-        "dd_fingerprint": """
-SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-FROM documents ORDER BY doc_id""",
-        "dd_ngram_jaccard": """
-WITH d AS (SELECT doc_id, text FROM documents
-           UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 50),
-t AS (
-  SELECT doc_id AS id,
-         list_distinct(
-           list_transform(
-             range(1, greatest(length(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) - 0, 1)),
-             i -> array_to_string(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')[i:i+1], ' '))) AS sh
-  FROM d
-  WHERE length(trim(text)) > 0),
-t2 AS (SELECT id, sh, length(sh) AS n FROM t WHERE length(sh) > 0),
-p AS (
-  SELECT l.id AS a_id, r.id AS b_id,
-         ROUND(CAST(length(list_intersect(l.sh, r.sh)) AS DOUBLE)
-               / (l.n + r.n - length(list_intersect(l.sh, r.sh))), 6) AS jaccard
-  FROM t2 l JOIN t2 r ON l.id < r.id AND least(l.n, r.n) >= greatest(l.n, r.n) * 0.5)
-SELECT a_id, b_id, jaccard FROM p WHERE jaccard >= 0.5 ORDER BY a_id, b_id""",
-        "dd_embed_near_dup": f"""
-SELECT a.vec_id AS a_id, b.vec_id AS b_id, ROUND({cos}, 6) AS cosine
-FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE ROUND({cos}, 6) >= 0.30 ORDER BY a_id, b_id""",
-        "sim_bruteforce_topk": f"""
-WITH b AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-SELECT a.vec_id, ROUND({cos}, 6) AS cosine
-FROM embeddings a, b
-ORDER BY cosine DESC, vec_id LIMIT 10""",
-        "txt_stats": f"""
-SELECT doc_id,
-  length(regexp_extract_all(text, '\\S+')) AS token_count,
-  length(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS bpe_tokens,
-  CASE WHEN ({en_hits}) > ({de_hits}) THEN 'en'
-       WHEN ({de_hits}) > ({en_hits}) THEN 'de'
-       ELSE 'und' END AS lang_pred,
-  ROUND(CASE WHEN length(text) > 0 THEN CAST(length(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / length(text) ELSE 0.0 END, 6) AS punct_ratio,
-  ROUND(CASE WHEN length(regexp_extract_all(text, '\\S+')) > 0 THEN CAST(({en_hits}) AS DOUBLE) / length(regexp_extract_all(text, '\\S+')) ELSE 0.0 END, 6) AS stop_ratio,
-  ROUND(CAST(
-    (CASE WHEN length(regexp_extract_all(text, '\\S+')) >= 5 THEN 0.4 ELSE 0.0 END)
-    + (CASE WHEN (CASE WHEN length(text) > 0 THEN CAST(length(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / length(text) ELSE 0.0 END) > 0.001
-            AND (CASE WHEN length(text) > 0 THEN CAST(length(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / length(text) ELSE 0.0 END) < 0.2 THEN 0.3 ELSE 0.0 END)
-    + (CASE WHEN (CASE WHEN length(regexp_extract_all(text, '\\S+')) > 0 THEN CAST(({en_hits}) AS DOUBLE) / length(regexp_extract_all(text, '\\S+')) ELSE 0.0 END) > 0.02 THEN 0.3 ELSE 0.0 END)
-  AS DOUBLE), 6) AS quality_score
-FROM documents ORDER BY doc_id""",
-        "txt_repetition": r"""
-WITH base AS (
-  SELECT doc_id AS id, length(text) AS n_chars,
-         list_filter(string_split(text, chr(10)), x -> length(trim(x)) > 0) AS lines,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> length(x) > 0) AS toks
-  FROM documents),
-dlf AS (SELECT id, n_chars, len(lines) AS n_lines,
-               CASE WHEN len(lines) > 0
-                    THEN ROUND((len(lines) - len(list_distinct(lines))) / len(lines), 6)
-                    ELSE 0.0 END AS dup_line_frac,
-               toks FROM base),
-pair_counts AS (
-  SELECT dlf.id AS id,
-         toks[CAST(i AS INT) + 1] || ' ' || toks[CAST(i AS INT) + 2] AS bigram,
-         COUNT(*) AS cnt
-  FROM dlf, LATERAL (SELECT unnest(range(len(toks) - 1)) AS i) r
-  GROUP BY dlf.id, bigram),
-top AS (SELECT id, bigram AS top_bigram, cnt AS bigram_count
-        FROM (SELECT id, bigram, cnt,
-                     ROW_NUMBER() OVER (PARTITION BY id ORDER BY cnt DESC, bigram) AS rn
-              FROM pair_counts)
-        WHERE rn = 1)
-SELECT d.id AS doc_id, d.n_lines, d.dup_line_frac,
-       COALESCE(t.top_bigram, '') AS top_bigram,
-       CAST(COALESCE(t.bigram_count, 0) AS BIGINT) AS bigram_count,
-       ROUND(CASE WHEN d.n_chars > 0 AND t.bigram_count IS NOT NULL
-                  THEN t.bigram_count * length(t.top_bigram) / d.n_chars
-                  ELSE 0.0 END, 6) AS bigram_char_frac
-FROM dlf d LEFT JOIN top t ON d.id = t.id ORDER BY d.id""",
-        "txt_pii_scrub": r"""
-WITH planted AS (
-  SELECT doc_id,
-         text || ' contact: user' || CAST(doc_id AS VARCHAR) || '@example.com at 10.0.'
-              || CAST(doc_id % 256 AS VARCHAR) || '.7 or +1 555-01'
-              || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') AS t
-  FROM documents)
-SELECT doc_id,
-  length(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
-  length(regexp_extract_all(t, '\+[0-9][0-9 ()-]{6,14}[0-9]')) AS n_phone,
-  length(regexp_extract_all(t, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS n_ipv4,
-  md5(regexp_replace(
-        regexp_replace(
-          regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-          '\+[0-9][0-9 ()-]{6,14}[0-9]', '[PHONE]', 'g'),
-        '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '[IP]', 'g')) AS scrub_md5
-FROM planted ORDER BY doc_id""",
-        "dd_curation": f"""
-WITH {_CURATION_FEATS_CTE}
-SELECT g.id, g.lang, g.n_tokens, g.quality_score, g.fp
-FROM gated g
-JOIN (SELECT fp, min(id) AS id FROM gated GROUP BY fp) w
-  ON g.fp = w.fp AND g.id = w.id
-ORDER BY g.id""",
-        "dd_curation_funnel": f"""
-WITH {_CURATION_FEATS_CTE.replace("gated AS (SELECT * FROM feats WHERE n_tokens >= 5 AND quality_score >= 0.5 AND lang IN ('en'))", "gated AS (SELECT * FROM feats)")}
-SELECT CAST(COUNT(*) AS BIGINT) AS total,
-  CAST(COUNT(*) FILTER (n_tokens >= 5) AS BIGINT) AS pass_length,
-  CAST(COUNT(*) FILTER (n_tokens >= 5 AND quality_score >= 0.5) AS BIGINT) AS pass_quality,
-  CAST(COUNT(*) FILTER (n_tokens >= 5 AND quality_score >= 0.5 AND lang IN ('en')) AS BIGINT) AS pass_lang,
-  CAST(COUNT(DISTINCT CASE WHEN n_tokens >= 5 AND quality_score >= 0.5 AND lang IN ('en') THEN fp END) AS BIGINT) AS after_dedup
-FROM gated""",
-        "dd_kmv_distinct": """
-SELECT source, CAST(COUNT(DISTINCT text) AS BIGINT) AS distinct_texts
-FROM documents GROUP BY source ORDER BY source""",
-        "rel_tpch_q7": """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-    * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS volume
-FROM lineitem
-JOIN supplier ON s_suppkey = l_suppkey
-JOIN orders ON o_orderkey = l_orderkey
-JOIN customer ON c_custkey = o_custkey
-JOIN nation n1 ON n1.n_nationkey = s_nationkey
-JOIN nation n2 ON n2.n_nationkey = c_nationkey
-WHERE n1.n_name < n2.n_name
-GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-        "dd_split": """
-SELECT doc_id,
-  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'cccccccc' THEN 'train'
-       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'val'
-       ELSE 'test' END AS split
-FROM documents ORDER BY doc_id""",
-        "dd_pack": """
-SELECT doc_id,
-  length(regexp_extract_all(text, '\\S+')) AS n_tokens,
-  CAST(COALESCE(SUM(length(regexp_extract_all(text, '\\S+')))
-    OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS BIGINT) AS bin_id
-FROM documents ORDER BY doc_id""",
-        "rel_sliding_window": """
-WITH ex AS (
-  SELECT event_type,
-    make_timestamp(k * 30000000) AS window_start
-  FROM events,
-    unnest(range(epoch_us(ts) // 30000000 - 1, epoch_us(ts) // 30000000 + 1)) AS t(k)
-  WHERE epoch_us(ts) >= k * 30000000 AND epoch_us(ts) < k * 30000000 + 60000000
-)
-SELECT window_start, event_type, COUNT(*) AS cnt
-FROM ex GROUP BY 1, 2 ORDER BY 1, 2""",
-        "dd_pack_concat": """
-WITH p AS (
-  SELECT doc_id, text,
-    length(regexp_extract_all(text, '\\S+')) AS n_tokens,
-    CAST(COALESCE(SUM(length(regexp_extract_all(text, '\\S+')))
-      OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS BIGINT) AS bin_id
-  FROM documents
-)
-SELECT bin_id,
-  string_agg(text, chr(10) ORDER BY doc_id) AS packed_text,
-  string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS member_ids,
-  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-FROM p GROUP BY bin_id ORDER BY bin_id""",
-        "dd_training_export": f"""
-WITH {_CURATION_FEATS_CTE},
-kept AS (
-  SELECT g.id, g.n_tokens FROM gated g
-  JOIN (SELECT fp, min(id) AS id FROM gated GROUP BY fp) w
-    ON g.fp = w.fp AND g.id = w.id
-),
-train AS (
-  SELECT id, n_tokens FROM kept
-  WHERE substr(md5(CAST(id AS VARCHAR)), 1, 8) < 'cccccccc'
-),
-packed AS (
-  SELECT id, n_tokens,
-    CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 1024 AS BIGINT) AS bin_id
-  FROM train
-)
-SELECT bin_id, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens, MIN(id) AS first_id
-FROM packed GROUP BY bin_id ORDER BY bin_id""",
-        # minhash+LSH, md5 family: identical signature/banding math as
-        # operators/dedup.py (minhash_signatures/minhash_lsh_candidates
-        # /minhash_jaccard_estimate with hash_family="md5") — hex-string
-        # MIN == numeric MIN on fixed-width lowercase hex
-        "dd_minhash_lsh": f"""WITH {_MH_CTES}
-SELECT a_id, b_id, est_jaccard FROM est WHERE est_jaccard >= 0.5""",
-        # near-dup clusters: the same LSH pair relation closed into
-        # components by an EXACT recursive-CTE reachability (no round
-        # count to tune), canonical = min doc_id per component
-        "dd_dup_clusters": f"""WITH RECURSIVE {_MH_CTES},
-mp AS (SELECT a_id, b_id FROM est WHERE est_jaccard >= 0.5),
-sym AS (SELECT a_id AS id, b_id AS nbr FROM mp UNION SELECT b_id, a_id FROM mp),
-dnodes AS (SELECT DISTINCT id FROM sym),
-reach(id, r) AS (
-    SELECT id, id FROM dnodes
-  UNION
-    SELECT rc.id, s.nbr FROM reach rc JOIN sym s ON rc.r = s.id
-),
-comp AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
-szs AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size FROM comp GROUP BY cluster_id)
-SELECT c.id AS doc_id, c.cluster_id, s.cluster_size,
-       CAST(CASE WHEN c.id = c.cluster_id THEN 1 ELSE 0 END AS BIGINT) AS is_canonical
-FROM comp c JOIN szs s ON c.cluster_id = s.cluster_id
-ORDER BY c.cluster_id, doc_id""",
-        # dd_dup_family_stats: the same recursive closure, re-agged
-        # into the family-size census
-        "dd_dup_family_stats": f"""WITH RECURSIVE {_MH_CTES},
-mp AS (SELECT a_id, b_id FROM est WHERE est_jaccard >= 0.5),
-sym AS (SELECT a_id AS id, b_id AS nbr FROM mp UNION SELECT b_id, a_id FROM mp),
-dnodes AS (SELECT DISTINCT id FROM sym),
-reach(id, r) AS (
-    SELECT id, id FROM dnodes
-  UNION
-    SELECT rc.id, s.nbr FROM reach rc JOIN sym s ON rc.r = s.id
-),
-comp AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
-szs AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size FROM comp GROUP BY cluster_id)
-SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
-       CAST(SUM(cluster_size) AS BIGINT) AS n_docs
-FROM szs GROUP BY cluster_size ORDER BY cluster_size""",
-        # simhash, md5 family: token hash = first 16 hex chars of md5
-        # as a 64-bit value, rebuilt nibble-by-nibble (bit b lives in
-        # hex char (63-b)//4+1 at in-nibble position b%4); fingerprints
-        # as UBIGINT so >> is a logical shift — bucket grouping and
-        # xor/bit_count are representation-independent
-        "dd_simhash": """
-WITH d AS (SELECT doc_id, text FROM documents
-           UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 50),
-norm AS (SELECT doc_id AS id,
-                string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
-         FROM d WHERE length(trim(text)) > 0),
-th AS (SELECT id, md5(t) AS h FROM (SELECT id, unnest(toks) AS t FROM norm)),
-bits AS (
-  SELECT id, b,
-    SUM(CASE WHEN ((strpos('0123456789abcdef', substr(h, (63 - b) // 4 + 1, 1)) - 1) >> (b % 4)) & 1 = 1
-             THEN 1 ELSE -1 END) AS s
-  FROM th CROSS JOIN range(64) bb(b)
-  GROUP BY id, b
-),
-fp AS (SELECT id, bit_or(CASE WHEN s > 0 THEN CAST(1 AS UBIGINT) << CAST(b AS INT)
-                              ELSE CAST(0 AS UBIGINT) END) AS fp
-       FROM bits GROUP BY id),
-bk AS (SELECT id, fp, fp >> 48 AS bucket FROM fp)
-SELECT l.id AS a_id, r.id AS b_id, CAST(bit_count(xor(l.fp, r.fp)) AS INT) AS hamming
-FROM bk l JOIN bk r ON l.bucket = r.bucket AND l.id < r.id
-WHERE bit_count(xor(l.fp, r.fp)) <= 3""",
-        # decontamination: the semi-join runs on xxhash64 in Spark but
-        # membership is shingle-STRING equality, which DuckDB replays
-        # directly (a 64-bit in-doc hash collision would skew a count;
-        # none exist, and the value-hash compare would catch it)
-        "dd_decontaminate": """
-WITH d AS (SELECT doc_id, text FROM documents
-           UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 50),
-bt AS (SELECT string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
-       FROM documents WHERE doc_id % 97 = 0),
-bsh AS (SELECT DISTINCT array_to_string(toks[i:i+7], ' ') AS s
-        FROM (SELECT toks, length(toks) AS nt FROM bt WHERE length(toks) >= 8) b,
-             unnest(range(1, nt - 6)) t(i)),
-ct AS (SELECT doc_id AS id,
-              string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
-       FROM d),
-csh AS (SELECT DISTINCT id, array_to_string(toks[i:i+7], ' ') AS s
-        FROM (SELECT id, toks, length(toks) AS nt FROM ct WHERE length(toks) >= 8) c,
-             unnest(range(1, nt - 6)) t(i))
-SELECT id, CAST(COUNT(*) AS BIGINT) AS n_hits
-FROM csh JOIN bsh USING (s) GROUP BY id""",
-        "dd_mixture_sample": f"""
-SELECT doc_id, source FROM documents
-WHERE (source = 'src0' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '{_frac_hex(1.0)}')
-   OR (source = 'src1' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '{_frac_hex(0.5)}')
-   OR (source = 'src2' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '{_frac_hex(0.25)}')
-   OR (source NOT IN ('src0', 'src1', 'src2')
-       AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '{_frac_hex(0.1)}')
-ORDER BY doc_id""",
-        "rel_percentile": """
-SELECT event_type,
-  ROUND(quantile_cont(value, 0.5), 6) AS p50,
-  ROUND(quantile_cont(value, 0.9), 6) AS p90,
-  ROUND(quantile_cont(value, 0.99), 6) AS p99
-FROM events GROUP BY event_type ORDER BY event_type""",
-        "rel_except": """
-SELECT DISTINCT user_id FROM events
-EXCEPT
-SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase' AND value > 90
-ORDER BY user_id""",
-        "rel_range_join": """
-WITH span AS (SELECT user_id, min(ts) AS lo, max(ts) AS hi FROM events GROUP BY user_id),
-iv AS (SELECT user_id,
-  make_timestamp((epoch_us(lo) * 9 + epoch_us(hi)) // 10) AS start_ts,
-  make_timestamp((epoch_us(lo) * 6 + epoch_us(hi) * 4) // 10) AS end_ts
-  FROM span)
-SELECT e.user_id, COUNT(*) AS n_in_window
-FROM events e JOIN iv ON e.user_id = iv.user_id
-  AND e.ts >= iv.start_ts AND e.ts <= iv.end_ts
-GROUP BY e.user_id ORDER BY e.user_id""",
-        "rel_json_extract": """
-SELECT event_type,
-  COUNT(*) AS cnt,
-  CAST(SUM(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
-  MIN(CAST(json_extract_string(props, '$.k') AS INT)) AS min_k,
-  MAX(CAST(json_extract_string(props, '$.k') AS INT)) AS max_k
-FROM events
-WHERE props IS NOT NULL AND json_extract_string(props, '$.k') IS NOT NULL
-GROUP BY event_type ORDER BY event_type""",
-        "rel_rollup": """
-SELECT event_type, CAST(user_id % 10 AS BIGINT) AS cohort,
-  COUNT(*) AS cnt,
-  CAST(ROUND(SUM(CAST(value AS DECIMAL(20,6))), 4) AS DOUBLE) AS sum_value
-FROM events
-GROUP BY ROLLUP(event_type, CAST(user_id % 10 AS BIGINT))
-ORDER BY event_type ASC NULLS FIRST, cohort ASC NULLS FIRST""",
-        # mm_features: the payload is utf-8 of pure-ASCII text, so
-        # byte == codepoint; mean/std from moments (round-6 absorbs the
-        # formula/order ulp noise), top byte ties break low like
-        # np.bincount().argmax()
-        "mm_features": """
-WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS url, text FROM documents),
-ch AS (SELECT url, unicode(substr(text, CAST(i AS INT), 1)) AS b
-       FROM d, unnest(range(1, length(text) + 1)) t(i)),
-agg AS (SELECT url,
-               AVG(CAST(b AS DOUBLE)) AS mean_byte,
-               sqrt(AVG(CAST(b AS DOUBLE) * b) - AVG(CAST(b AS DOUBLE)) * AVG(CAST(b AS DOUBLE))) AS std_byte
-        FROM ch GROUP BY url),
-top AS (SELECT url, b AS top_byte FROM (
-          SELECT url, b, ROW_NUMBER() OVER (PARTITION BY url ORDER BY COUNT(*) DESC, b) AS rn
-          FROM ch GROUP BY url, b) WHERE rn = 1)
-SELECT d.url, 'binary' AS media_type,
-       CAST(octet_length(encode(d.text)) AS BIGINT) AS byte_len,
-       sha256(d.text) AS sha256,
-       CASE WHEN substr(d.text, 1, 1) = '<' AND lower(substr(d.text, 1, 4)) IN ('<htm', '<!do') THEN 'html'
-            WHEN substr(d.text, 1, 4) = 'GIF8' THEN 'gif'
-            WHEN substr(d.text, 1, 4) = 'RIFF' THEN 'riff'
-            ELSE 'bin' END AS fmt,
-       ROUND(COALESCE(a.mean_byte, 0.0), 6) AS mean_byte,
-       ROUND(COALESCE(a.std_byte, 0.0), 6) AS std_byte,
-       CAST(COALESCE(t.top_byte, 0) AS INT) AS top_byte
-FROM d LEFT JOIN agg a ON d.url = a.url LEFT JOIN top t ON d.url = t.url""",
-        "mm_tile_stats": """
-WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS url, text FROM documents),
-tiles AS (SELECT url, CAST(i AS INT) AS tile_idx,
-                 substr(text, CAST(i * 64 + 1 AS INT), 64) AS t
-          FROM d, unnest(range(0, GREATEST((length(text) + 63) // 64, 1))) u(i)),
-ch AS (SELECT url, tile_idx, unicode(substr(t, CAST(j AS INT), 1)) AS b
-       FROM tiles, unnest(range(1, length(t) + 1)) v(j)),
-m AS (SELECT url, tile_idx, AVG(CAST(b AS DOUBLE)) AS mean_byte
-      FROM ch GROUP BY url, tile_idx)
-SELECT tiles.url, tiles.tile_idx,
-       CAST(length(tiles.t) AS BIGINT) AS tile_len,
-       sha256(tiles.t) AS tile_sha256,
-       ROUND(COALESCE(m.mean_byte, 0.0), 6) AS mean_byte
-FROM tiles LEFT JOIN m USING (url, tile_idx)
-ORDER BY tiles.url, tiles.tile_idx""",
-        "mm_frame_sample": """
-SELECT CAST(doc_id AS VARCHAR) AS url,
-  unnest(range(0, greatest(octet_length(encode(text)) // 32, 1), 2)) AS frame_idx
-FROM documents ORDER BY doc_id, frame_idx""",
         "kg_int_encode": f"""WITH {MENTIONS_CTE},
 vocab AS (
   SELECT 'Chunk' AS label, chunk_id AS id FROM src
@@ -8245,44 +3549,6 @@ SELECT ne.a, ne.b, ne.common,
        CAST(da.deg * db.deg AS BIGINT) AS pa
 FROM ne JOIN deg da ON da.cid = ne.a JOIN deg db ON db.cid = ne.b
 ORDER BY aa DESC, common DESC, a, b LIMIT 20""",
-        "dd_url_dedup": r"""
-WITH d AS (SELECT doc_id, CAST(doc_id % 20 AS VARCHAR) AS g, doc_id % 7 AS v FROM documents),
-raw AS (SELECT doc_id,
-  CASE v
-    WHEN 0 THEN 'https://Example.COM/cat/' || g || '?a=1&b=2'
-    WHEN 1 THEN 'https://www.example.com/cat/' || g || '/?b=2&a=1'
-    WHEN 2 THEN 'https://example.com:443/cat/' || g || '?utm_source=feed&a=1&b=2#frag'
-    WHEN 3 THEN 'https://EXAMPLE.com/cat/' || g || '?b=2&utm_campaign=x&a=1'
-    WHEN 4 THEN 'http://example.com/cat/' || g || '?a=1&b=2'
-    WHEN 5 THEN 'https://example.com/cat/' || g || '?a=1&b=2&c=3'
-    ELSE 'https://example.com/cat/' || g END AS url
-  FROM d),
-p1 AS (SELECT doc_id, url, regexp_replace(url, '#.*$', '') AS u FROM raw),
-p2 AS (SELECT doc_id, url, u,
-              lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-              regexp_replace(lower(regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)),
-                             '^www\.', '') AS host0,
-              regexp_replace(regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1),
-                             '/+$', '') AS path,
-              regexp_extract(u, '\?(.*)$', 1) AS query
-       FROM p1),
-p3 AS (SELECT doc_id, url, scheme, path,
-              CASE WHEN scheme = 'https' THEN regexp_replace(host0, ':443$', '')
-                   WHEN scheme = 'http' THEN regexp_replace(host0, ':80$', '')
-                   ELSE host0 END AS host,
-              array_to_string(
-                list_sort(list_filter(string_split(query, '&'),
-                  x -> x <> '' AND NOT regexp_matches(x,
-                       '^(utm_[A-Za-z0-9_]*|fbclid|gclid|msclkid|ref)(=|$)'))),
-                '&') AS qs
-       FROM p2),
-c AS (SELECT doc_id,
-             scheme || '://' || host || path ||
-               CASE WHEN qs <> '' THEN '?' || qs ELSE '' END AS canonical_url
-      FROM p3)
-SELECT canonical_url, CAST(COUNT(*) AS BIGINT) AS n_dups,
-       CAST(MAX(doc_id) AS BIGINT) AS survivor_id
-FROM c GROUP BY canonical_url ORDER BY canonical_url""",
         "kg_shortest_paths": f"""WITH {PAIRS_CTE},
 pf AS (SELECT a_id, b_id, CAST(SUM(freq) AS BIGINT) AS freq FROM pairs GROUP BY a_id, b_id),
 wund AS (SELECT a_id AS cid, b_id AS nbr_id, 1.0 / freq AS w FROM pf
@@ -8299,24 +3565,6 @@ d{k} AS (SELECT id, MIN(dist) AS dist FROM (
         )
         + """
 SELECT id, ROUND(dist, 6) AS dist FROM d6 ORDER BY dist, id""",
-        "txt_line_dedup": r"""
-WITH base AS (SELECT doc_id AS id,
-                     list_filter(regexp_split_to_array(trim(text), '\s+'), t -> length(t) > 0) AS toks
-              FROM documents),
-b2 AS (SELECT id, toks FROM base WHERE len(toks) > 0),
-w AS (SELECT id, CAST(k AS INT) AS idx,
-             array_to_string(toks[k * 10 + 1 : k * 10 + 10], ' ') AS line
-      FROM b2, LATERAL (SELECT unnest(range(CAST(ceil(len(toks) / 10.0) AS BIGINT))) AS k) r),
-lines AS (SELECT id, idx, line, md5(line) AS lh FROM w),
-viral AS (SELECT lh FROM (SELECT lh, COUNT(DISTINCT id) AS docs FROM lines
-                          WHERE trim(line) <> '' GROUP BY lh) WHERE docs > 1),
-kept AS (SELECT l.id, l.idx, l.line FROM lines l ANTI JOIN viral v ON l.lh = v.lh),
-agg AS (SELECT id, string_agg(line, chr(10) ORDER BY idx) AS clean_text,
-               CAST(COUNT(*) AS BIGINT) AS n_kept FROM kept GROUP BY id),
-tot AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n_total FROM lines GROUP BY id)
-SELECT t.id, COALESCE(a.clean_text, '') AS clean_text,
-       COALESCE(a.n_kept, 0) AS n_kept, t.n_total
-FROM tot t LEFT JOIN agg a ON t.id = a.id ORDER BY t.id""",
         "kg_drift_search": _drift_sql,
         "kg_betweenness": f"""WITH {PAIRS_CTE},
 {_betweenness_ctes(_PPR_SEED_LEMMAS, 4)}
@@ -8338,28 +3586,6 @@ d AS (SELECT id, CAST(MIN(dist) AS INT) AS dist FROM walk GROUP BY id)
 SELECT p.a_id, p.b_id, p.freq, da.dist AS a_dist, db.dist AS b_dist
 FROM pf p JOIN d da ON p.a_id = da.id JOIN d db ON p.b_id = db.id
 ORDER BY p.a_id, p.b_id""",
-        "rel_window_funnel": """
-WITH a1 AS (SELECT user_id AS u, ts AS t1 FROM events WHERE event_type = 'view'),
-s2 AS (SELECT a.u, a.t1, MIN(e.ts) AS tcur FROM a1 a JOIN events e ON e.user_id = a.u
-       WHERE e.event_type = 'click' AND e.ts > a.t1 AND e.ts <= a.t1 + INTERVAL 1 HOUR
-       GROUP BY a.u, a.t1),
-s3 AS (SELECT s.u, s.t1, MIN(e.ts) AS tcur FROM s2 s JOIN events e ON e.user_id = s.u
-       WHERE e.event_type = 'purchase' AND e.ts > s.tcur AND e.ts <= s.t1 + INTERVAL 1 HOUR
-       GROUP BY s.u, s.t1),
-lv AS (SELECT u, 1 AS lvl FROM (SELECT DISTINCT u FROM a1)
-       UNION ALL SELECT DISTINCT u, 2 FROM s2
-       UNION ALL SELECT DISTINCT u, 3 FROM s3),
-ul AS (SELECT u, MAX(lvl) AS level FROM lv GROUP BY u)
-SELECT CAST(level AS INT) AS level, CAST(COUNT(*) AS BIGINT) AS n_users
-FROM ul GROUP BY level ORDER BY level""",
-        "rel_retention": """
-WITH act AS (SELECT DISTINCT user_id AS u,
-                    CAST((CAST(ts AS DATE) - DATE '2024-01-01') // 7 AS BIGINT) AS p
-             FROM events),
-coh AS (SELECT u, MIN(p) AS cohort FROM act GROUP BY u)
-SELECT c.cohort, a.p - c.cohort AS week_offset, CAST(COUNT(*) AS BIGINT) AS n_users
-FROM act a JOIN coh c ON a.u = c.u
-GROUP BY c.cohort, a.p - c.cohort ORDER BY cohort, week_offset""",
         "kg_fastrp": _fastrp_sql,
         "kg_hits": f"""WITH {TRIPLES_CTE},
 {_HITS_CTES}
@@ -8434,92 +3660,7 @@ SELECT predicate, CAST(COUNT(*) AS BIGINT) AS n_triples,
        ROUND(CAST(SUM(CASE WHEN age_sec > 120 THEN 1 ELSE 0 END) AS DOUBLE)
              / COUNT(*), 6) AS stale_share
 FROM efage GROUP BY predicate ORDER BY predicate""",
-        "mm_near_dup": """
-WITH md AS (SELECT CAST(doc_id AS VARCHAR) AS url, text FROM documents
-            UNION ALL
-            SELECT CAST(doc_id + 1000000 AS VARCHAR), text FROM documents WHERE doc_id < 50),
-mtiles AS (SELECT url,
-                  sha256(substr(text, CAST(i * 64 + 1 AS INT), 64)) AS tile_sha256
-           FROM md, unnest(range(0, GREATEST((length(text) + 63) // 64, 1))) u(i)),
-mt AS (SELECT DISTINCT url, tile_sha256 FROM mtiles),
-mkeep AS (SELECT tile_sha256 FROM (
-            SELECT tile_sha256, COUNT(*) AS nd FROM mt GROUP BY tile_sha256)
-          WHERE nd >= 2 AND nd <= 32),
-mtf AS (SELECT mt.url, mt.tile_sha256 FROM mt JOIN mkeep USING (tile_sha256)),
-mper AS (SELECT url, CAST(COUNT(*) AS BIGINT) AS n_tiles FROM mt GROUP BY url),
-mpairs AS (SELECT a.url AS a_url, b.url AS b_url,
-                  CAST(COUNT(*) AS BIGINT) AS shared_tiles
-           FROM mtf a JOIN mtf b ON a.tile_sha256 = b.tile_sha256 AND a.url < b.url
-           GROUP BY a.url, b.url HAVING COUNT(*) >= 2)
-SELECT p.a_url, p.b_url, p.shared_tiles,
-       pa.n_tiles AS a_tiles, pb.n_tiles AS b_tiles,
-       ROUND(CAST(p.shared_tiles AS DOUBLE) / LEAST(pa.n_tiles, pb.n_tiles), 6)
-         AS containment
-FROM mpairs p JOIN mper pa ON p.a_url = pa.url JOIN mper pb ON p.b_url = pb.url
-ORDER BY containment DESC, p.a_url, p.b_url LIMIT 50""",
-        "rel_bot_score": """
-WITH bb AS (SELECT user_id, event_type,
-                   epoch_us(CAST(ts AS TIMESTAMP)) // 60000000 AS mi
-            FROM events),
-pu AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-              CAST(COUNT(DISTINCT mi) AS BIGINT) AS active_min
-       FROM bb GROUP BY user_id),
-tt AS (SELECT user_id, MAX(c) AS top_type_n FROM (
-         SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS c
-         FROM bb GROUP BY user_id, event_type) GROUP BY user_id)
-SELECT pu.user_id, pu.n_events, pu.active_min,
-       ROUND(CAST(pu.n_events AS DOUBLE) / pu.active_min, 6) AS events_per_min,
-       ROUND(CAST(tt.top_type_n AS DOUBLE) / pu.n_events, 6) AS top_type_share,
-       CAST(CASE WHEN CAST(pu.n_events AS DOUBLE) / pu.active_min >= 3.0
-                  AND CAST(tt.top_type_n AS DOUBLE) / pu.n_events >= 0.8
-             THEN 1 ELSE 0 END AS BIGINT) AS flagged
-FROM pu JOIN tt USING (user_id)
-ORDER BY events_per_min DESC, pu.user_id LIMIT 50""",
-        # simhash margin calibration: candidate pairs replay dd_simhash's
-        # bucket algorithm; background pairs are md5-order successors
-        # inside 256 hash buckets over the same fingerprints
-        "dd_simhash_margin": """
-WITH d AS (SELECT doc_id, text FROM documents
-           UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 50),
-norm AS (SELECT doc_id AS id,
-                string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
-         FROM d WHERE length(trim(text)) > 0),
-th AS (SELECT id, md5(t) AS h FROM (SELECT id, unnest(toks) AS t FROM norm)),
-bits AS (
-  SELECT id, b,
-    SUM(CASE WHEN ((strpos('0123456789abcdef', substr(h, (63 - b) // 4 + 1, 1)) - 1) >> (b % 4)) & 1 = 1
-             THEN 1 ELSE -1 END) AS s
-  FROM th CROSS JOIN range(64) bb(b)
-  GROUP BY id, b
-),
-fp AS (SELECT id, bit_or(CASE WHEN s > 0 THEN CAST(1 AS UBIGINT) << CAST(b AS INT)
-                              ELSE CAST(0 AS UBIGINT) END) AS fp
-       FROM bits GROUP BY id),
-bk AS (SELECT id, fp, fp >> 48 AS bucket FROM fp),
-cand AS (SELECT 'candidate' AS population,
-                CAST(bit_count(xor(l.fp, r.fp)) AS BIGINT) AS hamming
-         FROM bk l JOIN bk r ON l.bucket = r.bucket AND l.id < r.id
-         WHERE bit_count(xor(l.fp, r.fp)) <= 3),
-mk AS (SELECT id, fp, md5(CAST(id AS VARCHAR)) AS mk,
-              substr(md5(CAST(id AS VARCHAR)), 1, 2) AS bkt FROM fp),
-bg AS (SELECT 'background' AS population,
-              CAST(bit_count(xor(fp, nxt)) AS BIGINT) AS hamming FROM (
-         SELECT fp, LEAD(fp) OVER (PARTITION BY bkt ORDER BY mk, id) AS nxt FROM mk)
-       WHERE nxt IS NOT NULL),
-u AS (SELECT * FROM cand UNION ALL SELECT * FROM bg)
-SELECT population, hamming, CAST(COUNT(*) AS BIGINT) AS n_pairs
-FROM u GROUP BY population, hamming ORDER BY population, hamming""",
         "kg_spam_mass": _spam_sql,
-        "rel_stickiness": """
-WITH du AS (SELECT DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d, user_id AS u
-            FROM events),
-dau AS (SELECT d AS day, CAST(COUNT(*) AS BIGINT) AS dau FROM du GROUP BY d),
-sup AS (SELECT CAST(d + CAST(i AS INT) AS DATE) AS day, u
-        FROM du, unnest(range(0, 7)) t(i)),
-wau AS (SELECT day, CAST(COUNT(DISTINCT u) AS BIGINT) AS wau FROM sup GROUP BY day)
-SELECT strftime(dau.day, '%Y-%m-%d') AS day, dau.dau, wau.wau,
-       ROUND(CAST(dau.dau AS DOUBLE) / wau.wau, 6) AS stickiness
-FROM dau JOIN wau USING (day) ORDER BY day""",
         "kg_peripheral_concepts": f"""WITH {PAIRS_CTE},
 und AS (SELECT DISTINCT a_id AS concept_id, b_id AS n FROM pairs
         UNION SELECT b_id, a_id FROM pairs),
@@ -8575,123 +3716,6 @@ i AS (SELECT obj_id AS id,
       FROM triples GROUP BY obj_id)
 SELECT COALESCE(o.id, i.id) AS id, CAST(COALESCE(out_is_a, 0) AS BIGINT) AS out_is_a, CAST(COALESCE(out_part_of, 0) AS BIGINT) AS out_part_of, CAST(COALESCE(out_causes, 0) AS BIGINT) AS out_causes, CAST(COALESCE(out_related, 0) AS BIGINT) AS out_related, CAST(COALESCE(out_total, 0) AS BIGINT) AS out_total, CAST(COALESCE(in_is_a, 0) AS BIGINT) AS in_is_a, CAST(COALESCE(in_part_of, 0) AS BIGINT) AS in_part_of, CAST(COALESCE(in_causes, 0) AS BIGINT) AS in_causes, CAST(COALESCE(in_related, 0) AS BIGINT) AS in_related, CAST(COALESCE(in_total, 0) AS BIGINT) AS in_total
 FROM o FULL OUTER JOIN i ON o.id = i.id ORDER BY id""",
-        "txt_ngram_coverage": """
-WITH ref AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0),
-half AS (SELECT doc_id + 2000000 AS doc_id,
-                array_to_string(
-                  (string_split(text, ' '))[1:CAST(len(string_split(text, ' ')) // 2 AS INT)],
-                  ' ') AS text
-         FROM ref),
-corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0
-           UNION ALL SELECT doc_id, text FROM half),
-rsh AS (SELECT doc_id AS id, sh FROM (
-          SELECT doc_id,
-                 unnest(list_distinct(list_transform(
-                   range(1, len(toks) - 6),
-                   i -> array_to_string(toks[CAST(i AS INT):CAST(i + 7 AS INT)], ' ')))) AS sh
-          FROM (SELECT doc_id,
-                       list_filter(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
-                                   x -> x <> '') AS toks
-                FROM ref)
-          WHERE len(toks) >= 8)),
-csh AS (SELECT DISTINCT
-               unnest(list_transform(
-                 range(1, len(toks) - 6),
-                 i -> array_to_string(toks[CAST(i AS INT):CAST(i + 7 AS INT)], ' '))) AS sh
-        FROM (SELECT list_filter(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
-                                 x -> x <> '') AS toks
-              FROM corpus)
-        WHERE len(toks) >= 8)
-SELECT r.id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
-       CAST(SUM(CASE WHEN c.sh IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
-       ROUND(CAST(SUM(CASE WHEN c.sh IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-             / COUNT(*), 6) AS coverage
-FROM rsh r LEFT JOIN csh c USING (sh)
-GROUP BY r.id ORDER BY r.id""",
-        "rel_gini": """
-WITH g AS (SELECT event_type,
-                  list_sort(list(CAST(value AS DOUBLE))) AS x
-           FROM events GROUP BY event_type),
-s AS (SELECT event_type, len(x) AS n,
-             list_sum(x) AS total,
-             list_sum(list_transform(range(1, len(x) + 1),
-                                     i -> CAST(i AS DOUBLE) * x[CAST(i AS INT)]))
-               AS wsum
-      FROM g)
-SELECT event_type, CAST(n AS BIGINT) AS n, ROUND(total, 6) AS total,
-       ROUND(CASE WHEN total > 0
-                  THEN 2.0 * wsum / (CAST(n AS DOUBLE) * total)
-                       - CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE)
-                  ELSE 0.0 END, 6) AS gini
-FROM s ORDER BY event_type""",
-        "rel_time_to_convert": """
-WITH pu AS (SELECT user_id,
-                   MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS first_us,
-                   MIN(CASE WHEN event_type = 'purchase'
-                            THEN epoch_us(CAST(ts AS TIMESTAMP)) END) AS conv_us
-            FROM events GROUP BY user_id),
-c AS (SELECT strftime(make_timestamp(first_us), '%Y-%m-%d') AS cohort_day,
-             CAST(conv_us - first_us AS DOUBLE) / 1e6 AS ttc
-      FROM pu)
-SELECT cohort_day,
-       CAST(COUNT(*) AS BIGINT) AS n_users,
-       CAST(COUNT(ttc) AS BIGINT) AS n_converted,
-       ROUND(CAST(COUNT(ttc) AS DOUBLE) / COUNT(*), 6) AS conversion_rate,
-       ROUND(AVG(ttc), 6) AS avg_ttc_s,
-       CASE WHEN COUNT(ttc) > 0 THEN ROUND(
-         (array_agg(ttc ORDER BY ttc) FILTER (ttc IS NOT NULL))
-           [CAST(CEIL(0.5 * COUNT(ttc)) AS INT)], 6) END AS median_ttc_s,
-       CASE WHEN COUNT(ttc) > 0 THEN ROUND(
-         (array_agg(ttc ORDER BY ttc) FILTER (ttc IS NOT NULL))
-           [CAST(CEIL(0.9 * COUNT(ttc)) AS INT)], 6) END AS p90_ttc_s
-FROM c GROUP BY cohort_day ORDER BY cohort_day""",
-        "rel_seasonal_baseline": """
-WITH b AS (SELECT event_type, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
-                  CAST(hour(CAST(ts AS TIMESTAMP)) AS INT) AS hour,
-                  CAST(COUNT(*) AS BIGINT) AS cnt
-           FROM events GROUP BY 1, 2, 3),
-nd AS (SELECT CAST(COUNT(DISTINCT day) AS BIGINT) AS n FROM b),
-base AS (SELECT event_type, hour, CAST(SUM(cnt) AS DOUBLE) / nd.n AS bs
-         FROM b, nd GROUP BY event_type, hour, nd.n)
-SELECT b.event_type, b.day, b.hour, b.cnt,
-       ROUND(base.bs, 6) AS baseline,
-       ROUND(b.cnt / base.bs, 6) AS ratio
-FROM b JOIN base USING (event_type, hour)
-WHERE b.cnt > 2.0 * base.bs
-ORDER BY b.event_type, b.day, b.hour""",
-        "txt_source_boilerplate": """
-WITH planted AS (
-  SELECT source, doc_id,
-         'cookie notice ' || source || ' accept terms' || chr(10)
-         || 'follow us on social media' || chr(10)
-         || CASE WHEN doc_id % 3 = 0
-                 THEN 'subscribe to ' || source || ' newsletter' || chr(10)
-                 ELSE '' END
-         || text AS t
-  FROM documents),
-lines AS (SELECT source, doc_id, md5(line) AS lh,
-                 CAST(length(line) AS BIGINT) AS len
-          FROM (SELECT source, doc_id, unnest(string_split(t, chr(10))) AS line
-                FROM planted)
-          WHERE trim(line) <> ''),
-nd AS (SELECT source, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-       FROM lines GROUP BY source),
-thr AS (SELECT source, GREATEST(CAST(2 AS BIGINT),
-                                CAST(CEIL(0.3 * n_docs) AS BIGINT)) AS thr
-        FROM nd),
-df_ AS (SELECT source, lh, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df,
-               SUM(len) AS mass
-        FROM lines GROUP BY source, lh),
-per AS (SELECT d.source,
-               CAST(COUNT(*) AS BIGINT) AS n_lines,
-               CAST(SUM(CASE WHEN d.df >= t.thr THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_boilerplate,
-               SUM(d.mass) AS total_mass,
-               SUM(CASE WHEN d.df >= t.thr THEN d.mass ELSE 0 END) AS bmass
-        FROM df_ d JOIN thr t USING (source) GROUP BY d.source)
-SELECT nd.source, nd.n_docs, per.n_lines, per.n_boilerplate,
-       ROUND(CAST(per.bmass AS DOUBLE) / per.total_mass, 6) AS boiler_char_frac
-FROM nd JOIN per USING (source) ORDER BY nd.source""",
         "kg_related_chunks": f"""WITH {MENTIONS_CTE},
 mc AS (SELECT DISTINCT chunk_id, concept_id FROM mentions),
 keep AS (SELECT concept_id FROM mc GROUP BY concept_id HAVING COUNT(*) <= 20),
@@ -8780,162 +3804,7 @@ SELECT d.anc_id, d.n_desc, CAST(COALESCE(m.n_mentions, 0) AS BIGINT) AS self_men
        CAST(COALESCE(m.n_mentions, 0) + d.desc_mentions AS BIGINT) AS total_mentions
 FROM dsc d LEFT JOIN mc m ON d.anc_id = m.concept_id
 ORDER BY total_mentions DESC, anc_id LIMIT 100""",
-        "txt_unigram_logprob": r"""
-WITH src AS (SELECT CAST(doc_id AS VARCHAR) AS chunk_id, text FROM documents),
-tok AS (
-  SELECT chunk_id,
-    unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> length(t) > 0)) AS term
-  FROM src),
-vocab AS (SELECT term, CAST(COUNT(*) AS DOUBLE) AS cnt FROM tok GROUP BY term),
-tot AS (SELECT SUM(cnt) AS total FROM vocab),
-logp AS (SELECT term, ln(cnt / t.total) AS logp FROM vocab CROSS JOIN tot t),
-s AS (SELECT tk.chunk_id, CAST(COUNT(*) AS BIGINT) AS n_tokens, AVG(l.logp) AS alp
-      FROM tok tk JOIN logp l ON tk.term = l.term GROUP BY tk.chunk_id)
-SELECT chunk_id, n_tokens, ROUND(alp, 6) AS avg_logprob, ROUND(exp(-alp), 6) AS ppl
-FROM s ORDER BY avg_logprob, chunk_id""",
-        # exact rank-statistic terciles over the rounded unigram score:
-        # cut_i = smallest score whose cumulative count >= ceil((i+1)*n/3)
-        # — integer logic only, so bucket membership is engine-stable
-        "dd_quality_mixture": f"""
-WITH src AS (SELECT CAST(doc_id AS VARCHAR) AS chunk_id, text FROM documents),
-tok AS (
-  SELECT chunk_id,
-    unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> length(t) > 0)) AS term
-  FROM src),
-vocab AS (SELECT term, CAST(COUNT(*) AS DOUBLE) AS cnt FROM tok GROUP BY term),
-tot AS (SELECT SUM(cnt) AS total FROM vocab),
-logp AS (SELECT term, ln(cnt / t.total) AS logp FROM vocab CROSS JOIN tot t),
-sc AS (SELECT tk.chunk_id, ROUND(AVG(l.logp), 6) AS q
-       FROM tok tk JOIN logp l ON tk.term = l.term GROUP BY tk.chunk_id),
-nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM sc),
-dist AS (SELECT q, COUNT(*) AS c FROM sc GROUP BY q),
-cum AS (SELECT q, SUM(c) OVER (ORDER BY q) AS cc FROM dist),
-t AS (SELECT MIN(CASE WHEN cc >= CEIL(1.0 * nn.n / 3) THEN q END) AS t0,
-             MIN(CASE WHEN cc >= CEIL(2.0 * nn.n / 3) THEN q END) AS t1
-      FROM cum CROSS JOIN nn),
-b AS (SELECT chunk_id, q AS avg_logprob,
-             CASE WHEN q <= t.t0 THEN 'q0' WHEN q <= t.t1 THEN 'q1' ELSE 'q2' END AS quality_bucket
-      FROM sc CROSS JOIN t)
-SELECT chunk_id, quality_bucket, avg_logprob FROM b
-WHERE (quality_bucket = 'q0' AND substr(md5(chunk_id), 1, 8) < '{_frac_hex(0.1)}')
-   OR (quality_bucket = 'q1' AND substr(md5(chunk_id), 1, 8) < '{_frac_hex(0.5)}')
-   OR (quality_bucket = 'q2' AND substr(md5(chunk_id), 1, 8) < '{_frac_hex(1.0)}')
-ORDER BY chunk_id""",
-        "rel_markov_transitions": """
-WITH seq AS (SELECT user_id, event_type,
-                    LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src
-             FROM events),
-trans AS (SELECT src, event_type AS dst, CAST(COUNT(*) AS BIGINT) AS n
-          FROM seq WHERE src IS NOT NULL GROUP BY src, event_type)
-SELECT src, dst, n, ROUND(1.0 * n / SUM(n) OVER (PARTITION BY src), 6) AS p
-FROM trans ORDER BY src, dst""",
-        "dd_substring_spans": r"""
-WITH base AS (SELECT doc_id AS id,
-                     list_filter(regexp_split_to_array(trim(text), '\s+'), t -> length(t) > 0) AS toks
-              FROM documents),
-b2 AS (SELECT id, toks FROM base WHERE len(toks) >= 15),
-g AS (SELECT id, CAST(p AS BIGINT) AS pos,
-             array_to_string(toks[CAST(p + 1 AS INT) : CAST(p + 15 AS INT)], ' ') AS gram
-      FROM b2, LATERAL (SELECT unnest(range(len(toks) - 15 + 1)) AS p) r),
-viral AS (SELECT gram FROM (SELECT gram, COUNT(DISTINCT id) AS d FROM g GROUP BY gram) WHERE d >= 2),
-dp AS (SELECT g.id, g.pos FROM g SEMI JOIN viral v ON g.gram = v.gram),
-brk AS (SELECT id, pos,
-               CASE WHEN pos - COALESCE(LAG(pos) OVER (PARTITION BY id ORDER BY pos), 0) > 15
-                    THEN 1 ELSE 0 END AS b
-        FROM dp),
-isl AS (SELECT id, pos, SUM(b) OVER (PARTITION BY id ORDER BY pos) AS island FROM brk)
-SELECT id, MIN(pos) AS span_start, MAX(pos) + 15 AS span_end,
-       MAX(pos) + 15 - MIN(pos) AS n_dup_tokens
-FROM isl GROUP BY id, island ORDER BY id, span_start""",
-        "dd_containment": r"""
-WITH raw AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 2000000,
-         array_to_string(toks[1 : greatest(CAST(floor(len(toks) * 0.4) AS INT), 2)], ' ')
-  FROM (SELECT doc_id,
-               list_filter(regexp_split_to_array(trim(text), '\s+'), t -> length(t) > 0) AS toks
-        FROM documents WHERE doc_id < 25)
-),
-t AS (
-  SELECT doc_id AS id,
-         list_distinct(
-           list_transform(
-             range(1, greatest(length(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) - 0, 1)),
-             i -> array_to_string(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')[i:i+1], ' '))) AS sh
-  FROM raw WHERE length(trim(text)) > 0),
-t2 AS (SELECT id, sh, length(sh) AS n FROM t WHERE length(sh) > 0),
-p AS (
-  SELECT l.id AS a_id, r.id AS b_id,
-         ROUND(CAST(length(list_intersect(l.sh, r.sh)) AS DOUBLE) / l.n, 6) AS containment
-  FROM t2 l JOIN t2 r ON l.id <> r.id AND r.n >= ceil(l.n * 0.9))
-SELECT a_id, b_id, containment FROM p WHERE containment >= 0.9 ORDER BY a_id, b_id""",
-        "txt_source_curation": f"""
-WITH docs_dup AS (
-  SELECT * FROM documents
-  UNION ALL
-  SELECT * REPLACE (doc_id + 1000000 AS doc_id) FROM documents WHERE doc_id < 50
-),
-f AS (
-  SELECT source, lang,
-         length(regexp_extract_all(text, '\\S+')) AS n_tokens,
-         {quality} AS q,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-  FROM docs_dup),
-fc AS (SELECT fp, COUNT(*) AS fp_n FROM f GROUP BY fp),
-s AS (
-  SELECT source,
-         CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-         ROUND(CAST(ROUND(SUM(CAST(q AS DECIMAL(18,6))), 6) AS DOUBLE) / COUNT(*), 6) AS mean_quality,
-         ROUND(CAST(COUNT(*) FILTER (fp_n > 1) AS DOUBLE) / COUNT(*), 6) AS dup_rate,
-         ROUND(CAST(COUNT(*) FILTER (lang = 'en') AS DOUBLE) / COUNT(*), 6) AS lang_rate
-  FROM f JOIN fc ON f.fp = fc.fp GROUP BY source)
-SELECT source, n_docs, total_tokens, mean_quality, dup_rate, lang_rate,
-       CAST(CASE WHEN mean_quality >= 0.0 AND dup_rate <= 0.2 AND lang_rate >= 0.4
-                 THEN 1 ELSE 0 END AS BIGINT) AS kept
-FROM s ORDER BY source""",
         "kg_ktruss": _ktruss_sql(12, 3),
-        # content-defined chunking: boundary where the md5-prefix hash
-        # of the 3-token trailing gram is 0 mod 8 (positions gram..n-1;
-        # n always closes the final chunk); list slices are 1-based
-        # inclusive on both engines.
-        "dd_cdc_chunks": f"""
-WITH base AS (SELECT doc_id AS id,
-        list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> length(t) > 0) AS toks
-      FROM documents),
-b2 AS (SELECT id, toks, len(toks) AS n FROM base WHERE len(toks) > 0),
-b3 AS (SELECT id, toks,
-        list_concat(
-          list_filter(range(3, greatest(n, 3)),
-                      i -> ({_nib32_expr("md5('cdc|' || array_to_string(toks[i - 2 : i], ' '))")}) % 8 = 0),
-          [n]) AS b
-      FROM b2),
-ex AS (SELECT id, toks, b, CAST(k AS INT) AS j
-       FROM b3, LATERAL (SELECT unnest(range(1, len(b) + 1)) AS k) r),
-ch AS (SELECT id, CAST(j - 1 AS INT) AS chunk_idx,
-        array_to_string(toks[(CASE WHEN j = 1 THEN 1 ELSE b[j - 1] + 1 END):(b[j])], ' ') AS chunk_text,
-        CAST(b[j] - (CASE WHEN j = 1 THEN 0 ELSE b[j - 1] END) AS BIGINT) AS n_tokens
-       FROM ex)
-SELECT id, chunk_idx, chunk_text, md5(chunk_text) AS chunk_hash, n_tokens
-FROM ch ORDER BY id, chunk_idx""",
-        # DSIR: hashed unigram+bigram buckets (portable md5-prefix
-        # hash % 256), Laplace-1 smoothed target/raw unigram models,
-        # per-doc sum of c_b * log-ratio rounded at 6 (the
-        # unigram-logprob cross-engine recipe).
-        "txt_dsir_weights": f"""
-WITH {_DSIR_CTES.format(nib=_nib32_expr("md5(f)"))}
-SELECT doc_id, n_feats, logw FROM dsw ORDER BY doc_id""",
-        # DSIR Gumbel-top-k resampling: the same dsw chain, plus the
-        # deterministic hash-uniform Gumbel key (mid-bucket +0.5 keeps
-        # u in (0,1)); ordering on the full double, rounded for output
-        "dd_dsir_resample": f"""
-WITH {_DSIR_CTES.format(nib=_nib32_expr("md5(f)"))},
-keyed AS (SELECT doc_id, logw,
-        logw + (-ln(-ln((({_nib32_expr("md5('dsir|' || CAST(doc_id AS VARCHAR))")}) + 0.5) / 4294967296.0))) AS gk
-      FROM dsw)
-SELECT doc_id, logw, ROUND(gk, 6) AS gumbel_key
-FROM keyed ORDER BY gk DESC, doc_id LIMIT 100""",
         # harmonic centrality: forward BFS of the betweenness CTEs
         # (shared generator, forward_only) -> SUM(1/d) over sources.
         "kg_harmonic": f"""WITH {PAIRS_CTE},
@@ -8972,38 +3841,6 @@ SELECT predicate, subj_id, subj_lemma, obj_id, obj_lemma,
   CAST(COUNT(*) AS BIGINT) AS n_matches
 FROM res WHERE subj_id IS NOT NULL AND obj_id IS NOT NULL
 GROUP BY 1, 2, 3, 4, 5 ORDER BY 1, 2, 3, 4, 5""",
-        "txt_fasttext_quality": f"""
-WITH tokd AS (SELECT doc_id AS id,
-        list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> length(t) > 0) AS toks
-      FROM documents),
-feat AS (SELECT id, unnest(list_concat(toks,
-        list_transform(range(1, len(toks)), i -> toks[i] || '_' || toks[i + 1]))) AS f
-      FROM tokd),
-fb AS (SELECT id, ({_nib32_expr("md5(f)")}) % 4096 AS b FROM feat),
-w AS (SELECT i AS b, ({_nib32_expr("md5('w|' || CAST(i AS VARCHAR))")}) % 2001 - 1000 AS w_milli
-      FROM range(4096) t(i)),
-agg AS (SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-        CAST(SUM(COALESCE(w_milli, 0)) AS BIGINT) AS logit_milli
-        FROM fb LEFT JOIN w USING (b) GROUP BY id)
-SELECT doc_id, n_feats, logit_milli, logit_milli > 0 AS label
-FROM agg ORDER BY doc_id""",
-        "dd_hll_distinct": f"""
-WITH h AS (SELECT source, ({_nib32_expr("md5(text)")}) AS h32 FROM documents),
-reg AS (SELECT source, h32 // 16777216 AS bucket,
-        CASE WHEN h32 % 16777216 = 0 THEN 25
-             ELSE 25 - length(bin(h32 % 16777216)) END AS rho
-        FROM h),
-sk AS (SELECT source, bucket, MAX(rho) AS rho FROM reg GROUP BY source, bucket),
-agg AS (SELECT source, COUNT(*) AS n_present,
-        SUM(1 << (25 - rho)) AS s_present FROM sk GROUP BY source),
-e AS (SELECT source, 256 - n_present AS v_zero,
-        {0.7213 / (1 + 1.079 / 256) * 256 * 256 * (1 << 25)!r}
-          / (s_present + (256 - n_present) * 33554432) AS e_raw
-      FROM agg)
-SELECT source,
-  ROUND(CASE WHEN e_raw <= 640.0 AND v_zero > 0
-        THEN 256.0 * ln(256 / v_zero) ELSE e_raw END, 6) AS est_distinct
-FROM e ORDER BY source""",
         "kg_wl_labels": f"""WITH {PAIRS_CTE},
 und AS (SELECT DISTINCT a_id AS cid, b_id AS nbr_id FROM pairs UNION SELECT b_id, a_id FROM pairs),
 wl0 AS MATERIALIZED (SELECT cid AS id, CAST(COUNT(*) AS VARCHAR) AS lb FROM und GROUP BY cid)"""
@@ -9026,25 +3863,6 @@ SELECT id AS concept_id, lb AS wl_label FROM wl3 ORDER BY concept_id""",
         "kg_vertex_cover": f"""WITH {PAIRS_CTE},{_matching_sql(8, final="SELECT id FROM (SELECT a_id AS id FROM mmat_8 UNION SELECT b_id FROM mmat_8) ORDER BY id")}""",
         "kg_label_spreading": f"""WITH {PAIRS_CTE},
 {_label_spreading_sql(5)}""",
-        # LSH health: all-integer bucket aggregates over the shared
-        # SRP band relation
-        "dd_lsh_stats": f"""WITH {_srp_base},
-pb AS (SELECT band, bucket, CAST(COUNT(*) AS BIGINT) AS sz FROM bands GROUP BY band, bucket)
-SELECT CAST(band AS BIGINT) AS band, CAST(COUNT(*) AS BIGINT) AS n_buckets,
-       CAST(SUM(sz) AS BIGINT) AS n_vectors, CAST(MAX(sz) AS BIGINT) AS max_bucket,
-       CAST(SUM(sz * (sz - 1) // 2) AS BIGINT) AS candidate_pairs
-FROM pb GROUP BY band ORDER BY band""",
-        "txt_zipf_fit": r"""
-WITH tok AS (SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> length(t) > 0)) AS term FROM documents),
-vocab AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS cnt FROM tok GROUP BY term),
-topk AS (SELECT cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, term) AS rnk FROM vocab QUALIFY rnk <= 100),
-xy AS (SELECT ln(CAST(rnk AS DOUBLE)) AS x, ln(CAST(cnt AS DOUBLE)) AS y FROM topk),
-ag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(x) AS sx, SUM(y) AS sy,
-              SUM(x * y) AS sxy, SUM(x * x) AS sxx FROM xy)
-SELECT n AS n_terms,
-       ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope,
-       ROUND((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n, 6) AS intercept
-FROM ag""",
         # transitive reduction: min alternative chain = first hop +
         # min closure depth (c3 = depths 1..3 -> chains 2..4)
         "kg_taxonomy_reduction": f"""WITH {TRIPLES_CTE},
@@ -9066,17 +3884,6 @@ cag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(MAX(d) AS BIGINT) AS mx,
 SELECT n AS n_nodes, mx AS max_degree,
        ROUND(CAST(n * mx - sd AS DOUBLE) / ((n - 1) * (n - 2)), 6) AS centralization
 FROM cag""",
-        "rel_attribution": """
-WITH w AS (
-  SELECT event_type,
-    COALESCE(first_value(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS)
-      OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 'none') AS first_touch,
-    COALESCE(last_value(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS)
-      OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 'none') AS last_touch
-  FROM events)
-SELECT first_touch, last_touch, CAST(COUNT(*) AS BIGINT) AS conversions
-FROM w WHERE event_type = 'purchase'
-GROUP BY first_touch, last_touch ORDER BY first_touch, last_touch""",
         "kg_reciprocity": f"""WITH {TRIPLES_CTE},
 re AS MATERIALIZED (SELECT DISTINCT subj_id AS src, obj_id AS dst FROM triples WHERE subj_id <> obj_id),
 rr AS (SELECT CAST(COUNT(*) AS BIGINT) AS r FROM re a
@@ -9085,57 +3892,6 @@ nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM re)
 SELECT nn.n AS n_edges, rr.r AS n_reciprocal,
        ROUND(CAST(rr.r AS DOUBLE) / nn.n, 6) AS reciprocity
 FROM nn CROSS JOIN rr""",
-        # ANN recall eval: one shared scored relation (left-fold dots,
-        # bit-identical) ranked twice — full corpus (exact) vs bucket-mates
-        "sim_recall_at_k": f"""WITH {_srp_base},
-qs AS MATERIALIZED (SELECT id, v FROM (
-    SELECT id, v, ROW_NUMBER() OVER (ORDER BY md5(CAST(id AS VARCHAR))) AS rn FROM base) WHERE rn <= 10),
-sc AS MATERIALIZED (SELECT b.id, q.id AS qid,
-    list_sum(list_transform(list_zip(b.v, q.v), z -> z[1]*z[2]))
-    / (sqrt(list_sum(list_transform(b.v, x -> x*x))) * sqrt(list_sum(list_transform(q.v, x -> x*x)))) AS c
-    FROM base b CROSS JOIN qs q),
-ex AS (SELECT qid, id FROM (
-    SELECT qid, id, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY c DESC, id) AS rn FROM sc) WHERE rn <= 10),
-qb AS (SELECT id AS qid, band, bucket FROM bands WHERE id IN (SELECT id FROM qs)),
-cnd AS MATERIALIZED (SELECT DISTINCT b.id, q.qid FROM bands b JOIN qb q ON b.band = q.band AND b.bucket = q.bucket),
-annx AS (SELECT qid, id FROM (
-    SELECT s.qid, s.id, ROW_NUMBER() OVER (PARTITION BY s.qid ORDER BY s.c DESC, s.id) AS rn
-    FROM sc s JOIN cnd c ON s.id = c.id AND s.qid = c.qid) WHERE rn <= 10),
-nc AS (SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_candidates FROM cnd GROUP BY qid),
-ht AS (SELECT e.qid, CAST(COUNT(*) AS BIGINT) AS hits FROM ex e JOIN annx a ON e.qid = a.qid AND e.id = a.id GROUP BY e.qid)
-SELECT q.id AS qid, COALESCE(nc.n_candidates, 0) AS n_candidates,
-       COALESCE(ht.hits, 0) AS hits, ROUND(COALESCE(ht.hits, 0) / 10.0, 6) AS recall
-FROM qs q LEFT JOIN nc ON q.id = nc.qid LEFT JOIN ht ON q.id = ht.qid ORDER BY qid""",
-        # RAKE: island grouping via running stopword count; word
-        # scores DECIMAL(18,6) so phrase sums are exact
-        "txt_rake_keywords": f"""
-WITH rsplit AS (SELECT CAST(doc_id AS VARCHAR) AS id,
-                       string_split_regex(lower(text), '[^a-z0-9]+') AS ts
-                FROM documents),
-rtok AS (SELECT id, r.i AS pos, ts[r.i] AS tok
-         FROM rsplit, LATERAL (SELECT unnest(range(1, len(ts) + 1)) AS i) r
-         WHERE ts[r.i] <> ''),
-rflag AS (SELECT id, pos, tok,
-                 CASE WHEN tok IN ({_rake_stops_sql()}) THEN 1 ELSE 0 END AS st
-          FROM rtok),
-rgrp AS (SELECT id, pos, tok, st,
-                SUM(st) OVER (PARTITION BY id ORDER BY pos
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-         FROM rflag),
-rphr AS MATERIALIZED (SELECT id, grp, list(tok ORDER BY pos) AS words
-         FROM rgrp WHERE st = 0 GROUP BY id, grp HAVING COUNT(*) <= 4),
-rocc AS (SELECT u.word, len(p.words) AS plen
-         FROM rphr p, LATERAL (SELECT unnest(p.words) AS word) u),
-rws AS (SELECT word,
-               CAST(ROUND(CAST(SUM(plen) AS DOUBLE) / COUNT(*), 6) AS DECIMAL(18,6)) AS wscore
-        FROM rocc GROUP BY word),
-rps AS (SELECT p.id, p.grp, array_to_string(p.words, ' ') AS phrase, SUM(w.wscore) AS score
-        FROM rphr p, LATERAL (SELECT unnest(p.words) AS word) u
-        JOIN rws w ON w.word = u.word
-        GROUP BY p.id, p.grp, phrase)
-SELECT phrase, CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-       CAST(MAX(score) AS DOUBLE) AS score
-FROM rps GROUP BY phrase ORDER BY score DESC, phrase LIMIT 50""",
         # confidence calibration: assertions vs distinct triples per
         # (predicate, confidence) level
         "kg_confidence_calibration": f"""WITH {TRIPLES_CTE}
@@ -9143,63 +3899,6 @@ SELECT predicate, confidence, CAST(COUNT(*) AS BIGINT) AS n_assertions,
        CAST(COUNT(DISTINCT (subj_id, obj_id)) AS BIGINT) AS n_triples,
        ROUND(CAST(COUNT(*) AS DOUBLE) / COUNT(DISTINCT (subj_id, obj_id)), 6) AS assertions_per_triple
 FROM triples GROUP BY predicate, confidence ORDER BY predicate, confidence""",
-        # sketch accuracy panel: exact vs HLL vs KMV per source (KMV
-        # exact below k by construction — the |kmv| < k branch)
-        "dd_sketch_accuracy": f"""
-WITH sax AS (SELECT source, CAST(COUNT(DISTINCT text) AS BIGINT) AS exact_distinct
-             FROM documents GROUP BY source),
-sah AS (SELECT source, ({_nib32_expr("md5(text)")}) AS h32 FROM documents),
-sareg AS (SELECT source, h32 // 16777216 AS bucket,
-          CASE WHEN h32 % 16777216 = 0 THEN 25
-               ELSE 25 - length(bin(h32 % 16777216)) END AS rho
-          FROM sah),
-sask AS (SELECT source, bucket, MAX(rho) AS rho FROM sareg GROUP BY source, bucket),
-saagg AS (SELECT source, COUNT(*) AS n_present,
-          SUM(1 << (25 - rho)) AS s_present FROM sask GROUP BY source),
-sae AS (SELECT source, 256 - n_present AS v_zero,
-        {0.7213 / (1 + 1.079 / 256) * 256 * 256 * (1 << 25)!r}
-          / (s_present + (256 - n_present) * 33554432) AS e_raw
-        FROM saagg),
-sahll AS (SELECT source,
-          ROUND(CASE WHEN e_raw <= 640.0 AND v_zero > 0
-                THEN 256.0 * ln(256 / v_zero) ELSE e_raw END, 6) AS hll_est
-          FROM sae)
-SELECT x.source, x.exact_distinct, h.hll_est,
-       ROUND(ABS(h.hll_est - x.exact_distinct) / x.exact_distinct, 6) AS hll_rel_err,
-       ROUND(CAST(x.exact_distinct AS DOUBLE), 3) AS kmv_est,
-       0.0 AS kmv_rel_err
-FROM sax x JOIN sahll h ON x.source = h.source
-ORDER BY x.source""",
-        # bloom FP calibration: same bit pattern as dd_bloom_membership,
-        # 2000 absent probes, theory from the same literals
-        "dd_bloom_fp_rate": f"""
-WITH allkeys AS MATERIALIZED (
-  SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS key
-  FROM documents),
-nk AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM allkeys),
-pos AS MATERIALIZED (
-  {" UNION ALL ".join(f'''SELECT ({_nib32_expr(f"md5('{i}:' || key)")}) % 8192 AS p FROM allkeys''' for i in range(4))}),
-flt AS MATERIALIZED (
-  SELECT p // 32 AS word,
-         bit_or(CAST(1 AS BIGINT) << CAST(p % 32 AS INT)) AS bits
-  FROM pos GROUP BY 1),
-fprobes AS MATERIALIZED (
-  SELECT 'absent|' || CAST(i AS VARCHAR) AS key FROM range(0, 2000) t(i)),
-fpp AS MATERIALIZED (
-  {" UNION ALL ".join(f'''SELECT key, ({_nib32_expr(f"md5('{i}:' || key)")}) % 8192 AS p FROM fprobes''' for i in range(4))}),
-fhits AS (
-  SELECT fpp.key,
-         CASE WHEN f.bits IS NOT NULL
-               AND (f.bits & (CAST(1 AS BIGINT) << CAST(fpp.p % 32 AS INT))) <> 0
-              THEN 1 ELSE 0 END AS hit
-  FROM fpp LEFT JOIN flt f ON fpp.p // 32 = f.word),
-fmp AS (SELECT key, MIN(hit) AS maybe_present FROM fhits GROUP BY key)
-SELECT nk.n AS n_inserted, CAST(8192 AS BIGINT) AS m_bits, CAST(4 AS INT) AS k,
-       CAST(COUNT(*) AS BIGINT) AS n_probes,
-       CAST(SUM(maybe_present) AS BIGINT) AS n_false_pos,
-       ROUND(CAST(SUM(maybe_present) AS DOUBLE) / COUNT(*), 6) AS fp_rate,
-       ROUND(POW(1.0 - EXP((-4.0 * nk.n) / 8192.0), 4.0), 6) AS fp_theory
-FROM fmp, nk GROUP BY nk.n""",
         # landmark distance oracle: one unrolled multi-source BFS over
         # landmarks+samples; est = min_l d(a,l)+d(l,b)
         "kg_landmark_distances": f"""WITH {PAIRS_CTE},
@@ -9253,49 +3952,6 @@ SELECT w.rel1, w.rel2, c.predicate AS rel3,
 FROM ttw w JOIN tte c ON c.subj_id = w.x AND c.obj_id = w.y
 GROUP BY w.rel1, w.rel2, c.predicate
 ORDER BY w.rel1, w.rel2, rel3""",
-        # SCD2: change flag -> running island -> interval agg -> LEAD
-        "rel_scd2_history": """
-WITH sbase AS (SELECT user_id AS usr, ts, event_id AS oid,
-                      CAST(json_extract_string(props, '$.k') AS INT) // 25 AS attr_value
-               FROM events),
-sflag AS (SELECT usr, ts, oid, attr_value,
-                 CASE WHEN LAG(attr_value) OVER w IS NULL
-                        OR attr_value <> LAG(attr_value) OVER w THEN 1 ELSE 0 END AS chg
-          FROM sbase WINDOW w AS (PARTITION BY usr ORDER BY ts, oid)),
-sisl AS (SELECT usr, ts, attr_value,
-                SUM(chg) OVER (PARTITION BY usr ORDER BY ts, oid
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-         FROM sflag),
-sint AS (SELECT usr, island, MIN(attr_value) AS attr_value, MIN(ts) AS valid_from,
-                CAST(COUNT(*) AS BIGINT) AS n_events
-         FROM sisl GROUP BY usr, island)
-SELECT usr AS user, attr_value, valid_from,
-       LEAD(valid_from) OVER (PARTITION BY usr ORDER BY valid_from) AS valid_to,
-       n_events,
-       CAST(CASE WHEN LEAD(valid_from) OVER (PARTITION BY usr ORDER BY valid_from) IS NULL
-                 THEN 1 ELSE 0 END AS BIGINT) AS is_current
-FROM sint ORDER BY user, valid_from""",
-        # minhash calibration: est (sig agreement / 32) vs exact
-        # Jaccard from the SAME shingle relation, error decile census
-        "dd_minhash_calibration": f"""WITH {_MH_CTES},
-xsh AS (SELECT id, s FROM sh GROUP BY id, s),
-xn AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM xsh GROUP BY id),
-xint AS (SELECT c.a_id, c.b_id, CAST(COUNT(*) AS BIGINT) AS inter
-         FROM cand c JOIN xsh a ON a.id = c.a_id
-         JOIN xsh b ON b.id = c.b_id AND b.s = a.s
-         GROUP BY c.a_id, c.b_id),
-xerr AS (SELECT e.a_id, e.b_id,
-                ROUND(ABS(e.est_jaccard
-                  - ROUND(CAST(COALESCE(i.inter, 0) AS DOUBLE)
-                          / (na.n + nb.n - COALESCE(i.inter, 0)), 6)), 6) AS err
-         FROM est e
-         JOIN xn na ON na.id = e.a_id JOIN xn nb ON nb.id = e.b_id
-         LEFT JOIN xint i ON i.a_id = e.a_id AND i.b_id = e.b_id)
-SELECT CAST(FLOOR(err * 50) AS INT) AS err_bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       ROUND(MAX(err), 6) AS max_err
-FROM xerr GROUP BY err_bucket ORDER BY err_bucket""",
-        "sim_kcenter_radius": _kcenter_radius_sql,
         # alias census: one concept-keyed agg over mentions
         "kg_alias_census": f"""WITH {MENTIONS_CTE}
 SELECT concept_id, MIN(lemma) AS lemma,
@@ -9304,57 +3960,6 @@ SELECT concept_id, MIN(lemma) AS lemma,
        CAST(COUNT(*) AS BIGINT) AS n_mentions,
        CAST(COUNT(DISTINCT chunk_id) AS BIGINT) AS n_chunks
 FROM mentions GROUP BY concept_id ORDER BY concept_id""",
-        # pareto: ranked cumulative + integer cross-multiplied
-        # coverage test, MIN(rank) per threshold
-        "rel_pareto_coverage": """
-WITH pper AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS cnt FROM events GROUP BY user_id),
-ptot AS (SELECT SUM(cnt) AS total, CAST(COUNT(*) AS BIGINT) AS n_users_total FROM pper),
-prank AS (SELECT cnt,
-                 ROW_NUMBER() OVER (ORDER BY cnt DESC, user_id) AS rank,
-                 SUM(cnt) OVER (ORDER BY cnt DESC, user_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          FROM pper),
-phit AS (SELECT t.threshold_pct, CAST(MIN(r.rank) AS BIGINT) AS n_users
-         FROM prank r, (SELECT unnest([50, 80, 90]) AS threshold_pct) t, ptot
-         WHERE r.cum * 100 >= t.threshold_pct * ptot.total
-         GROUP BY t.threshold_pct)
-SELECT h.threshold_pct, h.n_users, CAST(r.cum AS BIGINT) AS events_covered,
-       ROUND(CAST(h.n_users AS DOUBLE) / pt.n_users_total, 6) AS user_frac
-FROM phit h JOIN prank r ON r.rank = h.n_users, ptot pt
-ORDER BY h.threshold_pct""",
-        # code detection: strip-and-subtract counts, integer verdict;
-        # deterministic planted code tail (doc_id < 50) supplies the
-        # positive class on this symbol-free prose corpus
-        "txt_code_detection": r"""
-WITH cdocs AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000,
-         'def fn' || CAST(doc_id AS VARCHAR) ||
-         '(a, b) { if (a != b) { return a[0] == b[1]; }; } let camelCaseVar = fooBar(a); x := y -> z; arr[2] => ok;'
-  FROM documents WHERE doc_id < 50),
-cfx AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-  CAST(length(text) AS BIGINT) AS n_chars,
-  CAST(length(text) - length(regexp_replace(text, '[{}()\[\]]', '', 'g')) AS BIGINT) AS n_braces,
-  CAST(length(text) - length(regexp_replace(text, ';', '', 'g')) AS BIGINT) AS n_semicolons,
-  CAST((length(text) - length(regexp_replace(text, '==|=>|->|::|:=|!=', '', 'g'))) / 2 AS BIGINT) AS n_operators,
-  CAST(len(string_split_regex(text, '[a-z][A-Z]')) - 1 AS BIGINT) AS n_camel
-  FROM cdocs)
-SELECT doc_id, n_chars, n_braces, n_semicolons, n_operators, n_camel,
-  ROUND((n_braces + n_semicolons + n_operators) * 1000.0 / GREATEST(n_chars, 1), 6) AS symbol_per_kchar,
-  CAST(CASE WHEN (n_braces + n_semicolons + n_operators) * 1000 > 15 * n_chars
-            THEN 1 ELSE 0 END AS BIGINT) AS is_codey
-FROM cfx ORDER BY doc_id""",
-        # sequential 3-grams: one per-user ordered list, in-row grams
-        "rel_sequential_patterns": """
-WITH sq AS (SELECT user_id, list(event_type ORDER BY ts, event_id) AS types
-            FROM events GROUP BY user_id),
-sq3 AS (SELECT user_id, types FROM sq WHERE len(types) >= 3),
-gr AS (SELECT user_id, types[r.i] || '>' || types[r.i+1] || '>' || types[r.i+2] AS pattern
-       FROM sq3, LATERAL (SELECT unnest(range(1, len(types) - 1)) AS i) r)
-SELECT pattern, CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-FROM gr GROUP BY pattern ORDER BY n_occurrences DESC, pattern LIMIT 50""",
         # RPQ is_a*/part_of: depth-bounded closure + identity, one
         # equi-join with the final predicate, MIN over converging paths
         "kg_rpq_reachability": f"""WITH {TRIPLES_CTE},
@@ -9412,29 +4017,6 @@ SELECT k_removed, n_nodes, n_edges,
              / n_nodes, 6) AS largest_frac
 FROM (SELECT * FROM ast0 UNION ALL SELECT * FROM ast5 UNION ALL SELECT * FROM ast20)
 ORDER BY k_removed""",
-        # heaps: first-seen MIN(doc) vocabulary curve + OLS on ln-ln
-        "txt_heaps_law": """
-WITH htok AS (SELECT CAST(doc_id AS BIGINT) AS doc, u.term
-              FROM documents, LATERAL (SELECT unnest(list_filter(
-                  string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS term) u),
-hper AS (SELECT doc, CAST(COUNT(*) AS BIGINT) AS n_toks FROM htok GROUP BY doc),
-hfirst AS (SELECT term, MIN(doc) AS doc FROM htok GROUP BY term),
-hnew AS (SELECT doc, CAST(COUNT(*) AS BIGINT) AS n_new FROM hfirst GROUP BY doc),
-hcurve AS (SELECT p.doc,
-                  SUM(p.n_toks) OVER w AS cum_toks,
-                  SUM(COALESCE(n.n_new, 0)) OVER w AS cum_vocab
-           FROM hper p LEFT JOIN hnew n ON p.doc = n.doc
-           WINDOW w AS (ORDER BY p.doc ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-hxy AS (SELECT ln(CAST(cum_toks AS DOUBLE)) AS x, ln(CAST(cum_vocab AS DOUBLE)) AS y,
-               cum_toks, cum_vocab FROM hcurve WHERE cum_toks > 0),
-hagg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(x) AS sx, SUM(y) AS sy,
-                SUM(x*y) AS sxy, SUM(x*x) AS sxx,
-                CAST(MAX(cum_toks) AS BIGINT) AS total_tokens,
-                CAST(MAX(cum_vocab) AS BIGINT) AS vocab_size FROM hxy)
-SELECT n AS n_docs, total_tokens, vocab_size,
-       ROUND((n*sxy - sx*sy)/(n*sxx - sx*sx), 6) AS heaps_beta,
-       ROUND(exp((sy - ((n*sxy - sx*sy)/(n*sxx - sx*sx))*sx)/n), 6) AS heaps_k
-FROM hagg""",
         # simrank: 2 unrolled iterations, ROUND-6 per round, diagonal
         # re-unioned each step; top-50 on the ROUNDED score
         "kg_simrank": f"""WITH {PAIRS_CTE},
@@ -9458,323 +4040,12 @@ srt2 AS (SELECT ua.node AS a, ub.node AS b,
          WHERE ua.node <> ub.node GROUP BY ua.node, ub.node, da.d, db.d)
 SELECT a AS a_id, b AS b_id, CAST(v AS DOUBLE) AS simrank FROM srt2
 WHERE a < b ORDER BY v DESC, a_id, b_id LIMIT 50""",
-        # matryoshka: same shared-scored-relation shape as recall_at_k,
-        # second arm ranks by the dim-16 prefix cosine; zero prefix
-        # norm scores -2 in both engines
-        "sim_matryoshka_recall": """
-WITH mbase AS MATERIALIZED (SELECT CAST(vec_id AS BIGINT) AS id,
-        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-mqs AS MATERIALIZED (SELECT id, v FROM (
-    SELECT id, v, ROW_NUMBER() OVER (ORDER BY md5(CAST(id AS VARCHAR))) AS rn FROM mbase) WHERE rn <= 10),
-msc AS MATERIALIZED (SELECT b.id, q.id AS qid,
-    list_sum(list_transform(list_zip(b.v, q.v), z -> z[1]*z[2]))
-      / (sqrt(list_sum(list_transform(b.v, x -> x*x))) * sqrt(list_sum(list_transform(q.v, x -> x*x)))) AS cf,
-    CASE WHEN list_sum(list_transform(list_slice(b.v, 1, 16), x -> x*x)) = 0
-           OR list_sum(list_transform(list_slice(q.v, 1, 16), x -> x*x)) = 0 THEN -2.0
-         ELSE list_sum(list_transform(list_zip(list_slice(b.v, 1, 16), list_slice(q.v, 1, 16)), z -> z[1]*z[2]))
-           / (sqrt(list_sum(list_transform(list_slice(b.v, 1, 16), x -> x*x)))
-              * sqrt(list_sum(list_transform(list_slice(q.v, 1, 16), x -> x*x)))) END AS ct
-    FROM mbase b CROSS JOIN mqs q),
-mex AS (SELECT qid, id FROM (
-    SELECT qid, id, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cf DESC, id) AS rn FROM msc) WHERE rn <= 10),
-mtr AS (SELECT qid, id FROM (
-    SELECT qid, id, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY ct DESC, id) AS rn FROM msc) WHERE rn <= 10),
-mh AS (SELECT e.qid, CAST(COUNT(*) AS BIGINT) AS hits
-       FROM mex e JOIN mtr t ON e.qid = t.qid AND e.id = t.id GROUP BY e.qid)
-SELECT q.id AS qid, COALESCE(mh.hits, 0) AS hits,
-       ROUND(COALESCE(mh.hits, 0) / 10.0, 6) AS recall
-FROM mqs q LEFT JOIN mh ON q.id = mh.qid ORDER BY qid""",
-        # CUSUM: prefix-sum minus prefix-min closed form; both
-        # running aggregates walk the same (day) order in both engines
-        "rel_cusum_shift": """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM events GROUP BY event_type, CAST(ts AS DATE)),
-st AS (SELECT event_type, CAST(SUM(cnt) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mean
-       FROM daily GROUP BY event_type),
-wp AS (SELECT d.event_type, d.day, d.cnt, s.mean,
-              SUM(d.cnt - s.mean) OVER (PARTITION BY d.event_type ORDER BY d.day
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p
-       FROM daily d JOIN st s ON d.event_type = s.event_type),
-ws AS (SELECT event_type, day, cnt, mean,
-              p - least(0.0, MIN(p) OVER (PARTITION BY event_type ORDER BY day
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS s
-       FROM wp)
-SELECT event_type, day, cnt, ROUND(s, 6) AS cusum,
-       CAST(CASE WHEN s > 3.0 * sqrt(mean) THEN 1 ELSE 0 END AS BIGINT) AS shift
-FROM ws ORDER BY event_type, day""",
-        # temperature mixture: sqrt is IEEE-correctly-rounded and the
-        # denominator accumulates as DECIMAL -> engine-exact rates
-        "txt_temperature_mixture": f"""
-WITH cnt AS MATERIALIZED (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_group,
-         CAST(ROUND(sqrt(CAST(COUNT(*) AS DOUBLE)), 6) AS DECIMAL(18,6)) AS s
-  FROM documents GROUP BY source),
-tot AS (SELECT CAST(SUM(s) AS DECIMAL(38,6)) AS den,
-               CAST(SUM(n_group) AS DOUBLE) AS total FROM cnt),
-rates AS (
-  SELECT source, n_group,
-         least(1.0, 0.5 * t.total * (CAST(s AS DOUBLE) / CAST(t.den AS DOUBLE))
-                        / CAST(n_group AS DOUBLE)) AS rate
-  FROM cnt CROSS JOIN tot t)
-SELECT d.doc_id AS id, d.source AS "group", r.n_group,
-       ROUND(r.rate, 6) AS rate,
-       CAST(CASE WHEN (({_nib32_expr("md5('7|' || CAST(d.doc_id AS VARCHAR))")}) + 0.5)
-                      / 4294967296.0 < r.rate
-                 THEN 1 ELSE 0 END AS BIGINT) AS kept
-FROM documents d JOIN rates r ON d.source = r.source
-ORDER BY id""",
-        # Bloom membership: same md5-prefix hash family as the CMS,
-        # 256x32-bit words built with bit_or, probed with min-of-hits
-        "dd_bloom_membership": f"""
-WITH allkeys AS MATERIALIZED (
-  SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS key
-  FROM documents),
-pos AS MATERIALIZED (
-  {" UNION ALL ".join(f'''SELECT ({_nib32_expr(f"md5('{i}:' || key)")}) % 8192 AS p FROM allkeys''' for i in range(4))}),
-flt AS MATERIALIZED (
-  SELECT p // 32 AS word,
-         bit_or(CAST(1 AS BIGINT) << CAST(p % 32 AS INT)) AS bits
-  FROM pos GROUP BY 1),
-probes AS MATERIALIZED (
-  SELECT DISTINCT key FROM (
-    SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS key
-    FROM documents WHERE doc_id < 100
-    UNION ALL
-    SELECT 'novel|' || CAST(i AS VARCHAR) FROM range(0, 50) t(i))),
-pp AS MATERIALIZED (
-  {" UNION ALL ".join(f'''SELECT key, ({_nib32_expr(f"md5('{i}:' || key)")}) % 8192 AS p FROM probes''' for i in range(4))}),
-hits AS (
-  SELECT pp.key,
-         CASE WHEN f.bits IS NOT NULL
-               AND (f.bits & (CAST(1 AS BIGINT) << CAST(pp.p % 32 AS INT))) <> 0
-              THEN 1 ELSE 0 END AS hit
-  FROM pp LEFT JOIN flt f ON pp.p // 32 = f.word)
-SELECT key, CAST(min(hit) AS BIGINT) AS maybe_present
-FROM hits GROUP BY key ORDER BY key""",
         # Borůvka max spanning forest, 8 unrolled rounds (>= log2 of
         # the 131-concept graph; extra rounds no-op at the fixpoint)
         "kg_spanning_forest": _msf_sql(8).format(pairs=PAIRS_CTE),
         # JP coloring of the Borůvka backbone: 10 unrolled rounds
         # (fixpoint <= 8 at both SFs; extras no-op)
         "kg_graph_coloring": _coloring_sql(8, 10).format(pairs=PAIRS_CTE),
-        # C4 cleaning rules over the webified corpus (period every 6
-        # tokens -> sentence lines + residue-injected boilerplate);
-        # line gates then page gates, all list/regex expressions
-        "txt_c4_rules": _WEB_CTE + r"""
-c AS (SELECT doc_id, string_split(text, chr(10)) AS lines, lower(text) AS lc FROM web2),
-k AS (SELECT doc_id, len(lines) AS n_lines,
-        list_filter(lines, l -> len(regexp_extract_all(trim(l), '\S+')) >= 5
-                            AND NOT contains(lower(l), 'javascript')
-                            AND regexp_matches(trim(l), '[.!?"'']$')) AS ka,
-        lc FROM c),
-f AS (SELECT doc_id, n_lines, len(ka) AS kept_lines,
-        array_to_string(ka, chr(10)) AS clean,
-        CASE WHEN regexp_matches(lc, '\bdup\b') THEN 1 ELSE 0 END AS has_bad_word,
-        CASE WHEN contains(lc, 'lorem ipsum') THEN 1 ELSE 0 END AS has_lorem,
-        CASE WHEN contains(lc, '{') THEN 1 ELSE 0 END AS has_brace
-      FROM k),
-g AS (SELECT *, len(regexp_extract_all(clean, '[.!?]')) AS n_sentences,
-        CASE WHEN len(regexp_extract_all(clean, '[.!?]')) >= 3
-              AND has_bad_word = 0 AND has_lorem = 0 AND has_brace = 0
-             THEN 1 ELSE 0 END AS kept
-      FROM f)
-SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines,
-       CAST(kept_lines AS BIGINT) AS kept_lines,
-       CAST(n_sentences AS BIGINT) AS n_sentences,
-       CAST(has_bad_word AS BIGINT) AS has_bad_word,
-       CAST(has_lorem AS BIGINT) AS has_lorem,
-       CAST(has_brace AS BIGINT) AS has_brace,
-       CAST(kept AS BIGINT) AS kept,
-       CASE WHEN kept = 1 THEN clean END AS clean_text
-FROM g ORDER BY doc_id""",
-        # Gopher quality rules on the raw corpus (min_words=20,
-        # min_stop_hits=1 — published constants assume real pages)
-        "txt_gopher_quality": r"""
-WITH w AS (SELECT doc_id, text, regexp_extract_all(text, '\S+') AS ws,
-             string_split(text, chr(10)) AS lines, lower(text) AS lc
-           FROM documents WHERE length(trim(text)) > 0),
-f AS (SELECT doc_id, len(ws) AS n_words,
-        CAST(list_sum(list_transform(ws, x -> length(x))) AS DOUBLE) / len(ws) AS mwl,
-        CAST(len(regexp_extract_all(text, '#')) + len(regexp_extract_all(text, '\.\.\.')) AS DOUBLE) / len(ws) AS symr,
-        CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '^[-*]'))) AS DOUBLE) / len(lines) AS bf,
-        CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '\.\.\.$'))) AS DOUBLE) / len(lines) AS ef,
-        CAST(len(list_filter(ws, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(ws) AS af,
-        (CASE WHEN regexp_matches(lc, '\bthe\b') THEN 1 ELSE 0 END
-         + CASE WHEN regexp_matches(lc, '\bbe\b') THEN 1 ELSE 0 END
-         + CASE WHEN regexp_matches(lc, '\bto\b') THEN 1 ELSE 0 END
-         + CASE WHEN regexp_matches(lc, '\bof\b') THEN 1 ELSE 0 END
-         + CASE WHEN regexp_matches(lc, '\band\b') THEN 1 ELSE 0 END
-         + CASE WHEN regexp_matches(lc, '\bthat\b') THEN 1 ELSE 0 END
-         + CASE WHEN regexp_matches(lc, '\bhave\b') THEN 1 ELSE 0 END
-         + CASE WHEN regexp_matches(lc, '\bwith\b') THEN 1 ELSE 0 END) AS n_stop
-      FROM w)
-SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
-       ROUND(mwl, 6) AS mean_word_len, ROUND(symr, 6) AS symbol_ratio,
-       ROUND(bf, 6) AS bullet_frac, ROUND(ef, 6) AS ellipsis_frac,
-       ROUND(af, 6) AS alpha_frac, CAST(n_stop AS BIGINT) AS n_stop,
-       CAST(CASE WHEN n_words >= 20 AND n_words <= 100000
-                  AND mwl >= 3.0 AND mwl <= 10.0 AND symr <= 0.1
-                  AND bf <= 0.9 AND ef <= 0.3 AND af >= 0.8
-                  AND n_stop >= 1 THEN 1 ELSE 0 END AS BIGINT) AS kept
-FROM f ORDER BY doc_id""",
-        # Flesch / FK over the webified corpus: three regex counts,
-        # per-row IEEE double score expressions
-        "txt_readability": _WEB_CTE + r"""
-r AS (SELECT doc_id,
-        len(regexp_extract_all(text, '\S+')) AS n_words,
-        greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sent,
-        len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_syll
-      FROM web2)
-SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
-       CAST(n_sent AS BIGINT) AS n_sentences,
-       CAST(n_syll AS BIGINT) AS n_syllables,
-       ROUND(206.835 - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sent AS DOUBLE))
-                     - 84.6 * (CAST(n_syll AS DOUBLE) / CAST(n_words AS DOUBLE)), 6) AS flesch,
-       ROUND(0.39 * (CAST(n_words AS DOUBLE) / CAST(n_sent AS DOUBLE))
-             + 11.8 * (CAST(n_syll AS DOUBLE) / CAST(n_words AS DOUBLE)) - 15.59, 6) AS fk_grade
-FROM r WHERE n_words > 0 ORDER BY doc_id""",
-        "txt_bpe_merges": _bpe_oracle(5),
-        "txt_bpe_encode": _bpe_encode_oracle(5),
-        # exact-substring (ExactSubstr, Lee et al. 2022) at 8-token
-        # granularity: duplicated 8-gram hashes -> per-doc
-        # gaps-and-islands merge into maximal spans -> text re-slice
-        "dd_repeated_spans": r"""
-WITH base AS (SELECT doc_id AS id,
-       list_filter(regexp_split_to_array(trim(text), '\s+'), t -> length(t) > 0) AS toks
-     FROM documents),
-b2 AS MATERIALIZED (SELECT id, toks, len(toks) AS n FROM base WHERE len(toks) >= 8),
-sh AS MATERIALIZED (
-  SELECT id, CAST(p AS INT) AS pos, md5(array_to_string(toks[p+1 : p+8], ' ')) AS h
-  FROM b2, LATERAL (SELECT unnest(range(n - 7)) AS p) r),
-dup AS (SELECT h FROM sh GROUP BY h HAVING COUNT(*) >= 2),
-flag AS (SELECT s.id, s.pos FROM sh s JOIN dup d ON s.h = d.h),
-isl AS (SELECT id, pos, pos - ROW_NUMBER() OVER (PARTITION BY id ORDER BY pos) AS grp FROM flag),
-sp AS (SELECT id, MIN(pos) AS span_start, MAX(pos) + 8 AS span_end FROM isl GROUP BY id, grp)
-SELECT sp.id AS doc_id,
-       CAST(span_start AS INT) AS span_start,
-       CAST(span_end AS INT) AS span_end,
-       CAST(span_end - span_start AS BIGINT) AS span_tokens,
-       array_to_string(b2.toks[span_start+1 : span_end], ' ') AS span_text
-FROM sp JOIN b2 ON sp.id = b2.id
-ORDER BY doc_id, span_start""",
-        # novelty: same k-gram generator as dd_repeated_spans; "seen"
-        # = gram's min doc_id is lower than this doc's
-        "dd_ngram_novelty": r"""
-WITH d AS (SELECT doc_id, text FROM documents
-           UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 50),
-base AS (SELECT doc_id AS id,
-       list_filter(regexp_split_to_array(trim(text), '\s+'), t -> length(t) > 0) AS toks
-     FROM d),
-b2 AS MATERIALIZED (SELECT id, toks, len(toks) AS n FROM base WHERE len(toks) >= 8),
-gr AS MATERIALIZED (
-  SELECT id, md5(array_to_string(toks[p+1 : p+8], ' ')) AS h
-  FROM b2, LATERAL (SELECT unnest(range(n - 7)) AS p) r),
-fst AS (SELECT h, MIN(id) AS first_id FROM gr GROUP BY h)
-SELECT g.id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-       ROUND(SUM(CASE WHEN f.first_id < g.id THEN 1 ELSE 0 END) / CAST(COUNT(*) AS DOUBLE), 6) AS dup_frac,
-       ROUND(1.0 - SUM(CASE WHEN f.first_id < g.id THEN 1 ELSE 0 END) / CAST(COUNT(*) AS DOUBLE), 6) AS novel_frac
-FROM gr g JOIN fst f ON g.h = f.h GROUP BY g.id ORDER BY doc_id""",
-        # soft dedup: the dd_dup_clusters reachability closure, then
-        # 1/size weights left-joined onto the full corpus view
-        "dd_soft_dedup": f"""WITH RECURSIVE {_MH_CTES},
-mp AS (SELECT a_id, b_id FROM est WHERE est_jaccard >= 0.5),
-sym AS (SELECT a_id AS id, b_id AS nbr FROM mp UNION SELECT b_id, a_id FROM mp),
-dnodes AS (SELECT DISTINCT id FROM sym),
-reach(id, r) AS (
-    SELECT id, id FROM dnodes
-  UNION
-    SELECT rc.id, s.nbr FROM reach rc JOIN sym s ON rc.r = s.id
-),
-comp AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
-szs AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size FROM comp GROUP BY cluster_id)
-SELECT d.doc_id, CAST(COALESCE(s.cluster_size, 1) AS BIGINT) AS cluster_size,
-       ROUND(1.0 / COALESCE(s.cluster_size, 1), 6) AS weight
-FROM d LEFT JOIN comp c ON d.doc_id = c.id LEFT JOIN szs s ON c.cluster_id = s.cluster_id
-ORDER BY d.doc_id""",
-        # decayed counters: exact-microsecond ages, horizon scalar from
-        # a 1-row MAX; (-a)/b == -(a/b) exactly in IEEE so the division
-        # chain matches Spark's -age/tau
-        "rel_decayed_counts": """
-WITH tm AS (SELECT MAX(epoch_us(ts)) AS t FROM events)
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-       ROUND(SUM(exp((-(CAST(tm.t - epoch_us(ts) AS DOUBLE) / 1000000.0)) / 86400.0)), 6) AS decayed_count,
-       ROUND(SUM(exp((-(CAST(tm.t - epoch_us(ts) AS DOUBLE) / 1000000.0)) / 86400.0) * value), 6) AS decayed_value
-FROM events CROSS JOIN tm GROUP BY event_type ORDER BY event_type""",
-        "sim_kmeans": f"""WITH {_KMEANS_CTES}
-SELECT CAST(id AS BIGINT) AS vec_id, cluster, ROUND(d, 6) AS dist2
-FROM ka2 ORDER BY vec_id""",
-        # sim_cluster_purity: the same k-means chain joined to the
-        # ground-truth label column; majority tie-break = MIN(label)
-        "sim_cluster_purity": f"""WITH {_KMEANS_CTES},
-lab AS (SELECT ka2.cluster, e.label, COUNT(*) AS cnt
-        FROM ka2 JOIN embeddings e ON e.vec_id = ka2.id
-        GROUP BY ka2.cluster, e.label),
-mx AS (SELECT cluster, MAX(cnt) AS majority_n, SUM(cnt) AS n
-       FROM lab GROUP BY cluster)
-SELECT m.cluster, CAST(m.n AS BIGINT) AS n,
-       CAST(MIN(l.label) AS INT) AS majority_label,
-       CAST(m.majority_n AS BIGINT) AS majority_n,
-       ROUND(CAST(m.majority_n AS DOUBLE) / CAST(m.n AS DOUBLE), 6) AS purity
-FROM mx m JOIN lab l ON l.cluster = m.cluster AND l.cnt = m.majority_n
-GROUP BY m.cluster, m.n, m.majority_n ORDER BY m.cluster""",
-        # sim_silhouette: own/runner = order statistics 1/2 of the
-        # per-point (d, cluster) sort over the fitted centroids —
-        # exactly _kmeans_argmin's tie rule; b >= a so max(a,b) = b
-        "sim_silhouette": f"""WITH {_KMEANS_CTES},
-sdist AS (SELECT b.id, c.cluster,
-                 list_sum(list_transform(list_zip(b.v, c.c), z -> (z[1]-z[2])*(z[1]-z[2]))) AS d
-          FROM kb b CROSS JOIN kc2 c),
-sranked AS (SELECT id, cluster, d,
-                   ROW_NUMBER() OVER (PARTITION BY id ORDER BY d, cluster) AS rn
-            FROM sdist),
-own AS (SELECT id, cluster, sqrt(d) AS sa FROM sranked WHERE rn = 1),
-runner AS (SELECT id, sqrt(d) AS sb FROM sranked WHERE rn = 2),
-per AS (SELECT o.cluster,
-               CASE WHEN r.sb > 0 THEN (r.sb - o.sa) / r.sb ELSE 0.0 END AS s
-        FROM own o JOIN runner r USING (id))
-SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_points, ROUND(AVG(s), 6) AS silhouette
-FROM per GROUP BY cluster ORDER BY cluster""",
-        # sim_davies_bouldin: scatter ROUNDed before the ratio (the
-        # kmeans determinism contract); M = 0 rivals excluded
-        "sim_davies_bouldin": f"""WITH {_KMEANS_CTES},
-scat AS (SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_points,
-                ROUND(AVG(sqrt(d)), 6) AS s
-         FROM ka2 GROUP BY cluster),
-msep AS (SELECT a.cluster AS i, b.cluster AS j,
-                sqrt(list_sum(list_transform(list_zip(a.c, b.c), z -> (z[1]-z[2])*(z[1]-z[2])))) AS m
-         FROM kc2 a JOIN kc2 b ON a.cluster <> b.cluster)
-SELECT si.cluster, si.n_points, si.s AS scatter,
-       ROUND(MAX((si.s + sj.s) / ms.m), 6) AS r_db
-FROM msep ms JOIN scat si ON ms.i = si.cluster JOIN scat sj ON ms.j = sj.cluster
-WHERE ms.m > 0
-GROUP BY si.cluster, si.n_points, si.s
-ORDER BY si.cluster""",
-        "dd_cluster_balanced": f"""WITH {_KMEANS_CTES},
-kcnt AS (SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_cluster FROM ka2 GROUP BY cluster)
-SELECT CAST(a.id AS BIGINT) AS vec_id, a.cluster, c.n_cluster,
-       CAST(CASE WHEN ({_nib32_expr("md5(a.id)")}) * c.n_cluster < 30 * 4294967296 THEN 1 ELSE 0 END AS BIGINT) AS kept
-FROM ka2 a JOIN kcnt c USING (cluster) ORDER BY vec_id""",
-        # bigram LM: <s>-opened bigrams via 1-indexed position range;
-        # add-1 smoothing keeps every count integer until the final ln
-        "txt_bigram_logprob": r"""
-WITH src AS (SELECT CAST(doc_id AS VARCHAR) AS chunk_id, text FROM documents),
-t AS (SELECT chunk_id,
-             list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> length(t) > 0) AS toks
-      FROM src),
-t2 AS MATERIALIZED (SELECT chunk_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 1),
-big AS MATERIALIZED (
-  SELECT chunk_id, CASE WHEN i = 1 THEN '<s>' ELSE toks[i - 1] END AS w1, toks[i] AS w2
-  FROM t2, LATERAL (SELECT unnest(range(1, n + 1)) AS i) r),
-bc AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12 FROM big GROUP BY w1, w2),
-cc AS (SELECT w1, CAST(COUNT(*) AS BIGINT) AS c1 FROM big GROUP BY w1),
-vv AS (SELECT CAST(COUNT(DISTINCT w2) AS DOUBLE) AS v FROM big),
-lp AS (SELECT b.w1, b.w2, ln((b.c12 + 1.0) / (c.c1 + vv.v)) AS logp
-       FROM bc b JOIN cc c ON b.w1 = c.w1 CROSS JOIN vv),
-s AS (SELECT g.chunk_id, CAST(COUNT(*) AS BIGINT) AS n_tokens, AVG(l.logp) AS alp
-      FROM big g JOIN lp l ON g.w1 = l.w1 AND g.w2 = l.w2 GROUP BY g.chunk_id)
-SELECT chunk_id, n_tokens, ROUND(alp, 6) AS avg_logprob, ROUND(exp(-alp), 6) AS ppl
-FROM s ORDER BY avg_logprob, chunk_id""",
         # assortativity: every aggregate an exact integer (or exact
         # multiple of 0.5) in double until the one final division —
         # bit-identical across engines regardless of sum order
@@ -9803,49 +4074,6 @@ und AS (SELECT DISTINCT a_id AS cid, b_id AS nbr_id FROM pairs UNION SELECT b_id
 {_densest_ctes(0.1, 8)}
 SELECT nd.cid AS concept_id, b.density FROM nd JOIN best b ON nd.rnd = b.rnd
 ORDER BY concept_id""",
-        "rel_quantile_sketch": """
-WITH h AS (SELECT event_type, value, md5(CAST(event_id AS VARCHAR)) AS hh FROM events),
-r AS (SELECT event_type, value,
-        ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hh) AS rn FROM h),
-s AS (SELECT event_type, list_sort(list(value)) AS arr
-      FROM r WHERE rn <= 128 GROUP BY event_type)
-SELECT event_type, CAST(len(arr) AS BIGINT) AS n_sampled,
-  arr[greatest(1, CAST(ceil(0.5 * len(arr)) AS INT))] AS q50,
-  arr[greatest(1, CAST(ceil(0.9 * len(arr)) AS INT))] AS q90,
-  arr[greatest(1, CAST(ceil(0.99 * len(arr)) AS INT))] AS q99
-FROM s ORDER BY event_type""",
-        "dd_url_quality": f"""
-WITH u0 AS (
-  SELECT doc_id,
-    CASE doc_id % 5
-      WHEN 0 THEN 'https://news.example.org/articles/tech/' || CAST(doc_id % 50 AS VARCHAR)
-      WHEN 1 THEN 'https://spam.example.net/p/123456789012345678901234567890123-' || CAST(doc_id % 50 AS VARCHAR)
-      WHEN 2 THEN 'https://shop.example.com/item' || CAST(doc_id % 50 AS VARCHAR) || '?a=1&b=2&c=3&d=4&e=5&f=6&g=7&h=8&i=9&j=10&k=11&l=12'
-      WHEN 3 THEN 'https://best-casino-bonus.example.com/win/' || CAST(doc_id % 50 AS VARCHAR)
-      ELSE 'https://trap.example.com/cal/2020/01/01/x/y/z/w/v/u/t/s/r/' || CAST(doc_id % 50 AS VARCHAR)
-    END AS url
-  FROM documents),
-feat AS (
-  SELECT doc_id, url, lower(url) AS u,
-    ({" + ".join(f"CAST(contains(lower(url), '{t}') AS INT)" for t in weburl.URL_BLOCKLIST_TERMS)}) AS blocklist_hits,
-    length(url) AS url_len,
-    length(url) - length(regexp_replace(lower(url), '[0-9]', '', 'g')) AS n_digits,
-    CASE WHEN strpos(lower(url), '?') > 0 THEN split_part(lower(url), '?', 2) ELSE '' END AS query,
-    regexp_extract(lower(url), '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path
-  FROM u0),
-feat2 AS (
-  SELECT doc_id, url, blocklist_hits, url_len,
-    CASE WHEN url_len > 0 THEN CAST(n_digits AS DOUBLE) / url_len ELSE 0.0 END AS frac_digits,
-    CASE WHEN length(query) > 0 THEN CAST(length(string_split(query, '&')) AS INT) ELSE 0 END AS n_params,
-    CASE WHEN length(path) > 1 THEN length(path) - length(regexp_replace(path, '/', '', 'g')) ELSE 0 END AS path_depth
-  FROM feat),
-scored AS (
-  SELECT *, 3.0 * blocklist_hits + 2.0 * frac_digits + n_params / 10.0 + path_depth / 10.0 + url_len / 200.0 AS pen
-  FROM feat2)
-SELECT doc_id, url, blocklist_hits, ROUND(frac_digits, 6) AS frac_digits,
-       n_params, path_depth, url_len, ROUND(pen, 6) AS url_penalty,
-       pen < 1.0 AS keep
-FROM scored ORDER BY doc_id""",
         # eccentricity lower bounds: the same forward BFS, MAX(d)
         "kg_eccentricity": f"""WITH {PAIRS_CTE},
 {_betweenness_ctes(_PPR_SEED_LEMMAS, 6, forward_only=True)}
@@ -9945,35 +4173,6 @@ tagged AS (
   UNION ALL SELECT 'DISCONNECTED', id FROM disc)
 SELECT component, CAST(COUNT(*) AS BIGINT) AS n_nodes
 FROM tagged GROUP BY component ORDER BY component""",
-        # lexical diversity: integer frequency spectrum per document,
-        # one division per statistic at the end (Yule 1944 K)
-        "txt_lexical_diversity": r"""
-WITH src AS (SELECT CAST(doc_id AS VARCHAR) AS chunk_id, text FROM documents),
-tok AS (
-  SELECT chunk_id,
-    unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> length(t) > 0)) AS term
-  FROM src),
-tf AS (SELECT chunk_id, term, CAST(COUNT(*) AS BIGINT) AS f FROM tok GROUP BY chunk_id, term),
-agg AS (SELECT chunk_id,
-          CAST(SUM(f) AS BIGINT) AS n_tokens,
-          CAST(COUNT(*) AS BIGINT) AS n_types,
-          CAST(SUM(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-          CAST(SUM(f * f) AS BIGINT) AS sumsq
-        FROM tf GROUP BY chunk_id)
-SELECT chunk_id, n_tokens, n_types,
-       ROUND(CAST(n_types AS DOUBLE) / n_tokens, 6) AS ttr,
-       ROUND(CAST(hapax AS DOUBLE) / n_types, 6) AS hapax_ratio,
-       ROUND(10000.0 * (sumsq - n_tokens) / (n_tokens * n_tokens), 6) AS yule_k
-FROM agg ORDER BY chunk_id""",
-        # CUBE grouping sets with an explicit grouping bitmask
-        "rel_cube": """
-SELECT event_type, CAST(user_id % 10 AS BIGINT) AS cohort,
-  CAST(2 * GROUPING(event_type) + GROUPING(CAST(user_id % 10 AS BIGINT)) AS BIGINT) AS gid,
-  COUNT(*) AS cnt,
-  CAST(ROUND(SUM(CAST(value AS DECIMAL(20,6))), 4) AS DOUBLE) AS sum_value
-FROM events
-GROUP BY CUBE(event_type, CAST(user_id % 10 AS BIGINT))
-ORDER BY gid, event_type ASC NULLS FIRST, cohort ASC NULLS FIRST""",
         # source-pair shared-concept mirror detection: viral-concept
         # guard (spread <= 12), then a concept-keyed pair self-join
         "kg_source_overlap": f"""WITH {MENTIONS_CTE},
@@ -9991,18 +4190,6 @@ SELECT p.source_a, p.source_b, p.shared, na.n AS na, nb.n AS nb,
        ROUND(CAST(p.shared AS DOUBLE) / (na.n + nb.n - p.shared), 6) AS jaccard
 FROM p JOIN nsrc na ON na.source = p.source_a JOIN nsrc nb ON nb.source = p.source_b
 ORDER BY shared DESC, source_a, source_b LIMIT 50""",
-        # SemDeDup verdict: SRP bucket candidates -> exact cosine >=
-        # 0.30 -> dominated-by-min-lower-id; one row per input vector.
-        "dd_semantic_dedup": f"""WITH {_srp_base},
-cand AS (SELECT DISTINCT l.id AS a_id, r.id AS b_id
-         FROM bands l JOIN bands r
-           ON l.band = r.band AND l.bucket = r.bucket AND l.id < r.id),
-sdp AS (SELECT c.a_id, c.b_id
-        FROM cand c JOIN base a ON a.id = c.a_id JOIN base b ON b.id = c.b_id
-        WHERE ROUND({_cos_ab}, 6) >= 0.30),
-sdd AS (SELECT b_id, MIN(a_id) AS dup_of FROM sdp GROUP BY b_id)
-SELECT e.vec_id, sdd.dup_of IS NULL AS kept, sdd.dup_of
-FROM embeddings e LEFT JOIN sdd ON e.vec_id = sdd.b_id ORDER BY e.vec_id""",
         # SCC over the concept precedence graph: the oracle is the
         # EXACT definition — recursive reachability closure, then
         # scc_id(v) = least(v, min mutually-reachable partner); the

@@ -141,223 +141,67 @@ def main():
         "kg_triples",
         "kg_concept_search",
         "kg_connected_components",
-        "rel_tpch_q1",
-        "rel_tpch_q3",
-        "rel_tpch_q5",
-        "rel_tpch_q9",
-        "rel_top3_per_group",
-        "dd_exact",
-        "dd_minhash_lsh",
-        "dd_ngram_jaccard",
-        "dd_simhash",
-        "dd_curation",
-        "sim_bruteforce_topk",
-        "sim_ann_topk",
-        "sim_ivf_topk",
-        "txt_stats",
-        "mm_features",
-        "dd_kmv_distinct",
         "kg_pagerank",
         "kg_communities",
         "kg_global_search",
         "kg_local_search",
-        "rel_range_join",
-        "rel_sliding_window",
-        # round-5 additions: the round-4 flagship family, so regressions
-        # in it are visible to the driver's per-round BENCH record
         "kg_node_features",
         "kg_link_prediction",
         "kg_hits",
         "kg_context_pack",
         "kg_node2vec",
         "kg_path_between",
-        # round-5 additions (totals remain non-comparable across rounds
-        # as the set grows; per-query fields are the signal)
         "kg_scc",
         "kg_triad_census",
         "kg_independent_set",
         "kg_pagerank_weighted",
-        "dd_dsir_resample",
-        "txt_textrank",
-        "txt_heavy_hitters",
-        # round-5 wave 2: OpenIE SVO + classifier + sketch
         "kg_svo_triples",
         "kg_svo_linked",
-        "txt_fasttext_quality",
-        "rel_quantile_sketch",
-        # round-5 wave 3: WL refinement + HLL + PQ ANN
         "kg_wl_labels",
-        "dd_hll_distinct",
-        "sim_pq_topk",
-        # round-5 wave 4-5: BPE + densest + this session's additions
-        "txt_bpe_merges",
         "kg_densest_subgraph",
         "kg_spanning_forest",
         "kg_graph_coloring",
         "kg_maximal_matching",
-        "dd_bloom_membership",
-        "txt_temperature_mixture",
-        "txt_c4_rules",
-        "txt_gopher_quality",
-        "txt_readability",
-        "dd_repeated_spans",
-        # round-5 wave 7: graph scalars + word-order LM + oracled k-means
         "kg_assortativity",
         "kg_katz",
-        "txt_bigram_logprob",
-        "sim_kmeans",
-        "dd_cluster_balanced",
-        # round-5 waves 8-9: novelty/soft-dedup/decayed + cover/spreading
-        "dd_ngram_novelty",
-        "dd_soft_dedup",
-        "rel_decayed_counts",
         "kg_vertex_cover",
         "kg_label_spreading",
-        # round-5 wave 10: structure scalar + ANN quality eval
         "kg_reciprocity",
-        "sim_recall_at_k",
-        # round-5 wave 11: taxonomy cleanup + structure scalar + attribution
         "kg_taxonomy_reduction",
         "kg_centralization",
-        "rel_attribution",
-        # round-5 wave 12: index health + corpus fit
-        "dd_lsh_stats",
-        "txt_zipf_fit",
-        # round-5 wave 13: web-graph macro-structure family
         "kg_distance_distribution",
         "kg_squares",
         "kg_rich_club",
         "kg_bowtie",
-        "txt_lexical_diversity",
         "kg_source_overlap",
-        # round-5 wave 14: robust anomalies + growth + scripts + layers
-        # + winnowing fingerprints + MMR diversification
-        "rel_mad_outliers",
-        "rel_user_growth",
-        "txt_script_ratios",
         "kg_topo_layers",
-        "txt_winnowing",
-        "sim_mmr_rerank",
-        # round-5 wave 15: drift + sparsify + histogram + DAG paths
-        "txt_source_drift",
         "kg_graph_sparsify",
-        "rel_histogram",
         "kg_dag_paths",
-        # round-5 wave 16: anomalies + related chunks + boilerplate
         "kg_egonet_anomaly",
         "kg_related_chunks",
-        "txt_source_boilerplate",
-        # round-5 wave 17: spam mass + seasonal + BPE encode
         "kg_spam_mass",
-        "rel_seasonal_baseline",
-        "txt_bpe_encode",
-        # round-5 wave 18: kNN graph + host budget + conversion latency
-        "sim_knn_graph",
-        "dd_host_budget",
-        "rel_time_to_convert",
-        # round-5 wave 19: tiles + gini + coverage
-        "mm_tile_stats",
-        "rel_gini",
-        "txt_ngram_coverage",
-        # round-5 wave 20: typed degrees + metapaths + bridges
         "kg_typed_degrees",
         "kg_metapath_counts",
         "kg_community_bridges",
-        # round-5 wave 21: stickiness + periphery
-        "rel_stickiness",
         "kg_peripheral_concepts",
-        # round-5 wave 22: RFM + TPCH q4/q6/q10
-        "rel_rfm",
-        "rel_tpch_q4",
-        "rel_tpch_q6",
-        "rel_tpch_q10",
-        # round-5 wave 23: centroid outliers + cadence + extraction QA
-        "sim_centroid_outliers",
-        "rel_interevent_gaps",
         "kg_extraction_yield",
-        # round-5 wave 24: basket lift + token budget + k-center coreset
-        "rel_market_basket",
-        "txt_effective_tokens",
-        "sim_kcenter_sample",
-        # round-5 wave 25: levenshtein verify + TPC-H Q13/Q18 shapes
-        "dd_edit_distance",
-        "rel_tpch_q13",
-        "rel_tpch_q18",
-        # round-5 wave 26: clustering eval + Q16 + lang-id audit
-        "sim_cluster_purity",
-        "rel_tpch_q16",
-        "txt_langid_confusion",
-        # round-5 wave 27: concept drift + dup-family census
         "kg_concept_drift",
-        "dd_dup_family_stats",
-        # round-5 wave 28: clustering-quality panel + KG contradiction census
-        "sim_silhouette",
-        "sim_davies_bouldin",
         "kg_predicate_conflicts",
-        # round-5 wave 29: KG trust + role censuses
         "kg_triple_support",
         "kg_concept_roles",
-        # round-5 wave 30: TPC-H Q12/Q14/Q19 shapes
-        "rel_tpch_q12",
-        "rel_tpch_q14",
-        "rel_tpch_q19",
-        # round-5 wave 31: TPC-H scalar-subquery shapes
-        "rel_tpch_q15",
-        "rel_tpch_q17",
-        "rel_tpch_q22",
-        "rel_tpch_q11",
-        # round-5 wave 32: TPC-H sweep completed (all 22 as shapes)
-        "rel_tpch_q2",
-        "rel_tpch_q8",
-        "rel_tpch_q20",
-        "rel_tpch_q21",
-        # round-5 wave 33: matryoshka eval + CUSUM
-        "sim_matryoshka_recall",
-        "rel_cusum_shift",
-        # round-5 wave 34: SimRank
         "kg_simrank",
-        # round-5 wave 35: RAKE + confidence calibration
-        "txt_rake_keywords",
         "kg_confidence_calibration",
-        # round-5 wave 36: robustness curve + Heaps fit
         "kg_attack_tolerance",
-        "txt_heaps_law",
-        # round-5 wave 37: RPQ + Wu-Palmer
         "kg_rpq_reachability",
         "kg_wu_palmer",
-        # round-5 wave 38: code detection + sequence mining
-        "txt_code_detection",
-        "rel_sequential_patterns",
-        # round-5 wave 39: alias census + pareto coverage
         "kg_alias_census",
-        "rel_pareto_coverage",
-        # round-5 wave 40: index-quality evals
-        "dd_minhash_calibration",
-        "sim_kcenter_radius",
-        # round-5 wave 41: typed triangles + SCD2
         "kg_typed_triangles",
-        "rel_scd2_history",
-        # round-5 wave 42: landmark distance oracle
         "kg_landmark_distances",
-        # round-5 wave 43: bloom FP calibration
-        "dd_bloom_fp_rate",
-        "dd_sketch_accuracy",
-        # round-5 wave 45: eigenvector centrality (centrality panel)
         "kg_eigenvector",
-        # round-5 wave 46: temporal KG-growth / densification panel
         "kg_graph_growth",
-        # round-5 wave 47: Granovetter tie-strength census
         "kg_tie_strength",
-        # round-5 wave 54: per-source corroboration trust panel
         "kg_source_reliability",
-        # round-5 wave 55: per-predicate evidence staleness
         "kg_evidence_freshness",
-        # round-5 wave 56: simhash threshold-margin calibration
-        "dd_simhash_margin",
-        # round-5 wave 57: bot/automation census over the event log
-        "rel_bot_score",
-        # round-5 wave 58: tile-fingerprint media near-dup
-        "mm_near_dup",
     ]
     # best-of-N per query: this sandbox VM shares a host and a single
     # contaminated instant can inflate one query 10-40x (measured);
@@ -373,40 +217,6 @@ def main():
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 3)
         timings[f"{name}_rows"] = n
-
-    # ---- composed quantized ANN over a MATERIALIZED index ----
-    # The contract entry builds the index inline (so DuckDB can replay
-    # it); the production shape builds once and queries many times.
-    # Report both halves so the amortized query cost is visible next
-    # to sim_bruteforce_topk (the float full-scan it must beat).
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import (
-        similarity as sim,
-    )
-
-    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    qvec = list(emb.where(F.col("vec_id") == 0).collect()[0]["embedding"])
-    qidx_path = os.path.join(REPO, ".cache", "bench_qidx")
-    shutil.rmtree(qidx_path, ignore_errors=True)
-    t0 = time.monotonic()
-    sim.build_quantized_index(emb, dim=64).write.partitionBy("band", "bucket").parquet(
-        qidx_path
-    )
-    qann_build = round(time.monotonic() - t0, 3)
-    qidx = spark.read.parquet(qidx_path)
-    best = None
-    for _ in range(repeats):
-        t0 = time.monotonic()
-        n = sim.quantized_ann_topk(None, qvec, dim=64, k=10, index=qidx).count()
-        dt = time.monotonic() - t0
-        best = dt if best is None else min(best, dt)
-    # dedicated fields, NOT folded into the headline total (the
-    # one-time index build is not a recurring query cost, and rounds
-    # 1-4 totals never contained either number)
-    qann = {
-        "sim_quantized_ann_build_sec": qann_build,
-        "sim_quantized_ann_query_sec": round(best, 3),
-        "sim_quantized_ann_query_rows": n,
-    }
 
     # ---- sf1 headline pipeline draw (10x the default bench corpus):
     # the 10x-replica protocol hides constant-factor drift; one real
@@ -448,7 +258,6 @@ def main():
         "cpus": CPUS,
         "stage_ms": res.stage_ms,
         "pr": pr,
-        **qann,
         **sf1,
     }
     spark.stop()

@@ -13,9 +13,8 @@ beyond-reference curation stage a web-scale deployment inserts ahead
 of that keying.
 
 Everything here is a pure Catalyst column expression — no UDFs — and
-every regex is in the Java∩RE2 common subset (same discipline as
-functions/text.py's PII patterns) so a DuckDB oracle can replay it
-verbatim.
+every regex is in the Java∩RE2 common subset so a DuckDB oracle can
+replay it verbatim.
 
 Scale shape: :func:`canonicalize_url` is per-row string work inside
 whole-stage codegen; :func:`dedup_by_canonical_url` shuffles only

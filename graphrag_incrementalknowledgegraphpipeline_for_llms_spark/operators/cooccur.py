@@ -147,101 +147,3 @@ def pmi_filtered_pairs(
     pf = aggregate_pair_frequencies(pairs)
     cf = concept_chunk_frequencies(mentions)
     return pmi_scores(pf, cf, total).where(F.col("pmi") >= F.lit(min_pmi))
-
-
-def market_basket(
-    items: DataFrame,
-    basket_col: str = "basket_id",
-    item_col: str = "item_id",
-    min_item_support: int = 5,
-    min_pair_count: int = 2,
-    max_basket_size: int | None = 64,
-) -> DataFrame:
-    """Association pair mining over (basket, item) rows: pair support,
-    per-item support, and lift = N * cnt(a,b) / (cnt(a) * cnt(b)) —
-    the PMI cousin on transaction baskets instead of chunks (PMI above
-    is log-lift over concept co-occurrence; same algebra, different
-    universe).  The workhorse behind "frequently bought together",
-    co-cited-sources, and co-linked-entity panels.
-
-    Determinism contract: baskets are deduplicated to DISTINCT
-    (basket, item) before any counting (a line item repeated inside
-    one basket is one co-occurrence, not two); pairs are canonically
-    ordered ``item_a < item_b``; lift/support are computed with one
-    fixed expression shape — ``(pair_count * N) / (cnt_a * cnt_b)`` —
-    then rounded to 6 dp, so both engines fold identical doubles.
-
-    Scale shape (the Apriori pushdown): per-item support is aggregated
-    FIRST and items below ``min_item_support`` are semi-joined away
-    BEFORE the pair self-join — an infrequent item can never be in a
-    frequent pair, so the quadratic stage only ever sees frequent
-    items.  ``max_basket_size`` (default 64) drops degenerate
-    mega-baskets before the self-join — the same C(n,2) blowup guard
-    class as dedup's exact-group collapse (a crawl "basket" like a
-    link farm can hold 10^5 items; 64 keeps per-basket pair fan-out
-    <= 2016 rows).  The basket total N is a bounded 1-row scalar
-    folded as a literal.  Shuffles: distinct projection, item-support
-    agg, the basket-keyed self-join, and the pair agg — all on keys
-    the data is naturally sized for once the two guards fire.
-    """
-    from .dedup import stage_parquet
-
-    # bi feeds FIVE consumers (the basket-total count, item support,
-    # both sides of the pair self-join via freq, and the mega-basket
-    # guard): stage the narrow 2-column distinct once instead of
-    # re-running the scan+distinct per consumer
-    bi = stage_parquet(
-        items.select(
-            F.col(basket_col).alias("b"), F.col(item_col).alias("i")
-        ).distinct(),
-        "mb_bi",
-    )
-    n_baskets = bi.select("b").distinct().count()
-    sup = (
-        bi.groupBy("i")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .where(F.col("cnt") >= F.lit(int(min_item_support)))
-    )
-    freq = bi.join(sup.select("i"), "i", "left_semi")
-    if max_basket_size is not None:
-        small = (
-            freq.groupBy("b")
-            .agg(F.count(F.lit(1)).alias("sz"))
-            .where(F.col("sz") <= F.lit(int(max_basket_size)))
-        )
-        freq = freq.join(small.select("b"), "b", "left_semi")
-    lhs = freq.select("b", F.col("i").alias("item_a"))
-    rhs = freq.select("b", F.col("i").alias("item_b"))
-    pairs = (
-        lhs.join(rhs, "b")
-        .where(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).alias("pair_count"))
-        .where(F.col("pair_count") >= F.lit(int(min_pair_count)))
-    )
-    return (
-        pairs.join(
-            sup.select(F.col("i").alias("item_a"), F.col("cnt").alias("count_a")),
-            "item_a",
-        )
-        .join(
-            sup.select(F.col("i").alias("item_b"), F.col("cnt").alias("count_b")),
-            "item_b",
-        )
-        .select(
-            "item_a",
-            "item_b",
-            "pair_count",
-            "count_a",
-            "count_b",
-            F.round(
-                (F.col("pair_count").cast("double") * F.lit(float(n_baskets)))
-                / (F.col("count_a") * F.col("count_b")).cast("double"),
-                6,
-            ).alias("lift"),
-            F.round(
-                F.col("pair_count").cast("double") / F.lit(float(n_baskets)), 6
-            ).alias("support"),
-        )
-        .orderBy(F.desc("lift"), "item_a", "item_b")
-    )

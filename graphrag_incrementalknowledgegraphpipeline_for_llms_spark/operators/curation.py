@@ -1,780 +1,18 @@
-"""Corpus curation: the canonical training-data prep composition —
-quality gate + language gate + exact dedup — as one operator with a
-lineage funnel.
+"""Per-source corpus statistics over extracted concepts.
 
-Scale shape (the whole point at 100 TB):
+* source_overlap — the inter-source shared-concept graph (mirror and
+  syndication candidates at host granularity).
+* kl_divergence_from_counts — smoothed KL divergence of each source's
+  categorical distribution from the corpus distribution.
 
-* ONE narrow projection computes every feature (token count, lang id,
-  quality score, fingerprint) from the text; the text column itself
-  never crosses a shuffle.
-* gates are plain Catalyst predicates evaluated in the scan stage —
-  they prune before any exchange.
-* dedup is groupBy(min(id)) over (fingerprint, id) ONLY — a 16-byte
-  key + 8-byte id through the shuffle — followed by a semi-join on id
-  to late-materialize the surviving rows (same shape as the catalog
-  MERGE winner selection).
-* the funnel audit is a single-pass conditional aggregate — one job,
-  no per-stage re-scans.
-
-Every output has an exact ANSI-SQL twin (DuckDB oracle entries
-``dd_curation`` / ``dd_curation_funnel``).
+Both back driver keys (``kg_source_overlap``, ``kg_source_reliability``)
+whose DuckDB oracles replay the same expression shapes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions import text as tf
-
-
-def _features(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    feats = tf.quality_features(F.col(text_col))
-    return df.select(
-        F.col(id_col).alias("id"),
-        tf.lang_id(F.col(text_col)).alias("lang"),
-        feats["n_tokens"].alias("n_tokens"),
-        F.round(feats["quality_score"], 6).alias("quality_score"),
-        tf.fingerprint(F.col(text_col)).alias("fp"),
-    )
-
-
-def curate_corpus(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_tokens: int = 5,
-    min_quality: float = 0.5,
-    langs: tuple[str, ...] = ("en",),
-) -> DataFrame:
-    """Kept documents after the three gates + exact dedup.
-
-    Output: (id, lang, n_tokens, quality_score, fp), one row per
-    surviving fingerprint (canonical survivor = min id — deterministic
-    and batch-split independent)."""
-    gated = _features(df, text_col, id_col).where(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("quality_score") >= min_quality)
-        & (F.col("lang").isin(*langs))
-    )
-    winners = gated.groupBy("fp").agg(F.min("id").alias("id"))
-    return gated.join(winners, ["fp", "id"], "left_semi").select(
-        "id", "lang", "n_tokens", "quality_score", "fp"
-    )
-
-
-def curation_funnel(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_tokens: int = 5,
-    min_quality: float = 0.5,
-    langs: tuple[str, ...] = ("en",),
-) -> DataFrame:
-    """Per-gate survivor counts in ONE aggregate pass (the lineage row
-    a curation job logs): total -> length gate -> +quality -> +lang ->
-    distinct fingerprints among full survivors (= post-dedup size).
-
-    Gates are applied cumulatively in the stated order, matching
-    :func:`curate_corpus` (whose conjunction is order-independent)."""
-    f = _features(df, text_col, id_col)
-    g_len = F.col("n_tokens") >= min_tokens
-    g_q = g_len & (F.col("quality_score") >= min_quality)
-    g_lang = g_q & F.col("lang").isin(*langs)
-    return f.agg(
-        F.count("*").alias("total"),
-        F.count_if(g_len).alias("pass_length"),
-        F.count_if(g_q).alias("pass_quality"),
-        F.count_if(g_lang).alias("pass_lang"),
-        F.count_distinct(F.when(g_lang, F.col("fp"))).alias("after_dedup"),
-    )
-
-
-def remove_duplicate_lines(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_df: int = 1,
-) -> DataFrame:
-    """CCNet-style cross-document line dedup (Wenzek et al. 2020 §3.1:
-    boilerplate — nav menus, cookie banners, footers — repeats line-
-    for-line across pages): drop every non-blank line whose exact text
-    appears in more than ``max_df`` documents, reassemble the rest in
-    original order.  Blank lines are structural and never counted or
-    dropped.  Returns (id, clean_text, n_kept, n_total) ordered by id.
-
-    Scale shape: the document-frequency aggregate shuffles only
-    (md5(line), doc_id) — never line text; the drop itself is an
-    anti-join against the VIRAL-LINE SET (lines with df > max_df),
-    which on real corpora is boilerplate-sized, not corpus-sized, so
-    AQE broadcasts it and the corpus never reshuffles.  Reassembly is
-    a per-document sort of (idx, line) structs inside one aggregate —
-    order restored without a window function."""
-    lines = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("idx", "line"),
-    ).select("id", "idx", "line", F.md5("line").alias("lh"))
-    viral = (
-        lines.where(F.trim("line") != "")
-        .groupBy("lh")
-        .agg(F.count_distinct("id").alias("docs"))
-        .where(F.col("docs") > max_df)
-        .select("lh")
-    )
-    kept = lines.join(viral, "lh", "left_anti")
-    agg = kept.groupBy("id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("idx", "line"))),
-                lambda s: s["line"],
-            ),
-            "\n",
-        ).alias("clean_text"),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
-    tot = lines.groupBy("id").agg(F.count(F.lit(1)).alias("n_total"))
-    return (
-        tot.join(agg, "id", "left")
-        .select(
-            "id",
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-            "n_total",
-        )
-        .orderBy("id")
-    )
-
-
-def duplicated_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 15,
-    min_docs: int = 2,
-) -> DataFrame:
-    """Exact duplicated token spans across documents (Lee et al. 2022,
-    "Deduplicating Training Data Makes Language Models Better": memorized
-    boilerplate lives in long EXACT repeats, which MinHash's whole-doc
-    similarity misses when the containing pages differ).  A token
-    position is *duplicated* when the k-token gram starting there occurs
-    in >= ``min_docs`` distinct documents; runs of duplicated positions
-    closer than k apart merge into maximal spans (gaps-and-islands).
-
-    Returns (id, span_start, span_end, n_dup_tokens), token-indexed
-    [span_start, span_end), ordered by (id, span_start).
-
-    Scale shape: the only corpus-sized shuffle carries
-    (xxhash64(gram), id, pos) — 24 bytes/gram, never gram text; the
-    document-frequency aggregate is two-stage (map-side partial on the
-    gram hash).  The viral-gram set is boilerplate-sized, so the join
-    back to positions broadcasts under AQE.  The islands window
-    partitions by document — bounded by document length, no global
-    sort.  Suffix-array dedup finds arbitrary-length repeats; the
-    k-gram anchor is the shuffle-friendly approximation (any exact
-    repeat of length >= k is found, with spans padded to gram
-    boundaries — the standard MapReduce-able relaxation)."""
-    from pyspark.sql import Window
-
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.filter(
-            F.split(F.trim(text_col), r"\s+"), lambda t: F.length(t) > 0
-        ).alias("toks"),
-    ).where(F.size("toks") >= k)
-    grams = toks.select(
-        "id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - k),
-                lambda p: F.xxhash64(F.array_join(F.slice("toks", p + 1, k), " ")),
-            )
-        ).alias("pos", "gh"),
-    )
-    viral = (
-        grams.groupBy("gh")
-        .agg(F.count_distinct("id").alias("docs"))
-        .where(F.col("docs") >= min_docs)
-        .select("gh")
-    )
-    dup_pos = grams.join(viral, "gh", "left_semi").select("id", "pos")
-    w = Window.partitionBy("id").orderBy("pos")
-    islands = dup_pos.select(
-        "id",
-        "pos",
-        F.sum(
-            (F.col("pos") - F.lag("pos", 1, 0).over(w) > k).cast("long")
-        ).over(w).alias("island"),
-    )
-    return (
-        islands.groupBy("id", "island")
-        .agg(
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + k).alias("span_end"),
-            (F.max("pos") + k - F.min("pos")).alias("n_dup_tokens"),
-        )
-        .select("id", "span_start", "span_end", "n_dup_tokens")
-        .orderBy("id", "span_start")
-    )
-
-
-def strip_duplicated_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 15,
-    min_docs: int = 2,
-) -> DataFrame:
-    """Rewrite each document with its cross-corpus duplicated spans
-    removed (the Lee-et-al. cut applied, vs. :func:`duplicated_spans`
-    which only reports them).  Returns (id, clean_text, n_kept,
-    n_total) over token counts, ordered by id; documents shorter than
-    k tokens pass through untouched.
-
-    Scale shape: spans per document are few (boilerplate-sized), so
-    the collected span list per doc is a small array; the strip is one
-    narrow projection with F.filter over token positions — no second
-    corpus shuffle beyond the span computation itself."""
-    spans = duplicated_spans(df, text_col, id_col, k=k, min_docs=min_docs)
-    span_sets = spans.groupBy("id").agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("spans")
-    )
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.filter(
-            F.split(F.trim(text_col), r"\s+"), lambda t: F.length(t) > 0
-        ).alias("toks"),
-    )
-    joined = toks.join(span_sets, "id", "left").select(
-        "id",
-        "toks",
-        F.coalesce("spans", F.array()).alias("spans"),
-    )
-    kept = F.filter(
-        F.transform(
-            F.sequence(F.lit(0), F.size("toks") - 1),
-            lambda p: F.struct(
-                p.alias("p"),
-                F.element_at(F.col("toks"), p + 1).alias("t"),
-            ),
-        ),
-        lambda s: ~F.exists(
-            F.col("spans"),
-            lambda sp: (s["p"] >= sp["span_start"]) & (s["p"] < sp["span_end"]),
-        ),
-    )
-    return joined.select(
-        "id",
-        F.array_join(F.transform(kept, lambda s: s["t"]), " ").alias("clean_text"),
-        F.size(kept).alias("n_kept"),
-        F.size("toks").alias("n_total"),
-    ).orderBy("id")
-
-
-def source_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    lang_col: str | None = None,
-    min_mean_quality: float = 0.0,
-    max_dup_rate: float = 1.0,
-    min_lang_rate: float = 0.0,
-    lang: str = "en",
-) -> DataFrame:
-    """Domain-level curation accounting (the C4/RefinedWeb move:
-    judge the SOURCE, not just the document — a domain that is mostly
-    duplicates or mostly off-language poisons everything it hosts).
-    One row per source: (source, n_docs, total_tokens, mean_quality,
-    dup_rate, lang_rate, kept), ordered by source.  ``dup_rate`` is
-    the fraction of the source's docs whose exact fingerprint occurs
-    more than once CORPUS-WIDE (cross-source mirrors count against
-    both sides).  ``kept`` applies the three gates on the ROUNDED
-    stats, so the decision is reproducible from the emitted row.
-
-    Scale shape: one narrow projection computes every per-doc feature
-    (text never crosses a shuffle); the fingerprint-frequency
-    aggregate and the join back are both keyed on the 16-byte fp with
-    map-side partials; the per-source aggregate shuffles only (source,
-    numerics).  mean_quality accumulates in decimal(18,6) — the
-    per-doc scores are 6-dp decimals, so the sum is EXACT and
-    engine-order-independent — and divides in double afterwards."""
-    feats = tf.quality_features(F.col(text_col))
-    lang_expr = F.col(lang_col) if lang_col else tf.lang_id(F.col(text_col))
-    per_doc = df.select(
-        F.col(source_col).alias("source"),
-        feats["n_tokens"].alias("n_tokens"),
-        F.round(feats["quality_score"], 6).alias("q"),
-        lang_expr.alias("lang"),
-        tf.fingerprint(F.col(text_col)).alias("fp"),
-    )
-    fp_counts = per_doc.groupBy("fp").agg(F.count(F.lit(1)).alias("fp_n"))
-    j = per_doc.join(fp_counts, "fp")
-    n = F.count(F.lit(1))
-    stats = j.groupBy("source").agg(
-        n.alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-        F.round(
-            F.round(F.sum(F.col("q").cast("decimal(18,6)")), 6).cast("double") / n, 6
-        ).alias("mean_quality"),
-        F.round(F.count_if(F.col("fp_n") > 1).cast("double") / n, 6).alias("dup_rate"),
-        F.round(
-            F.count_if(F.col("lang") == lang).cast("double") / n, 6
-        ).alias("lang_rate"),
-    )
-    kept = (
-        (F.col("mean_quality") >= min_mean_quality)
-        & (F.col("dup_rate") <= max_dup_rate)
-        & (F.col("lang_rate") >= min_lang_rate)
-    )
-    return stats.select(
-        "source", "n_docs", "total_tokens", "mean_quality", "dup_rate", "lang_rate",
-        kept.cast("long").alias("kept"),
-    ).orderBy("source")
-
-
-def curate_by_source(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    **gates,
-) -> DataFrame:
-    """Documents surviving the source-level gates of
-    :func:`source_stats` (same keyword gates).  The passing-source set
-    is domain-cardinality-sized, so the semi-join broadcasts — the
-    corpus itself never reshuffles."""
-    passing = (
-        source_stats(df, text_col, id_col, source_col, **gates)
-        .where(F.col("kept") == 1)
-        .select("source")
-    )
-    return df.join(
-        F.broadcast(passing.withColumnRenamed("source", source_col)),
-        source_col,
-        "left_semi",
-    )
-
-
-def _hashed_ngram_features(
-    df: DataFrame, text_col: str, id_col: str, n_buckets: int, bigrams: bool
-) -> DataFrame:
-    """(id, b) hashed-feature occurrences: lowercased alphanumeric
-    unigrams plus (optionally) adjacent bigrams, each hashed into one of
-    ``n_buckets`` buckets with the portable md5-prefix recipe.  One
-    narrow projection per row — text never shuffles; only (id, bucket)
-    pairs do."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: F.length(t) > 0
-    )
-    base = df.select(F.col(id_col).alias("id"), toks.alias("toks"))
-    feats = F.col("toks")
-    if bigrams:
-        n = F.size("toks")
-        big = F.when(
-            n >= 2,
-            F.transform(
-                F.sequence(F.lit(1), n - 1),
-                lambda i: F.concat(
-                    F.element_at(F.col("toks"), i.cast("int")),
-                    F.lit("_"),
-                    F.element_at(F.col("toks"), (i + 1).cast("int")),
-                ),
-            ),
-        ).otherwise(F.expr("array()").cast("array<string>"))
-        feats = F.concat(feats, big)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("f")), 1, 8), 16, 10).cast("long")
-        % n_buckets
-    )
-    return base.select("id", F.explode(feats).alias("f")).select(
-        "id", bucket.alias("b")
-    )
-
-
-def dsir_weights(
-    corpus: DataFrame,
-    target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 256,
-    alpha: float = 1.0,
-    bigrams: bool = True,
-) -> DataFrame:
-    """DSIR importance weights (Xie et al. 2023, "Data Selection for
-    Language Models via Importance Resampling"): score every corpus
-    document by how much more likely its hashed-n-gram bag is under a
-    unigram model of the TARGET domain than under the raw-corpus model:
-
-        log w(x) = sum_b  c_b(x) * [ log p_tgt(b) - log p_raw(b) ]
-
-    with Laplace-``alpha`` smoothing over ``n_buckets`` hashed
-    unigram+bigram features.  Sampling the corpus proportionally to
-    exp(log w) (or keeping top-weight docs) yields a pretraining mix
-    that matches the target domain distribution — the published,
-    cheap alternative to classifier-based filtering.
-
-    Returns (doc_id, n_feats, logw) for every corpus document with at
-    least one feature, ordered by doc_id.  ``target`` is the exemplar
-    set (typically a few thousand docs — Wikipedia/books slice); it is
-    scanned once and its bucket histogram is tiny (``n_buckets`` rows).
-
-    Scale shape: ONE feature pass over the corpus feeds the
-    per-document counts, the raw bucket histogram, and the total-count
-    scalar — the (id, bucket, c) table is staged as scratch parquet
-    because it has THREE consumers and Spark re-executes the
-    explode+hash subtree per consumer otherwise (no common-subtree
-    reuse; measured 2.6x-of-linear at 10x before staging, and
-    BlockManager persist is the documented pathological alternative).
-    Only (id, bucket) crosses the shuffle; the two total-count scalars
-    fold into the plan as literals (the BM25 corpus-scalar pattern)
-    and the ``n_buckets``-row log-ratio table broadcasts to the
-    scoring join.  Per-feature log-ratios are plain doubles; the
-    per-document sum is rounded to 6 places (the unigram-logprob
-    cross-engine recipe)."""
-    from .dedup import stage_parquet
-
-    dc = stage_parquet(
-        _hashed_ngram_features(corpus, text_col, id_col, n_buckets, bigrams)
-        .groupBy("id", "b")
-        .agg(F.count(F.lit(1)).alias("c")),
-        "dsir_dc",
-    )
-    raw = dc.groupBy("b").agg(F.sum("c").alias("r"))
-    tgt = stage_parquet(
-        _hashed_ngram_features(target, text_col, id_col, n_buckets, bigrams)
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("t")),
-        "dsir_tgt",
-    )
-    r_total = float(raw.select(F.sum("r")).collect()[0][0] or 0)
-    t_total = float(tgt.select(F.sum("t")).collect()[0][0] or 0)
-    denom_t = F.lit(t_total + alpha * n_buckets)
-    denom_r = F.lit(r_total + alpha * n_buckets)
-    ratio = (
-        raw.join(tgt, "b", "left")
-        .select(
-            "b",
-            (
-                F.log((F.coalesce(F.col("t"), F.lit(0)) + F.lit(alpha)) / denom_t)
-                - F.log((F.col("r") + F.lit(alpha)) / denom_r)
-            ).alias("lr"),
-        )
-    )
-    return (
-        dc.join(F.broadcast(ratio), "b")
-        .groupBy("id")
-        .agg(
-            F.sum("c").cast("long").alias("n_feats"),
-            F.round(F.sum(F.col("c") * F.col("lr")), 6).alias("logw"),
-        )
-        .select(F.col("id").alias("doc_id"), "n_feats", "logw")
-        .orderBy("doc_id")
-    )
-
-
-def fasttext_score(
-    corpus: DataFrame,
-    weights: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 4096,
-    bias_milli: int = 0,
-    threshold_milli: int = 0,
-    bigrams: bool = True,
-) -> DataFrame:
-    """fastText-style hashed linear classifier INFERENCE — the
-    quality-filter shape published for GPT-3 / CCNet-style pipelines
-    (Joulin et al. 2016 "Bag of Tricks for Efficient Text
-    Classification"): hashed unigram+bigram bag, one weight per
-    bucket, mean-pooled logit, sigmoid threshold.
-
-    ``weights`` is the trained model: (bucket, w_milli) with integer
-    MILLI-weights — integer accumulation keeps the logit exact across
-    engines (the quantized-cosine recipe), and the fastText
-    mean-pooling decision  sigmoid(sum/n) > sigmoid(t)  is evaluated
-    as the equivalent integer comparison  sum > t*n  so no float
-    division ever happens.  Training is out of scope (SGD is not a
-    SQL-expressible op); any fastText/liblinear model quantized to
-    milli-weights drops in.
-
-    Scale shape: shares :func:`_hashed_ngram_features` with DSIR — one
-    narrow map stage per document (text never shuffles), the weight
-    table is a broadcast dimension (n_buckets rows; fastText uses
-    2^21 ≈ 2M — still broadcastable), and the per-document sum
-    partially aggregates map-side so only ~one (id, sum) row per doc
-    per partition reaches the single shuffle.
-
-    Returns (id, n_feats, logit_milli, label) for docs with ≥1
-    feature; logit_milli = bias + Σ w[bucket(f)]."""
-    feats = _hashed_ngram_features(corpus, text_col, id_col, n_buckets, bigrams)
-    w = F.broadcast(
-        weights.select(F.col("bucket").alias("b"), F.col("w_milli"))
-    )
-    return (
-        feats.join(w, "b", "left")
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_feats"),
-            (
-                F.sum(F.coalesce(F.col("w_milli"), F.lit(0))) + F.lit(bias_milli)
-            )
-            .cast("long")
-            .alias("logit_milli"),
-        )
-        .withColumn(
-            "label",
-            F.col("logit_milli") > F.lit(threshold_milli) * F.col("n_feats"),
-        )
-    )
-
-
-def hash_weights(spark, n_buckets: int = 4096, salt: str = "w") -> DataFrame:
-    """Deterministic stand-in weight table for :func:`fasttext_score`
-    (tests/driver key): w_milli = md5_32(salt|bucket) % 2001 - 1000,
-    uniform in [-1000, 1000] milli."""
-    b = F.col("id").alias("bucket")
-    h32 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt + "|"), F.col("id").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
-    return spark.range(n_buckets).select(
-        b, (h32 % 2001 - 1000).cast("long").alias("w_milli")
-    )
-
-
-def dsir_resample(
-    corpus: DataFrame,
-    target: DataFrame,
-    k: int = 100,
-    seed: str = "dsir",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 256,
-    alpha: float = 1.0,
-    bigrams: bool = True,
-) -> DataFrame:
-    """The "R" in DSIR: sample ``k`` corpus documents WITHOUT
-    replacement with probability proportional to exp(log w) — the
-    importance-resampling step Xie et al. 2023 apply on top of the
-    weights :func:`dsir_weights` computes.
-
-    Sampling uses the Gumbel-top-k identity (Kool et al. 2019, "the
-    Gumbel-max trick" generalized): adding an independent Gumbel(0, 1)
-    noise term g_i = -ln(-ln(u_i)) to each log-weight and taking the
-    k largest keys draws exactly a without-replacement sample
-    proportional to the weights.  The uniforms are DETERMINISTIC —
-    u_i = (md5_32(seed | doc_id) + 0.5) / 2^32, the engine's standard
-    hash-uniform (mid-bucket offset keeps u strictly inside (0, 1),
-    so neither log can hit zero or infinity) — which makes the draw
-    reproducible across runs, engines, and partitionings, the same
-    rerun-stability contract as hash_split/stratified sampling.
-
-    Returns (doc_id, logw, gumbel_key) for the k selected documents,
-    highest key first (key rounded 6 dp for display; ordering uses
-    the full double, which is bit-identical cross-engine because both
-    sides run the same IEEE expression tree on the same rounded logw).
-
-    Scale shape: one pass over the weights relation — the noise term
-    is a per-row expression with zero shuffle, and the top-k is
-    Spark's TakeOrderedAndProject (per-partition heaps + driver
-    merge), never a global sort.  At 10^12 docs the only caveat is a
-    driver-bounded k, exactly as for every other top-k in the engine.
-    """
-    w = dsir_weights(
-        corpus,
-        target,
-        text_col=text_col,
-        id_col=id_col,
-        n_buckets=n_buckets,
-        alpha=alpha,
-        bigrams=bigrams,
-    )
-    h32 = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", F.lit(str(seed)), F.col("doc_id").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("double")
-    u = (h32 + F.lit(0.5)) / F.lit(float(1 << 32))
-    gk = F.col("logw") + (-F.log(-F.log(u)))
-    return (
-        w.withColumn("gk", gk)
-        .orderBy(F.desc("gk"), "doc_id")
-        .limit(k)
-        .select("doc_id", "logw", F.round("gk", 6).alias("gumbel_key"))
-    )
-
-
-def c4_rules(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    min_words_per_line: int = 5,
-    require_terminal_punct: bool = True,
-    min_sentences: int = 3,
-    bad_words: tuple[str, ...] = (),
-) -> DataFrame:
-    """C4 cleaning rules (Raffel et al. 2020, §2.2) as one scan-stage
-    projection: line-level gates (terminal punctuation, >= 5 words,
-    no 'javascript'), then page-level gates (>= 3 sentences after
-    line filtering, no bad words, no 'lorem ipsum', no '{').
-
-    Output: (doc_id, n_lines, kept_lines, n_sentences, has_bad_word,
-    has_lorem, has_brace, kept, clean_text) — clean_text is the
-    surviving lines re-joined, NULL for dropped pages, so downstream
-    stages never carry dropped text.
-
-    Scale shape (the 100-TB story): every rule is a higher-order
-    Catalyst expression over the line array — split / filter /
-    regexp_count evaluate inside the parquet scan stage with zero
-    shuffle and zero Python.  A 10^12-page corpus pays exactly one
-    pass; the kept verdict is a pushable predicate for the stage
-    after this one (``.where("kept = 1")`` prunes at the source when
-    this projection is materialized with the verdict as a partition
-    or stats column).
-
-    The line/sentence gates are parameterized because the published
-    constants assume real web text; synthetic corpora without
-    punctuation exercise the word-count and wordlist gates instead
-    (the pytest fixtures cover the punctuation paths with handwritten
-    HTML-shaped pages).
-    """
-    lc = F.lower(F.col(text_col))
-    lines = F.split(F.col(text_col), "\n")
-
-    def _line_ok(line: Column) -> Column:
-        t = F.trim(line)
-        ok = F.regexp_count(t, F.lit(r"\S+")) >= F.lit(min_words_per_line)
-        ok = ok & ~F.lower(t).contains("javascript")
-        if require_terminal_punct:
-            ok = ok & t.rlike(r"""[.!?"']$""")
-        return ok
-
-    kept_lines = F.filter(lines, _line_ok)
-    clean = F.array_join(kept_lines, "\n")
-    n_sentences = F.regexp_count(clean, F.lit(r"[.!?]"))
-
-    has_bad = F.lit(False)
-    for w in bad_words:
-        has_bad = has_bad | (F.regexp_count(lc, F.lit(rf"\b{w}\b")) > 0)
-
-    has_lorem = lc.contains("lorem ipsum")
-    has_brace = lc.contains("{")
-    kept = (
-        (n_sentences >= F.lit(min_sentences))
-        & ~has_bad
-        & ~has_lorem
-        & ~has_brace
-    )
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(lines).cast("long").alias("n_lines"),
-        F.size(kept_lines).cast("long").alias("kept_lines"),
-        n_sentences.cast("long").alias("n_sentences"),
-        has_bad.cast("long").alias("has_bad_word"),
-        has_lorem.cast("long").alias("has_lorem"),
-        has_brace.cast("long").alias("has_brace"),
-        kept.cast("long").alias("kept"),
-        F.when(kept, clean).alias("clean_text"),
-    )
-
-
-def gopher_quality(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_frac: float = 0.9,
-    max_ellipsis_frac: float = 0.3,
-    min_alpha_frac: float = 0.8,
-    stop_words: tuple[str, ...] = (
-        "the", "be", "to", "of", "and", "that", "have", "with",
-    ),
-    min_stop_hits: int = 2,
-) -> DataFrame:
-    """Gopher quality-filter rules (Rae et al. 2021, Appendix A) as a
-    single zero-shuffle projection: word-count bounds, mean word
-    length in [3, 10], symbol-to-word ratio ('#' and '...'), bullet-
-    line and ellipsis-line fractions, fraction of words containing an
-    alphabetic character, and the required-stop-word count.
-
-    Output: (doc_id, n_words, mean_word_len, symbol_ratio,
-    bullet_frac, ellipsis_frac, alpha_frac, n_stop, kept) — every
-    rule's evidence is a column, so a curation dashboard reads WHY a
-    page dropped from the same relation that dropped it.
-
-    Scale shape: the word array is computed once per row and every
-    rule is a higher-order function over it (aggregate / filter /
-    size) — all whole-stage-codegen, no Python, no shuffle; at
-    10^12 pages this is scan-bandwidth-bound, and the boolean verdict
-    is a pushable predicate for downstream reads.
-    """
-    words = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), 0)
-    n_words = F.size(words).cast("long")
-    char_sum = F.aggregate(
-        words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
-    )
-    mean_wl = char_sum.cast("double") / n_words.cast("double")
-    n_symbols = F.regexp_count(F.col(text_col), F.lit("#")) + F.regexp_count(
-        F.col(text_col), F.lit(r"\.\.\.")
-    )
-    symbol_ratio = n_symbols.cast("double") / n_words.cast("double")
-
-    lines = F.split(F.col(text_col), "\n")
-    n_lines = F.size(lines).cast("double")
-    bullet_frac = (
-        F.size(F.filter(lines, lambda l: F.trim(l).rlike(r"^[-*]"))).cast("double")
-        / n_lines
-    )
-    ellipsis_frac = (
-        F.size(F.filter(lines, lambda l: F.trim(l).rlike(r"\.\.\.$"))).cast("double")
-        / n_lines
-    )
-    alpha_frac = (
-        F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))).cast("double")
-        / n_words.cast("double")
-    )
-    lc = F.lower(F.col(text_col))
-    n_stop = F.lit(0)
-    for w in stop_words:
-        n_stop = n_stop + F.when(
-            F.regexp_count(lc, F.lit(rf"\b{w}\b")) > 0, 1
-        ).otherwise(0)
-
-    kept = (
-        (n_words >= F.lit(min_words))
-        & (n_words <= F.lit(max_words))
-        & (mean_wl >= F.lit(min_mean_word_len))
-        & (mean_wl <= F.lit(max_mean_word_len))
-        & (symbol_ratio <= F.lit(max_symbol_ratio))
-        & (bullet_frac <= F.lit(max_bullet_frac))
-        & (ellipsis_frac <= F.lit(max_ellipsis_frac))
-        & (alpha_frac >= F.lit(min_alpha_frac))
-        & (n_stop >= F.lit(min_stop_hits))
-    )
-    return df.where(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(id_col).alias("doc_id"),
-        n_words.alias("n_words"),
-        F.round(mean_wl, 6).alias("mean_word_len"),
-        F.round(symbol_ratio, 6).alias("symbol_ratio"),
-        F.round(bullet_frac, 6).alias("bullet_frac"),
-        F.round(ellipsis_frac, 6).alias("ellipsis_frac"),
-        F.round(alpha_frac, 6).alias("alpha_frac"),
-        n_stop.cast("long").alias("n_stop"),
-        kept.cast("long").alias("kept"),
-    )
 
 
 def source_overlap(
@@ -847,53 +85,13 @@ def source_overlap(
     )
 
 
-def source_drift(
-    docs: DataFrame,
-    top_v: int = 2048,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-source unigram KL divergence from the corpus language model
-    — the domain-drift curation axis: a source whose word distribution
-    sits far from the corpus (KL high) is boilerplate, spam, another
-    language, or machine junk; the axis source_stats' length/quality
-    aggregates and source_overlap's mirror signal don't measure.
-    Distributions are add-1 smoothed over a COARSENED vocabulary (the
-    top ``top_v`` corpus terms + one ``<other>`` tail bucket), so the
-    state is bounded at top_v + 1 regardless of corpus vocabulary.
-
-    -> (source, n_tokens, n_terms_seen, kl_corpus) rounded to 6,
-    ordered by source.  kl_corpus = KL(P_source || Q_corpus) over the
-    coarsened alphabet, always >= 0.
-
-    Scale shape: ONE (source, term) hash aggregate (map-side combined)
-    is the only corpus-scale shuffle; corpus term counts derive from
-    it (vocabulary-bound), the top-V marker broadcasts, and the
-    smoothed-KL sum over UNSEEN terms is folded into a closed form —
-    p0 * (U_s*ln(p0) - (L_total - L_seen)) — computed from per-source
-    aggregates over the SEEN relation plus two corpus scalars folded
-    as literals (the BM25 pattern), so no source-x-vocabulary grid is
-    ever materialized."""
-    toks = docs.select(
-        F.col(source_col).alias("source"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: F.length(t) > 0,
-            )
-        ).alias("term"),
-    )
-    st = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("c"))
-    return kl_divergence_from_counts(st, top_v)
-
-
 def kl_divergence_from_counts(st: DataFrame, top_v: int = 2048) -> DataFrame:
-    """The smoothed-KL core of :func:`source_drift`, factored over a
-    pre-aggregated ``(source, term, c)`` count relation so any
-    categorical distribution per group — unigrams, extracted concept
-    ids, URL hosts — gets the same closed-form drift score with the
-    same engine-exact expression shapes (the exact arithmetic the
-    ``txt_source_drift`` oracle replays).
+    """Smoothed KL divergence of each source's distribution from the
+    corpus distribution, over a pre-aggregated ``(source, term, c)``
+    count relation, so any categorical distribution per group
+    (unigrams, extracted concept ids, URL hosts) gets the same
+    closed-form score with engine-exact expression shapes (the
+    arithmetic the ``kg_source_reliability`` oracle replays).
 
     ``st`` feeds FIVE consumers (top-V ranking, the two scalar
     collects' chains, ns, and the seen-sum), so it is staged as
@@ -968,196 +166,6 @@ def kl_divergence_from_counts(st: DataFrame, top_v: int = 2048) -> DataFrame:
                 ),
                 6,
             ).alias("kl_corpus"),
-        )
-        .orderBy("source")
-    )
-
-
-def source_boilerplate(
-    docs: DataFrame,
-    min_frac: float = 0.3,
-    min_docs: int = 2,
-    source_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-SOURCE boilerplate profile — the production sibling of the
-    corpus-wide line dedup (remove_duplicate_lines): nav menus, cookie
-    banners and footers repeat within a domain, not across the whole
-    web, so the deployable detector keys line document-frequency by
-    source.  A line is boilerplate for its source when it appears in
-    >= max(``min_docs``, ceil(``min_frac`` * source docs)) distinct
-    documents of THAT source.
-
-    -> (source, n_docs, n_lines, n_boilerplate, boiler_char_frac):
-    distinct-line inventory, how many are template lines, and the
-    fraction of the source's non-blank character mass those lines
-    account for (the actual cleanup payoff), rounded 6, ordered by
-    source.
-
-    Scale shape: lines shuffle as (source, md5(line), doc_id) — text
-    leaves the scan stage only as per-line lengths; the per-source
-    doc counts broadcast; char masses are two integer sums with one
-    final division.  The ceil(min_frac * n) threshold is a single
-    identical IEEE expression per engine — no accumulated float
-    enters the verdict."""
-    lines = (
-        docs.select(
-            F.col(source_col).alias("source"),
-            F.col(id_col).alias("id"),
-            F.explode(F.split(F.col(text_col), "\n")).alias("line"),
-        )
-        .where(F.trim("line") != "")
-        .select(
-            "source", "id", F.md5("line").alias("lh"),
-            F.length("line").cast("long").alias("len"),
-        )
-    )
-    nd = lines.groupBy("source").agg(F.count_distinct("id").alias("n_docs"))
-    thr = nd.select(
-        "source",
-        F.greatest(
-            F.lit(min_docs).cast("long"),
-            F.ceil(F.lit(float(min_frac)) * F.col("n_docs")).cast("long"),
-        ).alias("_thr"),
-    )
-    df_ = lines.groupBy("source", "lh").agg(
-        F.count_distinct("id").alias("_df"),
-        F.count(F.lit(1)).alias("_occ"),
-        F.sum("len").alias("_mass"),
-    )
-    flagged = df_.join(F.broadcast(thr), "source").select(
-        "source", "lh", "_mass",
-        (F.col("_df") >= F.col("_thr")).alias("_boiler"),
-    )
-    per = flagged.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(F.when(F.col("_boiler"), 1).otherwise(0)).alias("n_boilerplate"),
-        F.sum("_mass").alias("_total_mass"),
-        F.sum(F.when(F.col("_boiler"), F.col("_mass")).otherwise(0)).alias("_bmass"),
-    )
-    return (
-        nd.join(per, "source")
-        .select(
-            "source",
-            "n_docs",
-            "n_lines",
-            "n_boilerplate",
-            F.round(
-                F.col("_bmass").cast("double") / F.col("_total_mass"), 6
-            ).alias("boiler_char_frac"),
-        )
-        .orderBy("source")
-    )
-
-
-def host_budget(
-    docs: DataFrame,
-    budget: int = 10,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-host page budget (the crawl-politeness / anti-domination
-    allocator): keep at most ``budget`` pages per source, best quality
-    first — the standard cap that stops one mega-host from dominating
-    a training mix no matter how many pages it serves, applied AFTER
-    per-page gates (curate_corpus) and BEFORE mixture sampling.
-    Complements curate_by_source (which gates WHOLE sources) by
-    rationing within every surviving source.
-
-    Ranking is round-6 quality desc with doc-id tie-break — the
-    round-before-compare + integer-tie contract, so the kept set is
-    deterministic and engine-replayable.
-
-    -> kept rows (source, doc_id, quality_score, rank 1..budget),
-    ordered (source, rank).
-
-    Scale shape: quality is a scan-stage expression; the ONLY shuffle
-    is the per-source window partition — bounded by host fan-out, and
-    hosts are exactly the key a web-table is already partitioned by
-    in practice, making this a map-side window after a bucketed
-    layout."""
-    q = F.round(tf.quality_features(F.col(text_col))["quality_score"], 6)
-    w = Window.partitionBy(source_col).orderBy(F.desc("quality_score"), id_col)
-    return (
-        docs.select(source_col, id_col, q.alias("quality_score"))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= budget)
-        .orderBy(source_col, "rank")
-    )
-
-
-def effective_tokens(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
-    """Dedup-aware token-budget accounting per source: how many tokens
-    a source CLAIMS to contribute vs how many it actually adds once
-    exact duplicates are counted once — the planning number behind
-    "how big is the training set really" and per-source sampling
-    weights (a mirror source with 10^9 raw tokens and 10^6 effective
-    ones should be weighted by the latter).
-
-    A duplicate's tokens are attributed to the fingerprint WINNER's
-    source (min id across the whole corpus — the same survivor rule as
-    ``curate_corpus``), so cross-source duplicates are credited to the
-    source that contributed the earliest copy and every fingerprint is
-    counted exactly once globally (the per-source effective columns
-    sum to the corpus-level unique totals).
-
-    -> (source, n_docs, raw_tokens, unique_docs, effective_tokens,
-    dup_token_frac), ordered by source.  ``dup_token_frac`` is
-    1 - effective/raw (round 6), 0.0 for an empty-token source; a
-    source whose every document loses its fingerprint race elsewhere
-    shows effective_tokens 0.
-
-    Scale shape: one narrow scan projection (source, id, 16-byte fp,
-    token count — text never shuffles), then two hash aggs: by source
-    (raw) and by fingerprint (min_by winner, the exact-dedup shuffle
-    already paid by ``curate_corpus``), re-agged by winner source and
-    joined back on the LOW-cardinality source key.  No windows, no
-    self-joins."""
-    feats = docs.select(
-        F.col(id_col).alias("id"),
-        F.col(source_col).alias("source"),
-        tf.token_count(F.col(text_col)).cast("long").alias("n_tokens"),
-        tf.fingerprint(F.col(text_col)).alias("fp"),
-    )
-    raw = feats.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("raw_tokens"),
-    )
-    winners = (
-        feats.groupBy("fp")
-        .agg(F.min_by(F.struct("source", "n_tokens"), F.col("id")).alias("w"))
-        .select(F.col("w.source").alias("source"), F.col("w.n_tokens").alias("n_tokens"))
-    )
-    eff = winners.groupBy("source").agg(
-        F.count(F.lit(1)).alias("unique_docs"),
-        F.sum("n_tokens").alias("effective_tokens"),
-    )
-    return (
-        raw.join(eff, "source", "left")
-        .select(
-            "source",
-            "n_docs",
-            "raw_tokens",
-            F.coalesce("unique_docs", F.lit(0)).cast("long").alias("unique_docs"),
-            F.coalesce("effective_tokens", F.lit(0)).cast("long").alias("effective_tokens"),
-            F.when(
-                F.col("raw_tokens") > 0,
-                F.round(
-                    F.lit(1.0)
-                    - F.coalesce("effective_tokens", F.lit(0)).cast("double")
-                    / F.col("raw_tokens").cast("double"),
-                    6,
-                ),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("dup_token_frac"),
         )
         .orderBy("source")
     )

@@ -1,19 +1,5 @@
-"""Deduplication operators for web-scale training-data pipelines.
-
-Five methods over a document table ``(doc_id, text, ...)``:
-
-* exact / normalized exact — hash groupBy (one shuffle on a 16-byte
-  key; at 100 TB the md5 projection pushes only (id, hash) through it)
-* MinHash + LSH — shingle -> k minhashes -> bands -> bucket equi-join;
-  candidate pairs come from bucket co-membership, never a cross join
-* SimHash — 64-bit sign-aggregated fingerprint, near-dup = bucket on
-  bit-prefix + hamming check within buckets
-* n-gram Jaccard — token-shingle set overlap over bucketed candidates
-  (exposed brute within-group for the small oracle-checked variant)
-* embedding cosine — see similarity.py (reused here for near-dup)
-
-All hashing derives from xxhash64/md5 of (seed, shingle) so every run
-is deterministic with zero driver-side RNG.
+"""Scratch-parquet staging for intermediates that several consumers
+read (the driver's shared extraction tables, the KL count relation).
 """
 
 from __future__ import annotations
@@ -22,301 +8,6 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..functions.text import fingerprint
-
-
-def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact-dup groups by raw-text md5: (text_hash, dup_cnt,
-    canonical_id = min id).  Only groups with >1 member."""
-    return (
-        df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col).alias("id"))
-        .groupBy("text_hash")
-        .agg(F.count("*").alias("dup_cnt"), F.min("id").alias("canonical_id"))
-        .where(F.col("dup_cnt") > 1)
-    )
-
-
-def normalized_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Same, over the whitespace/case-normalized fingerprint."""
-    return (
-        df.select(fingerprint(F.col(text_col)).alias("text_hash"), F.col(id_col).alias("id"))
-        .groupBy("text_hash")
-        .agg(F.count("*").alias("dup_cnt"), F.min("id").alias("canonical_id"))
-        .where(F.col("dup_cnt") > 1)
-    )
-
-
-def _word_shingles(text_col, n: int):
-    """Array of n-word shingles (lowercased, whitespace tokens) —
-    pure array lambdas, per-row JVM work."""
-    toks = F.split(F.trim(F.regexp_replace(F.lower(text_col), r"\s+", " ")), " ")
-    # short-doc guard: sequence(1, 0) would DESCEND (step -1) and then
-    # slice(toks, 0, n) throws INVALID_PARAMETER_VALUE.START — docs with
-    # fewer than n tokens must yield an empty shingle array instead
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    hash_family: str = "xxh64",
-) -> DataFrame:
-    """(id, sig: array<bigint>) — sig[i] = min over shingles of
-    g_i(shingle).  Computed entirely JVM-side with array lambdas: no
-    UDF, no shuffle (per-row work).
-
-    ``hash_family``: ``"xxh64"`` (default, fastest — the two-hash
-    rotate-combine family below) or ``"md5"`` — g_i(s) =
-    md5(f"{i}:" + s) compared AS A HEX STRING (fixed-width lowercase
-    hex orders lexicographically == numerically), so an external SQL
-    engine (DuckDB oracle) can recompute the identical signature.
-    md5 costs k digests per shingle vs 2 for xxh64; it exists for
-    cross-engine verification, not production.
-
-    Hash family: g_i(s) = h1(s) XOR rotl(h2(s), i), with h1 =
-    xxhash64(s) and h2 = xxhash64(1, h1) — the two-hash construction
-    (Kirsch-Mitzenmacher-style; rotate-combine instead of the textbook
-    h1 + i*h2 because ANSI-mode long addition traps on overflow while
-    bitwise ops never do).  Each shingle STRING is hashed exactly
-    TWICE regardless of k; the k functions are then one rotate+xor
-    each.  Rotation distance uses odd strides (i*19+7 mod 64) so
-    distinct i never share a rotation.
-
-    Plan shape (load-bearing, measured 25x on 100k docs): the
-    projection is STAGED — filter on raw token count first, then
-    shingles, then h1, then (h1, h2), then the k mins.  A single
-    select computing h1/h2 with a `where(size(_h1) > 0)` on top
-    re-evaluates the whole shingle+hash pipeline once in the
-    pushed-down Filter and once per projection consumer, and the
-    resulting mega-expression falls out of whole-stage codegen; the
-    staged form evaluates each stage once (9.2 s -> 0.37 s on the
-    same input).  Keep multi-referenced non-cheap aliases (_h1) out
-    of single-select + where combinations."""
-    if hash_family not in ("xxh64", "md5"):
-        raise ValueError(f"hash_family must be 'xxh64' or 'md5', got {hash_family!r}")
-    toks = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
-    # docs with zero shingles (< shingle_n tokens) carry no signature:
-    # an all-null sig would LSH-hash every short doc into ONE bucket —
-    # a quadratic skew bomb on real web corpora full of stub pages.
-    # Filter on the raw token count so no shingle work is re-evaluated
-    # under predicate-pushdown substitution.
-    lvl0 = df.where(F.size(toks) >= shingle_n)
-    lvl1 = lvl0.select(
-        F.col(id_col).alias("id"),
-        _word_shingles(F.col(text_col), shingle_n).alias("_sh"),
-    )
-    if hash_family == "md5":
-        # closure, NOT a default-arg lambda: pyspark passes the array
-        # index to any binary lambda, shadowing a captured default
-        def _md5_min(prefix: str):
-            return F.array_min(
-                F.transform("_sh", lambda s: F.md5(F.concat(F.lit(prefix), s)))
-            )
-
-        sig = F.array(*[_md5_min(f"{i}:") for i in range(num_hashes)])
-        return lvl1.select("id", sig.alias("sig"))
-    lvl2 = lvl1.select("id", F.transform("_sh", lambda s: F.xxhash64(s)).alias("_h1"))
-    lvl3 = lvl2.select(
-        "id", "_h1", F.transform("_h1", lambda h: F.xxhash64(F.lit(1), h)).alias("_h2")
-    )
-
-    def _rotl(col, r: int):
-        if r == 0:
-            return col
-        return F.shiftleft(col, r).bitwiseOR(F.shiftrightunsigned(col, 64 - r))
-
-    def _min_hash_i(i: int):
-        # NOTE: lambdas here MUST be unary — pyspark passes (element,
-        # array_index) to a binary lambda, so a `lambda h, i=i:` binds
-        # the ARRAY INDEX over the captured hash-function index and
-        # every signature position computes the same function (caught
-        # by the exact pytest oracle in test_rowsonly_oracles).
-        r = (i * 19 + 7) % 64
-        return F.array_min(
-            F.zip_with("_h1", "_h2", lambda a, b: a.bitwiseXOR(_rotl(b, r)))
-        )
-
-    sig = F.array(*[_min_hash_i(i) for i in range(num_hashes)])
-    return lvl3.select("id", sig.alias("sig"))
-
-
-def _bucket_array(bands: int, rows_per_band: int, hash_family: str):
-    """array of per-band LSH bucket hashes over the ``sig`` column —
-    buckets[b] = hash of signature positions [b*r, (b+1)*r)."""
-
-    def _bucket(b: int):
-        elems = [F.col("sig").getItem(b * rows_per_band + r) for r in range(rows_per_band)]
-        if hash_family == "md5":
-            return F.md5(F.concat_ws("|", *elems))
-        return F.xxhash64(*elems)
-
-    return F.array(*[_bucket(b) for b in range(bands)])
-
-
-def _band_rows(
-    signatures: DataFrame, bands: int, rows_per_band: int, hash_family: str
-) -> DataFrame:
-    """(id, band, bucket) — one row per band per doc; the LSH join key
-    relation shared by the batch path and the incremental index."""
-    return signatures.select(
-        "id",
-        F.posexplode(_bucket_array(bands, rows_per_band, hash_family)).alias(
-            "band", "bucket"
-        ),
-    )
-
-
-def minhash_lsh_candidates(
-    signatures: DataFrame,
-    bands: int = 8,
-    rows_per_band: int = 4,
-    hash_family: str = "xxh64",
-) -> DataFrame:
-    """Band the signature, hash each band to a bucket, equi-join within
-    (band, bucket): candidate pairs (a_id, b_id) with a_id < b_id.
-    This is the scale path — the join key is (band_idx, bucket_hash) so
-    skew is bounded by true near-dup cluster sizes.
-
-    ``hash_family="md5"`` pairs with md5-family signatures (string
-    elements): bucket = md5 of the '|'-joined band slice, so the DuckDB
-    oracle reproduces the bucketing bit-for-bit."""
-    banded = _band_rows(signatures, bands, rows_per_band, hash_family)
-    l = banded.alias("l")
-    r = banded.alias("r")
-    return (
-        l.join(r, ["band", "bucket"])
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("a_id"), F.col("r.id").alias("b_id"))
-        .distinct()
-    )
-
-
-def minhash_jaccard_estimate(signatures: DataFrame, candidates: DataFrame) -> DataFrame:
-    """Estimated Jaccard for candidate pairs = fraction of equal
-    signature positions (two broadcast-able joins at dict scale; at
-    100 TB this is a shuffle join on id — fine, candidates are rare)."""
-    a = signatures.select(F.col("id").alias("a_id"), F.col("sig").alias("sig_a"))
-    b = signatures.select(F.col("id").alias("b_id"), F.col("sig").alias("sig_b"))
-    j = candidates.join(a, "a_id").join(b, "b_id")
-    eq = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda z: z))
-    return j.select(
-        "a_id", "b_id", (eq / F.size("sig_a")).cast("double").alias("est_jaccard")
-    )
-
-
-def simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_family: str = "xxh64",
-) -> DataFrame:
-    """64-bit SimHash over word tokens: bit b of the fingerprint is the
-    sign of sum over tokens of (+1 if bit b of hash64(token) else -1).
-    Pure array math per row — no UDF, no shuffle.
-
-    ``hash_family``: ``"xxh64"`` (default) or ``"md5"`` — the token
-    hash becomes the first 16 hex chars of md5(token) read as a
-    big-endian 64-bit value (reassembled from conv() on a 1+15 hex
-    split, since a 16-digit conv can exceed the signed-long cast under
-    ANSI).  A SQL oracle recomputes the same bits nibble-by-nibble;
-    see __spark_entry__.oracle_sql()["dd_simhash"].
-
-    Plan shape: the token-hash array is STAGED into its own projection
-    so the 64 per-bit aggregates consume an attribute; inlining the
-    split+hash expression into each bit_sum re-tokenizes and re-hashes
-    the text 64x per row (same pathology as minhash_signatures)."""
-    if hash_family not in ("xxh64", "md5"):
-        raise ValueError(f"hash_family must be 'xxh64' or 'md5', got {hash_family!r}")
-
-    def _tok_hash(t):
-        if hash_family == "xxh64":
-            return F.xxhash64(t)
-        h = F.md5(t)
-        top = F.conv(F.substring(h, 1, 1), 16, 10).cast("long")  # bits 63..60
-        rest = F.conv(F.substring(h, 2, 15), 16, 10).cast("long")  # bits 59..0
-        return F.shiftleft(top, 60).bitwiseOR(rest)
-
-    toks = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
-    staged = df.where(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(id_col).alias("id"),
-        F.transform(toks, lambda t: _tok_hash(t)).alias("_hs"),
-    )
-    bit_sum = lambda b: F.aggregate(  # noqa: E731
-        F.col("_hs"),
-        F.lit(0),
-        lambda acc, h: acc
-        + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)).otherwise(F.lit(-1)),
-    )
-    fp = None
-    for b in range(64):
-        bit = F.when(bit_sum(b) > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, b)
-        fp = term if fp is None else fp.bitwiseXOR(term)
-    return staged.select("id", fp.alias("simhash"))
-
-
-def simhash_candidates(
-    fps: DataFrame,
-    prefix_bits: int = 16,
-    max_hamming: int = 3,
-    rotations: int = 1,
-) -> DataFrame:
-    """Near-dup pairs: bucket on the fingerprint's top bits, compare
-    hamming distance within buckets (classic rotate-and-bucket).
-
-    ``rotations``: bucket under r rotated views of the fingerprint
-    (rotation j rotates left by j*64//r bits) and union the candidate
-    sets.  One rotation misses a pair whose differing bits fall inside
-    the prefix window; r rotations guarantee recall when max_hamming <
-    r and the differing bits are spread across windows (probabilistic
-    otherwise — the standard recall/cost dial).  Pairs surfacing from
-    several rotations dedup on (a_id, b_id); cost is r bucket
-    equi-joins, never all-pairs."""
-
-    def _rot(col, r: int):
-        r %= 64
-        if r == 0:
-            return col
-        return F.shiftleft(col, r).bitwiseOR(F.shiftrightunsigned(col, 64 - r))
-
-    step = 64 // rotations if rotations > 1 else 0
-    bucketed = fps.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("rot"),
-                        F.shiftright(
-                            _rot(F.col("simhash"), j * step), 64 - prefix_bits
-                        ).alias("bucket"),
-                    )
-                    for j in range(rotations)
-                ]
-            )
-        ).alias("rb"),
-    ).select("id", "simhash", "rb.rot", "rb.bucket")
-    l = bucketed.alias("l")
-    r = bucketed.alias("r")
-    ham = F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash")))
-    return (
-        l.join(r, ["rot", "bucket"])
-        .where(F.col("l.id") < F.col("r.id"))
-        .where(ham <= max_hamming)
-        .select(
-            F.col("l.id").alias("a_id"), F.col("r.id").alias("b_id"), ham.alias("hamming")
-        )
-        .dropDuplicates(["a_id", "b_id"])
-    )
 
 
 _SCRATCH = {"dir": None, "n": 0}
@@ -354,916 +45,3 @@ def stage_parquet(df: DataFrame, label: str = "stage") -> DataFrame:
     path = os.path.join(_scratch_dir(), f"{label}_{_SCRATCH['n']:05d}")
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
-
-
-def collapse_exact_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> tuple[DataFrame, DataFrame]:
-    """(representatives, membership) for exact-text groups: one winner
-    row (min id) per distinct text, plus the (rep_id, id) long table.
-
-    This is the guard against the degenerate-dup-group candidate
-    blowup: a corpus with a viral boilerplate page repeated n times
-    makes every signature-bucket self-join emit C(n, 2) rows through
-    the whole candidate machinery (bucket join, hamming/estimate,
-    rotation dedup).  Collapsing first sends ONE row per distinct text
-    into candidate generation; the C(n, 2) true-dup pairs are
-    reconstructed afterwards by cheap (rep_id, id) joins — linear in
-    the genuine output, never in the candidate machinery.
-
-    Shuffle shape: one groupBy on md5(text) with the text column
-    pruned before the exchange (partial agg carries only the 32-char
-    key + id), one id-semi-join to fetch winner rows, one key-join for
-    membership.  No full-row struct agg (SortAggregate pathology)."""
-    keyed = df.select(
-        F.col(id_col).alias("id"), F.md5(F.col(text_col).cast("string")).alias("_gkey")
-    )
-    winners = keyed.groupBy("_gkey").agg(F.min("id").alias("rep_id"))
-    reps = df.join(
-        winners.select(F.col("rep_id").alias(id_col)), id_col, "semi"
-    )
-    membership = keyed.join(winners, "_gkey").select("rep_id", "id")
-    return reps, membership
-
-
-def _expand_rep_pairs(rep_pairs: DataFrame, surviving_members: DataFrame, value_cols):
-    """Re-expand candidate pairs over representatives into pairs over
-    all group members: cross-group pairs via two membership joins,
-    within-group pairs via a membership self-join.  ``value_cols`` maps
-    output column name -> literal value a within-group (identical-text)
-    pair carries."""
-    mem = surviving_members
-    cross = (
-        rep_pairs.join(
-            mem.select(F.col("rep_id").alias("a_id"), F.col("id").alias("_x")), "a_id"
-        )
-        .join(mem.select(F.col("rep_id").alias("b_id"), F.col("id").alias("_y")), "b_id")
-        .select(
-            F.least("_x", "_y").alias("a_id"),
-            F.greatest("_x", "_y").alias("b_id"),
-            *value_cols,
-        )
-    )
-    a = mem.select("rep_id", F.col("id").alias("a_id"))
-    b = mem.select("rep_id", F.col("id").alias("b_id"))
-    schema = {f.name: f.dataType for f in cross.schema.fields}
-    within = (
-        a.join(b, "rep_id")
-        .where(F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            *[
-                F.lit(_WITHIN_PAIR_VALUES[c]).cast(schema[c]).alias(c)
-                for c in cross.columns
-                if c not in ("a_id", "b_id")
-            ],
-        )
-    )
-    return cross.unionByName(within)
-
-
-# value a within-group (identical-text) pair carries per metric column
-_WITHIN_PAIR_VALUES = {
-    "hamming": 0,
-    "est_jaccard": 1.0,
-}
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_family: str = "xxh64",
-    prefix_bits: int = 16,
-    max_hamming: int = 3,
-    rotations: int = 1,
-    collapse_exact: bool = True,
-) -> DataFrame:
-    """End-to-end SimHash near-dup pairs (a_id, b_id, hamming:int).
-
-    ``collapse_exact=True`` (default) routes exact-text groups out
-    before the bucket self-join (collapse_exact_groups) and re-expands
-    afterwards — identical output, but a viral boilerplate page costs
-    one candidate row instead of C(n, 2) through the join machinery.
-    Fingerprint/membership tables are cached: each feeds 2+ joins."""
-    if not collapse_exact:
-        fps = simhash(df, text_col, id_col, hash_family).cache()
-        pairs = simhash_candidates(fps, prefix_bits, max_hamming, rotations)
-        return pairs.withColumn("hamming", F.col("hamming").cast("int"))
-    reps, mem = collapse_exact_groups(df, text_col, id_col)
-    fps = simhash(reps, text_col, id_col, hash_family).cache()
-    rep_pairs = simhash_candidates(fps, prefix_bits, max_hamming, rotations).withColumn(
-        "hamming", F.col("hamming").cast("int")
-    )
-    # groups whose text was filtered out of fingerprinting (empty text)
-    # drop out of membership the same way their representative did
-    surv = mem.join(fps.select(F.col("id").alias("rep_id")), "rep_id", "semi").cache()
-    return _expand_rep_pairs(rep_pairs, surv, [F.col("hamming")])
-
-
-def minhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    rows_per_band: int = 4,
-    threshold: float = 0.5,
-    hash_family: str = "xxh64",
-    collapse_exact: bool = True,
-) -> DataFrame:
-    """End-to-end MinHash+LSH near-dup pairs
-    (a_id, b_id, est_jaccard:double) with est_jaccard >= threshold.
-
-    Same collapse-first guard as simhash_near_dup_pairs: identical
-    texts share a signature, so the LSH band join and the (wide,
-    sig-carrying) jaccard-estimate joins see one row per distinct
-    text; within-group pairs re-expand to est_jaccard = 1.0 exactly
-    (all signature positions equal).
-
-    The signature table feeds FOUR consumers (both sides of the band
-    self-join + both sides of the estimate join) and is staged as a
-    scratch parquet, not cached — see stage_parquet for the measured
-    BlockManager pathology on wide signature rows."""
-    if not collapse_exact:
-        sigs = stage_parquet(
-            minhash_signatures(df, text_col, id_col, shingle_n, num_hashes, hash_family),
-            "mh_sigs",
-        )
-        cands = minhash_lsh_candidates(sigs, bands, rows_per_band, hash_family)
-        return minhash_jaccard_estimate(sigs, cands).where(
-            F.col("est_jaccard") >= threshold
-        )
-    reps, mem = collapse_exact_groups(df, text_col, id_col)
-    sigs = stage_parquet(
-        minhash_signatures(reps, text_col, id_col, shingle_n, num_hashes, hash_family),
-        "mh_sigs",
-    )
-    cands = minhash_lsh_candidates(sigs, bands, rows_per_band, hash_family)
-    rep_pairs = minhash_jaccard_estimate(sigs, cands).where(
-        F.col("est_jaccard") >= threshold
-    )
-    surv = mem.join(sigs.select(F.col("id").alias("rep_id")), "rep_id", "semi").cache()
-    return _expand_rep_pairs(rep_pairs, surv, [F.col("est_jaccard")])
-
-
-def _shingle_sets(df, text_col, id_col, shingle_n, group_col=None):
-    """(id [, grp], sh: sorted distinct shingle hashes, n: |sh|).
-
-    Filter runs on the raw token count BEFORE the shingle projection;
-    a ``where(size(sh) > 0)`` on top would be pushed below the project
-    with the whole shingle expression substituted in — evaluating the
-    tokenize+shingle+hash pipeline twice per row."""
-    toks = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
-    sh = F.array_sort(
-        F.array_distinct(
-            F.transform(_word_shingles(F.col(text_col), shingle_n), lambda s: F.xxhash64(s))
-        )
-    )
-    return (
-        df.where(F.size(toks) >= shingle_n)
-        .select(
-            F.col(id_col).alias("id"),
-            *([F.col(group_col).alias("grp")] if group_col else []),
-            sh.alias("sh"),
-        )
-        .withColumn("n", F.size("sh"))
-    )
-
-
-def ngram_jaccard_prefix_candidates(
-    df: DataFrame,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """EXACT candidate generation via prefix filtering (PPJoin family):
-    under any global token order, J(a,b) >= t implies |a∩b| >= ⌈t·|a|⌉,
-    so the first |a| - ⌈t·|a|⌉ + 1 sorted shingles of each side must
-    share an element.  The self-join runs on exploded PREFIX tokens
-    only — never all pairs, never full shingle arrays through the
-    shuffle.  Global order = hash order (≈uniform doc frequency); a
-    frequency-ascending order would prune harder but needs a stats
-    pass.  Returns distinct (a_id, b_id) with a size-ratio prefilter
-    applied (J <= min/max)."""
-    base = _shingle_sets(df, text_col, id_col, shingle_n)
-    plen = F.col("n") - F.ceil(F.col("n") * F.lit(float(threshold))).cast("int") + F.lit(1)
-    ex = base.select(
-        "id", "n", F.explode(F.slice("sh", F.lit(1), plen)).alias("h")
-    )
-    l, r = ex.alias("l"), ex.alias("r")
-    return (
-        l.join(r, "h")
-        .where(F.col("l.id") < F.col("r.id"))
-        .where(
-            F.least("l.n", "r.n") >= F.greatest("l.n", "r.n") * F.lit(float(threshold))
-        )
-        .select(F.col("l.id").alias("a_id"), F.col("r.id").alias("b_id"))
-        .distinct()
-    )
-
-
-def ngram_jaccard_verify(
-    df: DataFrame,
-    candidates: DataFrame,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact Jaccard over a candidate-pair DataFrame (a_id, b_id) —
-    the verify step behind every bucketed/prefix candidate source."""
-    base = _shingle_sets(df, text_col, id_col, shingle_n)
-    a = base.select(F.col("id").alias("a_id"), F.col("sh").alias("sh_a"), F.col("n").alias("n_a"))
-    b = base.select(F.col("id").alias("b_id"), F.col("sh").alias("sh_b"), F.col("n").alias("n_b"))
-    j = candidates.join(a, "a_id").join(b, "b_id")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = (inter / (F.col("n_a") + F.col("n_b") - inter)).cast("double")
-    return j.select(
-        "a_id", "b_id", F.round(jac, 6).alias("jaccard")
-    ).where(F.col("jaccard") >= threshold)
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str | None = None,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs.  Path selection (all EXACT output):
-
-    * ``candidates`` given — verify those pairs only (e.g. from
-      minhash_lsh_candidates for approximate recall, or any external
-      blocking).
-    * ``group_col`` given — within-group join (bounded small groups).
-    * neither — prefix-filtered self-join (scale-safe default; the
-      former all-pairs cross join is gone)."""
-    if candidates is not None:
-        return ngram_jaccard_verify(df, candidates, threshold, shingle_n, text_col, id_col)
-    if group_col is None:
-        cands = ngram_jaccard_prefix_candidates(df, threshold, shingle_n, text_col, id_col)
-        return ngram_jaccard_verify(df, cands, threshold, shingle_n, text_col, id_col)
-    # Distinct shingles hashed to longs (set cardinality preserved;
-    # long-array intersections are far cheaper than string ones) + a
-    # within-group path: size-ratio prefilter (J <= min/max) bounds the
-    # join; groups must be small (the oracle-checkable variant)
-    base = _shingle_sets(df, text_col, id_col, shingle_n, group_col)
-    l = base.alias("l")
-    r = base.alias("r")
-    joined = (
-        l.join(r, [F.col("l.grp") == F.col("r.grp")])
-        .where(F.col("l.id") < F.col("r.id"))
-        .where(
-            F.least("l.n", "r.n") >= F.greatest("l.n", "r.n") * F.lit(float(threshold))
-        )
-    )
-    inter = F.size(F.array_intersect(F.col("l.sh"), F.col("r.sh")))
-    union = F.col("l.n") + F.col("r.n") - inter
-    jac = (inter / union).cast("double")
-    return joined.select(
-        F.col("l.id").alias("a_id"),
-        F.col("r.id").alias("b_id"),
-        F.round(jac, 6).alias("jaccard"),
-    ).where(F.col("jaccard") >= threshold)
-
-
-def decontaminate(
-    df: DataFrame,
-    benchmark: DataFrame,
-    shingle_n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
-) -> DataFrame:
-    """Benchmark decontamination: flag training documents sharing any
-    ``shingle_n``-gram with a benchmark/eval set — the standard
-    n-gram-overlap rule (GPT-3-style 8+-token collision) that keeps
-    eval data out of the training corpus.
-
-    Scale shape: the benchmark's distinct shingle hashes are a SMALL
-    side (eval sets are thousands of docs, not billions) — broadcast
-    semi-join against the corpus' exploded shingles, then a groupBy
-    per doc.  The corpus side never shuffles its text: only (id,
-    shingle-hash) pairs move, and the broadcast prunes them map-side.
-    Returns (id, n_hits) for CONTAMINATED docs only; anti-join the ids
-    against the corpus to drop them (or keep the hit count for
-    audit-then-drop pipelines)."""
-    bench_sh = (
-        benchmark.select(
-            F.explode(
-                F.transform(
-                    _word_shingles(F.col(bench_text_col), shingle_n),
-                    lambda s: F.xxhash64(s),
-                )
-            ).alias("h")
-        )
-        .distinct()
-    )
-    toks = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
-    corpus = df.where(F.size(toks) >= shingle_n).select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array_distinct(
-                F.transform(_word_shingles(F.col(text_col), shingle_n), lambda s: F.xxhash64(s))
-            )
-        ).alias("h"),
-    )
-    return (
-        corpus.join(F.broadcast(bench_sh), "h", "left_semi")
-        .groupBy("id")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-    )
-
-
-def ngram_jaccard_pairs_inverted(
-    df: DataFrame,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str | None = None,
-) -> DataFrame:
-    """Inverted-index variant of :func:`ngram_jaccard_pairs`: explode
-    distinct shingle hashes, self-join on (group, shingle) so candidate
-    pairs surface only from shared shingles, count = |intersection|.
-    Identical output; wins when shingle doc-frequencies are LOW
-    (real web corpora), loses quadratically on hot shingles — pick by
-    corpus stats, or cap df and re-rank survivors exactly."""
-    sh = F.array_distinct(
-        F.transform(_word_shingles(F.col(text_col), shingle_n), lambda s: F.xxhash64(s))
-    )
-    grp = [F.col(group_col).alias("grp")] if group_col else []
-    base = (
-        df.select(F.col(id_col).alias("id"), *grp, sh.alias("sh"))
-        .where(F.size("sh") > 0)
-        .withColumn("n", F.size("sh"))
-    )
-    ex = base.select("id", *(["grp"] if group_col else []), F.explode("sh").alias("h"))
-    join_keys = (["grp"] if group_col else []) + ["h"]
-    inter = (
-        ex.alias("l")
-        .join(ex.alias("r"), join_keys)
-        .where(F.col("l.id") < F.col("r.id"))
-        .groupBy(F.col("l.id").alias("a_id"), F.col("r.id").alias("b_id"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes = base.select("id", "n")
-    joined = (
-        inter.join(sizes.withColumnRenamed("id", "a_id").withColumnRenamed("n", "n_a"), "a_id")
-        .join(sizes.withColumnRenamed("id", "b_id").withColumnRenamed("n", "n_b"), "b_id")
-    )
-    jac = (F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))).cast("double")
-    return joined.select(
-        "a_id", "b_id", F.round(jac, 6).alias("jaccard")
-    ).where(F.col("jaccard") >= threshold)
-
-
-def minhash_index_entries(
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    rows_per_band: int = 4,
-    hash_family: str = "xxh64",
-) -> DataFrame:
-    """(id, sig, buckets) index rows for a batch — the content-addressed
-    unit the incremental dedup index stores.  One row per doc keyed on
-    id, with the band buckets as an ARRAY column: a re-ingested doc
-    replaces its whole row atomically under MERGE, so the index can
-    never hold stale band rows for changed text (the failure mode of a
-    normalized (band, bucket, id) table without a delete pass)."""
-    sig = minhash_signatures(
-        batch,
-        text_col=text_col,
-        id_col=id_col,
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-        hash_family=hash_family,
-    )
-    return sig.select(
-        "id", "sig", _bucket_array(bands, rows_per_band, hash_family).alias("buckets")
-    )
-
-
-def _index_band_rows(index: DataFrame) -> DataFrame:
-    return index.select(
-        "id", F.posexplode("buckets").alias("band", "bucket")
-    )
-
-
-def incremental_near_dup_pairs(
-    spark,
-    catalog,
-    batch: DataFrame,
-    table: str = "minhash_index",
-    threshold: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    rows_per_band: int = 4,
-    hash_family: str = "xxh64",
-) -> DataFrame:
-    """Incremental cross-batch near-dup detection: dedupe a DELTA batch
-    against the already-indexed corpus plus itself, then MERGE the
-    batch into the stored index — the O(batch-vs-index) maintenance
-    loop a rolling 100 TB ingest needs instead of re-pairing the whole
-    corpus every day.  Returns (a_id, b_id, est_jaccard >= threshold)
-    with a_id < b_id, materialized BEFORE the index merge so the
-    result is a consistent pre-merge snapshot.
-
-    Union-over-batches equals the full-corpus run: a pair lands in
-    exactly one batch's output — the batch that ingested its later
-    endpoint (within-batch pairs via the batch self-join, cross pairs
-    via the batch-vs-index probe).  Re-ingesting a batch is idempotent:
-    its own ids are anti-joined out of the stored side before the
-    probe (a doc never pairs with its previous self) and the MERGE
-    replaces rows keyed on id.
-
-    Scale shape: the probe explodes the stored index's bucket arrays
-    map-side and equi-joins on (band, bucket) — skew bounded by true
-    near-dup cluster sizes exactly like the batch LSH path; signatures
-    are staged to scratch parquet (BlockManager persist is pathological
-    for wide array rows on this host); verification joins touch only
-    candidate ids.  At petabyte scale the stored index would be
-    bucketed/partitioned on the bucket key so the probe prunes files;
-    the interface boundary is this function."""
-    new_entries = stage_parquet(
-        minhash_index_entries(
-            batch,
-            text_col=text_col,
-            id_col=id_col,
-            shingle_n=shingle_n,
-            num_hashes=num_hashes,
-            bands=bands,
-            rows_per_band=rows_per_band,
-            hash_family=hash_family,
-        ),
-        "inc_dedup_sig",
-    )
-    bands_new = _index_band_rows(new_entries)
-    within = (
-        bands_new.alias("l")
-        .join(bands_new.alias("r"), ["band", "bucket"])
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("a_id"), F.col("r.id").alias("b_id"))
-    )
-    sigs_all = new_entries.select("id", "sig")
-    cands = within
-    if catalog.current_version(table) > 0:
-        old = catalog.read(spark, table).join(
-            new_entries.select("id"), "id", "left_anti"
-        )
-        cross = (
-            bands_new.alias("n")
-            .join(_index_band_rows(old).alias("o"), ["band", "bucket"])
-            .select(
-                F.least("n.id", "o.id").alias("a_id"),
-                F.greatest("n.id", "o.id").alias("b_id"),
-            )
-        )
-        cands = within.unionByName(cross)
-        sigs_all = sigs_all.unionByName(old.select("id", "sig"))
-    est = minhash_jaccard_estimate(sigs_all, cands.distinct())
-    pairs = stage_parquet(
-        est.where(F.col("est_jaccard") >= threshold), "inc_dedup_pairs"
-    )
-    catalog.merge_upsert(spark, table, new_entries, keys=["id"])
-    return pairs
-
-
-def containment_pairs(
-    df: DataFrame,
-    threshold: float = 0.8,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    candidates: DataFrame | None = None,
-    prefix_order: str = "hash",
-) -> DataFrame:
-    """Directed shingle CONTAINMENT C(a→b) = |sh(a) ∩ sh(b)| / |sh(a)|:
-    the asymmetric near-dup relation Jaccard misses.  A quoted article,
-    a page mirrored inside a larger aggregator, or a doc re-posted with
-    a long appended comment thread has containment ≈ 1 in one direction
-    while Jaccard = |a|/|b| can sit far below any sane threshold.
-    Returns (a_id, b_id, containment) with a_id the CONTAINED side,
-    both directions reported independently when mutual.
-
-    Scale shape: candidate generation is prefix-filtered on the
-    contained side only — C(a→b) >= t forces |a∩b| >= ⌈t·|a|⌉, so under
-    the global hash order the first |a| - ⌈t·|a|⌉ + 1 sorted shingles
-    of `a` must hit `b`'s postings (PPJoin prefix argument, one-sided).
-    The container side explodes all its distinct shingle hashes — the
-    inverted-index build, linear in corpus shingle mass — and the join
-    carries only (hash, id, n).  A container-size prefilter
-    (|b| >= ⌈t·|a|⌉, since |a∩b| <= |b|) prunes before the verify,
-    which re-ranks exactly via one long-array intersection per
-    surviving pair.  Pass ``candidates`` (a_id, b_id) to verify an
-    external blocking (e.g. minhash buckets) instead.
-
-    ``prefix_order``: global token order for prefix selection —
-    lossless either way (the verify is exact), but the candidate count
-    is order-dependent.  ``"hash"`` (default) needs no extra pass;
-    ``"df"`` spends one document-frequency aggregate to put each doc's
-    RAREST shingles in its prefix, so prefix postings-list hits shrink
-    from average-df to min-df per doc — the canonical PPJoin ordering,
-    and the right choice on Zipfian web corpora where a few viral
-    shingles would otherwise dominate the candidate join.  (On a tiny-
-    vocabulary synthetic corpus every shingle is hot and no ordering
-    saves the blocking — same caveat as ngram_jaccard's.)"""
-    base = _shingle_sets(df, text_col, id_col, shingle_n)
-    t = F.lit(float(threshold))
-    if candidates is None:
-        plen = F.col("n") - F.ceil(F.col("n") * t).cast("int") + F.lit(1)
-        if prefix_order == "df":
-            # one df pass + re-sort each doc's shingles rare-first; the
-            # prefix slice then carries the least-frequent tokens.
-            ex = base.select("id", "n", F.explode("sh").alias("h"))
-            dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-            resorted = (
-                ex.join(dfreq, "h")
-                .groupBy("id", "n")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("df", "h"))),
-                        lambda s: s["h"],
-                    ).alias("sh")
-                )
-            )
-            prefix = resorted.select(
-                "id", "n", F.explode(F.slice("sh", F.lit(1), plen)).alias("h")
-            )
-        else:
-            prefix = base.select(
-                "id", "n", F.explode(F.slice("sh", F.lit(1), plen)).alias("h")
-            )
-        postings = base.select("id", "n", F.explode("sh").alias("h"))
-        candidates = (
-            prefix.alias("l")
-            .join(postings.alias("r"), "h")
-            .where(F.col("l.id") != F.col("r.id"))
-            .where(F.col("r.n") >= F.ceil(F.col("l.n") * t))
-            .select(F.col("l.id").alias("a_id"), F.col("r.id").alias("b_id"))
-            .distinct()
-        )
-    a = base.select(F.col("id").alias("a_id"), F.col("sh").alias("sh_a"), F.col("n").alias("n_a"))
-    b = base.select(F.col("id").alias("b_id"), F.col("sh").alias("sh_b"))
-    cont = (F.size(F.array_intersect("sh_a", "sh_b")) / F.col("n_a")).cast("double")
-    return (
-        candidates.join(a, "a_id")
-        .join(b, "b_id")
-        .select("a_id", "b_id", F.round(cont, 6).alias("containment"))
-        .where(F.col("containment") >= threshold)
-        .orderBy("a_id", "b_id")
-    )
-
-
-def repeated_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
-    """Exact substring duplication at k-token granularity — the
-    distributed approximation of suffix-array ExactSubstr dedup
-    (Lee et al. 2022, "Deduplicating Training Data Makes Language
-    Models Better"): find every maximal token span whose k-gram
-    windows all occur ``min_count``+ times corpus-wide.  Those spans
-    are the memorization-prone boilerplate (licenses, nav bars,
-    viral quotes) that substring dedup cuts mid-document where
-    document-level MinHash can't.
-
-    -> (doc_id, span_start, span_end, span_tokens, span_text): token
-    spans [span_start, span_end) (0-based, whitespace tokens) whose
-    every k-window is duplicated; adjacent duplicated windows merge
-    into maximal spans via gaps-and-islands.
-
-    Scale shape: the k-gram enumeration is a narrow generator inside
-    the scan stage (tokenize once, explode positions, md5 the slice —
-    nothing materializes the corpus token stream twice).  Only
-    (hash) pairs shuffle for the frequency count (map-side combined;
-    the count is capped semantics-free at min_count so AQE can
-    semi-join-prune), then (id, pos) rows shuffle once for the
-    per-document island merge, whose window partitions by document —
-    bounded by document length, never by corpus size.  The final text
-    re-slice joins the tiny span table back to the tokenized scan
-    instead of dragging token arrays through the shuffles.
-
-    vs the suffix-array original: a true suffix array is a global
-    sort of every corpus position — O(total tokens log) across the
-    cluster and pointer-chasing-hostile; k-gram hashing trades "finds
-    duplicates >= k tokens, boundary-quantized to k" for two hash
-    shuffles, which is the trade every production web-scale substring
-    dedup makes (ccnet / RedPajama / Dolma variants).
-    """
-    from pyspark.sql.window import Window
-
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: F.length(t) > 0
-    )
-    base = df.select(
-        F.col(id_col).alias("id"), toks.alias("toks"), F.size(toks).alias("n")
-    ).where(F.col("n") >= k)
-    sh = base.select(
-        "id",
-        "toks",
-        F.explode(F.sequence(F.lit(0), F.col("n") - k)).alias("pos"),
-    ).select(
-        "id",
-        "pos",
-        F.md5(F.array_join(F.slice("toks", F.col("pos") + 1, k), " ")).alias("h"),
-    )
-    dup = (
-        sh.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .where(F.col("cnt") >= min_count)
-        .select("h")
-    )
-    flagged = sh.join(dup, "h").select("id", "pos")
-    w = Window.partitionBy("id").orderBy("pos")
-    isl = flagged.withColumn("grp", F.col("pos") - F.row_number().over(w))
-    spans = isl.groupBy("id", "grp").agg(
-        F.min("pos").alias("span_start"),
-        (F.max("pos") + F.lit(k)).alias("span_end"),
-    )
-    return (
-        spans.join(base.select("id", "toks"), "id")
-        .select(
-            F.col("id").alias(id_col),
-            F.col("span_start").cast("int").alias("span_start"),
-            F.col("span_end").cast("int").alias("span_end"),
-            (F.col("span_end") - F.col("span_start"))
-            .cast("long")
-            .alias("span_tokens"),
-            F.array_join(
-                F.slice(
-                    "toks",
-                    F.col("span_start") + 1,
-                    F.col("span_end") - F.col("span_start"),
-                ),
-                " ",
-            ).alias("span_text"),
-        )
-        .orderBy(id_col, "span_start")
-    )
-
-
-def ngram_novelty(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-) -> DataFrame:
-    """Corpus-order n-gram novelty score: for each document, the
-    fraction of its k-token windows whose hash was ALREADY emitted by
-    a lower-id document — the per-document "how much of this is
-    recycled text" dial.  Where :func:`repeated_spans` localizes the
-    duplicated spans, this ranks whole documents for a curation
-    funnel (drop/downweight high-dup_frac pages first), the
-    aggregate-level ExactSubstr signal RefinedWeb/Dolma-style
-    pipelines bucket on.
-
-    "Seen before" is defined by min(doc_id) over each gram hash —
-    deterministic, order-free, and exactly the semantics a daily
-    batch gets when ids are ingestion-ordered.
-
-    -> (doc_id, n_grams, dup_frac, novel_frac), rounded to 6;
-    documents shorter than k tokens carry no signal and are excluded.
-
-    Scale shape: same two-shuffle skeleton as repeated_spans — the
-    gram generator is narrow inside the scan stage (tokenize once,
-    hash the slice; token arrays never shuffle), then (hash) pairs
-    shuffle once for the min-id table (map-side combined) and (id)
-    rows once for the per-doc fraction.  The gram->first join is an
-    equi-join on the gram-vocabulary relation."""
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: F.length(t) > 0
-    )
-    base = df.select(
-        F.col(id_col).alias("id"), toks.alias("toks"), F.size(toks).alias("n")
-    ).where(F.col("n") >= k)
-    grams = base.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.col("n") - (k - 1)),
-                lambda p: F.md5(F.concat_ws(" ", F.slice(F.col("toks"), p, k))),
-            )
-        ).alias("h"),
-    )
-    firsts = grams.groupBy("h").agg(F.min("id").alias("first_id"))
-    return (
-        grams.join(firsts, "h")
-        .groupBy(F.col("id").alias(id_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum((F.col("first_id") < F.col("id")).cast("long")).alias("seen"),
-        )
-        .select(
-            id_col,
-            "n_grams",
-            F.round(F.col("seen") / F.col("n_grams"), 6).alias("dup_frac"),
-            F.round(F.lit(1.0) - F.col("seen") / F.col("n_grams"), 6).alias(
-                "novel_frac"
-            ),
-        )
-        .orderBy(id_col)
-    )
-
-
-def soft_dedup_weights(
-    docs: DataFrame,
-    clusters: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """SoftDeDup-style duplication weights: instead of DROPPING
-    near-duplicates, downweight every member of a dup cluster by
-    1/cluster_size so each distinct content unit contributes one
-    document's worth of training mass no matter how many copies exist
-    (the loss-reweighting alternative to hard dedup).  ``clusters`` is
-    the (doc_id, cluster_size, ...) relation from the LSH -> connected
-    components chain (see ``q_dd_dup_clusters``); documents in no
-    cluster are singletons at weight 1.0.
-
-    -> (doc_id, cluster_size, weight) for EVERY input document.
-
-    Scale shape: one left equi-join of the corpus ids against the
-    cluster relation (dup-population-sized, typically a small fraction
-    of the corpus) — nothing else moves; text never enters."""
-    return (
-        docs.select(F.col(id_col))
-        .join(clusters.select(id_col, "cluster_size"), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("cluster_size", F.lit(1)).alias("cluster_size"),
-            F.round(
-                F.lit(1.0) / F.coalesce("cluster_size", F.lit(1)), 6
-            ).alias("weight"),
-        )
-        .orderBy(id_col)
-    )
-
-
-def ngram_coverage(
-    reference: DataFrame,
-    corpus: DataFrame,
-    shingle_n: int = 8,
-    ref_id_col: str = "doc_id",
-    ref_text_col: str = "text",
-    corpus_text_col: str = "text",
-) -> DataFrame:
-    """Reference n-gram coverage — decontamination's mirror question:
-    instead of "which training docs leak eval content" (\
-:func:`decontaminate`), "HOW MUCH of each reference document's
-    content does the corpus already cover?"  The domain-gap probe that
-    decides whether a corpus can support a target eval/domain before
-    training on it, and the novelty audit for an incoming batch
-    against the existing corpus.
-
-    -> (id, n_shingles, n_covered, coverage round 6) per reference doc
-    with >= shingle_n tokens, ordered by id.
-
-    Scale shape: the reference's distinct shingle hashes are the SMALL
-    side — broadcast; the corpus' exploded shingles are filtered
-    map-side by that broadcast semi-join, so the corpus never shuffles
-    (the decontaminate shape, reversed).  The surviving present-hash
-    set is reference-bounded; per-doc counts join against it
-    broadcast."""
-    ref_sh = reference.where(
-        F.size(
-            F.split(
-                F.trim(F.regexp_replace(F.lower(F.col(ref_text_col)), r"\s+", " ")),
-                " ",
-            )
-        )
-        >= shingle_n
-    ).select(
-        F.col(ref_id_col).alias("id"),
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    _word_shingles(F.col(ref_text_col), shingle_n),
-                    lambda s: F.xxhash64(s),
-                )
-            )
-        ).alias("h"),
-    )
-    ref_hashes = ref_sh.select("h").distinct()
-    corpus_sh = corpus.select(
-        F.explode(
-            F.transform(
-                _word_shingles(F.col(corpus_text_col), shingle_n),
-                lambda s: F.xxhash64(s),
-            )
-        ).alias("h")
-    )
-    present = (
-        corpus_sh.join(F.broadcast(ref_hashes), "h", "left_semi")
-        .distinct()
-        .withColumn("_hit", F.lit(1))
-    )
-    return (
-        ref_sh.join(F.broadcast(present), "h", "left")
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.sum(F.coalesce("_hit", F.lit(0))).cast("long").alias("n_covered"),
-        )
-        .select(
-            "id",
-            "n_shingles",
-            "n_covered",
-            F.round(
-                F.col("n_covered").cast("double") / F.col("n_shingles"), 6
-            ).alias("coverage"),
-        )
-        .orderBy("id")
-    )
-
-
-def edit_distance_near_dup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_rel: float = 0.3,
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    rows_per_band: int = 4,
-    hash_family: str = "xxh64",
-    candidates: "DataFrame | None" = None,
-) -> DataFrame:
-    """Near-dup pairs verified by EXACT Levenshtein distance: MinHash
-    LSH generates the candidates (never an all-pairs join), then each
-    candidate pair is scored with the true character edit distance on
-    the whitespace-normalized lowercased text — the strictest verify
-    in the dedup family (MinHash estimates set Jaccard, n-gram Jaccard
-    is exact on SETS; edit distance is exact on SEQUENCES, so it
-    catches reorderings and small in-place edits those two can't tell
-    apart).  (a_id, b_id, edit_dist, rel_dist) with rel_dist =
-    dist / max(len_a, len_b) rounded 6 dp, kept when <= ``max_rel``.
-
-    Cross-engine contract: ``F.levenshtein`` and DuckDB's
-    ``levenshtein`` both compute the standard unit-cost
-    insert/delete/substitute distance — an exact INTEGER, so the only
-    float is the final rounded ratio (one identical expression shape
-    per engine).  Normalization is the fingerprint normalization
-    (lower + whitespace collapse + trim).
-
-    Scale shape: the quadratic DP (O(len_a * len_b) per pair) runs
-    ONLY on LSH-pruned candidates — bucket equi-join, same banding as
-    :func:`minhash_near_dup_pairs`; the signature table is staged as
-    scratch parquet (the measured BlockManager pathology).  Texts join
-    the candidate list by id (two hash joins); candidates are rare by
-    construction, so the expensive verify is output-bounded.  For
-    very long documents pair this with a length cap upstream or the
-    banded-DP variant; at 100 TB the candidate generation cost
-    dominates and is identical to the MinHash path already measured.
-
-    ``candidates`` injects a pre-built (a_id, b_id) candidate relation
-    from the SAME LSH parameters (the injection seam of
-    ``bpe_encode_stats(merges=...)``), so a session that already ran
-    the identical MinHash chain skips the 32-hash signature pass;
-    ``None`` generates candidates in place."""
-    if candidates is not None:
-        cands = candidates.select("a_id", "b_id")
-    else:
-        sigs = stage_parquet(
-            minhash_signatures(df, text_col, id_col, shingle_n, num_hashes, hash_family),
-            "ed_sigs",
-        )
-        cands = minhash_lsh_candidates(sigs, bands, rows_per_band, hash_family)
-    norm = df.select(
-        F.col(id_col).alias("id"),
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")).alias("t"),
-    )
-    j = (
-        cands.join(norm.select(F.col("id").alias("a_id"), F.col("t").alias("ta")), "a_id")
-        .join(norm.select(F.col("id").alias("b_id"), F.col("t").alias("tb")), "b_id")
-    )
-    dist = F.levenshtein("ta", "tb")
-    rel = F.round(
-        dist.cast("double")
-        / F.greatest(F.length("ta"), F.length("tb")).cast("double"),
-        6,
-    )
-    return (
-        j.select(
-            "a_id",
-            "b_id",
-            dist.alias("edit_dist"),
-            rel.alias("rel_dist"),
-        )
-        .where(F.col("rel_dist") <= F.lit(float(max_rel)))
-        .orderBy("a_id", "b_id")
-    )

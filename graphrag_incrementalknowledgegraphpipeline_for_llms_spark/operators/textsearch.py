@@ -170,561 +170,3 @@ def search_all_terms(
         .orderBy(F.desc("score"), "chunk_id")
         .limit(limit)
     )
-
-
-def tfidf_vectors(postings: DataFrame, normalize: bool = True) -> DataFrame:
-    """Sparse tf-idf document vectors from the posting table:
-    (chunk_id, term, weight) with weight = tf * ln(N / df), L2-
-    normalized per document by default — the classic sparse-retrieval
-    / feature-hashing export a downstream trainer or ANN index
-    ingests.
-
-    N (documents with >=1 token) is a 1-row aggregate folded into the
-    plan as a literal (the BM25 corpus-scalar pattern); document
-    frequency joins on the posting table's own term key, so the only
-    shuffles are the df aggregate, the term join, and the per-doc norm
-    — text never moves, and nothing is broadcast that scales with
-    vocabulary."""
-    n = float(postings.select(F.count_distinct("chunk_id")).collect()[0][0])
-    dfreq = postings.groupBy("term").agg(
-        F.count(F.lit(1)).cast("double").alias("df")
-    )
-    w = postings.join(dfreq, "term").select(
-        "chunk_id",
-        "term",
-        (F.col("tf") * F.log(F.lit(n) / F.col("df"))).alias("w"),
-    )
-    if normalize:
-        norms = w.groupBy("chunk_id").agg(
-            F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
-        )
-        w = w.join(norms, "chunk_id").select(
-            "chunk_id",
-            "term",
-            F.when(F.col("nrm") > 0, F.col("w") / F.col("nrm"))
-            .otherwise(F.lit(0.0))
-            .alias("w"),
-        )
-    return w.select(
-        "chunk_id", "term", F.round("w", 6).alias("weight")
-    ).orderBy("chunk_id", "term")
-
-
-def update_postings_index(
-    spark,
-    catalog,
-    chunks_delta: DataFrame,
-    table: str = "postings",
-    text_col: str = "text",
-    id_col: str = "chunk_id",
-    buckets: int | None = None,
-) -> int:
-    """Incremental maintenance of a catalog-stored posting index: the
-    DELTA batch's chunks are tokenized and MERGEd into ``table`` on
-    (term, chunk_id) — a new chunk appends its postings, a
-    re-ingested chunk replaces them idempotently (tf is a pure
-    function of the chunk text, so last-write-wins is exact).  At
-    corpus scale this is the difference between a per-batch index
-    rebuild and an O(batch) merge into a term-bucketed table; queries
-    keep pruning on the literal term key either way.  Returns the new
-    snapshot version."""
-    p = build_postings(chunks_delta, text_col=text_col, id_col=id_col)
-    return catalog.merge_upsert(
-        spark, table, p, keys=["term", "chunk_id"], buckets=buckets
-    )
-
-
-def read_postings_index(spark, catalog, table: str = "postings") -> DataFrame:
-    """The stored posting table (current snapshot)."""
-    return catalog.read(spark, table)
-
-
-def lexical_diversity(chunks: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document vocabulary-richness statistics — the classic
-    stylometric trio used as curation features alongside the
-    repetition / entropy / LM-score axes (none of which measure
-    type reuse directly):
-
-    * ``ttr`` — type-token ratio n_types / n_tokens (1.0 = every
-      token distinct; keyword-stuffed and template pages sit low);
-    * ``hapax_ratio`` — share of types occurring exactly once
-      (Zipf-healthy prose sits near 0.4-0.6; machine-generated spin
-      text collapses it);
-    * ``yule_k`` — Yule's characteristic K = 10^4 * (sum_t f_t^2 -
-      N) / N^2 (Yule 1944), the length-robust repeat-rate constant
-      (higher = more repetitive vocabulary; ~0 for all-distinct).
-
-    Every statistic is an integer aggregate (sum f, count, sum f^2,
-    count of f = 1) until ONE final division, ROUND(·, 6) — the
-    cross-engine determinism contract.  Zero-token documents carry no
-    signal and are excluded (the :func:`unigram_logprob` convention).
-    Returns (chunk_id, n_tokens, n_types, ttr, hapax_ratio, yule_k),
-    ordered by chunk_id.
-
-    Scale shape: one tokenize pass -> one (chunk, term) hash agg ->
-    one chunk-keyed hash agg, both map-side combinable; raw text
-    never shuffles (the tf relation ships (chunk_id, 8-ish-byte term,
-    count))."""
-    tf = (
-        chunks.select(
-            "chunk_id", F.explode(tokenize(F.col(text_col))).alias("term")
-        )
-        .groupBy("chunk_id", "term")
-        .agg(F.count(F.lit(1)).alias("f"))
-    )
-    agg = tf.groupBy("chunk_id").agg(
-        F.sum("f").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_types"),
-        F.sum(F.when(F.col("f") == 1, 1).otherwise(0)).alias("hapax"),
-        F.sum(F.col("f") * F.col("f")).alias("sumsq"),
-    )
-    return agg.select(
-        "chunk_id",
-        "n_tokens",
-        "n_types",
-        F.round(F.col("n_types") / F.col("n_tokens"), 6).alias("ttr"),
-        F.round(F.col("hapax") / F.col("n_types"), 6).alias("hapax_ratio"),
-        F.round(
-            F.lit(10_000)
-            * (F.col("sumsq") - F.col("n_tokens"))
-            / (F.col("n_tokens") * F.col("n_tokens")),
-            6,
-        ).alias("yule_k"),
-    ).orderBy("chunk_id")
-
-
-def unigram_logprob(chunks: DataFrame, text_col: str = "text") -> DataFrame:
-    """CCNet-style self-scored unigram LM quality signal: fit a
-    maximum-likelihood unigram model on the corpus itself (p(t) =
-    count(t) / total tokens), then score every document by its mean
-    token log-probability and the equivalent perplexity — the classic
-    cheap proxy that surfaces gibberish, boilerplate, and
-    non-linguistic pages for a training-data curation funnel
-    (Wenzek et al. 2020 score documents with a KenLM the same way;
-    self-fit keeps this engine dependency-free and deterministic).
-
-    Returns (chunk_id, n_tokens, avg_logprob, ppl) with ppl =
-    exp(-avg_logprob), worst (lowest avg_logprob) documents first.
-    Documents with zero tokens carry no signal and are excluded.
-
-    Scale shape: one tokenize pass feeds both the vocabulary count and
-    the per-document score; the total-token scalar is a 1-row
-    aggregate folded into the plan as a literal (the BM25
-    corpus-scalar pattern); the score join keys on the vocabulary
-    relation (vocab-cardinality, naturally broadcast-sized after
-    Zipf), so raw text never shuffles."""
-    tok = chunks.select(
-        "chunk_id", F.explode(tokenize(F.col(text_col))).alias("term")
-    )
-    vocab = tok.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
-    total = float(vocab.select(F.sum("cnt")).collect()[0][0] or 0)
-    if total == 0:
-        return chunks.sparkSession.createDataFrame(
-            [], "chunk_id string, n_tokens bigint, avg_logprob double, ppl double"
-        )
-    logp = vocab.select(
-        "term", F.log(F.col("cnt") / F.lit(total)).alias("logp")
-    )
-    scored = (
-        tok.join(logp, "term")
-        .groupBy("chunk_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.avg("logp").alias("alp"),
-        )
-    )
-    return scored.select(
-        "chunk_id",
-        "n_tokens",
-        F.round("alp", 6).alias("avg_logprob"),
-        F.round(F.exp(-F.col("alp")), 6).alias("ppl"),
-    ).orderBy("avg_logprob", "chunk_id")
-
-
-def bigram_logprob(chunks: DataFrame, text_col: str = "text") -> DataFrame:
-    """Bigram-LM quality signal with add-1 smoothing: fit
-    p(w2 | w1) = (c(w1,w2) + 1) / (c(w1) + V) on the corpus itself
-    (V = unigram vocabulary size, ``<s>`` opens every document), then
-    score each document by its mean per-token log-probability and
-    perplexity.  This is one Markov order above
-    :func:`unigram_logprob` and catches what bag-of-words cannot:
-    shuffled/unnatural word ORDER.  A document built from frequent
-    words in gibberish sequence scores well under the unigram model
-    but terribly here — exactly the KenLM-perplexity axis CCNet
-    (Wenzek et al. 2020) filters on; self-fit + add-1 keeps it
-    dependency-free and deterministic.
-
-    Returns (chunk_id, n_tokens, avg_logprob, ppl), worst documents
-    first; zero-token documents carry no signal and are excluded.
-
-    Scale shape: ONE tokenize pass builds the per-document bigram
-    array inside the scan stage (zip_with over the shifted array — no
-    window, no self-join, raw text never shuffles); the exploded
-    (w1, w2) stream feeds the bigram-count, context-count, and
-    per-document score aggregates.  The model join keys on the
-    bigram-vocabulary relation — Zipf-bounded, far smaller than the
-    corpus — and V folds into the plan as a literal (the BM25
-    corpus-scalar pattern).  All counts are exact integers; the only
-    floats are the final ln / avg."""
-    toks = chunks.select(
-        F.col("chunk_id").cast("string").alias("chunk_id"),
-        tokenize(F.col(text_col)).alias("toks"),
-    ).where(F.size("toks") >= 1)
-    big = toks.select(
-        "chunk_id",
-        F.explode(
-            F.zip_with(
-                F.concat(
-                    F.array(F.lit("<s>")),
-                    F.slice(F.col("toks"), 1, F.size("toks") - 1),
-                ),
-                F.col("toks"),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg"),
-    ).select("chunk_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    bc = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    cc = big.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    v = float(big.select(F.countDistinct("w2")).collect()[0][0] or 0)
-    if v == 0:
-        return chunks.sparkSession.createDataFrame(
-            [], "chunk_id string, n_tokens bigint, avg_logprob double, ppl double"
-        )
-    lp = bc.join(cc, "w1").select(
-        "w1",
-        "w2",
-        F.log((F.col("c12") + F.lit(1.0)) / (F.col("c1") + F.lit(v))).alias("logp"),
-    )
-    scored = (
-        big.join(lp, ["w1", "w2"])
-        .groupBy("chunk_id")
-        .agg(F.count(F.lit(1)).alias("n_tokens"), F.avg("logp").alias("alp"))
-    )
-    return scored.select(
-        "chunk_id",
-        "n_tokens",
-        F.round("alp", 6).alias("avg_logprob"),
-        F.round(F.exp(-F.col("alp")), 6).alias("ppl"),
-    ).orderBy("avg_logprob", "chunk_id")
-
-
-def zipf_fit(
-    chunks: DataFrame, text_col: str = "text", top_k: int = 100
-) -> DataFrame:
-    """Zipf's-law fit over the corpus term distribution: OLS slope of
-    ln(freq) on ln(rank) for the ``top_k`` most frequent terms —
-    natural language sits near slope -1; templated/boilerplate corpora
-    flatten (slope > -0.8), spam keyword-stuffing steepens it.  A
-    one-row corpus-health scalar for the curation dashboard, the
-    corpus-level sibling of the per-document quality scores.
-
-    Ranks are deterministic (count desc, term asc).  Returns one row
-    (n_terms, slope, intercept), rounded to 6.
-
-    Scale shape: one tokenize pass -> vocab count aggregate -> top-k
-    TakeOrdered (k rows to the driver-side plan, NOT a global sort) ->
-    a 1-row OLS aggregate over k rows.  Corpus text is touched
-    once."""
-    vocab = (
-        chunks.select(F.explode(tokenize(F.col(text_col))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), "term")
-        .limit(top_k)
-    )
-    from pyspark.sql.window import Window
-
-    ranked = vocab.select(
-        F.row_number()
-        .over(Window.orderBy(F.desc("cnt"), "term"))
-        .alias("rank"),
-        "cnt",
-    ).select(
-        F.log(F.col("rank").cast("double")).alias("x"),
-        F.log(F.col("cnt").cast("double")).alias("y"),
-    )
-    agg = ranked.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    return agg.select(
-        F.col("n").alias("n_terms"),
-        F.round(
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")),
-            6,
-        ).alias("slope"),
-        F.round(
-            (F.col("sy") - ((F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))) * F.col("sx"))
-            / F.col("n"),
-            6,
-        ).alias("intercept"),
-    )
-
-
-def winnowing_fingerprints(
-    docs: DataFrame,
-    k: int = 3,
-    window: int = 4,
-    id_col: str = "chunk_id",
-    text_col: str = "text",
-    hash_family: str = "md5",
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer-Wilkerson-Aiken,
-    SIGMOD 2003 — the MOSS algorithm): hash every token k-gram, slide
-    a window of ``window`` consecutive gram hashes, and in each window
-    select the minimum hash (rightmost occurrence on ties).  The
-    guarantee the simpler every-Nth / mod-p sampling schemes lack:
-    any shared substring of at least k + window - 1 tokens produces at
-    least one IDENTICAL selected fingerprint in both documents, so
-    plagiarism / near-verbatim reuse detection has no blind spots,
-    while only ~2/(window+1) of grams are kept.  Complements
-    dd_substring_spans (exact k-gram inventory) with a guaranteed-
-    recall SAMPLE sized for a corpus-wide fingerprint index.
-
-    -> (id, pos, gram_hash) — one row per selected fingerprint, pos =
-    0-based gram position, ordered by (id, pos).  Documents shorter
-    than k tokens emit nothing; shorter than a full window form one
-    window over all their grams.
-
-    ``hash_family``: 'md5' (default) = 32-bit value from the first 8
-    md5 hex chars — cross-engine replayable (the oracle rebuilds it
-    nibble-by-nibble); 'xxh64' = native 64-bit xxhash64, faster at
-    scale, engine-only.
-
-    Scale shape: the entire selection runs INSIDE the row via array
-    HOFs (transform/aggregate over the gram array) — grams, window
-    minima, and dedup never leave the scan stage, so the operator adds
-    ZERO shuffles; the output explode is a map-side flatMap.  At 100 TB
-    the follow-up (group selected hashes across docs to find reuse) is
-    one equi-join on gram_hash — the banded-LSH shape dedup already
-    ships."""
-    toks = tokenize(F.col(text_col))
-    d = docs.select(F.col(id_col).alias("id"), toks.alias("_t")).where(
-        F.size("_t") >= k
-    )
-    ng = (F.size("_t") - (k - 1)).alias("_ng")
-    if hash_family == "md5":
-        def _h(g):
-            return F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("long")
-    elif hash_family == "xxh64":
-        _h = F.xxhash64
-    else:
-        raise ValueError(f"unknown hash_family {hash_family!r}")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size("_t") - k),
-        lambda i: _h(F.concat_ws(" ", F.slice(F.col("_t"), i + 1, k))),
-    )
-    d = d.select("id", grams.alias("_h"), ng)
-    wn = F.greatest(F.col("_ng") - (window - 1), F.lit(1))
-    init = F.struct(
-        F.lit((1 << 63) - 1).cast("long").alias("h"),
-        F.lit(-1).cast("int").alias("p"),
-    )
-    sel = F.transform(
-        F.sequence(F.lit(0), wn - 1),
-        lambda wi: F.aggregate(
-            F.sequence(wi, F.least(wi + (window - 1), F.col("_ng") - 1)),
-            init,
-            lambda acc, p: F.when(
-                F.element_at(F.col("_h"), p + 1) <= acc["h"],
-                F.struct(
-                    F.element_at(F.col("_h"), p + 1).alias("h"),
-                    p.cast("int").alias("p"),
-                ),
-            ).otherwise(acc),
-        ),
-    )
-    return (
-        d.select("id", F.explode(F.array_distinct(sel)).alias("f"))
-        .select(
-            F.col("id").alias(id_col),
-            F.col("f.p").alias("pos"),
-            F.col("f.h").alias("gram_hash"),
-        )
-        .orderBy(id_col, "pos")
-    )
-
-
-# RAKE needs FUNCTION-word boundaries (lowercase), not the extractor's
-# capitalized NER stoplist (purecore.STOP_WORDS) — a deliberate second
-# list: these words DELIMIT phrases, they are not candidate content.
-RAKE_STOP_WORDS = frozenset(
-    {
-        "a", "about", "all", "an", "and", "are", "as", "at", "be", "been",
-        "but", "by", "can", "did", "do", "does", "each", "for", "from",
-        "had", "has", "have", "he", "her", "his", "how", "if", "in", "is",
-        "it", "its", "no", "not", "of", "on", "or", "our", "she", "so",
-        "than", "that", "the", "their", "then", "these", "they", "this",
-        "those", "to", "was", "we", "were", "what", "when", "where",
-        "which", "who", "will", "with", "you", "your",
-    }
-)
-
-
-def rake_keywords(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_phrase_len: int = 4,
-    top_k: int = 50,
-) -> DataFrame:
-    """RAKE keyphrase extraction (Rose et al. 2010) over the corpus:
-    candidate phrases are maximal runs of non-stopword tokens — ONLY
-    stopwords delimit phrases here (the tokenizer drops punctuation
-    before the run grouping, so unlike the original RAKE a candidate
-    can span a sentence/clause boundary when no stopword intervenes;
-    documented deviation, pinned by the oracle), each word
-    scores deg/freq (deg = summed length of every phrase it appears
-    in — rewards words that live in long collocations), and a phrase
-    scores the sum of its word scores.  The PHRASE-level complement
-    of :func:`textrank_keywords` (word-level co-occurrence voting):
-    RAKE surfaces multi-word terms ("knowledge graph pipeline") that
-    word-rank fragments.
-
-    Determinism: boundary grouping is a running stopword count over
-    the token order (each engine walks the same filtered sequence);
-    word scores are ROUND(deg/freq, 6) carried as DECIMAL(18,6) so
-    the per-phrase score SUM is exact and order-independent (the
-    simrank lesson), and the top-k ranks (score desc, phrase).
-
-    Returns (phrase, n_occurrences, score) — the corpus's top_k
-    keyphrases.
-
-    Scale shape: one scan explodes tokens; the boundary window is
-    (doc)-keyed over positions (narrow rows); word stats are a
-    vocabulary-sized hash agg broadcast back onto phrases.  Raw text
-    never shuffles — only (doc, grp, pos, tok) quads."""
-    from pyspark.sql.window import Window
-
-    toks = (
-        docs.select(
-            F.col(id_col).cast("string").alias("id"),
-            F.posexplode(F.split(F.lower(F.col(text_col)), _TOKEN_RE)).alias(
-                "pos", "tok"
-            ),
-        )
-        .where(F.col("tok") != "")
-    )
-    stop = sorted(RAKE_STOP_WORDS)
-    run = (
-        Window.partitionBy("id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    grp = F.sum(F.col("tok").isin(stop).cast("int")).over(run)
-    words = toks.select(
-        "id", "pos", "tok", grp.alias("grp")
-    ).where(~F.col("tok").isin(stop))
-    phrases = (
-        words.groupBy("id", "grp")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "tok"))).alias("pt"))
-        .select(
-            "id",
-            "grp",
-            F.transform("pt", lambda s: s["tok"]).alias("words"),
-        )
-        .where(F.size("words") <= max_phrase_len)
-    )
-    occ = phrases.select(
-        F.explode("words").alias("word"), F.size("words").alias("plen")
-    )
-    ws = occ.groupBy("word").agg(
-        F.round(F.sum("plen") / F.count(F.lit(1)), 6)
-        .cast("decimal(18,6)")
-        .alias("wscore")
-    )
-    pscore = (
-        phrases.select(
-            "id",
-            "grp",
-            F.array_join("words", " ").alias("phrase"),
-            F.explode("words").alias("word"),
-        )
-        .join(F.broadcast(ws), "word")
-        .groupBy("id", "grp", "phrase")
-        .agg(F.sum("wscore").alias("score"))
-    )
-    return (
-        pscore.groupBy("phrase")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_occurrences"),
-            F.max("score").cast("double").alias("score"),
-        )
-        .orderBy(F.desc("score"), "phrase")
-        .limit(top_k)
-    )
-
-
-def heaps_fit(
-    chunks: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Heaps'-law fit of vocabulary growth V(n) ≈ K·n^β over the
-    corpus in ingestion (doc-id) order — the planning scalar that says
-    how fast NEW vocabulary keeps arriving as the crawl grows (β near
-    0.5 = natural text; β → 0 = templated/closed vocabulary; β → 1 =
-    id-like noise where every token is new).  The corpus-size sibling
-    of :func:`zipf_fit`'s frequency view.
-
-    First-seen attribution is MIN(doc_id) per term (the
-    ingestion-order semantics :func:`dedup.ngram_novelty` pins);
-    cumulative token/vocab counts come from ONE running window over
-    the per-doc aggregate — the user_growth first-seen-histogram
-    trick, never per-doc set unions.  OLS of ln V on ln n over the
-    per-doc curve, rounded 6.
-
-    Returns one row (n_docs, total_tokens, vocab_size, heaps_beta,
-    heaps_k).
-
-    Scale shape: one tokenize pass -> (term) MIN-agg + (doc) count
-    agg -> the window runs over |docs| narrow rows."""
-    from pyspark.sql.window import Window
-
-    toks = chunks.select(
-        F.col(id_col).cast("long").alias("doc"),
-        F.explode(tokenize(F.col(text_col))).alias("term"),
-    )
-    per_doc = toks.groupBy("doc").agg(F.count(F.lit(1)).alias("n_toks"))
-    first = toks.groupBy("term").agg(F.min("doc").alias("doc"))
-    new_terms = first.groupBy("doc").agg(F.count(F.lit(1)).alias("n_new"))
-    run = Window.orderBy("doc").rowsBetween(Window.unboundedPreceding, 0)
-    curve = (
-        per_doc.join(new_terms, "doc", "left")
-        .select(
-            "doc",
-            F.sum("n_toks").over(run).alias("cum_toks"),
-            F.sum(F.coalesce("n_new", F.lit(0))).over(run).alias("cum_vocab"),
-        )
-        .where(F.col("cum_toks") > 0)
-        .select(
-            F.log(F.col("cum_toks").cast("double")).alias("x"),
-            F.log(F.col("cum_vocab").cast("double")).alias("y"),
-            "cum_toks",
-            "cum_vocab",
-        )
-    )
-    agg = curve.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.max("cum_toks").cast("long").alias("total_tokens"),
-        F.max("cum_vocab").cast("long").alias("vocab_size"),
-    )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    return agg.select(
-        F.col("n").cast("long").alias("n_docs"),
-        "total_tokens",
-        "vocab_size",
-        F.round(slope, 6).alias("heaps_beta"),
-        F.round(F.exp((F.col("sy") - slope * F.col("sx")) / F.col("n")), 6).alias(
-            "heaps_k"
-        ),
-    )

@@ -27,6 +27,19 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+# per-request state (jobs, request traces) keeps only the newest
+# MAX_TRACKED entries, so a long-running server's memory stays bounded
+MAX_TRACKED = 1024
+
+
+def put_newest(d: dict, key, value, lock: threading.Lock) -> None:
+    """``d[key] = value``, then evict the oldest entries beyond
+    ``MAX_TRACKED`` (dicts iterate in insertion order)."""
+    with lock:
+        d[key] = value
+        while len(d) > MAX_TRACKED:
+            del d[next(iter(d))]
+
 
 @dataclass
 class JobStatus:
@@ -48,8 +61,7 @@ class JobRegistry:
     def submit(self, make_df, max_rows: int = 1000) -> str:
         job_id = str(uuid.uuid4())
         status = JobStatus(job_id)
-        with self._lock:
-            self._jobs[job_id] = status
+        put_newest(self._jobs, job_id, status, self._lock)
 
         def run():
             status.state = "RUNNING"

@@ -86,8 +86,10 @@ class GraphApiService:
         # page batch incrementally + warm-refresh stored analytics)
         self.catalog = catalog
         self.jobs = apimod.JobRegistry()
+        # both keep the newest apimod.MAX_TRACKED entries
         self.job_requests: dict[str, dict] = {}
         self.traces: dict[str, dict] = {}
+        self._tracked_lock = threading.Lock()
         self._refresh_lock = threading.Lock()
 
     def refresh(self, pages_path: str) -> dict:
@@ -643,11 +645,11 @@ class GraphApiService:
         t0 = time.monotonic()
         results = self.search(req["query"], top_k)
         groups = self.group_results(results, (req.get("output") or {}).get("groupBy"))
-        self.traces[request_id] = {
+        apimod.put_newest(self.traces, request_id, {
             "query": req["query"],
             "n_results": len(results),
             "executionTimeMs": int((time.monotonic() - t0) * 1000),
-        }
+        }, self._tracked_lock)
         return {
             "mode": "sync",
             "summary": f"Found {len(results)} concepts matching '{req['query']}'",
@@ -664,7 +666,10 @@ class GraphApiService:
         job_id = self.jobs.submit(
             lambda: q.search_concepts(self.nodes, self.edges, req["query"], top_k=top_k)
         )
-        self.job_requests[job_id] = {"req": req, "request_id": request_id}
+        apimod.put_newest(
+            self.job_requests, job_id, {"req": req, "request_id": request_id},
+            self._tracked_lock,
+        )
         return {
             "mode": "async",
             "summary": "Query submitted for asynchronous processing",

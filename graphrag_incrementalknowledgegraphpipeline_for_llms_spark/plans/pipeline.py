@@ -79,6 +79,18 @@ def chunks_from_pages(pages: DataFrame, extra_cols: tuple[str, ...] = ()) -> Dat
     )
 
 
+def _distinct_chunks(chunks: DataFrame) -> DataFrame:
+    """One row per ``chunk_id``: a batch holding the same page twice
+    must count its mentions once.  Every column but ``warc_ts`` is a
+    function of (url, text), as ``chunk_id`` is, so grouping on them is
+    a distinct by ``chunk_id``; keeping the latest ``warc_ts`` leaves
+    the checkpoint high-water mark exact.  The keys include ``doc_id``
+    (the url), so a url hash partitioning serves as the shuffle, and
+    the single fixed-width aggregate keeps it a hash aggregate."""
+    keys = [c for c in chunks.columns if c != "warc_ts"]
+    return chunks.groupBy(*keys).agg(F.max("warc_ts").alias("warc_ts")).select(*chunks.columns)
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -89,7 +101,6 @@ def run_pipeline(
     alias_pairs: DataFrame | None = None,
     updated_at=DEFAULT_UPDATED_AT,
     scan_partitions: int | None = None,
-    stage_mode: str = "parquet",
     epoch_id: int | None = None,
     extraction_strategy: str = "heuristic",
     dedup_pages: bool = False,
@@ -97,18 +108,12 @@ def run_pipeline(
     graph_mode: str = "cow",
     svo: bool = False,
 ) -> PipelineResult:
-    """``stage_mode`` controls how the enriched (post-extraction) data
-    is shared across the downstream consumers:
+    """The extraction output is written once to a catalog stage table
+    and re-read by every downstream consumer (columnar, pruned scans;
+    the pattern a 100 TB pipeline uses between stages anyway).
 
-    * ``"parquet"`` (default) — write the extraction output once to a
-      catalog stage table and re-read it (columnar, pruned scans; the
-      pattern a 100 TB pipeline uses between stages anyway).
-    * ``"recompute"`` — keep the plan lazy; each consumer re-runs the
-      extraction UDF (cheap when extraction is fast, zero extra IO).
-    * ``"memory"`` — ``persist()``.  Measured pathology: caching
-      Arrow-UDF-produced rows collapses at high local thread counts
-      (75 s vs 2 s for the same stats job at local[32]); kept only for
-      comparison.
+    A batch may hold the same page twice; it is made distinct by
+    ``chunk_id`` before anything is counted or written.
 
     ``graph_mode``: how nodes/edges merge into the graph tables —
     ``"cow"`` (bucket-pruned copy-on-write; best read performance) or
@@ -163,7 +168,10 @@ def run_pipeline(
             "canonical_url", "n_dups"
         )
     if pages.rdd.getNumPartitions() < scan_partitions:
-        pages = pages.repartition(scan_partitions, F.xxhash64("url"))
+        # hash-partitioned on the url column itself, so the text path's
+        # per-chunk distinct below (keyed on doc_id = url) reuses this
+        # shuffle instead of adding one
+        pages = pages.repartition(scan_partitions, "url")
     if dedup_pages:
         # content-level exact dedup BEFORE the (expensive) extraction
         # stage: mirror-hosted identical payloads extract once.  Only
@@ -188,10 +196,13 @@ def run_pipeline(
     if extract_from_html:
         # fused Arrow pass: html -> text -> concepts in ONE Python
         # stage (two chained UDFs paid the text payload over the
-        # JVM<->Python wire twice)
-        enriched = chunks_from_pages(
-            cf.enrich_pages_from_html(pages, strategy=extraction_strategy),
-            extra_cols=enrich_cols,
+        # JVM<->Python wire twice).  The Python stage drops the url
+        # partitioning, so the distinct here shuffles.
+        enriched = _distinct_chunks(
+            chunks_from_pages(
+                cf.enrich_pages_from_html(pages, strategy=extraction_strategy),
+                extra_cols=enrich_cols,
+            )
         )
     else:
         enriched = None  # built below, after the incremental anti-join
@@ -216,17 +227,11 @@ def run_pipeline(
     else:
         # text path: anti-join BEFORE the extraction UDF so unchanged
         # re-crawls skip extraction entirely
-        chunks = _dedupe_known(chunks_from_pages(pages))
+        chunks = _dedupe_known(_distinct_chunks(chunks_from_pages(pages)))
         enriched = cf.with_concepts(chunks, strategy=extraction_strategy)
-    if stage_mode == "parquet":
-        catalog.overwrite(enriched, "_stage_enriched")
-        enriched = catalog.read(spark, "_stage_enriched")
-        n_pages_probe = catalog.count("_stage_enriched")  # footers, free
-    elif stage_mode == "memory":
-        enriched = enriched.persist()
-        n_pages_probe = enriched.count()
-    else:
-        n_pages_probe = None  # decided by the stats job below
+    catalog.overwrite(enriched, "_stage_enriched")
+    enriched = catalog.read(spark, "_stage_enriched")
+    n_pages_probe = catalog.count("_stage_enriched")  # footers, free
 
     def run_stats():
         return (
@@ -241,14 +246,8 @@ def run_pipeline(
             .collect()
         )
 
-    part_stats = None
-    if n_pages_probe is None:
-        part_stats = run_stats()
-        n_pages_probe = sum(r["chunk_cnt"] for r in part_stats)
     d()
     if n_pages_probe == 0:
-        if stage_mode == "memory":
-            enriched.unpersist()
         return PipelineResult(catalog.current_version("nodes"), 0, 0, 0, 0, timings)
 
     # ---- derive tables (all lazy, reusing the cached extraction) ------------
@@ -345,18 +344,16 @@ def run_pipeline(
             dd = clock(nm)
             fn()
             dd()
-        if part_stats is None:
-            dd = clock("w_stats")
-            part_stats = run_stats()
-            dd()
+        dd = clock("w_stats")
+        part_stats = run_stats()
+        dd()
     else:
         with ThreadPoolExecutor(max_workers=4) as ex:
             futures = [ex.submit(fn) for fn in (write_mentions, write_triples, write_nodes)]
-            stats_future = ex.submit(run_stats) if part_stats is None else None
+            stats_future = ex.submit(run_stats)
             for f in futures:
                 f.result()
-            if stats_future is not None:
-                part_stats = stats_future.result()
+            part_stats = stats_future.result()
     n_pages = sum(r["chunk_cnt"] for r in part_stats)
     n_mentions = sum(r["mention_cnt"] or 0 for r in part_stats)
     max_ts = max((r["max_ts"] for r in part_stats), default=None)
@@ -439,8 +436,6 @@ def run_pipeline(
     )
     d()
 
-    if stage_mode == "memory":
-        enriched.unpersist()
     if alias_pairs is not None:
         triples.unpersist()
     return PipelineResult(snapshot_id, n_pages, n_pages, n_mentions, n_triples, timings)

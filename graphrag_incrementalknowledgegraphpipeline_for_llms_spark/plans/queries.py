@@ -2981,8 +2981,7 @@ def embedding_neighbors(
     Scale shape: the seed slice is |seeds|*dims rows and broadcasts
     into an equi-join on the dimension index — per-seed brute force,
     which IS the scale path when seeds are a bounded query-time set
-    (the corpus-vs-corpus case goes to operators/similarity.py's
-    LSH/IVF families instead).  Norms are one hash aggregate over the
+    (the corpus-vs-corpus case needs an LSH/IVF index instead).  Norms are one hash aggregate over the
     embedding relation; nothing ever materializes |seeds| x |nodes| x
     dims — the dot aggregate reduces as it scans."""
     se = (
@@ -3322,9 +3321,8 @@ def distance_distribution(
     ONE hash aggregate down to <= max_hops rows; the cumulative /
     total windows run on that hop-radius-bounded relation, never on
     the graph.  HyperANF replaces the exact visited set with HLL
-    registers to take this from sampled to all-sources at 100 TB —
-    :func:`~..operators.sketches.hll_distinct` is the building block;
-    the sampled form here is the oracle-exact estimator."""
+    registers to take this from sampled to all-sources at 100 TB; the
+    sampled form here is the oracle-exact estimator."""
     num = int(round(percentile * 1_000_000))
     hist = (
         _multi_source_bfs(und, sources, max_hops)

@@ -1,8 +1,10 @@
 """SparkSession factory tuned for this engine.
 
-Local sandbox runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); on a
-real cluster the same builder is used minus the ``master`` override —
-every other setting below is scale-oriented, not local-only:
+Local runs use ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
+process may run on) with a driver heap of ``$SPARK_GRAFT_DRIVER_MEM``
+(default: half of physical RAM); on a real cluster the same builder is
+used minus the ``master`` override — every other setting below is
+scale-oriented, not local-only:
 
 * AQE on (runtime coalescing, skew-join splitting) — at 100 TB the
   static shuffle-partition count is always wrong somewhere.
@@ -17,6 +19,27 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# share of physical RAM the local-mode driver heap may grow to; the rest
+# is left to the Python UDF workers, the page cache and the OS
+DRIVER_MEM_SHARE = 0.5
+
+
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else ``DRIVER_MEM_SHARE`` of physical
+    RAM, in MB."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{int(ram * DRIVER_MEM_SHARE) // 2**20}m"
 
 
 def _scratch_dir() -> str:
@@ -34,7 +57,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         # start HIGH and let AQE coalesce down (the cluster-correct
         # shape): a static ~cores count capped post-shuffle write
@@ -82,8 +105,8 @@ def get_spark(
             builder.config("spark.local.dir", _scratch_dir())
             # worker reuse history: round 1 measured idle REUSED
             # workers degrading JVM-only stages ~10x — but only when
-            # UDF-produced rows were persist()ed; with the pipeline on
-            # stage_mode="parquet" that pathology is gone and reuse=true
+            # UDF-produced rows were persist()ed; with the pipeline
+            # staging them as parquet that pathology is gone and reuse=true
             # is strictly faster (extract stage 16.7->10.0 s at 4 cores,
             # 8.6->5.8 s at 16; fork-per-task serializes on the single
             # pyspark.daemon).  Matches the cluster default.
@@ -98,7 +121,7 @@ def get_spark(
             .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
             # local mode: the driver heap is ALL executor memory; GC
             # pressure at 16+ threads measured 1.4x end-to-end (16g vs 48g)
-            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+            .config("spark.driver.memory", driver_memory())
             # cluster-faithful GC sizing: the JVM sees the HOST's 32
             # CPUs and sizes G1 for them (~23 parallel GC threads), so
             # a local[2] run silently burns 3-5 busy cores (measured

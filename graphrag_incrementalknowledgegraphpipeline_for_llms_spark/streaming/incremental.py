@@ -100,61 +100,6 @@ def stream_pages_dir(
     )
 
 
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-    ]
-)
-
-
-def stream_dedup_dir(
-    spark: SparkSession,
-    docs_dir: str,
-    catalog: ParquetCatalog,
-    checkpoint_dir: str,
-    threshold: float = 0.7,
-    index_table: str = "minhash_index",
-    pairs_table: str = "near_dup_pairs",
-    schema: T.StructType | None = None,
-    shingle_n: int = 3,
-):
-    """Streaming rolling dedup: readStream over a parquet directory of
-    documents; each microbatch probes + maintains the stored MinHash
-    index (:func:`operators.dedup.incremental_near_dup_pairs`) and
-    MERGEs the discovered near-dup pairs into ``pairs_table`` keyed on
-    (a_id, b_id).  The continuous version of the batch dedup funnel:
-    at any instant the pairs table equals the full-corpus LSH run over
-    everything ingested so far.
-
-    Exactly-once effect without an epoch ledger: the index MERGE is
-    content-addressed (keys on id; sig/buckets are pure functions of
-    text), the probe anti-joins the batch's own ids out of the stored
-    side, and the pairs MERGE is keyed — so a replayed microbatch
-    recomputes identical rows into idempotent upserts."""
-    stream = spark.readStream.schema(schema or DOCS_SCHEMA).parquet(docs_dir)
-
-    def sink(batch_df, epoch_id: int):
-        from ..operators import dedup
-
-        pairs = dedup.incremental_near_dup_pairs(
-            spark,
-            catalog,
-            batch_df,
-            table=index_table,
-            threshold=threshold,
-            shingle_n=shingle_n,
-        )
-        catalog.merge_upsert(spark, pairs_table, pairs, keys=["a_id", "b_id"])
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 EDGES_SCHEMA = T.StructType(
     [
         T.StructField("cid", T.StringType()),
@@ -191,155 +136,6 @@ def stream_communities_dir(
 
     def sink(batch_df, epoch_id: int):
         ci.refresh_communities(spark, catalog, batch_df, iters=iters)
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_heavy_hitters(
-    spark: SparkSession,
-    docs_dir: str,
-    catalog: ParquetCatalog,
-    checkpoint_dir: str,
-    width: int = 1024,
-    depth: int = 4,
-    cand_k: int = 64,
-    hash_family: str = "xxh64",
-    partials_table: str = "cms_partials",
-    cand_table: str = "hh_candidates",
-    schema: T.StructType | None = None,
-):
-    """Streaming rolling heavy hitters: readStream over a parquet
-    directory of documents; each microbatch lands (a) its Count-Min
-    partial keyed on (epoch_id, j, bucket) and (b) its own top
-    ``cand_k`` terms into a candidate table keyed on term.  The
-    queryable corpus sketch is the counter-SUM over epochs
-    (:func:`..operators.sketches.cms_merge`) — sketches merge, so the
-    stream never touches history.
-
-    Exactly-once effect: counter ADDS are not idempotent, so unlike
-    stream_dedup_dir (content-addressed) the partials carry the
-    epoch_id IN THE KEY — a replayed microbatch recomputes the same
-    (epoch_id, j, bucket, c) rows and the MERGE overwrites instead of
-    double-counting; the candidate MERGE is keyed on term and
-    trivially idempotent.
-
-    Candidate-set caveat (standard for sketch-based heavy hitters): a
-    term that never enters any single batch's top ``cand_k`` but is
-    heavy in aggregate is missed by :func:`heavy_hitters_now` until a
-    later batch surfaces it; size ``cand_k`` well above the query k.
-    """
-    from ..operators import sketches, textsearch
-
-    stream = spark.readStream.schema(schema or DOCS_SCHEMA).parquet(docs_dir)
-
-    def sink(batch_df, epoch_id: int):
-        from pyspark.sql import functions as F
-
-        tok = batch_df.select(
-            F.explode(textsearch.tokenize(F.col("text"))).alias("term")
-        )
-        part = sketches.count_min_sketch(
-            tok, "term", width=width, depth=depth, hash_family=hash_family
-        ).withColumn("epoch_id", F.lit(int(epoch_id)))
-        catalog.merge_upsert(
-            spark, partials_table, part, keys=["epoch_id", "j", "bucket"]
-        )
-        cand = sketches.heavy_hitters(
-            tok, "term", k=cand_k, width=width, depth=depth, hash_family=hash_family
-        ).select("term")
-        catalog.merge_upsert(spark, cand_table, cand, keys=["term"])
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def heavy_hitters_now(
-    spark: SparkSession,
-    catalog: ParquetCatalog,
-    k: int = 20,
-    width: int = 1024,
-    depth: int = 4,
-    hash_family: str = "xxh64",
-    partials_table: str = "cms_partials",
-    cand_table: str = "hh_candidates",
-):
-    """Point-in-time heavy hitters over everything streamed so far:
-    merge the stored epoch partials into the corpus sketch and probe
-    the accumulated candidate terms against it.  Returns (term, est)
-    est desc / term, top-k — equal to the batch
-    :func:`..operators.sketches.heavy_hitters` over the full corpus
-    for every term the candidate table holds."""
-    from pyspark.sql import functions as F
-
-    from ..operators import sketches
-
-    parts = catalog.read(spark, partials_table)
-    cand = catalog.read(spark, cand_table)
-    if parts is None or cand is None:
-        return spark.createDataFrame([], "term string, est bigint")
-    merged = sketches.cms_merge(parts.select("j", "bucket", "c"))
-    return sketches.heavy_hitters(
-        cand.select(F.col("term")),
-        "term",
-        k=k,
-        width=width,
-        depth=depth,
-        hash_family=hash_family,
-        sketch=merged,
-    )
-
-
-def stream_ivm_view(
-    spark: SparkSession,
-    facts_dir: str,
-    catalog: ParquetCatalog,
-    checkpoint_dir: str,
-    keys: list[str],
-    group_cols: list[str],
-    value_col: str | None = None,
-    fact_table: str = "facts",
-    view: str = "live_agg",
-    schema: T.StructType | None = None,
-):
-    """Continuously-maintained aggregate view over a streaming KEYED
-    fact source: each microbatch MERGEs into ``fact_table`` (keyed
-    upsert — late rows REPLACE their key, not double-count) and folds
-    the view through :func:`..plans.ivm.refresh` with
-    ``source_keys=keys``, i.e. rung 2 of the refresh ladder: the MERGE
-    commit is a dir rewrite, so the fold is the SIGNED snapshot
-    changelog — retracting each replaced row's old contribution and
-    adding the new one.  ``ivm.read_view`` between triggers serves the
-    live dashboard; at any instant it equals the batch re-aggregation
-    of everything ingested so far (the streaming twin of
-    :func:`stream_dedup_dir`'s index invariant).
-
-    Exactly-once effect without an epoch ledger: a replayed microbatch
-    MERGEs logically identical rows (a new snapshot whose changelog vs
-    the watermark is EMPTY), so the signed fold adds zero — both legs
-    are idempotent under foreachBatch's at-least-once replay.
-
-    Scale shape: per microbatch one keyed MERGE (bucket-pruned on a
-    bucketed fact table) + one snapshot compare + an O(touched
-    groups) state merge; nothing scans the stream's history twice."""
-    from ..plans import ivm
-
-    stream = spark.readStream.schema(schema or DOCS_SCHEMA).parquet(facts_dir)
-
-    def sink(batch_df, epoch_id: int):
-        catalog.merge_upsert(spark, fact_table, batch_df, keys=keys)
-        ivm.refresh(
-            spark, catalog, fact_table, view, group_cols, value_col,
-            source_keys=keys,
-        )
 
     return (
         stream.writeStream.foreachBatch(sink)

@@ -1,17 +1,11 @@
-"""The driver's CORRECTNESS gate grades only the FIRST 50
-``__spark_entry__.queries()`` keys; everything past that window is
-invisible to the per-round hash compare.  This module closes the blind
-spot in CI: every beyond-window entry that carries an ``oracle_sql()``
-string is replayed here — Spark result vs DuckDB oracle at sf0.001,
+"""Replays every ``__spark_entry__.queries()`` key against its
+``oracle_sql()`` string: Spark result vs DuckDB oracle at sf0.001,
 compared with the same normalize-sort-hash discipline as
 ``tools/check_oracle.py`` (sorted columns, rounded floats, stringified
-objects, order-insensitive rows).  A demoted or newly-appended query
-therefore keeps a value-exact check even though the driver never sees
-it.  A beyond-window entry WITHOUT an oracle is only tolerated for
-sim_ivf_topk (seeded numpy k-means init, not SQL-expressible; pinned
-by its own exact numpy pytest oracle) — the round-5 rotation moved it
-to the contract tail so the graded window is 50/50 oracled, and the
-inventory test guards that any future unoracled addition fails loudly.
+objects, order-insensitive rows).  Every key carries an oracle, and
+the inventory test fails loudly on any key added without one.  (The
+module name dates from when only keys past a 50-key graded window were
+replayed here.)
 """
 
 import decimal
@@ -23,13 +17,9 @@ import pytest
 import __spark_entry__ as E
 
 SF = "/root/testdata/sf0.001"
-GRADED_WINDOW = 50
 
 _QS = E.queries()
 _ORACLES = E.oracle_sql()
-_BEYOND = list(_QS)[GRADED_WINDOW:]
-_ORACLED = [k for k in _BEYOND if k in _ORACLES]
-_ROWS_ONLY = [k for k in _BEYOND if k not in _ORACLES]
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -54,31 +44,22 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
+    for t in ["documents", "embeddings"]:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     yield con
     con.close()
 
 
 def test_window_inventory():
-    """The graded window must stay exactly 50 wide and every contract
-    key must be accounted for (oracled or deliberately rows-only)."""
-    assert len(_QS) >= GRADED_WINDOW
-    # the two deliberate rows-only keys share the same cause: seeded
-    # numpy k-means init (IVF coarse quantizer / PQ sub-codebooks) is
-    # not SQL-expressible; both are pinned by EXACT numpy pytest
-    # oracles (test_dedup_similarity TestIvf / TestPq)
-    rows_only_ok = {"sim_ivf_topk", "sim_pq_topk"}
-    assert set(_ROWS_ONLY) <= rows_only_ok, (
-        "new beyond-window query without an oracle_sql entry: "
-        f"{set(_ROWS_ONLY) - rows_only_ok}"
+    """Every contract key carries an oracle, and every oracle names a
+    contract key."""
+    assert set(_ORACLES) == set(_QS), (
+        f"without an oracle: {set(_QS) - set(_ORACLES)}; "
+        f"without a query: {set(_ORACLES) - set(_QS)}"
     )
 
 
-@pytest.mark.parametrize("name", _ORACLED)
+@pytest.mark.parametrize("name", list(_QS))
 def test_beyond_window_oracle(name, spark, duck):
     sdf = _QS[name](spark, SF).toPandas()
     odf = duck.sql(_ORACLES[name]).df()
@@ -88,8 +69,3 @@ def test_beyond_window_oracle(name, spark, duck):
     )
     assert len(s) == len(o), f"{name}: spark={len(s)} oracle={len(o)} rows"
     pd.testing.assert_frame_equal(s, o, check_dtype=False)
-
-
-@pytest.mark.parametrize("name", _ROWS_ONLY)
-def test_rows_only_nonempty(name, spark):
-    assert _QS[name](spark, SF).count() > 0

@@ -1,7 +1,6 @@
 """R1-R6 distributed semantics vs purecore golden (SURVEY.md §5.1)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import (
     concepts as cf,
@@ -123,59 +122,3 @@ def test_triple_precision_recall_harness(spark, enriched):
     recall = len(inter) / len(golden) if golden else 1.0
     assert precision >= 0.95 and recall >= 0.95
     assert len(golden) > 0
-
-
-class TestMarketBasket:
-    def _items(self, spark, rows):
-        return spark.createDataFrame(rows, "basket_id long, item_id long")
-
-    def test_lift_hand_computed(self, spark):
-        # 4 baskets; (1,2) co-occur twice (counts 3,3) and (2,3)
-        # twice (counts 3,2); (1,3) only once -> cut by min_pair_count.
-        rows = [
-            (10, 1), (10, 2),
-            (20, 1), (20, 2), (20, 3),
-            (30, 1),
-            (40, 2), (40, 3),
-        ]
-        got = {
-            (r["item_a"], r["item_b"]): r
-            for r in cooccur.market_basket(
-                self._items(spark, rows),
-                min_item_support=1,
-                min_pair_count=2,
-                max_basket_size=64,
-            ).collect()
-        }
-        assert set(got) == {(1, 2), (2, 3)}
-        r = got[(1, 2)]
-        # lift = pair*N/(ca*cb) = 2*4/(3*3); support = 2/4
-        assert r["pair_count"] == 2 and r["count_a"] == 3 and r["count_b"] == 3
-        assert r["lift"] == pytest.approx(round(8 / 9, 6))
-        assert r["support"] == 0.5
-        r23 = got[(2, 3)]
-        assert (r23["count_a"], r23["count_b"]) == (3, 2)
-        assert r23["lift"] == pytest.approx(round(8 / 6, 6))
-
-    def test_apriori_pushdown_prunes_infrequent_items(self, spark):
-        # item 9 appears once -> removed before the pair join even
-        # though it co-occurs with 1 twice via duplicate lines (the
-        # DISTINCT guard collapses in-basket repeats first).
-        rows = [(10, 1), (10, 9), (10, 9), (20, 1), (20, 2), (30, 1), (30, 2)]
-        got = cooccur.market_basket(
-            self._items(spark, rows), min_item_support=2, min_pair_count=2
-        ).collect()
-        assert {(r["item_a"], r["item_b"]) for r in got} == {(1, 2)}
-
-    def test_mega_basket_guard_drops_blowup(self, spark):
-        # a 10-item basket with cap 5 contributes NO pairs; the two
-        # small baskets still do.
-        rows = [(99, i) for i in range(10)]
-        rows += [(1, 0), (1, 1), (2, 0), (2, 1)]
-        got = cooccur.market_basket(
-            self._items(spark, rows),
-            min_item_support=1,
-            min_pair_count=2,
-            max_basket_size=5,
-        ).collect()
-        assert {(r["item_a"], r["item_b"], r["pair_count"]) for r in got} == {(0, 1, 2)}

@@ -1,966 +1,10 @@
-"""Corpus-curation operator: gates, dedup canonicalization, funnel."""
+"""Per-source statistics: shared-concept overlap and smoothed KL."""
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-GOOD = "the quick system is a part of the data engine, with the index and the cache."
-SHORT = "the end."  # fails length gate (2 tokens)
-GERMAN = "der hund und die katze spielen mit der maus und der ente im garten, oder?"
-NOPUNCT_NOSTOP = "alpha beta gamma delta epsilon zeta eta theta iota kappa"  # quality 0.4
-
-
-def _docs(spark):
-    rows = [
-        (1, GOOD),
-        (2, SHORT),
-        (3, GERMAN),
-        (4, NOPUNCT_NOSTOP),
-        (5, GOOD),  # exact dup of 1 -> deduped, canonical stays 1
-        (6, "  " + GOOD + " "),  # whitespace-variant dup -> same fingerprint
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_curate_corpus_gates_and_dedup(spark):
-    kept = curation.curate_corpus(_docs(spark)).collect()
-    assert [r["id"] for r in kept] == [1]
-    r = kept[0]
-    assert r["lang"] == "en" and r["quality_score"] >= 0.5
-
-
-def test_canonical_is_min_id(spark):
-    # drop doc 1: the surviving dup pair (5, 6) canonicalizes to 5
-    kept = curation.curate_corpus(_docs(spark).where(F.col("doc_id") != 1)).collect()
-    assert [r["id"] for r in kept] == [5]
-
-
-def test_funnel_counts(spark):
-    row = curation.curation_funnel(_docs(spark)).collect()[0]
-    assert row["total"] == 6
-    assert row["pass_length"] == 5  # SHORT fails
-    # NOPUNCT_NOSTOP scores 0.4 < 0.5
-    assert row["pass_quality"] == 4
-    assert row["pass_lang"] == 3  # GERMAN drops
-    assert row["after_dedup"] == 1  # 1/5/6 share a fingerprint
-
-
-def test_funnel_matches_curate_count(spark):
-    df = _docs(spark)
-    assert (
-        curation.curation_funnel(df).collect()[0]["after_dedup"]
-        == curation.curate_corpus(df).count()
-    )
-
-
-class TestSampling:
-    def test_split_deterministic_and_disjoint(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = spark.range(2000).withColumnRenamed("id", "doc_id")
-        a = {r["doc_id"]: r["split"] for r in sampling.split_by_hash(d).collect()}
-        b = {r["doc_id"]: r["split"] for r in sampling.split_by_hash(d.repartition(7)).collect()}
-        assert a == b  # partitioning-independent
-        from collections import Counter
-
-        c = Counter(a.values())
-        assert abs(c["train"] / 2000 - 0.8) < 0.05
-        assert abs(c["val"] / 2000 - 0.1) < 0.03
-
-    def test_sample_rate(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = spark.range(5000).withColumnRenamed("id", "doc_id")
-        n = sampling.sample_by_hash(d, 0.25).count()
-        assert abs(n / 5000 - 0.25) < 0.03
-        # subset property: p=0.1 sample is contained in p=0.25 sample
-        s10 = {r["doc_id"] for r in sampling.sample_by_hash(d, 0.10).collect()}
-        s25 = {r["doc_id"] for r in sampling.sample_by_hash(d, 0.25).collect()}
-        assert s10 <= s25
-
-    def test_pack_bins_respect_budget(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = spark.createDataFrame(
-            [(i, 100) for i in range(10)], "doc_id long, n_tokens long"
-        )
-        rows = sampling.pack_sequences(d, budget_tokens=250).orderBy("doc_id").collect()
-        # exclusive prefix: docs 0,1,2 start below 250; 3,4 below 500...
-        assert [r["bin_id"] for r in rows] == [0, 0, 0, 1, 1, 2, 2, 2, 3, 3]
-
-    def test_pack_per_shard(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = spark.createDataFrame(
-            [(s, i, 100) for s in (0, 1) for i in range(4)],
-            "shard long, doc_id long, n_tokens long",
-        )
-        rows = sampling.pack_sequences(d, budget_tokens=200, shard_col="shard").collect()
-        for r in rows:
-            assert r["bin_id"] == r["doc_id"] // 2  # each shard packs from 0
-
-    def test_pack_global_guard_refuses_large_input(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = spark.createDataFrame([(i, 10) for i in range(30)], "doc_id long, n_tokens long")
-        with pytest.raises(ValueError, match="ONE task"):
-            sampling.pack_sequences(d, budget_tokens=100, max_global_rows=20)
-        # sharded path has no single-task window -> no guard needed
-        out = sampling.pack_sequences(
-            d.withColumn("shard", sampling.hash_shard_col("doc_id", 4)),
-            budget_tokens=100,
-            shard_col="shard",
-            max_global_rows=20,
-        )
-        assert out.count() == 30
-
-    def test_hash_shard_col_deterministic_and_oracle_matched(self, spark):
-        import hashlib
-
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = spark.createDataFrame([(i,) for i in range(50)], "doc_id long")
-        rows = d.withColumn("shard", sampling.hash_shard_col("doc_id", 8)).collect()
-        for r in rows:
-            exp = int(hashlib.md5(str(r["doc_id"]).encode()).hexdigest()[:4], 16) % 8
-            assert r["shard"] == exp
-        # per-shard bins start at 0 and are contiguous in order_col
-        d2 = spark.createDataFrame(
-            [(i, 100) for i in range(40)], "doc_id long, n_tokens long"
-        ).withColumn("shard", sampling.hash_shard_col("doc_id", 4))
-        packed = sampling.pack_sequences(
-            d2, budget_tokens=200, shard_col="shard"
-        ).collect()
-        by_shard: dict[int, list] = {}
-        for r in sorted(packed, key=lambda r: (r["shard"], r["doc_id"])):
-            by_shard.setdefault(r["shard"], []).append(r["bin_id"])
-        for shard, bins in by_shard.items():
-            assert bins == [i // 2 for i in range(len(bins))], (shard, bins)
-
-    def test_stratified_sample_rates_and_monotonicity(self, spark):
-        import hashlib
-
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = spark.createDataFrame(
-            [(i, f"s{i % 3}") for i in range(300)], "doc_id long, source string"
-        )
-        rates = {"s0": 1.0, "s1": 0.4}
-        got = {
-            (r["doc_id"], r["source"])
-            for r in sampling.stratified_sample_by_hash(d, rates, default_rate=0.2).collect()
-        }
-
-        def thresh(p):
-            return format(min(int(p * 2**32), 2**32 - 1), "08x")
-
-        exp = set()
-        for i in range(300):
-            src = f"s{i % 3}"
-            p = rates.get(src, 0.2)
-            if hashlib.md5(str(i).encode()).hexdigest()[:8] < thresh(p):
-                exp.add((i, src))
-        assert got == exp
-        # upsampling a group keeps every previously selected row
-        low = {r["doc_id"] for r in sampling.stratified_sample_by_hash(d, {"s1": 0.3}, default_rate=0.0).collect()}
-        high = {r["doc_id"] for r in sampling.stratified_sample_by_hash(d, {"s1": 0.6}, default_rate=0.0).collect()}
-        assert low <= high
-
-    def test_decontaminate_flags_ngram_overlap(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import dedup
-
-        bench = spark.createDataFrame(
-            [(0, "the quick brown fox jumps over the lazy dog tonight")],
-            "doc_id long, text string",
-        )
-        corpus = spark.createDataFrame(
-            [
-                # full copy: 10 tokens -> 3 distinct 8-gram overlaps
-                (1, "the quick brown fox jumps over the lazy dog tonight"),
-                # one 8-gram lifted verbatim mid-sentence
-                (2, "intro words then the quick brown fox jumps over the lazy ending"),
-                # clean
-                (3, "completely unrelated text with eight or more tokens in it total"),
-                # too short for any 8-gram
-                (4, "short doc"),
-            ],
-            "doc_id long, text string",
-        )
-        got = {
-            r["id"]: r["n_hits"]
-            for r in dedup.decontaminate(corpus, bench, shingle_n=8).collect()
-        }
-        assert got == {1: 3, 2: 1}
-
-    def test_pack_concat_boundaries(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = spark.createDataFrame(
-            [(i, f"t{i}", 100) for i in range(5)], "doc_id long, text string, n_tokens long"
-        )
-        rows = sampling.pack_concat(d, budget_tokens=250, sep="|").orderBy("bin_id").collect()
-        assert [(r["bin_id"], r["packed_text"], list(r["member_ids"]), r["total_tokens"]) for r in rows] == [
-            (0, "t0|t1|t2", [0, 1, 2], 300),
-            (1, "t3|t4", [3, 4], 200),
-        ]
-
-
-class TestWindowChunks:
-    def _py_chunks(self, text, window, overlap):
-        toks = text.split()
-        if not toks:
-            return []
-        stride = window - overlap
-        n = len(toks)
-        nwin = 1 if n <= window else 1 + math.ceil((n - window) / stride)
-        return [
-            (k, " ".join(toks[k * stride : k * stride + window]),
-             len(toks[k * stride : k * stride + window]))
-            for k in range(nwin)
-        ]
-
-    def test_matches_python_oracle(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.sampling import window_chunks
-
-        docs = [
-            (1, " ".join(f"t{i}" for i in range(10))),
-            (2, "a b c"),
-            (3, ""),
-            (4, " ".join(f"w{i}" for i in range(9))),  # exact multiple
-        ]
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        got = {
-            (r["id"], r["chunk_idx"]): (r["chunk_text"], r["n_tokens"])
-            for r in window_chunks(df, window=4, overlap=1).collect()
-        }
-        want = {}
-        for did, text in docs:
-            for k, ct, nt in self._py_chunks(text, 4, 1):
-                want[(did, k)] = (ct, nt)
-        assert got == want
-        assert not any(i == 3 for i, _ in got)  # empty doc -> no chunks
-
-    def test_reconstruction_covers_all_tokens(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.sampling import window_chunks
-
-        text = " ".join(f"x{i}" for i in range(301))
-        df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-        rows = window_chunks(df, window=128, overlap=32).collect()
-        seen = set()
-        for r in rows:
-            seen.update(r["chunk_text"].split())
-        assert seen == set(text.split())
-        # every full window has exactly `window` tokens; stride respected
-        idxs = sorted(r["chunk_idx"] for r in rows)
-        assert idxs == list(range(len(rows)))
-        assert all(r["n_tokens"] == 128 for r in rows if r["chunk_idx"] < len(rows) - 1)
-
-    def test_overlap_validation(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.sampling import window_chunks
-
-        with pytest.raises(ValueError):
-            window_chunks(spark.range(1), window=4, overlap=4)
-
-
-class TestLineDedup:
-    def _run(self, spark, docs, **kw):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-        df = spark.createDataFrame(docs, "doc_id string, text string")
-        return {
-            r["id"]: (r["clean_text"], r["n_kept"], r["n_total"])
-            for r in curation.remove_duplicate_lines(df, **kw).collect()
-        }
-
-    def test_boilerplate_dropped_order_kept(self, spark):
-        got = self._run(
-            spark,
-            [
-                ("a", "unique alpha\ncookie banner\nunique beta"),
-                ("b", "cookie banner\nother content"),
-                ("c", "solo page with nothing shared"),
-            ],
-        )
-        assert got["a"] == ("unique alpha\nunique beta", 2, 3)
-        assert got["b"] == ("other content", 1, 2)
-        assert got["c"] == ("solo page with nothing shared", 1, 1)
-
-    def test_blank_lines_structural(self, spark):
-        # the blank line appears in both docs but is never viral
-        got = self._run(
-            spark, [("a", "x\n\ny"), ("b", "z\n\nw")]
-        )
-        assert got["a"] == ("x\n\ny", 3, 3)
-
-    def test_within_doc_repeat_survives(self, spark):
-        # df counts DOCUMENTS, not occurrences: a line repeated inside
-        # one doc is not boilerplate
-        got = self._run(spark, [("a", "la la\nla la"), ("b", "other")])
-        assert got["a"] == ("la la\nla la", 2, 2)
-
-    def test_all_lines_viral_yields_empty(self, spark):
-        got = self._run(spark, [("a", "same"), ("b", "same")])
-        assert got["a"] == ("", 0, 1) and got["b"] == ("", 0, 1)
-
-    def test_max_df_two_keeps_pairwise(self, spark):
-        got = self._run(
-            spark,
-            [("a", "shared"), ("b", "shared"), ("c", "shared")],
-            max_df=2,
-        )
-        assert all(v == ("", 0, 1) for v in got.values())
-        got2 = self._run(spark, [("a", "shared"), ("b", "shared")], max_df=2)
-        assert got2["a"] == ("shared", 1, 1)
-
-
-class TestQualityMixture:
-    """quantile_bucket_sample: exact rank-statistic terciles + the
-    md5-threshold keep rule."""
-
-    def _scores(self, spark, vals):
-        return spark.createDataFrame(
-            [(f"d{i:02d}", float(v)) for i, v in enumerate(vals)],
-            "chunk_id string, s double",
-        )
-
-    def test_exact_terciles_distinct_scores(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        df = self._scores(spark, range(1, 10))  # 9 distinct scores
-        out = sampling.quantile_bucket_sample(
-            df, "s", rates=[1.0, 1.0, 1.0], key_col="chunk_id"
-        ).collect()
-        by_bucket = {}
-        for r in out:
-            by_bucket.setdefault(r["quality_bucket"], set()).add(r["s"])
-        assert by_bucket == {
-            "q0": {1.0, 2.0, 3.0},
-            "q1": {4.0, 5.0, 6.0},
-            "q2": {7.0, 8.0, 9.0},
-        }
-
-    def test_tied_scores_share_bucket(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        df = self._scores(spark, [5] * 6)
-        out = sampling.quantile_bucket_sample(
-            df, "s", rates=[1.0, 1.0, 1.0], key_col="chunk_id"
-        ).collect()
-        assert len(out) == 6
-        assert {r["quality_bucket"] for r in out} == {"q0"}
-
-    def test_rates_are_hash_subset(self, spark):
-        """Sampling at lower rates must select a SUBSET of the full
-        output (hash thresholds only move) and keep all of q2 at 1.0."""
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        df = self._scores(spark, range(30))
-        full = sampling.quantile_bucket_sample(
-            df, "s", rates=[1.0, 1.0, 1.0], key_col="chunk_id"
-        )
-        part = sampling.quantile_bucket_sample(
-            df, "s", rates=[0.2, 0.6, 1.0], key_col="chunk_id"
-        )
-        f = {(r["chunk_id"], r["quality_bucket"]) for r in full.collect()}
-        p = {(r["chunk_id"], r["quality_bucket"]) for r in part.collect()}
-        assert p <= f
-        assert {t for t in f if t[1] == "q2"} <= p
-
-
-# ---- exact duplicated substring spans (Lee et al. 2022 style) ----
-
-def _span_docs(spark):
-    # A 6-token boilerplate run shared by docs 1 and 2, embedded in
-    # DIFFERENT surroundings (so whole-doc dedup would miss it); doc 3
-    # is unrelated; doc 4 is shorter than k and must pass through.
-    boiler = "subscribe to our newsletter for weekly updates"  # 7 tokens
-    d1 = "alpha beta gamma " + boiler + " delta epsilon zeta eta theta"
-    d2 = "one two three four five " + boiler + " six seven eight nine ten"
-    d3 = "totally unrelated words having nothing shared with any other document here at all"
-    d4 = "tiny doc"
-    return spark.createDataFrame(
-        [(1, d1), (2, d2), (3, d3), (4, d4)], "doc_id long, text string"
-    )
-
-
-def test_duplicated_spans_partial_overlap(spark):
-    # k=4: every 4-gram inside the 7-token boilerplate is viral.
-    spans = curation.duplicated_spans(_span_docs(spark), k=4).collect()
-    by_id = {r["id"]: (r["span_start"], r["span_end"], r["n_dup_tokens"]) for r in spans}
-    # d1: boiler occupies token positions [3, 10); viral 4-gram starts 3..6
-    # -> island [3, 6], span_end = 6 + 4 = 10.
-    assert by_id[1] == (3, 10, 7)
-    # d2: boiler at positions [5, 12) -> starts 5..8, span [5, 12).
-    assert by_id[2] == (5, 12, 7)
-    assert 3 not in by_id and 4 not in by_id
-    assert len(spans) == 2
-
-
-def test_duplicated_spans_merges_adjacent_islands(spark):
-    # Two viral runs separated by MORE than k tokens stay separate spans.
-    run_a = "aa bb cc dd"
-    run_b = "ww xx yy zz"
-    gap = "g1 g2 g3 g4 g5 g6"  # 6 > k=4 tokens between run ends
-    d1 = run_a + " " + gap + " " + run_b
-    d2 = run_a + " p q r s t u v w x y " + run_b
-    df = spark.createDataFrame([(1, d1), (2, d2)], "doc_id long, text string")
-    spans = curation.duplicated_spans(df, k=4).collect()
-    doc1 = [(r["span_start"], r["span_end"]) for r in spans if r["id"] == 1]
-    assert doc1 == [(0, 4), (10, 14)]
-
-
-def test_strip_duplicated_spans(spark):
-    out = {r["id"]: r for r in curation.strip_duplicated_spans(_span_docs(spark), k=4).collect()}
-    # d1 keeps its 3 leading + 5 trailing tokens, boiler removed.
-    assert out[1]["clean_text"] == "alpha beta gamma delta epsilon zeta eta theta"
-    assert (out[1]["n_kept"], out[1]["n_total"]) == (8, 15)
-    assert out[2]["n_kept"] == out[2]["n_total"] - 7
-    # Untouched docs pass through whole.
-    assert out[3]["clean_text"].startswith("totally unrelated")
-    assert out[4]["clean_text"] == "tiny doc"
-    assert out[4]["n_kept"] == out[4]["n_total"] == 2
-
-
-# ---- domain-level (per-source) curation ----
-
-def _source_docs(spark):
-    good = "the quick system is a part of the data engine, with the index and the cache."
-    rows = [
-        # srcA: clean english, no dups
-        (1, good + " alpha", "en", "srcA"),
-        (2, good + " beta", "en", "srcA"),
-        # srcB: 100% duplicates (mirror farm)
-        (3, good + " gamma", "en", "srcB"),
-        (4, good + " gamma", "en", "srcB"),
-        # srcC: off-language
-        (5, good + " delta", "de", "srcC"),
-        (6, good + " epsilon", "de", "srcC"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-
-
-def test_source_stats_gates(spark):
-    out = curation.source_stats(
-        _source_docs(spark), lang_col="lang", max_dup_rate=0.5, min_lang_rate=0.5
-    ).collect()
-    by_src = {r["source"]: r for r in out}
-    assert by_src["srcA"]["kept"] == 1 and by_src["srcA"]["dup_rate"] == 0.0
-    assert by_src["srcB"]["kept"] == 0 and by_src["srcB"]["dup_rate"] == 1.0
-    assert by_src["srcC"]["kept"] == 0 and by_src["srcC"]["lang_rate"] == 0.0
-    assert by_src["srcA"]["n_docs"] == 2
-
-
-def test_dup_rate_is_corpus_wide(spark):
-    # a doc mirrored ACROSS sources counts against both sides
-    rows = [
-        (1, "alpha beta gamma delta epsilon", "en", "srcA"),
-        (2, "alpha beta gamma delta epsilon", "en", "srcB"),
-        (3, "totally different text here now", "en", "srcB"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    out = {r["source"]: r for r in curation.source_stats(df, lang_col="lang").collect()}
-    assert out["srcA"]["dup_rate"] == 1.0
-    assert out["srcB"]["dup_rate"] == 0.5
-
-
-def test_curate_by_source(spark):
-    kept = curation.curate_by_source(
-        _source_docs(spark), lang_col="lang", max_dup_rate=0.5, min_lang_rate=0.5
-    ).collect()
-    assert sorted(r["doc_id"] for r in kept) == [1, 2]
-
-
-def test_source_stats_computed_lang(spark):
-    # lang_col omitted -> lang_id(text) drives lang_rate
-    out = curation.source_stats(
-        _source_docs(spark).drop("lang"), min_lang_rate=0.5
-    ).collect()
-    by_src = {r["source"]: r for r in out}
-    # all three sources carry english stopwords -> lang_id says 'en'
-    assert by_src["srcC"]["lang_rate"] == 1.0
-
-
-class TestCdcChunks:
-    def _py_cdc(self, text, gram=3, divisor=8, salt="cdc"):
-        import hashlib
-
-        toks = text.split()
-        n = len(toks)
-        if n == 0:
-            return []
-        bounds = []
-        for i in range(gram, n):  # 1-based end positions gram..n-1
-            g = " ".join(toks[i - gram : i])
-            h = int(hashlib.md5(f"{salt}|{g}".encode()).hexdigest()[:8], 16)
-            if h % divisor == 0:
-                bounds.append(i)
-        bounds.append(n)
-        out, prev = [], 0
-        for k, b in enumerate(bounds):
-            piece = toks[prev:b]
-            out.append((k, " ".join(piece), len(piece)))
-            prev = b
-        return out
-
-    def _docs(self, spark):
-        import random
-
-        rng = random.Random(7)
-        mk = lambda n: " ".join(f"w{rng.randrange(40)}" for _ in range(n))
-        rows = [(1, mk(120)), (2, mk(57)), (3, "a b"), (4, ""), (5, mk(200))]
-        return rows, spark.createDataFrame(rows, "doc_id long, text string")
-
-    def test_matches_python_oracle(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.sampling import cdc_chunks
-
-        rows, df = self._docs(spark)
-        got = {
-            (r["id"], r["chunk_idx"]): (r["chunk_text"], r["n_tokens"])
-            for r in cdc_chunks(df).collect()
-        }
-        want = {}
-        for did, text in rows:
-            for k, ct, nt in self._py_cdc(text):
-                want[(did, k)] = (ct, nt)
-        assert got == want
-        assert not any(i == 4 for i, _ in got)  # empty doc -> no chunks
-
-    def test_token_accounting(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.sampling import cdc_chunks
-
-        rows, df = self._docs(spark)
-        per_doc = {}
-        for r in cdc_chunks(df).collect():
-            per_doc.setdefault(r["id"], []).append(
-                (r["chunk_idx"], r["chunk_text"], r["n_tokens"])
-            )
-        for did, text in rows:
-            if not text.split():
-                continue
-            chunks = sorted(per_doc[did])
-            rebuilt = " ".join(c[1] for c in chunks)
-            assert rebuilt == " ".join(text.split())
-            assert sum(c[2] for c in chunks) == len(text.split())
-
-    def test_shift_resistance(self, spark):
-        # prepending a banner leaves every chunk after the first
-        # boundary byte-identical — the property fixed windows lack
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.sampling import (
-            cdc_chunks,
-            window_chunks,
-        )
-        import random
-
-        rng = random.Random(11)
-        body = " ".join(f"w{rng.randrange(40)}" for _ in range(300))
-        banner = "new cookie banner text here"
-        df = spark.createDataFrame(
-            [(1, body), (2, banner + " " + body)], "doc_id long, text string"
-        )
-        out = cdc_chunks(df).collect()
-        a = [r["chunk_hash"] for r in sorted(out, key=lambda r: r["chunk_idx"]) if r["id"] == 1]
-        b = {r["chunk_hash"] for r in out if r["id"] == 2}
-        assert len(a) > 3  # fixture long enough to carry several cuts
-        assert all(h in b for h in a[1:])  # everything past chunk 0 survives
-        # contrast: fixed windows lose EVERY chunk after the shift
-        w = window_chunks(df, window=32, overlap=0).collect()
-        wa = {r["chunk_text"] for r in w if r["id"] == 1}
-        wb = {r["chunk_text"] for r in w if r["id"] == 2}
-        assert len(wa & wb) == 0
-
-    def test_short_doc_single_chunk(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.sampling import cdc_chunks
-
-        df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-        rows = cdc_chunks(df, gram=3).collect()
-        assert len(rows) == 1 and rows[0]["chunk_text"] == "a b"
-        assert rows[0]["n_tokens"] == 2
-
-
-class TestDsirWeights:
-    def _py_dsir(self, corpus, target, n_buckets=16, alpha=1.0):
-        import hashlib
-        from collections import Counter
-
-        def feats(text):
-            import re
-
-            toks = [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
-            grams = toks + [f"{a}_{b}" for a, b in zip(toks, toks[1:])]
-            return [
-                int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % n_buckets
-                for g in grams
-            ]
-
-        raw = Counter()
-        per_doc = {}
-        for did, text in corpus:
-            f = Counter(feats(text))
-            if f:
-                per_doc[did] = f
-                raw.update(f)
-        tgt = Counter()
-        for _, text in target:
-            tgt.update(feats(text))
-        R, T = sum(raw.values()), sum(tgt.values())
-        out = {}
-        for did, f in per_doc.items():
-            lw = sum(
-                c
-                * (
-                    math.log((tgt.get(b, 0) + alpha) / (T + alpha * n_buckets))
-                    - math.log((raw[b] + alpha) / (R + alpha * n_buckets))
-                )
-                for b, c in f.items()
-            )
-            out[did] = (sum(f.values()), round(lw, 6))
-        return out
-
-    def test_matches_python_oracle(self, spark):
-        corpus = [
-            (1, "the cat sat on the mat"),
-            (2, "stock market prices fell sharply today"),
-            (3, "the dog sat on the rug"),
-            (4, ""),
-        ]
-        target = [(90, "the cat and the dog sat together"), (91, "a cat on a mat")]
-        cdf = spark.createDataFrame(corpus, "doc_id long, text string")
-        tdf = spark.createDataFrame(target, "doc_id long, text string")
-        got = {
-            r["doc_id"]: (r["n_feats"], r["logw"])
-            for r in curation.dsir_weights(cdf, tdf, n_buckets=16).collect()
-        }
-        want = self._py_dsir(corpus, target, n_buckets=16)
-        assert set(got) == set(want)  # doc 4 (no features) excluded
-        for did in want:
-            assert got[did][0] == want[did][0]
-            assert got[did][1] == pytest.approx(want[did][1], abs=2e-6)
-
-    def test_target_like_docs_score_higher(self, spark):
-        # equal token counts: log w is the SEQUENCE-level sum (DSIR
-        # paper form), so length itself shifts the weight — the
-        # domain signal is only comparable at matched length
-        on_domain = "the cat sat on the mat with the dog today"
-        off_domain = "quarterly earnings guidance revised downward amid volatility overnight trading session"
-        cdf = spark.createDataFrame(
-            [(1, on_domain), (2, off_domain)], "doc_id long, text string"
-        )
-        # the exemplar shares the target domain's FUNCTION words too —
-        # with a mismatched determiner ("a cat" vs "the cat") the raw
-        # model's self-counts of "the" dominate and flip the sign
-        tdf = spark.createDataFrame(
-            [(90, "the cat and the dog sat on the mat")], "doc_id long, text string"
-        )
-        w = {r["doc_id"]: r["logw"] for r in curation.dsir_weights(cdf, tdf, n_buckets=64).collect()}
-        assert w[1] > w[2]
-
-    def test_feature_count(self, spark):
-        cdf = spark.createDataFrame([(1, "alpha beta gamma")], "doc_id long, text string")
-        tdf = spark.createDataFrame([(9, "alpha")], "doc_id long, text string")
-        rows = curation.dsir_weights(cdf, tdf).collect()
-        assert rows[0]["n_feats"] == 3 + 2  # unigrams + bigrams
-        nob = curation.dsir_weights(cdf, tdf, bigrams=False).collect()
-        assert nob[0]["n_feats"] == 3
-
-
-class TestDsirResample:
-    def _corpus(self, spark):
-        # 30 "code-like" docs + 10 "prose-like" docs; target = prose
-        rows = []
-        for i in range(30):
-            rows.append((i, f"def func{i} return value{i} import sys class obj{i}", "xx"))
-        for i in range(30, 40):
-            rows.append((i, "the quick brown fox jumps over the lazy dog again", "en"))
-        return spark.createDataFrame(rows, "doc_id long, text string, lang string")
-
-    def test_draw_is_deterministic_and_well_formed(self, spark):
-        d = self._corpus(spark)
-        tgt = d.where(F.col("lang") == "en")
-        a = curation.dsir_resample(d, tgt, k=15).collect()
-        b = curation.dsir_resample(d, tgt, k=15).collect()
-        assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
-        ids = [r["doc_id"] for r in a]
-        assert len(ids) == len(set(ids)) == 15
-        keys = [r["gumbel_key"] for r in a]
-        assert keys == sorted(keys, reverse=True)
-
-    def test_weights_steer_the_draw(self, spark):
-        # target-domain docs carry much higher logw; a k=15 draw from
-        # 10 prose + 30 code docs must keep every prose doc (the logw
-        # gap dwarfs Gumbel noise for this construction)
-        d = self._corpus(spark)
-        tgt = d.where(F.col("lang") == "en")
-        got = {r["doc_id"] for r in curation.dsir_resample(d, tgt, k=15).collect()}
-        assert set(range(30, 40)) <= got
-
-    def test_seed_changes_the_noise(self, spark):
-        d = self._corpus(spark)
-        tgt = d.where(F.col("lang") == "en")
-        a = [r["doc_id"] for r in curation.dsir_resample(d, tgt, k=15, seed="s1").collect()]
-        b = [r["doc_id"] for r in curation.dsir_resample(d, tgt, k=15, seed="s2").collect()]
-        assert a != b  # same weights, different Gumbel draw order
-
-    def test_k_equals_n_returns_everything(self, spark):
-        d = self._corpus(spark)
-        tgt = d.where(F.col("lang") == "en")
-        got = curation.dsir_resample(d, tgt, k=40).collect()
-        assert {r["doc_id"] for r in got} == set(range(40))
-
-
-class TestFasttextScore:
-    """curation.fasttext_score — hashed-linear classifier inference."""
-
-    def _weights(self, spark, mapping):
-        return spark.createDataFrame(
-            list(mapping.items()), "bucket long, w_milli long"
-        )
-
-    def test_logit_is_sum_of_bucket_weights(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-        # one token -> one unigram feature, no bigrams
-        d = spark.createDataFrame([(0, "hello")], "doc_id long, text string")
-        feats = curation._hashed_ngram_features(d, "text", "doc_id", 64, True)
-        b = feats.collect()[0]["b"]
-        out = curation.fasttext_score(
-            d, self._weights(spark, {b: 7}), n_buckets=64
-        ).collect()
-        assert [(r.n_feats, r.logit_milli, r.label) for r in out] == [(1, 7, True)]
-
-    def test_bigrams_and_missing_weights_default_zero(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-        d = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-        # 3 unigrams + 2 bigrams = 5 features; empty weight table -> 0
-        out = curation.fasttext_score(
-            d, self._weights(spark, {}).limit(0), n_buckets=64
-        ).collect()
-        assert [(r.n_feats, r.logit_milli, r.label) for r in out] == [(5, 0, False)]
-
-    def test_threshold_is_mean_pooled(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-        # logit 10 over 5 feats = mean 2 milli; threshold 3 milli fails,
-        # threshold 1 milli passes -> the t*n comparison is mean semantics
-        d = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-        feats = curation._hashed_ngram_features(d, "text", "doc_id", 64, True)
-        w = {r["b"]: 2 for r in feats.collect()}
-        lo = curation.fasttext_score(
-            d, self._weights(spark, w), n_buckets=64, threshold_milli=1
-        ).collect()[0]
-        hi = curation.fasttext_score(
-            d, self._weights(spark, w), n_buckets=64, threshold_milli=3
-        ).collect()[0]
-        assert lo.label is True and hi.label is False
-        assert lo.logit_milli == 10 and lo.n_feats == 5
-
-    def test_empty_text_drops_out(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-        d = spark.createDataFrame(
-            [(0, ""), (1, "   "), (2, "ok")], "doc_id long, text string"
-        )
-        out = curation.fasttext_score(
-            d, self._weights(spark, {}).limit(0), n_buckets=64
-        ).collect()
-        assert [r.id for r in out] == [2]
-
-    def test_hash_weights_range_and_determinism(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-        w = curation.hash_weights(spark, n_buckets=128).collect()
-        assert len(w) == 128
-        assert all(-1000 <= r.w_milli <= 1000 for r in w)
-        w2 = curation.hash_weights(spark, n_buckets=128).collect()
-        assert sorted(map(tuple, w)) == sorted(map(tuple, w2))
-
-
-class TestC4Rules:
-    """C4 line/page gates on handwritten web-shaped pages — the
-    punctuation paths the synthetic corpus can't exercise."""
-
-    PAGES = [
-        # 0: clean page, 3 sentences on 3 lines -> kept
-        (0, "the quick brown fox jumps high.\nthe lazy dog sleeps all day today!\nwhat a fine day this is?"),
-        # 1: only 2 sentences -> dropped (min_sentences)
-        (1, "the quick brown fox jumps high.\nthe lazy dog sleeps all day today."),
-        # 2: line without terminal punct is removed at line level
-        (2, "the quick brown fox jumps high.\nno punct line here at all\nthe lazy dog sleeps all day today.\nwhat a fine day this is."),
-        # 3: javascript line removed; page survives on the rest
-        (3, "please enable javascript to view this.\none two three four five six.\nseven eight nine ten eleven twelve.\na b c d e f."),
-        # 4: lorem ipsum -> page dropped
-        (4, "one two three four five six.\nseven eight nine ten eleven.\nlorem ipsum dolor sit amet here.\ntwelve thirteen fourteen fifteen sixteen."),
-        # 5: brace -> page dropped
-        (5, "one two three four five six.\nseven eight nine ten eleven.\nvar x = function() { return; }.\ntwelve thirteen fourteen fifteen sixteen."),
-        # 6: bad word -> page dropped
-        (6, "one two three four five badword.\nseven eight nine ten eleven.\ntwelve thirteen fourteen fifteen sixteen."),
-        # 7: short lines (<5 words) removed -> too few sentences -> dropped
-        (7, "one two three.\nfour five six.\nseven eight nine.\nten eleven twelve."),
-    ]
-
-    def _run(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-        d = spark.createDataFrame(self.PAGES, "doc_id long, text string")
-        return {r.doc_id: r for r in curation.c4_rules(d, bad_words=("badword",)).collect()}
-
-    def test_page_verdicts(self, spark):
-        out = self._run(spark)
-        assert {i: out[i].kept for i in range(8)} == {
-            0: 1, 1: 0, 2: 1, 3: 1, 4: 0, 5: 0, 6: 0, 7: 0,
-        }
-
-    def test_line_gates(self, spark):
-        out = self._run(spark)
-        # page 2: the punct-less line is removed, three survive
-        assert out[2].n_lines == 4 and out[2].kept_lines == 3
-        assert "no punct line" not in out[2].clean_text
-        # page 3: the javascript line is removed at line level
-        assert out[3].kept_lines == 3
-        assert "javascript" not in out[3].clean_text
-        # page 7: every line has < 5 words -> none kept
-        assert out[7].kept_lines == 0 and out[7].clean_text is None
-
-    def test_flags(self, spark):
-        out = self._run(spark)
-        assert out[4].has_lorem == 1 and out[5].has_brace == 1
-        assert out[6].has_bad_word == 1
-        assert out[0].has_bad_word == out[0].has_lorem == out[0].has_brace == 0
-
-
-class TestGopherQuality:
-    def _rows(self, spark, pages, **kw):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import curation
-
-        d = spark.createDataFrame(pages, "doc_id long, text string")
-        return {r.doc_id: r for r in curation.gopher_quality(d, **kw).collect()}
-
-    def test_rule_evidence_columns(self, spark):
-        good = "the cat and the dog have fun with all of that stuff " * 5
-        out = self._rows(
-            spark,
-            [
-                (0, good),
-                (1, "a b c d e f g h i j " * 10),          # mean word len 1 -> drop
-                (2, "### ### ### " + good),                  # symbol ratio -> drop
-                (3, "- one\n- two\n- three\n- four"),        # bullets -> drop
-                (4, "zz zz zz " + good + " 11 22 33 44 55 66 77 88 99 00 11 22 33 44 99 88"),  # alpha frac
-                (5, "sphinx quartz vow jump dock " * 12),    # no stop words -> drop
-            ],
-            min_words=20,
-            min_stop_hits=2,
-        )
-        assert out[0].kept == 1
-        assert out[1].kept == 0 and out[1].mean_word_len == 1.0
-        assert out[2].kept == 0 and out[2].symbol_ratio > 0.1
-        assert out[3].kept == 0 and out[3].bullet_frac == 1.0
-        assert out[4].kept == 0 and out[4].alpha_frac < 0.8
-        assert out[5].kept == 0 and out[5].n_stop == 0
-
-    def test_ellipsis_lines(self, spark):
-        base = "the cat and the dog have fun with all of that " * 3
-        pages = [(0, base + "...\n" + base + "...\n" + base)]
-        out = self._rows(spark, pages, min_words=20)
-        assert abs(out[0].ellipsis_frac - 2 / 3) < 1e-6
-        assert out[0].kept == 0  # 66% ellipsis lines > 30%
-
-    def test_word_count_bounds(self, spark):
-        out = self._rows(
-            spark,
-            [(0, "the cat sat"), (1, "the cat and the dog have fun with all of that stuff " * 2)],
-            min_words=20,
-        )
-        assert out[0].kept == 0 and out[1].kept == 1
-
-
-class TestReadability:
-    def test_flesch_known_value(self, spark):
-        from pyspark.sql import functions as F
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import text as tf
-
-        # "the cat sat on the mat." -> 6 words, 1 sentence, 6 vowel groups
-        d = spark.createDataFrame([(0, "the cat sat on the mat.")], "doc_id long, text string")
-        feats = tf.readability_features(F.col("text"))
-        r = d.select(
-            feats["n_words"].alias("w"),
-            feats["n_sentences"].alias("s"),
-            feats["n_syllables"].alias("sy"),
-            F.round(feats["flesch"], 6).alias("fl"),
-        ).collect()[0]
-        assert (r.w, r.s, r.sy) == (6, 1, 6)
-        assert abs(r.fl - (206.835 - 1.015 * 6 - 84.6 * 1.0)) < 1e-9
-
-    def test_sentence_floor(self, spark):
-        from pyspark.sql import functions as F
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import text as tf
-
-        d = spark.createDataFrame([(0, "no punctuation here")], "doc_id long, text string")
-        r = d.select(tf.readability_features(F.col("text"))["n_sentences"].alias("s")).collect()[0]
-        assert r.s == 1
-
-    def test_multi_char_enders_count_once(self, spark):
-        from pyspark.sql import functions as F
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import text as tf
-
-        d = spark.createDataFrame([(0, "wait... what?! ok then.")], "doc_id long, text string")
-        r = d.select(tf.readability_features(F.col("text"))["n_sentences"].alias("s")).collect()[0]
-        assert r.s == 3
-
-
-class TestTemperatureSample:
-    def _corpus(self, spark, sizes):
-        rows = []
-        i = 0
-        for src, n in sizes.items():
-            for _ in range(n):
-                rows.append((i, src))
-                i += 1
-        return spark.createDataFrame(rows, "doc_id long, source string")
-
-    def test_rates_flatten_skew(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = self._corpus(spark, {"big": 400, "small": 25})
-        out = sampling.temperature_sample(d, alpha=0.5, target_frac=0.2)
-        rates = {r["group"]: r.rate for r in out.select("group", "rate").distinct().collect()}
-        # alpha=0.5: p_big ~ 20/25, p_small ~ 5/25 -> small's keep RATE
-        # must exceed big's by ~4x (sqrt flattening), and exceed its
-        # own natural share
-        assert rates["small"] > rates["big"]
-        assert abs(rates["small"] / rates["big"] - 4.0) < 0.05
-
-    def test_expected_volume_hits_target(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = self._corpus(spark, {"a": 300, "b": 150, "c": 50})
-        out = sampling.temperature_sample(d, alpha=0.5, target_frac=0.4).collect()
-        # sum of n_g * r_g == target_frac * N when no rate clips at 1
-        rates = {}
-        for r in out:
-            rates[r["group"]] = (r.n_group, r.rate)
-        expected = sum(n * rate for n, rate in rates.values())
-        assert abs(expected - 0.4 * 500) < 1.0
-        kept = sum(r.kept for r in out)
-        assert abs(kept - 200) < 40  # hash-uniform binomial tolerance
-
-    def test_alpha_one_is_uniform(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = self._corpus(spark, {"a": 320, "b": 80})
-        out = sampling.temperature_sample(d, alpha=1.0, target_frac=0.25)
-        rates = {r["group"]: r.rate for r in out.select("group", "rate").distinct().collect()}
-        assert abs(rates["a"] - 0.25) < 1e-6 and abs(rates["b"] - 0.25) < 1e-6
-
-    def test_rerun_stable(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import sampling
-
-        d = self._corpus(spark, {"a": 100, "b": 60})
-        a = sorted(map(tuple, sampling.temperature_sample(d).collect()))
-        b = sorted(map(tuple, sampling.temperature_sample(d).collect()))
-        assert a == b
 
 
 class TestSourceOverlap:
@@ -1071,12 +115,23 @@ class TestSourceDrift:
         return out
 
     def _run(self, spark, docs, top_v):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.curation import source_drift
-
         df = spark.createDataFrame(docs, "source string, text string")
+        st = (
+            df.select(
+                "source",
+                F.explode(
+                    F.filter(
+                        F.split(F.lower("text"), r"[^a-z0-9]+"),
+                        lambda t: F.length(t) > 0,
+                    )
+                ).alias("term"),
+            )
+            .groupBy("source", "term")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
         return {
             r["source"]: (r["n_tokens"], r["n_terms_seen"], r["kl_corpus"])
-            for r in source_drift(df, top_v=top_v).collect()
+            for r in curation.kl_divergence_from_counts(st, top_v=top_v).collect()
         }
 
     def test_closed_form_matches_full_grid(self, spark):
@@ -1101,152 +156,3 @@ class TestSourceDrift:
         assert got["junk"][2] > got["a"][2]
         assert abs(got["a"][2] - got["b"][2]) < 1e-9  # identical dists
         assert all(v[2] >= 0 for v in got.values())   # KL non-negativity
-
-
-class TestSourceBoilerplate:
-    def _run(self, spark, rows, **kw):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.curation import source_boilerplate
-
-        df = spark.createDataFrame(rows, "source string, doc_id long, text string")
-        return {
-            r["source"]: (r["n_docs"], r["n_lines"], r["n_boilerplate"],
-                          r["boiler_char_frac"])
-            for r in source_boilerplate(df, **kw).collect()
-        }
-
-    def test_per_source_banner_detected(self, spark):
-        # src A: banner on all 4 docs + unique bodies; src B: no repeats
-        rows = [("A", i, f"WELCOME BANNER\nunique body {i}") for i in range(4)]
-        rows += [("B", 10 + i, f"only body {i}") for i in range(3)]
-        got = self._run(spark, rows, min_frac=0.3, min_docs=2)
-        n_docs, n_lines, n_boiler, frac = got["A"]
-        assert (n_docs, n_boiler) == (4, 1)
-        assert n_lines == 5  # banner + 4 unique bodies
-        banner_mass = 4 * len("WELCOME BANNER")
-        total_mass = banner_mass + sum(len(f"unique body {i}") for i in range(4))
-        assert frac == round(banner_mass / total_mass, 6)
-        assert got["B"] == (3, 3, 0, 0.0)
-
-    def test_threshold_is_per_source(self, spark):
-        # the same line in 2/10 docs (20% < 30%) is NOT boilerplate,
-        # but in 2/4 docs (50%) of a smaller source it IS
-        rows = [("big", i, ("shared line\nbody %d" % i) if i < 2 else f"body {i}")
-                for i in range(10)]
-        rows += [("small", 100 + i, ("shared line\nbody %d" % i) if i < 2 else f"body {i}")
-                 for i in range(4)]
-        got = self._run(spark, rows, min_frac=0.3, min_docs=2)
-        assert got["big"][2] == 0
-        assert got["small"][2] == 1
-
-    def test_blank_lines_ignored(self, spark):
-        rows = [("s", i, "x\n\n  \nbody") for i in range(3)]
-        got = self._run(spark, rows, min_frac=0.3, min_docs=2)
-        assert got["s"][1] == 2  # 'x' and 'body' only
-        assert got["s"][2] == 2  # both repeat in all docs
-
-
-class TestHostBudget:
-    def test_caps_per_host_best_quality_first(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.curation import host_budget
-
-        good = ("this is a reasonably long, well punctuated sentence with "
-                "the usual english words and a steady flow of text.")
-        junk = "zz qq xx"
-        rows = [("big", i, good if i % 2 == 0 else junk) for i in range(8)]
-        rows += [("small", 100, good), ("small", 101, junk)]
-        df = spark.createDataFrame(rows, "source string, doc_id long, text string")
-        got = host_budget(df, budget=3).collect()
-        by_src = {}
-        for r in got:
-            by_src.setdefault(r["source"], []).append(r)
-        assert len(by_src["big"]) == 3 and len(by_src["small"]) == 2
-        # quality-first: the good docs (even ids) outrank the junk
-        assert [r["doc_id"] for r in by_src["big"]] == [0, 2, 4]
-        assert [r["rank"] for r in by_src["big"]] == [1, 2, 3]
-        # deterministic tie-break on doc_id among equal-quality docs
-        assert by_src["small"][0]["doc_id"] == 100
-
-    def test_budget_one(self, spark):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.curation import host_budget
-
-        rows = [("s", i, f"text {i} words here now okay") for i in range(5)]
-        df = spark.createDataFrame(rows, "source string, doc_id long, text string")
-        got = host_budget(df, budget=1).collect()
-        assert len(got) == 1 and got[0]["rank"] == 1
-
-
-class TestNgramCoverage:
-    def _run(self, spark, refs, corpus):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators.dedup import ngram_coverage
-
-        r = spark.createDataFrame(refs, "doc_id long, text string")
-        c = spark.createDataFrame(corpus, "doc_id long, text string")
-        return {row["id"]: (row["n_shingles"], row["n_covered"], row["coverage"])
-                for row in ngram_coverage(r, c, shingle_n=4).collect()}
-
-    def test_full_partial_and_zero_coverage(self, spark):
-        ref_full = " ".join(f"w{i}" for i in range(10))      # all in corpus
-        ref_half = " ".join(f"h{i}" for i in range(10))      # first 6 tokens only
-        ref_none = " ".join(f"z{i}" for i in range(10))      # absent
-        corpus = [
-            (100, "prefix " + ref_full + " suffix"),
-            (101, " ".join(f"h{i}" for i in range(6))),
-        ]
-        got = self._run(
-            spark, [(1, ref_full), (2, ref_half), (3, ref_none)], corpus
-        )
-        # 10 tokens -> 7 distinct 4-gram shingles per ref
-        assert got[1] == (7, 7, 1.0)
-        # first 6 tokens give shingles at positions 1..3
-        assert got[2] == (7, 3, round(3 / 7, 6))
-        assert got[3] == (7, 0, 0.0)
-
-    def test_short_refs_excluded(self, spark):
-        got = self._run(spark, [(1, "only three words")], [(9, "whatever text here is")])
-        assert got == {}
-
-
-class TestEffectiveTokens:
-    def test_dup_tokens_credited_once_to_min_id_winner(self, spark):
-        docs = spark.createDataFrame(
-            [
-                # source a: doc 1 ("x y z", 3 tokens) duplicated by
-                # doc 2 (whitespace/case variant -> same fingerprint)
-                (1, "x y z", "a"),
-                (2, "  X  y   Z ", "a"),
-                # source b: its only doc is a dup of a's doc 1 ->
-                # loses the fingerprint race entirely
-                (3, "x y z", "b"),
-                # source c: unique doc, 2 tokens
-                (4, "hello world", "c"),
-            ],
-            "doc_id long, text string, source string",
-        )
-        got = {r["source"]: r for r in curation.effective_tokens(docs).collect()}
-        a, b, c = got["a"], got["b"], got["c"]
-        assert (a["n_docs"], a["raw_tokens"]) == (2, 6)
-        assert (a["unique_docs"], a["effective_tokens"]) == (1, 3)
-        assert a["dup_token_frac"] == 0.5
-        assert (b["n_docs"], b["raw_tokens"]) == (1, 3)
-        assert (b["unique_docs"], b["effective_tokens"]) == (0, 0)
-        assert b["dup_token_frac"] == 1.0
-        assert (c["unique_docs"], c["effective_tokens"]) == (1, 2)
-        assert c["dup_token_frac"] == 0.0
-
-    def test_effective_sums_to_corpus_unique_totals(self, spark):
-        docs = spark.createDataFrame(
-            [(i, f"tok{i % 3} tail", f"s{i % 2}") for i in range(12)],
-            "doc_id long, text string, source string",
-        )
-        rows = curation.effective_tokens(docs).collect()
-        # 3 distinct fingerprints -> 3 unique docs, 6 effective tokens
-        assert sum(r["unique_docs"] for r in rows) == 3
-        assert sum(r["effective_tokens"] for r in rows) == 6
-        assert sum(r["n_docs"] for r in rows) == 12
-
-    def test_empty_source_zero_frac(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "", "a")], "doc_id long, text string, source string"
-        )
-        r = curation.effective_tokens(docs).collect()[0]
-        assert r["raw_tokens"] == 0 and r["dup_token_frac"] == 0.0

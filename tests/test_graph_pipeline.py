@@ -152,6 +152,38 @@ class TestPipeline:
         for t, before in snap.items():
             assert _table(spark, catalog, t) == before, t
 
+    @pytest.mark.parametrize("graph_mode", ["cow", "mor"])
+    @pytest.mark.parametrize("extract_from_html", [True, False])
+    def test_page_twice_in_one_batch_counts_once(
+        self, spark, tmp_path, graph_mode, extract_from_html
+    ):
+        """A batch holding the same (url, text) twice, the second copy
+        crawled later, builds the same graph as the batch holding it
+        once: the batch is made distinct by chunk_id before mentions are
+        counted, and the checkpoint keeps the batch's latest warc_ts."""
+        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import (
+            ParquetCatalog,
+        )
+
+        pages = datagen.pages_df(spark, 8)
+        recrawl = pages.orderBy("url").limit(3).withColumn(
+            "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 30 DAYS")
+        )
+        twice = pages.unionByName(recrawl)
+        cats = []
+        for tag, batch in (("once", pages), ("twice", twice)):
+            cat = ParquetCatalog(str(tmp_path / tag))
+            res = pipeline.run_pipeline(
+                spark, batch, cat,
+                extract_from_html=extract_from_html, graph_mode=graph_mode,
+            )
+            assert res.pages == 8, tag
+            hwm = cat.read(spark, pipeline.CHECKPOINT_TABLE).collect()[0]["max_warc_ts"]
+            assert hwm == batch.agg(F.max("warc_ts")).collect()[0][0], tag
+            cats.append(cat)
+        for t in ["nodes", "edges", "mentions", "triples"]:
+            assert _table(spark, cats[0], t) == _table(spark, cats[1], t), t
+
     def test_lineage_written(self, spark, catalog):
         pages = datagen.pages_df(spark, 20)
         pipeline.run_pipeline(spark, pages, catalog)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark import datagen
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import concepts as cf
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import graph
+from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import api as apimod
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import httpapi, pipeline
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import ParquetCatalog
 
@@ -111,6 +112,27 @@ def test_query_async_roundtrip(server):
     assert status == 200
     res = body["data"]
     assert res["groups"] is not None or res["results"] == []
+
+
+def test_per_request_maps_keep_newest(server, monkeypatch):
+    """traces, job_requests and the job registry keep only the newest
+    MAX_TRACKED entries, and the newest request still explains."""
+    base, svc = server
+    n, k = 2, 2
+    monkeypatch.setattr(apimod, "MAX_TRACKED", n)
+    links, job_ids = [], []
+    for _ in range(n + k):
+        _, body = _post(base, "/v1/query", {"query": "page"})
+        links.append(body["data"]["explainLink"])
+        _, body = _post(base, "/v1/query", {"query": "page", "output": {"groupBy": ["category"]}})
+        job_ids.append(body["data"]["jobId"])
+        svc.jobs.wait(job_ids[-1], timeout=120)
+    assert len(svc.traces) == len(svc.job_requests) == len(svc.jobs._jobs) == n
+    status, body = _get_raw(base, links[-1])
+    assert status == 200 and body["data"]["requestId"] == links[-1].rsplit("/", 1)[-1]
+    assert body["data"]["query"] == "page"
+    assert _get_raw(base, f"/v1/jobs/{job_ids[-1]}")[0] == 200
+    assert _get_raw(base, f"/v1/jobs/{job_ids[0]}")[0] == 404
 
 
 def test_evidence_and_neighbors_404(server):

@@ -34,53 +34,6 @@ def test_stream_matches_batch(spark, catalog, tmp_path):
         assert a == b, t
 
 
-def test_stream_dedup_matches_full_corpus_run(spark, tmp_path):
-    """Two file drops through stream_dedup_dir == one full-corpus LSH
-    run; second stream start consumes only the new files."""
-    from pyspark.sql import functions as F
-
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import dedup
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import (
-        ParquetCatalog,
-    )
-
-    docs = [
-        (1, "the quick brown fox jumps over the lazy dog again and again"),
-        (2, "the quick brown fox jumps over the lazy dog again and again"),
-        (3, "the quick brown fox jumps over the lazy cat again and again"),
-        (4, "completely different content about spark execution engines today"),
-        (5, "spark execution engines process columnar batches with codegen"),
-    ]
-    full = spark.createDataFrame(docs, "doc_id long, text string")
-    cat = ParquetCatalog(str(tmp_path / "cat"))
-    docs_dir = str(tmp_path / "docs")
-    ckpt = str(tmp_path / "ckpt")
-
-    full.where(F.col("doc_id") <= 3).write.mode("append").parquet(docs_dir)
-    incremental.stream_dedup_dir(
-        spark, docs_dir, cat, ckpt, threshold=0.5, shingle_n=2
-    ).awaitTermination(300)
-    full.where(F.col("doc_id") > 3).write.mode("append").parquet(docs_dir)
-    incremental.stream_dedup_dir(
-        spark, docs_dir, cat, ckpt, threshold=0.5, shingle_n=2
-    ).awaitTermination(300)
-
-    got = {
-        (r["a_id"], r["b_id"])
-        for r in cat.read(spark, "near_dup_pairs").collect()
-    }
-    sigs = dedup.minhash_signatures(full, shingle_n=2)
-    est = dedup.minhash_jaccard_estimate(
-        sigs, dedup.minhash_lsh_candidates(sigs)
-    )
-    want = {
-        (r["a_id"], r["b_id"])
-        for r in est.where(F.col("est_jaccard") >= 0.5).collect()
-    }
-    assert got == want and got
-    assert cat.read(spark, "minhash_index").count() == 5
-
-
 def test_stream_communities_matches_full_rebuild(spark, tmp_path):
     """Two edge-file drops through stream_communities_dir == one
     full-graph LPA over everything ingested; the second start consumes
@@ -119,126 +72,3 @@ def test_stream_communities_matches_full_rebuild(spark, tmp_path):
     want = {(r["id"], r["label"]) for r in q.label_propagation(sym, iters=5).collect()}
     got = {(r["id"], r["label"]) for r in ci.read_labels(spark, cat).collect()}
     assert got == want and got
-
-
-def test_stream_heavy_hitters_matches_batch_sketch(spark, tmp_path):
-    """Two file drops through stream_heavy_hitters == the batch CMS
-    heavy-hitter run over the union, for every candidate term; and a
-    replayed epoch does not double-count (epoch-keyed partial MERGE)."""
-    from pyspark.sql import functions as F
-
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import (
-        sketches,
-        textsearch,
-    )
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import (
-        ParquetCatalog,
-    )
-
-    docs = [
-        (1, "spark spark spark shuffle codegen"),
-        (2, "spark shuffle shuffle partition"),
-        (3, "codegen codegen spark arrow arrow arrow arrow"),
-        (4, "partition partition shuffle arrow spark"),
-    ]
-    full = spark.createDataFrame(docs, "doc_id long, text string")
-    cat = ParquetCatalog(str(tmp_path / "cat"))
-    docs_dir = str(tmp_path / "docs")
-    ckpt = str(tmp_path / "ckpt")
-
-    full.where(F.col("doc_id") <= 2).write.mode("append").parquet(docs_dir)
-    incremental.stream_heavy_hitters(
-        spark, docs_dir, cat, ckpt, width=256, depth=3, cand_k=16
-    ).awaitTermination(300)
-    full.where(F.col("doc_id") > 2).write.mode("append").parquet(docs_dir)
-    incremental.stream_heavy_hitters(
-        spark, docs_dir, cat, ckpt, width=256, depth=3, cand_k=16
-    ).awaitTermination(300)
-
-    got = {
-        r["term"]: r["est"]
-        for r in incremental.heavy_hitters_now(
-            spark, cat, k=50, width=256, depth=3
-        ).collect()
-    }
-    tok = full.select(F.explode(textsearch.tokenize(F.col("text"))).alias("term"))
-    want = {
-        r["term"]: r["est"]
-        for r in sketches.heavy_hitters(tok, "term", k=50, width=256, depth=3).collect()
-    }
-    assert got == want
-
-    # replay guard: re-deliver epoch 0's batch through the sink body —
-    # the epoch-keyed MERGE must overwrite, not add
-    batch0 = spark.read.parquet(docs_dir).where(F.col("doc_id") <= 2)
-    tok0 = batch0.select(F.explode(textsearch.tokenize(F.col("text"))).alias("term"))
-    part0 = sketches.count_min_sketch(tok0, "term", width=256, depth=3).withColumn(
-        "epoch_id", F.lit(0)
-    )
-    cat.merge_upsert(spark, "cms_partials", part0, keys=["epoch_id", "j", "bucket"])
-    again = {
-        r["term"]: r["est"]
-        for r in incremental.heavy_hitters_now(
-            spark, cat, k=50, width=256, depth=3
-        ).collect()
-    }
-    assert again == want
-
-
-def test_stream_ivm_view_matches_batch_reaggregation(spark, tmp_path):
-    """Two file drops through stream_ivm_view == batch re-aggregation
-    of the merged fact table at every instant; updates RETRACT the
-    replaced row's contribution (the changelog-fold rung live)."""
-    from pyspark.sql import functions as F, types as T
-
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import ivm
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import (
-        ParquetCatalog,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("grp", T.StringType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    cat = ParquetCatalog(str(tmp_path / "cat"))
-    facts_dir = str(tmp_path / "facts")
-    ckpt = str(tmp_path / "ckpt")
-
-    b1 = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0)], schema
-    )
-    b1.write.mode("append").parquet(facts_dir)
-    incremental.stream_ivm_view(
-        spark, facts_dir, cat, ckpt,
-        keys=["k"], group_cols=["grp"], value_col="v", schema=schema,
-    ).awaitTermination(300)
-    got1 = {
-        (r["grp"], r["cnt"], r["sum_value"])
-        for r in ivm.read_view(spark, cat, "live_agg").collect()
-    }
-    assert got1 == {("a", 2, 3.0), ("b", 1, 3.0)}
-
-    # batch 2: update k=2 (a -> 9.0), move k=3 to group a, add k=4 in b
-    b2 = spark.createDataFrame(
-        [(2, "a", 9.0), (3, "a", 3.5), (4, "b", 4.0)], schema
-    )
-    b2.write.mode("append").parquet(facts_dir)
-    incremental.stream_ivm_view(
-        spark, facts_dir, cat, ckpt,
-        keys=["k"], group_cols=["grp"], value_col="v", schema=schema,
-    ).awaitTermination(300)
-    got2 = {
-        (r["grp"], r["cnt"], r["sum_value"])
-        for r in ivm.read_view(spark, cat, "live_agg").collect()
-    }
-    full = {
-        (r["grp"], r["cnt"], r["sum_value"])
-        for r in cat.read(spark, "facts")
-        .groupBy("grp")
-        .agg(F.count("*").alias("cnt"), F.sum("v").alias("sum_value"))
-        .collect()
-    }
-    assert got2 == full == {("a", 3, 13.5), ("b", 1, 4.0)}

@@ -1,12 +1,9 @@
-"""Query library (Q1-Q5) over a materialized graph + text functions +
-multimodal plumbing."""
+"""Query library (Q1-Q5) over a materialized graph."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark import datagen
-from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import text as tf
-from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import multimodal
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import pipeline, queries
 
 
@@ -67,240 +64,3 @@ def test_q5_grouping(spark, g):
     res = queries.group_results(concepts).collect()
     keys = {r["group_key"] for r in res}
     assert "data" in keys or "graph" in keys  # vocab has data_*/graph_* lemmas
-
-
-def test_text_functions(spark):
-    df = spark.createDataFrame(
-        [
-            ("the cat and the dog sat with the mat.",),
-            ("der hund und die katze mit dem haus und der tür.",),
-            ("",),
-        ],
-        "text string",
-    )
-    feats = tf.quality_features(F.col("text"))
-    rows = df.select(
-        tf.token_count(F.col("text")).alias("tc"),
-        tf.lang_id(F.col("text")).alias("lang"),
-        feats["quality_score"].alias("q"),
-        tf.fingerprint(F.col("text")).alias("fp"),
-    ).collect()
-    assert rows[0]["tc"] == 9 and rows[0]["lang"] == "en" and rows[0]["q"] == 1.0
-    assert rows[1]["lang"] == "de"
-    assert rows[2]["tc"] == 0 and rows[2]["lang"] == "und"
-    assert len({r["fp"] for r in rows}) == 3
-
-
-def test_multimodal_features(spark):
-    pages = datagen.pages_df(spark, 10)
-    feats = multimodal.extract_features(pages, payload_col="html").collect()
-    assert len(feats) == 10
-    by_url = {r["url"]: r for r in feats}
-    for r in feats:
-        assert r["fmt"] == "html" and r["byte_len"] > 0 and len(r["sha256"]) == 64
-    import hashlib
-
-    one = pages.limit(1).collect()[0]
-    assert by_url[one["url"]]["sha256"] == hashlib.sha256(bytes(one["html"])).hexdigest()
-
-
-def test_multimodal_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\x89PNG....")
-
-
-def test_frame_sample_plan(spark):
-    pages = datagen.pages_df(spark, 5)
-    rows = (
-        multimodal.frame_sample_plan(pages, every_n=1, payload_col="html")
-        .groupBy("url")
-        .count()
-        .collect()
-    )
-    assert all(r["count"] >= 1 for r in rows)
-
-
-def test_pii_scrub_and_counts(spark):
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import text as tf
-
-    rows = [
-        (1, "mail me at jane.doe+spam@sub.example.co.uk or call +44 20 7946 0958"),
-        (2, "server 192.168.1.254 and 10.0.0.1; version 1.2 is fine"),
-        (3, "no pii here at all"),
-    ]
-    df = spark.createDataFrame(rows, "id int, text string")
-    c = tf.pii_counts(F.col("text"))
-    got = {
-        r["id"]: r
-        for r in df.select(
-            "id",
-            c["n_email"].alias("e"),
-            c["n_phone"].alias("p"),
-            c["n_ipv4"].alias("ip"),
-            tf.scrub_pii(F.col("text")).alias("s"),
-        ).collect()
-    }
-    assert (got[1]["e"], got[1]["p"], got[1]["ip"]) == (1, 1, 0)
-    assert "[EMAIL]" in got[1]["s"] and "[PHONE]" in got[1]["s"]
-    assert "jane.doe" not in got[1]["s"] and "7946" not in got[1]["s"]
-    assert got[2]["ip"] == 2 and got[2]["s"].count("[IP]") == 2
-    assert "version 1.2 is fine" in got[2]["s"]  # not an IPv4
-    assert got[3]["s"] == "no pii here at all"
-
-
-def test_repetition_report(spark):
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import text as tf
-
-    rows = [
-        (1, "spam spam spam spam"),
-        (2, "once upon a time\nonce upon a time\nthe end"),
-        (3, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    got = {r["id"]: r for r in tf.repetition_report(df).collect()}
-    # "spam spam" bigram occurs 3x (overlapping), covers 3*9/19 chars
-    assert got[1]["top_bigram"] == "spam spam" and got[1]["bigram_count"] == 3
-    assert abs(got[1]["bigram_char_frac"] - round(3 * 9 / 19, 6)) < 1e-9
-    assert got[2]["n_lines"] == 3 and abs(got[2]["dup_line_frac"] - round(1 / 3, 6)) < 1e-9
-    assert got[3]["n_lines"] == 0 and got[3]["top_bigram"] == ""
-
-
-def test_char_entropy(spark):
-    import math
-
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import text as tf
-
-    rows = [(1, "aaaa"), (2, "abab"), (3, "abcd"), (4, "")]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    got = {r["id"]: r for r in tf.char_entropy_report(df).collect()}
-    assert got[1]["char_entropy"] == 0.0
-    assert abs(got[2]["char_entropy"] - 1.0) < 1e-9
-    assert abs(got[3]["char_entropy"] - 2.0) < 1e-9
-    assert got[3]["n_chars"] == 4
-    assert 4 not in got  # empty doc omitted
-    # hand fixture with uneven distribution
-    df2 = spark.createDataFrame([(9, "aab")], "doc_id int, text string")
-    want = -(2 / 3 * math.log2(2 / 3) + 1 / 3 * math.log2(1 / 3))
-    got2 = tf.char_entropy_report(df2).collect()[0]
-    assert abs(got2["char_entropy"] - round(want, 6)) < 1e-9
-
-
-class TestScriptProfile:
-    def _prof(self, spark, text):
-        df = spark.createDataFrame([(1, text)], "doc_id int, text string")
-        p = tf.script_profile(F.col("text"))
-        return df.select(
-            *[p[k].alias(k) for k in
-              ("n_latin", "n_cyrillic", "n_cjk", "n_arabic", "n_hangul",
-               "n_digit", "n_letters", "dominant_script", "mixed_script")]
-        ).collect()[0]
-
-    def test_pure_latin(self, spark):
-        r = self._prof(spark, "Hello World 42")
-        assert (r["n_latin"], r["n_digit"], r["n_letters"]) == (10, 2, 10)
-        assert r["dominant_script"] == "latin" and not r["mixed_script"]
-
-    def test_cyrillic_dominant(self, spark):
-        r = self._prof(spark, "Привет мир ok")
-        assert r["n_cyrillic"] == 9 and r["n_latin"] == 2
-        assert r["dominant_script"] == "cyrillic"
-        assert r["mixed_script"]  # 2/11 latin > 5%
-
-    def test_homoglyph_sprinkle_trips_mixed(self, spark):
-        # Latin page with ONE Cyrillic 'а' (U+0430) in 10 letters: 10%
-        r = self._prof(spark, "bаnk login")  # the 'а' is Cyrillic
-        assert r["n_cyrillic"] == 1 and r["n_latin"] == 8
-        assert r["dominant_script"] == "latin" and r["mixed_script"]
-
-    def test_below_threshold_not_mixed(self, spark):
-        # 1 Cyrillic char out of 30 letters = 3.3% < 5%
-        r = self._prof(spark, "a" * 29 + "б")
-        assert not r["mixed_script"] and r["dominant_script"] == "latin"
-
-    def test_cjk_and_tie_break(self, spark):
-        r = self._prof(spark, "你好世界")
-        assert r["n_cjk"] == 4 and r["dominant_script"] == "cjk"
-        # exact tie latin vs cjk -> fixed order picks latin
-        t = self._prof(spark, "ab你好")
-        assert t["dominant_script"] == "latin"
-
-    def test_empty_and_digits_only(self, spark):
-        r = self._prof(spark, "12345")
-        assert r["n_letters"] == 0 and r["dominant_script"] == "none"
-        assert not r["mixed_script"]
-
-
-class TestTileStats:
-    def test_tiles_exact(self, spark):
-        import hashlib
-
-        payloads = {"a": b"x" * 130, "b": b"hello world", "e": b""}
-        df = spark.createDataFrame(
-            [(k, bytearray(v)) for k, v in payloads.items()],
-            "url string, payload binary",
-        )
-        got = {}
-        for r in multimodal.tile_stats(df, tile_bytes=64).collect():
-            got.setdefault(r["url"], []).append(
-                (r["tile_idx"], r["tile_len"], r["tile_sha256"], r["mean_byte"])
-            )
-        # 130 bytes -> tiles of 64, 64, 2 (short last tile, no padding)
-        assert [t[:2] for t in got["a"]] == [(0, 64), (1, 64), (2, 2)]
-        assert got["a"][0][2] == hashlib.sha256(b"x" * 64).hexdigest()
-        assert got["a"][2][2] == hashlib.sha256(b"xx").hexdigest()
-        assert got["a"][0][3] == float(ord("x"))
-        # sub-tile payload -> one short tile
-        assert [t[:2] for t in got["b"]] == [(0, 11)]
-        assert got["b"][0][2] == hashlib.sha256(b"hello world").hexdigest()
-        # empty payload -> one empty tile (asset still present)
-        assert got["e"] == [(0, 0, hashlib.sha256(b"").hexdigest(), 0.0)]
-
-    def test_shared_segment_detectable_across_assets(self, spark):
-        seg = bytes(range(64))
-        df = spark.createDataFrame(
-            [("v1", bytearray(seg + b"A" * 64)), ("v2", bytearray(seg + b"B" * 64))],
-            "url string, payload binary",
-        )
-        rows = multimodal.tile_stats(df, tile_bytes=64).collect()
-        sha = {}
-        for r in rows:
-            sha.setdefault(r["tile_sha256"], set()).add(r["url"])
-        shared = [k for k, v in sha.items() if v == {"v1", "v2"}]
-        assert len(shared) == 1  # exactly the common first tile
-
-
-class TestCodeFeatures:
-    def _run(self, spark, text):
-        df = spark.createDataFrame([(0, text)], "id int, text string")
-        feats = tf.code_features(F.col("text"))
-        return df.select(*[v.alias(k) for k, v in feats.items()]).collect()[0]
-
-    def test_code_snippet_counts_and_verdict(self, spark):
-        r = self._run(spark, "def f(a) { if (a != b) { return x[0] == y; }; }")
-        assert r["n_braces"] == 10  # ()(){}{}[] + closing braces
-        assert r["n_semicolons"] == 2
-        assert r["n_operators"] == 2  # != and ==
-        assert r["is_codey"] == 1
-
-    def test_prose_is_not_codey(self, spark):
-        r = self._run(
-            spark,
-            "the quick brown fox jumps over the lazy dog and keeps running",
-        )
-        assert r["n_braces"] == 0 and r["n_semicolons"] == 0
-        assert r["is_codey"] == 0 and r["symbol_per_kchar"] == 0.0
-
-    def test_camel_transitions(self, spark):
-        r = self._run(spark, "camelCaseVar and fooBarBaz")
-        # camelCase transitions: lC, eV | oB, rB
-        assert r["n_camel"] == 4
-
-    def test_boundary_is_strict_integer(self, spark):
-        # exactly 1.5% symbol density must NOT trip the > gate:
-        # 3 symbols in 200 chars -> 3*1000 == 15*200
-        text = ";;;" + "a" * 197
-        r = self._run(spark, text)
-        assert r["n_chars"] == 200 and r["n_semicolons"] == 3
-        assert r["is_codey"] == 0
-        r2 = self._run(spark, ";;;;" + "a" * 196)
-        assert r2["is_codey"] == 1

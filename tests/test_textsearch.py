@@ -114,469 +114,3 @@ class TestHybridConceptSearch:
         assert got["c_spark"][1] == 2
         assert abs(got["c_spark"][0] - round(exp_chunks["a"] + exp_chunks["b"], 6)) < 1e-5
         assert abs(got["c_data"][0] - exp_chunks["b"]) < 1e-5
-
-
-def test_tfidf_vectors(spark):
-    import math
-
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import textsearch as ts
-
-    chunks = spark.createDataFrame(
-        [("d1", "cat dog cat"), ("d2", "dog fish"), ("d3", "fish fish fish")],
-        "chunk_id string, text string",
-    )
-    p = ts.build_postings(chunks)
-    got = {
-        (r["chunk_id"], r["term"]): r["weight"]
-        for r in ts.tfidf_vectors(p).collect()
-    }
-    # hand-computed: N=3; idf(cat)=ln(3), idf(dog)=ln(1.5), idf(fish)=ln(1.5)
-    w_cat, w_dog = 2 * math.log(3.0), 1 * math.log(1.5)
-    nrm = math.hypot(w_cat, w_dog)
-    assert abs(got[("d1", "cat")] - round(w_cat / nrm, 6)) < 1e-9
-    assert abs(got[("d1", "dog")] - round(w_dog / nrm, 6)) < 1e-9
-    # d3 is a single-term doc: unit weight
-    assert got[("d3", "fish")] == 1.0
-    # every document vector has unit L2 norm
-    from collections import defaultdict
-
-    sq = defaultdict(float)
-    for (c, _), w in got.items():
-        sq[c] += w * w
-    assert all(abs(v - 1.0) < 1e-6 for v in sq.values())
-    # unnormalized keeps raw tf*idf
-    raw = {
-        (r["chunk_id"], r["term"]): r["weight"]
-        for r in ts.tfidf_vectors(p, normalize=False).collect()
-    }
-    assert abs(raw[("d1", "cat")] - round(w_cat, 6)) < 1e-9
-
-
-def test_incremental_postings_index(spark, tmp_path):
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import textsearch as ts
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(str(tmp_path))
-    b1 = spark.createDataFrame(
-        [("c1", "spark joins data"), ("c2", "data data lake")],
-        "chunk_id string, text string",
-    )
-    b2 = spark.createDataFrame(
-        [("c3", "spark shuffles"), ("c2", "data data lake")],  # c2 re-ingested
-        "chunk_id string, text string",
-    )
-    ts.update_postings_index(spark, cat, b1)
-    ts.update_postings_index(spark, cat, b2)
-    got = {
-        (r["term"], r["chunk_id"]): r["tf"]
-        for r in ts.read_postings_index(spark, cat).collect()
-    }
-    # equals a full rebuild over the union corpus (c2 not double-counted)
-    full = {
-        (r["term"], r["chunk_id"]): r["tf"]
-        for r in ts.build_postings(b1.unionByName(b2).dropDuplicates(["chunk_id"])).collect()
-    }
-    assert got == full
-    assert got[("data", "c2")] == 2
-    # the stored index answers searches identically to a fresh build
-    hits = {
-        r["chunk_id"]
-        for r in ts.search_all_terms(ts.read_postings_index(spark, cat), ["spark"]).collect()
-    }
-    assert hits == {"c1", "c3"}
-
-
-class TestUnigramLogprob:
-    def test_hand_computed(self, spark):
-        chunks = spark.createDataFrame(
-            [("d1", "aa bb aa"), ("d2", "aa cc")], "chunk_id string, text string"
-        )
-        rows = textsearch.unigram_logprob(chunks).collect()
-        got = {r["chunk_id"]: r for r in rows}
-        # counts: aa=3, bb=1, cc=1, total=5
-        alp1 = (math.log(0.6) + math.log(0.2) + math.log(0.6)) / 3
-        alp2 = (math.log(0.6) + math.log(0.2)) / 2
-        assert got["d1"]["n_tokens"] == 3
-        assert got["d1"]["avg_logprob"] == round(alp1, 6)
-        assert got["d1"]["ppl"] == round(math.exp(-alp1), 6)
-        assert got["d2"]["n_tokens"] == 2
-        assert got["d2"]["avg_logprob"] == round(alp2, 6)
-        # worst (most negative mean log-prob) document first
-        assert [r["chunk_id"] for r in rows] == ["d2", "d1"]
-
-    def test_tokenless_docs_excluded(self, spark):
-        chunks = spark.createDataFrame(
-            [("d1", "hello"), ("d2", "!!! ???"), ("d3", "")],
-            "chunk_id string, text string",
-        )
-        rows = textsearch.unigram_logprob(chunks).collect()
-        assert [r["chunk_id"] for r in rows] == ["d1"]
-        # single-token corpus: p = 1, logprob 0, ppl 1
-        assert rows[0]["avg_logprob"] == 0.0 and rows[0]["ppl"] == 1.0
-
-    def test_empty_corpus(self, spark):
-        chunks = spark.createDataFrame([], "chunk_id string, text string")
-        assert textsearch.unigram_logprob(chunks).count() == 0
-
-
-class TestLexicalDiversity:
-    @staticmethod
-    def _py(docs):
-        import re as _re
-        from collections import Counter
-
-        out = {}
-        for cid, text in docs:
-            ts = [t for t in _re.split(r"[^a-z0-9]+", text.lower()) if t]
-            if not ts:
-                continue
-            f = Counter(ts)
-            n, v = len(ts), len(f)
-            hapax = sum(1 for c in f.values() if c == 1)
-            sumsq = sum(c * c for c in f.values())
-            out[cid] = (
-                n, v, round(v / n, 6), round(hapax / v, 6),
-                round(10_000 * (sumsq - n) / (n * n), 6),
-            )
-        return out
-
-    def _run(self, spark, docs):
-        chunks = spark.createDataFrame(docs, "chunk_id string, text string")
-        rows = textsearch.lexical_diversity(chunks).collect()
-        got = {
-            r["chunk_id"]: (
-                r["n_tokens"], r["n_types"], r["ttr"], r["hapax_ratio"], r["yule_k"]
-            )
-            for r in rows
-        }
-        assert got == self._py(docs)
-        assert [r["chunk_id"] for r in rows] == sorted(got)
-        return got
-
-    def test_distinct_vs_repetitive(self, spark):
-        got = self._run(
-            spark,
-            [
-                ("rich", "alpha beta gamma delta epsilon"),
-                ("spam", "buy buy buy buy now"),
-                ("empty", "!!! ???"),
-            ],
-        )
-        assert "empty" not in got
-        n, v, ttr, hapax, k = got["rich"]
-        assert (ttr, hapax, k) == (1.0, 1.0, 0.0)  # all-distinct floor
-        n, v, ttr, hapax, k = got["spam"]
-        assert ttr == 0.4 and k > 0  # repeated vocabulary raises K
-
-    def test_yule_hand_computed(self, spark):
-        # "aa bb aa": f = {aa: 2, bb: 1}, N=3, sumsq=5
-        # K = 10^4 * (5 - 3) / 9
-        got = self._run(spark, [("d", "aa bb aa")])
-        assert got["d"][4] == round(20_000 / 9, 6)
-
-    def test_empty_corpus(self, spark):
-        chunks = spark.createDataFrame([], "chunk_id string, text string")
-        assert textsearch.lexical_diversity(chunks).count() == 0
-
-
-class TestBigramLogprob:
-    def _py_bigram(self, docs):
-        import re as _re
-
-        toks = {
-            cid: [t for t in _re.split(r"[^a-z0-9]+", text.lower()) if t]
-            for cid, text in docs
-        }
-        toks = {cid: ts for cid, ts in toks.items() if ts}
-        big = {
-            cid: list(zip(["<s>"] + ts[:-1], ts)) for cid, ts in toks.items()
-        }
-        from collections import Counter
-
-        bc = Counter(bg for bgs in big.values() for bg in bgs)
-        cc = Counter(w1 for bgs in big.values() for w1, _ in bgs)
-        v = len({w2 for bgs in big.values() for _, w2 in bgs})
-        out = {}
-        for cid, bgs in big.items():
-            lps = [
-                math.log((bc[bg] + 1.0) / (cc[bg[0]] + v)) for bg in bgs
-            ]
-            alp = sum(lps) / len(lps)
-            out[cid] = (len(bgs), round(alp, 6), round(math.exp(-alp), 6))
-        return out
-
-    def test_matches_python_oracle(self, spark):
-        docs = DOCS + [("e", ""), ("f", "Data AND data, spark!")]
-        chunks = spark.createDataFrame(docs, "chunk_id string, text string")
-        got = {
-            r["chunk_id"]: (r["n_tokens"], r["avg_logprob"], r["ppl"])
-            for r in textsearch.bigram_logprob(chunks).collect()
-        }
-        want = self._py_bigram(docs)
-        assert got == want
-        assert "e" not in got  # zero-token doc excluded
-
-    def test_word_order_discrimination(self, spark):
-        # natural repeated phrasing vs the same bag of words shuffled:
-        # unigram score identical, bigram score must separate them
-        import random
-
-        base = ("the cat sat on the mat and the dog sat on the rug " * 3).strip()
-        words = base.split()
-        rng = random.Random(3)
-        sw = words[:]
-        rng.shuffle(sw)
-        docs = [("nat", base), ("shuf", " ".join(sw))]
-        chunks = spark.createDataFrame(docs, "chunk_id string, text string")
-        uni = {
-            r["chunk_id"]: r["avg_logprob"]
-            for r in textsearch.unigram_logprob(chunks).collect()
-        }
-        bi = {
-            r["chunk_id"]: r["avg_logprob"]
-            for r in textsearch.bigram_logprob(chunks).collect()
-        }
-        # identical multiset of words -> unigram scores are EQUAL, the
-        # bigram model must put the natural doc clearly ahead
-        assert uni["nat"] == uni["shuf"]
-        assert bi["nat"] > bi["shuf"] + 0.2
-
-    def test_empty_corpus(self, spark):
-        chunks = spark.createDataFrame(
-            [("a", " . , ")], "chunk_id string, text string"
-        )
-        assert textsearch.bigram_logprob(chunks).count() == 0
-
-
-class TestZipfFit:
-    def _py_fit(self, freqs):
-        xs = [math.log(i + 1) for i in range(len(freqs))]
-        ys = [math.log(c) for c in freqs]
-        n = len(xs)
-        sx, sy = sum(xs), sum(ys)
-        sxy = sum(x * y for x, y in zip(xs, ys))
-        sxx = sum(x * x for x in xs)
-        slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-        return slope, (sy - slope * sx) / n
-
-    def test_matches_python_ols(self, spark):
-        # an exact power-law corpus: term_i appears ceil(1000/(i+1)) times
-        words = []
-        for i in range(30):
-            words += [f"w{i:02d}"] * (1000 // (i + 1))
-        chunks = spark.createDataFrame(
-            [("d", " ".join(words))], "chunk_id string, text string"
-        )
-        row = textsearch.zipf_fit(chunks.withColumnRenamed("chunk_id", "doc_id"), top_k=30).collect()[0]
-        freqs = sorted((1000 // (i + 1) for i in range(30)), reverse=True)
-        slope, intercept = self._py_fit(freqs)
-        assert row["n_terms"] == 30
-        assert abs(row["slope"] - round(slope, 6)) < 1e-6
-        assert abs(row["intercept"] - round(intercept, 6)) < 1e-6
-        assert -1.1 < row["slope"] < -0.9  # a 1/r law fits slope ~ -1
-
-    def test_flat_corpus_flattens_slope(self, spark):
-        flat = (" ".join(f"t{i}" for i in range(50)) + " ") * 20  # uniform terms
-        chunks = spark.createDataFrame([("d", flat)], "doc_id string, text string")
-        row = textsearch.zipf_fit(chunks, top_k=50).collect()[0]
-        assert abs(row["slope"]) == 0.0  # all equal counts -> zero slope
-
-
-def _py_winnow(text, k=3, window=4):
-    """Pure-Python winnowing oracle (md5-32bit family)."""
-    import hashlib
-    import re
-
-    toks = [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
-    if len(toks) < k:
-        return set()
-    grams = [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
-    hs = [int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in grams]
-    ng = len(hs)
-    wn = max(ng - window + 1, 1)
-    sel = set()
-    for wi in range(wn):
-        lo, hi = wi, min(wi + window - 1, ng - 1)
-        best = lo
-        for p in range(lo, hi + 1):
-            if hs[p] <= hs[best]:
-                best = p  # rightmost minimum
-        sel.add((best, hs[best]))
-    return sel
-
-
-class TestWinnowing:
-    def _run(self, spark, rows, **kw):
-        df = spark.createDataFrame(rows, "chunk_id string, text string")
-        out = textsearch.winnowing_fingerprints(df, **kw).collect()
-        got = {}
-        for r in out:
-            got.setdefault(r["chunk_id"], set()).add((r["pos"], r["gram_hash"]))
-        return got
-
-    def test_matches_pure_python_oracle(self, spark):
-        texts = {
-            "a": "the quick brown fox jumps over the lazy dog again and again",
-            "b": "one two three four five six seven eight nine ten",
-            "c": "alpha beta gamma",          # exactly k tokens: one gram
-            "d": "repeat repeat repeat repeat repeat repeat repeat",  # all ties
-        }
-        got = self._run(spark, list(texts.items()))
-        for cid, text in texts.items():
-            assert got.get(cid, set()) == _py_winnow(text), cid
-
-    def test_shorter_than_k_emits_nothing(self, spark):
-        got = self._run(spark, [("s", "just two"), ("e", ""), ("o", "one")])
-        assert got == {}
-
-    def test_shared_run_guarantee(self, spark):
-        # the winnowing guarantee: a shared run of k+w-1 = 6 tokens
-        # must yield at least one identical selected hash in both docs
-        shared = "wikipedia is a free online encyclopedia edited daily"
-        got = self._run(
-            spark,
-            [
-                ("x", "completely different lead text then " + shared),
-                ("y", shared + " with an unrelated continuation afterwards"),
-            ],
-        )
-        hx = {h for _, h in got["x"]}
-        hy = {h for _, h in got["y"]}
-        assert hx & hy
-
-    def test_density_bound(self, spark):
-        # selected fraction ~ 2/(w+1); never more than one per window
-        text = " ".join(f"tok{i}" for i in range(200))
-        got = self._run(spark, [("z", text)])
-        ng = 200 - 2
-        assert len(got["z"]) <= ng - 4 + 1
-        assert len(got["z"]) >= ng // 4  # at least one per disjoint window
-
-    def test_xxh64_family_runs(self, spark):
-        got = self._run(
-            spark,
-            [("a", "one two three four five six")],
-            hash_family="xxh64",
-        )
-        assert got["a"]  # engine-native family produces fingerprints
-
-
-class TestRakeKeywords:
-    def _df(self, spark, texts):
-        return spark.createDataFrame(
-            list(enumerate(texts)), "doc_id long, text string"
-        )
-
-    def _py_rake(self, texts, max_len=4):
-        import re
-        from collections import defaultdict
-        from decimal import Decimal, ROUND_HALF_UP
-
-        def r6(x):
-            return Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-
-        stops = textsearch.RAKE_STOP_WORDS
-        phrases = []
-        for t in texts:
-            toks = [w for w in re.split(r"[^a-z0-9]+", t.lower()) if w]
-            cur = []
-            for w in toks:
-                if w in stops:
-                    if cur:
-                        phrases.append(cur)
-                    cur = []
-                else:
-                    cur.append(w)
-            if cur:
-                phrases.append(cur)
-        phrases = [p for p in phrases if len(p) <= max_len]
-        freq, deg = defaultdict(int), defaultdict(int)
-        for p in phrases:
-            for w in p:
-                freq[w] += 1
-                deg[w] += len(p)
-        ws = {w: r6(deg[w] / freq[w]) for w in freq}
-        out = defaultdict(lambda: [0, Decimal(0)])
-        for p in phrases:
-            key = " ".join(p)
-            out[key][0] += 1
-            out[key][1] = sum((ws[w] for w in p), Decimal(0))
-        return {k: (n, float(s)) for k, (n, s) in out.items()}
-
-    def test_matches_python_replay(self, spark):
-        texts = [
-            "the quick brown fox jumps over the lazy dog",
-            "a knowledge graph pipeline builds the knowledge graph",
-            "graph pipeline quality is a moving target for the pipeline",
-        ]
-        want = self._py_rake(texts)
-        got = textsearch.rake_keywords(
-            self._df(spark, texts), top_k=1000
-        ).collect()
-        assert {r["phrase"] for r in got} == set(want)
-        for r in got:
-            n, s = want[r["phrase"]]
-            assert r["n_occurrences"] == n, r
-            assert abs(r["score"] - s) < 2e-6, (r, s)
-
-    def test_multiword_collocation_outranks_fragments(self, spark):
-        texts = [
-            "deep learning models and deep learning systems",
-            "the deep learning approach for deep learning",
-            "models are useful and systems are useful",
-        ]
-        got = textsearch.rake_keywords(self._df(spark, texts), top_k=5).collect()
-        assert got[0]["phrase"].startswith("deep learning"), got[0]
-
-    def test_stopword_only_doc_is_silent(self, spark):
-        got = textsearch.rake_keywords(
-            self._df(spark, ["the of and to", "is a but for"]), top_k=10
-        ).collect()
-        assert got == []
-
-
-class TestHeapsFit:
-    def _df(self, spark, texts):
-        return spark.createDataFrame(
-            list(enumerate(texts)), "doc_id long, text string"
-        )
-
-    def test_closed_vocabulary_flat_beta(self, spark):
-        texts = ["alpha beta gamma delta"] * 20
-        r = textsearch.heaps_fit(self._df(spark, texts)).collect()[0]
-        assert r["vocab_size"] == 4 and r["n_docs"] == 20
-        assert r["heaps_beta"] < 0.35
-
-    def test_all_new_tokens_beta_one(self, spark):
-        texts = [f"w{4*i} w{4*i+1} w{4*i+2} w{4*i+3}" for i in range(20)]
-        r = textsearch.heaps_fit(self._df(spark, texts)).collect()[0]
-        assert r["vocab_size"] == 80
-        assert abs(r["heaps_beta"] - 1.0) < 1e-6
-        assert abs(r["heaps_k"] - 1.0) < 1e-6
-
-    def test_matches_python_replay(self, spark):
-        import math
-        import random
-
-        rng = random.Random(41)
-        vocab = [f"t{i}" for i in range(60)]
-        texts = [
-            " ".join(rng.choice(vocab) for _ in range(rng.randint(5, 15)))
-            for _ in range(30)
-        ]
-        seen, cum_t, cum_v, pts = set(), 0, 0, []
-        for t in texts:
-            toks = t.split()
-            cum_t += len(toks)
-            for w in toks:
-                if w not in seen:
-                    seen.add(w)
-                    cum_v += 1
-            pts.append((math.log(cum_t), math.log(cum_v)))
-        n = len(pts)
-        sx = sum(x for x, _ in pts); sy = sum(y for _, y in pts)
-        sxy = sum(x * y for x, y in pts); sxx = sum(x * x for x, _ in pts)
-        beta = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-        r = textsearch.heaps_fit(self._df(spark, texts)).collect()[0]
-        assert r["n_docs"] == n and r["vocab_size"] == len(seen)
-        assert abs(r["heaps_beta"] - beta) < 2e-6

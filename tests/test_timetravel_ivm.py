@@ -1,10 +1,9 @@
-"""Snapshot time travel, schema evolution, incremental view
-maintenance."""
+"""Snapshot time travel, schema evolution, write sort order, table
+statistics and graph diffs."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import ivm
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import (
     ParquetCatalog,
 )
@@ -59,76 +58,6 @@ class TestSchemaEvolution:
         assert "lang" in out.columns
         got = {(r["k"], r["lang"]) for r in out.collect()}
         assert got == {(1, None), (2, "en")}
-
-
-class TestIvm:
-    def test_incremental_matches_full_recompute(self, spark, tmp_path):
-        cat = ParquetCatalog(str(tmp_path))
-        cat.append(spark, _df(spark, [(1, 1.0), (1, 2.0), (2, 3.0)]), "facts")
-        assert ivm.refresh(spark, cat, "facts", "by_k", ["k"], "v") > 0
-        cat.append(spark, _df(spark, [(2, 5.0), (3, 7.0)]), "facts")
-        cat.append(spark, _df(spark, [(1, 10.0)]), "facts")
-        assert ivm.refresh(spark, cat, "facts", "by_k", ["k"], "v") == 2
-
-        got = {
-            (r["k"], r["cnt"], r["sum_value"])
-            for r in ivm.read_view(spark, cat, "by_k").collect()
-        }
-        full = {
-            (r["k"], r["cnt"], r["sum_value"])
-            for r in cat.read(spark, "facts")
-            .groupBy("k")
-            .agg(F.count("*").alias("cnt"), F.sum("v").alias("sum_value"))
-            .collect()
-        }
-        assert got == full
-
-    def test_refresh_is_idempotent(self, spark, tmp_path):
-        cat = ParquetCatalog(str(tmp_path))
-        cat.append(spark, _df(spark, [(1, 1.0)]), "facts")
-        ivm.refresh(spark, cat, "facts", "by_k", ["k"], "v")
-        assert ivm.refresh(spark, cat, "facts", "by_k", ["k"], "v") == 0
-
-    def test_rewrite_triggers_rebuild(self, spark, tmp_path):
-        cat = ParquetCatalog(str(tmp_path))
-        cat.append(spark, _df(spark, [(1, 1.0), (2, 2.0)]), "facts")
-        ivm.refresh(spark, cat, "facts", "by_k", ["k"], "v")
-        cat.compact(spark, "facts")  # rewrite: no new-data delta
-        cat.append(spark, _df(spark, [(3, 3.0)]), "facts")
-        ivm.refresh(spark, cat, "facts", "by_k", ["k"], "v")
-        got = {(r["k"], r["cnt"]) for r in ivm.read_view(spark, cat, "by_k").collect()}
-        assert got == {(1, 1), (2, 1), (3, 1)}
-
-    def test_mor_source_rebuilds_not_folds(self, spark, tmp_path):
-        # regression: a merge_upsert_mor commit is a manifest-APPEND
-        # whose rows REPLACE existing keys; folding it as an insert
-        # delta double-counts the replaced rows.  MOR sources must
-        # rebuild from the resolved table.
-        cat = ParquetCatalog(str(tmp_path))
-        rows = [(1, "a", 1.0), (2, "b", 2.0)]
-        cat.merge_upsert_mor(
-            spark,
-            "m",
-            spark.createDataFrame(rows, "k long, val string, v double"),
-            keys=["k"],
-        )
-        ivm.refresh(spark, cat, "m", "by_k_mor", ["k"], "v")
-        # replace k=2 and add k=3 via a MOR delta append
-        cat.merge_upsert_mor(
-            spark,
-            "m",
-            spark.createDataFrame(
-                [(2, "B9", 9.0), (3, "c", 3.0)], "k long, val string, v double"
-            ),
-            keys=["k"],
-        )
-        ivm.refresh(spark, cat, "m", "by_k_mor", ["k"], "v")
-        got = {
-            (r["k"], r["cnt"], r["sum_value"])
-            for r in ivm.read_view(spark, cat, "by_k_mor").collect()
-        }
-        # folding-as-insert would report (2, 2, 11.0); rebuild gives the truth
-        assert got == {(1, 1, 1.0), (2, 1, 9.0), (3, 1, 3.0)}
 
 
 class TestWriteSortOrder:
@@ -250,114 +179,3 @@ class TestGraphDiff:
         graph.upsert_graph(spark, cat, nodes=nodes1, edges=edges1)
         v = cat.current_version("nodes")
         assert graph.graph_diff(spark, cat, v, v).count() == 0
-
-
-class TestIncrementalDegreeView:
-    """O(delta) maintenance of graph degree counts via the generic IVM
-    machinery — the incremental-graph-analytics story: after each edge
-    batch, per-node degree (and thus degree histograms / avg degree)
-    refreshes from the delta alone instead of rescanning the edge
-    table."""
-
-    def test_degree_view_tracks_appends(self, spark, tmp_path):
-        cat = ParquetCatalog(str(tmp_path))
-        e1 = _df(spark, [("a", "b"), ("a", "c"), ("b", "c")], "src string, dst string")
-        cat.append(spark, e1, "uedges")
-        folded = ivm.refresh(spark, cat, "uedges", "deg_view", ["src"])
-        assert folded == 1
-        deg = {r["src"]: r["cnt"] for r in ivm.read_view(spark, cat, "deg_view").collect()}
-        assert deg == {"a": 2, "b": 1}
-        # append a delta batch: only the delta folds
-        e2 = _df(spark, [("a", "d"), ("d", "e")], "src string, dst string")
-        cat.append(spark, e2, "uedges")
-        assert ivm.refresh(spark, cat, "uedges", "deg_view", ["src"]) == 1
-        deg2 = {r["src"]: r["cnt"] for r in ivm.read_view(spark, cat, "deg_view").collect()}
-        assert deg2 == {"a": 3, "b": 1, "d": 1}
-        # matches full recompute
-        full = {
-            r["src"]: r["cnt"]
-            for r in cat.read(spark, "uedges").groupBy("src").agg(F.count("*").alias("cnt")).collect()
-        }
-        assert deg2 == full
-        # idempotent when current
-        assert ivm.refresh(spark, cat, "uedges", "deg_view", ["src"]) == 0
-
-
-class TestIvmChangelogFold:
-    """The changelog-fold rung (refresh ladder #2): with source_keys,
-    merge/delete/MOR commits fold the signed snapshot_diff changelog
-    instead of rebuilding.  Return-value discriminates the rungs:
-    changelog returns cur - wm, rebuild returns cur."""
-
-    def test_merge_source_folds_changelog_not_rebuild(self, spark, tmp_path):
-        cat = ParquetCatalog(str(tmp_path))
-        cat.append(spark, _df(spark, [(1, 1.0), (2, 2.0)]), "facts")
-        ivm.refresh(spark, cat, "facts", "by_k", ["k"], "v", source_keys=["k"])
-        # MERGE: update k=2, insert k=3 — a dir-rewriting commit
-        cat.merge_upsert(spark, "facts", _df(spark, [(2, 9.0), (3, 3.0)]), ["k"])
-        folded = ivm.refresh(
-            spark, cat, "facts", "by_k", ["k"], "v", source_keys=["k"]
-        )
-        assert folded == 1  # cur - wm: the changelog rung, not rebuild (=2)
-        got = {
-            (r["k"], r["cnt"], r["sum_value"])
-            for r in ivm.read_view(spark, cat, "by_k").collect()
-        }
-        assert got == {(1, 1, 1.0), (2, 1, 9.0), (3, 1, 3.0)}
-
-    def test_emptied_group_leaves_the_view(self, spark, tmp_path):
-        cat = ParquetCatalog(str(tmp_path))
-        cat.append(spark, _df(spark, [(1, 1.0), (2, 2.0)]), "facts")
-        ivm.refresh(spark, cat, "facts", "by_k", ["k"], "v", source_keys=["k"])
-        cat.delete_keys(spark, "facts", spark.createDataFrame([(2,)], "k long"))
-        folded = ivm.refresh(
-            spark, cat, "facts", "by_k", ["k"], "v", source_keys=["k"]
-        )
-        assert folded == 1
-        got = {(r["k"], r["cnt"]) for r in ivm.read_view(spark, cat, "by_k").collect()}
-        assert got == {(1, 1)}  # group 2 reached cnt 0 and was dropped
-
-    def test_mor_source_folds_with_keys(self, spark, tmp_path):
-        # the counterpart of TestIvm.test_mor_source_rebuilds_not_folds:
-        # with source_keys the MOR replace/tombstone semantics fold
-        # exactly through the signed changelog
-        cat = ParquetCatalog(str(tmp_path))
-        cat.merge_upsert_mor(
-            spark,
-            "m",
-            spark.createDataFrame(
-                [(1, "a", 1.0), (2, "b", 2.0)], "k long, val string, v double"
-            ),
-            keys=["k"],
-        )
-        ivm.refresh(spark, cat, "m", "by_k_mor", ["k"], "v", source_keys=["k"])
-        cat.merge_upsert_mor(
-            spark,
-            "m",
-            spark.createDataFrame(
-                [(2, "B9", 9.0), (3, "c", 3.0)], "k long, val string, v double"
-            ),
-            keys=["k"],
-        )
-        folded = ivm.refresh(
-            spark, cat, "m", "by_k_mor", ["k"], "v", source_keys=["k"]
-        )
-        assert folded == 1  # changelog rung (rebuild would return 2)
-        got = {
-            (r["k"], r["cnt"], r["sum_value"])
-            for r in ivm.read_view(spark, cat, "by_k_mor").collect()
-        }
-        assert got == {(1, 1, 1.0), (2, 1, 9.0), (3, 1, 3.0)}
-
-    def test_without_keys_behavior_unchanged(self, spark, tmp_path):
-        cat = ParquetCatalog(str(tmp_path))
-        cat.append(spark, _df(spark, [(1, 1.0)]), "facts")
-        ivm.refresh(spark, cat, "facts", "by_k", ["k"], "v")
-        cat.merge_upsert(spark, "facts", _df(spark, [(1, 5.0)]), ["k"])
-        folded = ivm.refresh(spark, cat, "facts", "by_k", ["k"], "v")
-        assert folded == 2  # rebuild rung: returns cur
-        got = {
-            (r["k"], r["cnt"], r["sum_value"])
-            for r in ivm.read_view(spark, cat, "by_k").collect()
-        }
-        assert got == {(1, 1, 5.0)}

@@ -6,8 +6,7 @@ algorithms, bucketed self-joins, fused extraction).
 Inputs are synthesized deterministically (no external data):
 * documents/embeddings at "sf1": the sf0.1 tables replicated
   ``SCALE``x with id offsets and a per-replica text/vector
-  perturbation, so dedup families see realistic near-dups across
-  replicas instead of degenerate exact copies.
+  perturbation, so replicas are near-dups rather than exact copies.
 * pages for the pipeline throughput run via datagen (same generator
   as the per-round bench, more pages).
 
@@ -44,36 +43,15 @@ QUERIES = [
     "kg_triples",
     "kg_concept_search",
     "kg_connected_components",
-    "rel_tpch_q1",
-    "rel_tpch_q3",
-    "rel_tpch_q5",
-    "rel_tpch_q9",
-    "rel_top3_per_group",
-    "dd_exact",
-    "dd_minhash_lsh",
-    "dd_ngram_jaccard",
-    "dd_simhash",
-    "dd_curation",
-    "sim_bruteforce_topk",
-    "sim_ann_topk",
-    "sim_ivf_topk",
-    "txt_stats",
     "kg_eigenvector",
     "kg_graph_growth",
     "kg_tie_strength",
     "kg_source_reliability",
     "kg_evidence_freshness",
-    "dd_simhash_margin",
-    "rel_bot_score",
-    "mm_near_dup",
-    "mm_features",
-    "dd_kmv_distinct",
     "kg_pagerank",
     "kg_communities",
     "kg_global_search",
     "kg_local_search",
-    "rel_range_join",
-    "rel_sliding_window",
 ]
 
 
@@ -99,8 +77,7 @@ def main():
         reps = None
         for k in range(SCALE):
             # id offset per replica; perturb text so replicas are
-            # near-dups (append a replica marker), keeping dedup
-            # families honest
+            # near-dups (append a replica marker), not exact copies
             r = docs.select(
                 (F.col("doc_id") + F.lit(k * 10_000_000)).alias("doc_id"),
                 F.concat(F.col("text"), F.lit(f" replica {k}")).alias("text"),
@@ -125,45 +102,6 @@ def main():
         ereps.repartition(64).write.mode("overwrite").parquet(
             os.path.join(big_dir, "embeddings.parquet")
         )
-
-    # ---- relational tables for the full bench set (round 4) ----
-    # facts replicate SCALEx (key/timestamp offsets keep replicas
-    # disjoint); dimensions stay 1x — exactly how a real corpus grows.
-    if not os.path.isdir(os.path.join(big_dir, "events.parquet")):
-        ev = spark.read.parquet(f"{SRC_SF}/events.parquet")
-        span = 3_456_000  # 40 days — beyond any windowed-query horizon
-        ereps = None
-        for k in range(SCALE):
-            r = ev.select(
-                (F.col("event_id") + F.lit(k * 1_000_000_000)).alias("event_id"),
-                (F.col("ts") + F.expr(f"INTERVAL {k * span} SECONDS")).alias("ts"),
-                (F.col("user_id") + F.lit(k * 1_000_000)).alias("user_id"),
-                "event_type", "value", "props",
-            )
-            ereps = r if ereps is None else ereps.unionByName(r)
-        ereps.repartition(64).write.mode("overwrite").parquet(
-            os.path.join(big_dir, "events.parquet")
-        )
-    if not os.path.isdir(os.path.join(big_dir, "lineitem.parquet")):
-        li = spark.read.parquet(f"{SRC_SF}/lineitem.parquet")
-        od = spark.read.parquet(f"{SRC_SF}/orders.parquet")
-        lreps, oreps = None, None
-        for k in range(SCALE):
-            off = F.lit(k * 1_000_000_000)
-            lr = li.withColumn("l_orderkey", F.col("l_orderkey") + off)
-            orp = od.withColumn("o_orderkey", F.col("o_orderkey") + off)
-            lreps = lr if lreps is None else lreps.unionByName(lr)
-            oreps = orp if oreps is None else oreps.unionByName(orp)
-        lreps.repartition(64).write.mode("overwrite").parquet(
-            os.path.join(big_dir, "lineitem.parquet")
-        )
-        oreps.repartition(16).write.mode("overwrite").parquet(
-            os.path.join(big_dir, "orders.parquet")
-        )
-        for dim in ("customer", "supplier", "part", "nation", "region"):
-            spark.read.parquet(f"{SRC_SF}/{dim}.parquet").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(big_dir, f"{dim}.parquet"))
 
     timings: dict[str, float] = {}
 

@@ -1,4 +1,4 @@
-"""Local stand-in for the driver's correctness gate: run every
+"""Correctness check: run every
 __spark_entry__.queries() entry against its oracle_sql() via DuckDB at
 a given sf and compare row count + column names + order-insensitive
 values.
@@ -8,9 +8,10 @@ Usage: python tools/check_oracle.py [sf_dir] [name_filter...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
@@ -18,10 +19,7 @@ import pandas as pd  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.session import get_spark  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents", "embeddings"]
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -65,8 +63,8 @@ def main():
             fail += 1
             continue
         if name not in oracles:
-            print(f"[ROWS-ONLY ] {name}: {len(sdf)} rows")
-            ok += 1
+            print(f"[NO ORACLE ] {name}: {len(sdf)} rows")
+            fail += 1
             continue
         try:
             odf = con.sql(oracles[name]).df()

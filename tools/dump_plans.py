@@ -13,7 +13,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry  # noqa: E402
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.session import get_spark  # noqa: E402
@@ -24,12 +25,6 @@ CHECKS = {
     "kg_triples": ["WholeStageCodegen"],
     "kg_pmi": ["BroadcastHashJoin"],
     "kg_concept_search": ["HashAggregate"],
-    "rel_tpch_q1": ["PushedFilters", "WholeStageCodegen"],
-    "rel_tpch_q3": ["PushedFilters"],
-    "rel_top3_per_group": ["RunningWindowFunction", "Window"],
-    "dd_exact": ["HashAggregate"],
-    "sim_bruteforce_topk": ["TakeOrderedAndProject"],
-    "txt_stats": ["ReadSchema", "WholeStageCodegen"],
 }
 
 
@@ -49,7 +44,7 @@ def main():
         out.append("properties: " + ", ".join(f"{h}={'Y' if v else 'n'}" for h, v in found.items()))
         out.append("\n```\n" + plan[:4000] + ("\n… (truncated)" if len(plan) > 4000 else "") + "\n```\n")
         print(name, found)
-    with open(os.path.join("/root/repo", "PLANS.md"), "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     spark.stop()
 

@@ -7,7 +7,7 @@ For every driver query this prints (and writes to PLAN_AUDIT.md):
 * WholeStageCodegen span count (JVM-side, vectorizable pipeline)
 * join strategies (broadcast vs shuffle)
 * aggregate strategies (hash vs sort)
-* Python/Arrow stages (should appear ONLY in extraction/multimodal)
+* Python/Arrow stages (should appear ONLY in extraction)
 
 Usage: python tools/plan_audit.py [sf_dir]
 """
