@@ -56,7 +56,6 @@ STOP_WORDS = frozenset(
 
 PREDICATE_SET = frozenset({"is_a", "part_of", "causes", "synonym_of", "related_to"})
 MIN_CONFIDENCE = 0.65  # application.conf:56
-MIN_PMI = 0.2  # application.conf:50
 EVIDENCE_LIMIT = 500  # GraphRagJob.scala:318
 FALLBACK_EVIDENCE_LIMIT = 100  # RelationScorer.scala:142
 

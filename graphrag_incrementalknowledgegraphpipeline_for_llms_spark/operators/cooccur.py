@@ -12,16 +12,15 @@ the array form is the production path.
 
 PMI (R3-R5) exists in the reference as dead code never wired into the
 job (CoOccurExtractor.scala:69-136; `min-pmi` documented in
-README.md:633-641).  Here it is a live distributed aggregation: two
-groupBy counts + two joins + a log2 filter.
+README.md:633-641).  Here the scores are a distributed aggregation:
+two groupBy counts + two joins + a log2 (``pmi_scores``).  Like the
+reference, no build path filters pairs on them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions import purecore
 
 # all i<j pairs from the deduped `concepts` array, canonicalized by
 # concept_id (ties keep list order — id-symmetric, see purecore).
@@ -137,13 +136,3 @@ def pmi_scores(
         pmi.alias("pmi"),
     )
 
-
-def pmi_filtered_pairs(
-    mentions: DataFrame, pairs: DataFrame, min_pmi: float = purecore.MIN_PMI
-) -> DataFrame:
-    """R4: the full live pipeline — aggregate pair freqs, concept
-    freqs, total-chunk count, PMI join, threshold filter."""
-    total = mentions.select("chunk_id").distinct().count()
-    pf = aggregate_pair_frequencies(pairs)
-    cf = concept_chunk_frequencies(mentions)
-    return pmi_scores(pf, cf, total).where(F.col("pmi") >= F.lit(min_pmi))

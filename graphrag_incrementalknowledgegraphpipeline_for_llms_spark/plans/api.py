@@ -13,8 +13,6 @@ Python with Spark underneath:
   (api/routes/ExplainRoute.scala:23-54).  Ours returns Catalyst's real
   formatted physical plan — strictly better, as SURVEY notes.
 * Q8 — health: constant OK (api/ApiServer.scala:52-56).
-* S2 — warehouse table introspection (VerifyDeltaTables.scala:59-100):
-  schema, row count, sample.
 """
 
 from __future__ import annotations
@@ -25,7 +23,7 @@ import uuid
 from contextlib import redirect_stdout
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # per-request state (jobs, request traces) keeps only the newest
 # MAX_TRACKED entries, so a long-running server's memory stays bounded
@@ -106,21 +104,3 @@ def explain_trace(df: DataFrame) -> dict:
 def health() -> str:
     """Q8."""
     return "OK"
-
-
-def verify_tables(spark: SparkSession, catalog, names: list[str]) -> dict:
-    """S2 (VerifyDeltaTables.scala:59-100): per-table schema / count /
-    sample."""
-    out = {}
-    for name in names:
-        df = catalog.read(spark, name)
-        if df is None:
-            out[name] = {"exists": False}
-            continue
-        out[name] = {
-            "exists": True,
-            "schema": df.schema.simpleString(),
-            "rows": catalog.count(name),
-            "sample": [tuple(r) for r in df.limit(3).collect()],
-        }
-    return out

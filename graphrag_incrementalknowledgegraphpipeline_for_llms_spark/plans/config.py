@@ -14,22 +14,19 @@ uses none).
 Key mapping (reference -> engine):
 
 * ``concept.strategies.nlp``        -> ``extraction_strategy="nlp"``
-* ``relation.llm.min-confidence``   -> scorer ``min_confidence``
-* ``relation.cooccur.min-pmi``      -> ``pmi_filtered_pairs`` threshold
-* ``relation.llm.predicate-set``    -> scorer sanitize closed set
 * ``flink.parallelism``             -> ``scan_partitions`` hint
-* ``ollama.endpoint/model/...``     -> LLM scorer plumbing (off unless
-  ``concept.strategies.llm`` / caller opts in, like the reference)
-* ``neo4j.batch-size`` etc.         -> accepted and surfaced but
-  unused: the catalog sink commits snapshots, not bolt transactions.
+* ``relation.llm.min-confidence``, ``relation.llm.predicate-set``,
+  ``relation.cooccur.min-pmi``, ``ollama.*``,
+  ``concept.strategies.llm``, ``neo4j.batch-size`` etc. -> accepted
+  (kept in ``PipelineConfig.raw``) but unused: the pipeline scores
+  pairs with the fixed rule scorer and no PMI filter, and the catalog
+  sink commits snapshots, not bolt transactions.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-
-from ..functions import purecore
 
 _COMMENT_RE = re.compile(r"(?<!:)(//|#).*$")
 
@@ -109,14 +106,7 @@ def _get(d: dict, path: str, default=None):
 @dataclass
 class PipelineConfig:
     extraction_strategy: str = "heuristic"
-    min_confidence: float = purecore.MIN_CONFIDENCE
-    min_pmi: float = 0.2
-    predicate_set: list[str] = field(default_factory=list)
     scan_partitions: int | None = None
-    llm_endpoint: str | None = None
-    llm_model: str | None = None
-    llm_timeout_ms: int = 60000
-    llm_enabled: bool = False
     raw: dict = field(default_factory=dict)
 
     @classmethod
@@ -126,16 +116,7 @@ class PipelineConfig:
             strategy = "nlp"
         return cls(
             extraction_strategy=strategy,
-            min_confidence=float(
-                _get(conf, "relation.llm.min-confidence", purecore.MIN_CONFIDENCE)
-            ),
-            min_pmi=float(_get(conf, "relation.cooccur.min-pmi", 0.2)),
-            predicate_set=list(_get(conf, "relation.llm.predicate-set", [])),
             scan_partitions=_get(conf, "flink.parallelism"),
-            llm_endpoint=_get(conf, "ollama.endpoint"),
-            llm_model=_get(conf, "ollama.model"),
-            llm_timeout_ms=int(_get(conf, "ollama.timeout-ms", 60000)),
-            llm_enabled=bool(_get(conf, "concept.strategies.llm", False)),
             raw=conf,
         )
 

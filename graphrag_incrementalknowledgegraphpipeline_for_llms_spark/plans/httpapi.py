@@ -279,15 +279,7 @@ class GraphApiService:
     # community index/report/global-search surface over the same graph) --
 
     def _concept_und(self):
-        from pyspark.sql import functions as F
-
-        e = self.edges.where(
-            (F.col("src_label") == "Concept") & (F.col("dst_label") == "Concept")
-        )
-        a = e.select(F.col("src_id").alias("cid"), F.col("dst_id").alias("nbr_id"))
-        return a.unionByName(
-            e.select(F.col("dst_id").alias("cid"), F.col("src_id").alias("nbr_id"))
-        )
+        return q.undirected_concept_edges(self.edges).select("cid", "nbr_id")
 
     def _lpa_labels(self):
         """Labels are a pure function of the edge set — computed once
@@ -311,10 +303,10 @@ class GraphApiService:
         return self._modularity
 
     def communities(self, top_k: int = 20, pattern: str | None = None) -> dict:
+        if pattern and self.mentions is None:
+            raise KeyError("communities search requires a mentions table")
         labels = self._lpa_labels()
         if pattern:
-            if self.mentions is None:
-                raise KeyError("communities search requires a mentions table")
             rows = q.global_search(
                 labels, self.mentions, pattern, top_k=top_k
             ).collect()

@@ -656,22 +656,6 @@ class ParquetCatalog:
         return v
 
     # -- row-level DELETE (Iceberg DELETE FROM, copy-on-write) ----------------
-    def delete_where(self, spark: SparkSession, name: str, condition) -> int:
-        """``DELETE FROM name WHERE condition`` — copy-on-write: rows
-        NOT matching are rewritten into a new snapshot (full rewrite;
-        an arbitrary predicate can touch any file).  Returns the new
-        version.  Readers are unaffected mid-delete (atomic pointer
-        flip); time travel still sees the deleted rows in older
-        snapshots until expire."""
-        df = self.read(spark, name)
-        if df is None:
-            raise KeyError(f"no such table: {name!r}")
-        kept = df.where(~condition)
-        spec = self.bucket_spec(name)
-        if spec is not None:
-            return self._commit_bucketed(name, kept, spec, replace_all=True)
-        return self._commit(name, kept, mode="overwrite")
-
     def delete_keys(self, spark: SparkSession, name: str, keys_df: DataFrame) -> int:
         """Key-based delete: remove rows whose key columns match any
         row of ``keys_df``.  On a bucketed table only buckets
@@ -700,46 +684,6 @@ class ParquetCatalog:
         if spec is not None:
             return self._commit_bucketed(name, kept, spec, replace_all=True)
         return self._commit(name, kept, mode="overwrite")
-
-    # -- table statistics (ANALYZE TABLE ... COMPUTE STATISTICS analog) -------
-    def analyze(self, spark: SparkSession, name: str, columns: list[str] | None = None) -> dict:
-        """ONE aggregate pass computing row count plus per-column null
-        count and NDV estimate (HLL++ via approx_count_distinct —
-        mergeable, single-job for every column at once).  Persisted to
-        ``_stats.json`` with the snapshot version it describes, so a
-        reader can tell stale stats from fresh.  These are the numbers
-        a cost-based planner needs for join ordering / broadcast
-        decisions; Spark's CBO reads them from the metastore — here
-        they feed the caller (and the judge) directly."""
-        df = self.read(spark, name)
-        if df is None:
-            raise KeyError(f"no such table: {name!r}")
-        columns = columns or df.columns
-        aggs = [F.count("*").alias("_rows")]
-        for c in columns:
-            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"_n_{c}"))
-            aggs.append(F.approx_count_distinct(c).alias(f"_d_{c}"))
-        row = df.agg(*aggs).collect()[0]
-        stats = {
-            "version": self.current_version(name),
-            "rows": row["_rows"],
-            "columns": {
-                c: {"null_count": row[f"_n_{c}"], "ndv_est": row[f"_d_{c}"]}
-                for c in columns
-            },
-        }
-        with open(os.path.join(self._tdir(name), "_stats.json"), "w") as f:
-            json.dump(stats, f)
-        return stats
-
-    def table_stats(self, name: str) -> dict | None:
-        """Last ANALYZE output (includes the snapshot version it was
-        computed at — compare with current_version for staleness)."""
-        p = os.path.join(self._tdir(name), "_stats.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
 
     # -- maintenance (Iceberg: rewrite_data_files / expire_snapshots) ---------
     def compact(self, spark: SparkSession, name: str) -> int:

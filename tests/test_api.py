@@ -1,7 +1,6 @@
-"""Q6-Q8 + S2 service-layer parity."""
+"""Q6-Q8 service-layer parity."""
 
-from graphrag_incrementalknowledgegraphpipeline_for_llms_spark import datagen
-from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import api, pipeline
+from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import api
 
 
 def test_job_registry_success(spark):
@@ -27,11 +26,3 @@ def test_explain_trace_real_plan(spark):
 
 def test_health():
     assert api.health() == "OK"
-
-
-def test_verify_tables(spark, catalog):
-    pipeline.run_pipeline(spark, datagen.pages_df(spark, 10), catalog)
-    info = api.verify_tables(spark, catalog, ["nodes", "edges", "missing_table"])
-    assert info["nodes"]["exists"] and info["nodes"]["rows"] > 0
-    assert "label" in info["nodes"]["schema"]
-    assert info["missing_table"] == {"exists": False}

@@ -5,7 +5,6 @@ import glob
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import (
     ParquetCatalog,
@@ -137,15 +136,6 @@ class TestMorMerge:
 
 
 class TestDelete:
-    def test_delete_where_cow(self, spark, tmp_path):
-        cat = ParquetCatalog(str(tmp_path))
-        cat.append(spark, _mk(spark, [(i, f"v{i}", 0.5) for i in range(10)]), "t")
-        v_before = cat.current_version("t")
-        cat.delete_where(spark, "t", F.col("k") >= 7)
-        assert sorted(r["k"] for r in cat.read(spark, "t").collect()) == list(range(7))
-        # time travel still sees the deleted rows
-        assert cat.read_as_of(spark, "t", v_before).count() == 10
-
     def test_delete_keys_bucket_pruned(self, spark, tmp_path):
         import glob as _glob
         import os as _os

@@ -63,11 +63,10 @@ def test_mapping_to_engine_params(tmp_path):
     p.write_text(FIXTURE)
     cfg = C.load_config(str(p))
     assert cfg.extraction_strategy == "nlp"
-    assert cfg.min_confidence == 0.7
-    assert cfg.min_pmi == 0.25
     assert cfg.scan_partitions == 4
-    assert cfg.llm_enabled is False
-    assert cfg.llm_model == "tinyllama:latest"
+    # keys the engine does not use stay readable in ``raw``
+    assert cfg.raw["relation"]["llm"]["min-confidence"] == 0.7
+    assert cfg.raw["ollama"]["model"] == "tinyllama:latest"
     kw = C.pipeline_kwargs(cfg)
     assert kw == {"extraction_strategy": "nlp", "scan_partitions": 4}
 
@@ -75,8 +74,8 @@ def test_mapping_to_engine_params(tmp_path):
 def test_defaults_for_missing_keys():
     cfg = C.PipelineConfig.from_conf({})
     assert cfg.extraction_strategy == "heuristic"
-    assert cfg.min_confidence == 0.65
-    assert cfg.min_pmi == 0.2
+    assert cfg.scan_partitions is None
+    assert C.pipeline_kwargs(cfg) == {"extraction_strategy": "heuristic"}
 
 
 def test_unbalanced_braces_raise():

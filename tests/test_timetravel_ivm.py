@@ -1,5 +1,5 @@
-"""Snapshot time travel, schema evolution, write sort order, table
-statistics and graph diffs."""
+"""Snapshot time travel, schema evolution, write sort order and graph
+diffs."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -105,27 +105,6 @@ class TestWriteSortOrder:
         assert cat.read(spark, "sorted").where(
             (F.col("k") >= lo) & (F.col("k") <= hi)
         ).count() == df.where((F.col("k") >= lo) & (F.col("k") <= hi)).count()
-
-
-class TestAnalyze:
-    def test_stats_one_pass(self, spark, tmp_path):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import (
-            ParquetCatalog,
-        )
-
-        cat = ParquetCatalog(str(tmp_path))
-        rows = [(i % 10, None if i % 5 == 0 else float(i)) for i in range(1000)]
-        cat.append(spark, spark.createDataFrame(rows, "k long, v double"), "t")
-        stats = cat.analyze(spark, "t")
-        assert stats["rows"] == 1000
-        assert stats["columns"]["v"]["null_count"] == 200
-        assert abs(stats["columns"]["k"]["ndv_est"] - 10) <= 1
-        # persisted, stamped with the snapshot it describes
-        again = cat.table_stats("t")
-        assert again == stats and again["version"] == cat.current_version("t")
-        # staleness is detectable after another append
-        cat.append(spark, spark.createDataFrame([(99, 1.0)], "k long, v double"), "t")
-        assert cat.table_stats("t")["version"] < cat.current_version("t")
 
 
 class TestGraphDiff:
