@@ -1060,7 +1060,7 @@ def q_kg_incremental_communities(spark, sf_dir):
     pair graph deterministically into a ~87.5% base and a ~12.5% delta
     batch (pmod(xxhash64(a,b), 8) == 0), build the base LPA index +
     component index, then refresh ONLY the delta-touched components
-    (plans/queries.incremental_label_propagation).  The oracle is the
+    (plans/queries.incremental_communities).  The oracle is the
     FULL-graph 5-round LPA over all pairs — a hash-exact green row IS
     the proof that the O(touched) incremental refresh equals the full
     rebuild."""
@@ -1074,7 +1074,7 @@ def q_kg_incremental_communities(spark, sf_dir):
             p.select(F.col("b_id").alias("cid"), F.col("a_id").alias("nbr_id"))
         )
 
-    labels = q.incremental_label_propagation(
+    labels, _ = q.incremental_communities(
         _sym(pairs.where(~is_delta)), _sym(pairs.where(is_delta)), iters=5
     )
     return q.community_sizes(labels, top_k=50)

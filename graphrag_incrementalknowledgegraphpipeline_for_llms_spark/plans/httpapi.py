@@ -95,9 +95,10 @@ class GraphApiService:
     def refresh(self, pages_path: str) -> dict:
         """POST /v1/refresh — ingest one page-batch parquet through
         plans.refresh.refresh_after_batch (O(batch) MOR graph merge,
-        warm-start PageRank, touched-component LPA), swap the service
-        onto the post-batch tables and drop the memoized analytics so
-        every endpoint answers from the refreshed graph.  The stored
+        compaction policy, warm-start PageRank, touched-component
+        LPA/CC), swap the service onto the post-batch tables and drop
+        the memoized analytics so every endpoint answers from the
+        refreshed graph.  The stored
         label table replaces the next _lpa_labels recompute.
 
         Concurrency (the server is a ThreadingHTTPServer): refreshes
@@ -105,10 +106,16 @@ class GraphApiService:
         resets are swapped in with ONE ``__dict__.update`` so a
         concurrent GET observes either the whole pre-batch state or
         the whole post-batch state, never e.g. new edges with old
-        memoized labels.  A long-running query planned against
-        pre-refresh files can still lose them to the catalog's GC
-        retention window after two further refreshes — the same
-        contract Iceberg's expire_snapshots gives readers."""
+        memoized labels.
+
+        Reader GC contract: a commit keeps the data dirs of the
+        current and the previous snapshot only, and a refresh can
+        compact ``nodes``/``edges`` (catalog.maybe_compact), which
+        supersedes their delta dirs.  So a query planned before
+        refresh N stays readable through refresh N, but can lose
+        delta dirs during refresh N+1 — the same contract Iceberg's
+        expire_snapshots gives readers.  Finish (or re-plan) a read
+        before the next refresh but one."""
         if self.catalog is None:
             raise ValueError("service started without a catalog")
         from . import refresh as rf

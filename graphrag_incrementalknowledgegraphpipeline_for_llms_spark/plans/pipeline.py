@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import concepts as cf
-from ..functions import html as hf
 from ..operators import cooccur, graph, scorer
 from ..sources.catalog import ParquetCatalog
 
@@ -331,29 +330,14 @@ def run_pipeline(
     # tables, all derived from the staged extraction), and the lineage
     # stats job is read-only -> concurrent Spark jobs (the scheduler
     # interleaves their stages and keeps the executors full)
-    import os as _os
     from concurrent.futures import ThreadPoolExecutor
 
-    if _os.environ.get("SPARK_GRAFT_SERIAL_WRITES"):
-        # profiling mode: run each write as its own timed step
-        for nm, fn in (
-            ("w_mentions", write_mentions),
-            ("w_triples", write_triples),
-            ("w_nodes", write_nodes),
-        ):
-            dd = clock(nm)
-            fn()
-            dd()
-        dd = clock("w_stats")
-        part_stats = run_stats()
-        dd()
-    else:
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            futures = [ex.submit(fn) for fn in (write_mentions, write_triples, write_nodes)]
-            stats_future = ex.submit(run_stats)
-            for f in futures:
-                f.result()
-            part_stats = stats_future.result()
+    with ThreadPoolExecutor(max_workers=4) as ex:
+        futures = [ex.submit(fn) for fn in (write_mentions, write_triples, write_nodes)]
+        stats_future = ex.submit(run_stats)
+        for f in futures:
+            f.result()
+        part_stats = stats_future.result()
     n_pages = sum(r["chunk_cnt"] for r in part_stats)
     n_mentions = sum(r["mention_cnt"] or 0 for r in part_stats)
     max_ts = max((r["max_ts"] for r in part_stats), default=None)

@@ -965,18 +965,19 @@ def conductance(und: DataFrame, labels: DataFrame, top_k: int = 20) -> DataFrame
     )
 
 
-def incremental_label_propagation(
+def incremental_communities(
     base_und: DataFrame,
     delta_und: DataFrame,
     iters: int = 5,
     checkpoint_every: int = 2,
     base_labels: DataFrame | None = None,
     base_comp: DataFrame | None = None,
-) -> DataFrame:
-    """Incrementally refresh LPA community labels after a delta edge
-    batch, recomputing ONLY the components the delta touches — the
-    community-index half of the incremental GraphRAG story (the graph
-    itself already refreshes in O(batch) via the catalog's MOR path).
+) -> tuple[DataFrame, DataFrame]:
+    """Incrementally refresh the community index — LPA labels AND the
+    connected-component index — after a delta edge batch, recomputing
+    ONLY the components the delta touches (the touched-region update of
+    DISC, ICDE 2021).  This is the one place the engine applies that
+    rule: ``plans/refresh.py`` calls it with the stored tables.
 
     Exactness theorem: synchronous LPA seeds every node with its own
     id and votes only over direct neighbors, so a component's final
@@ -986,32 +987,34 @@ def incremental_label_propagation(
     are reused verbatim.  Every component that gains an edge (or is
     merged with another by one) is re-run on its exact merged edge
     set, which matches the full-graph run because LPA never crosses
-    component boundaries.  Therefore the output EQUALS full-graph LPA
+    component boundaries.  Therefore the labels EQUAL full-graph LPA
     row-for-row; the driver pins this by grading the incremental plan
     against the full-graph unrolled-CTE oracle (hash-exact).
 
-    Cost shape at 100 TB: the refresh work is one broadcast semi-join
-    of the delta endpoints against the stored component index, one
-    semi-join to carve the affected subgraph, and an LPA run sized by
-    the affected components — O(touched), not O(graph).  The component
-    index itself is the stored output of
-    :func:`canonicalize.connected_components` (deltas only ever MERGE
-    components, so it is maintainable with the same large-star pass
-    over touched components).
+    Components: deltas only ever MERGE components, so CC over (delta
+    edges + one (id, component) mapping edge per touched node)
+    reproduces the full-graph result for every touched node — the
+    mapping edges contract each old component to its min-id
+    representative in one round, and min-id over the merged node set
+    equals the full recompute's representative.  Untouched rows are
+    reused verbatim.
+
+    Cost shape at 100 TB: one broadcast semi-join of the delta
+    endpoints against the stored component index (materialized once,
+    shared by both outputs), one semi-join to carve the affected
+    subgraph, an LPA run sized by the affected components, and a CC
+    over delta + mapping edges — O(touched), not O(graph).
 
     ``base_labels`` / ``base_comp``: the STORED (id, label) table and
-    (id, component) index of the base graph — the refresh-after-batch
-    surface (plans/refresh.py) passes the tables it persisted after
-    the previous batch, making the refresh truly O(touched) with no
-    base recompute.  When omitted (the driver-oracle demo path) both
-    are recomputed from ``base_und`` so the function stays
-    self-contained; stored labels MUST have been produced by
-    :func:`label_propagation` with the same ``iters`` over exactly
-    ``base_und`` or the exactness theorem above does not apply.
+    (id, component) index of the base graph.  When omitted (the
+    driver-oracle demo path) both are recomputed from ``base_und`` so
+    the function stays self-contained; stored tables MUST describe
+    exactly ``base_und`` (labels from :func:`label_propagation` at the
+    same ``iters``) or the exactness argument above does not apply.
 
     ``base_und`` / ``delta_und``: symmetric (cid, nbr_id) edge views;
-    the merged graph is their union.  Returns (id, label) for every
-    node of the merged graph.
+    the merged graph is their union.  Returns ``(labels, components)``:
+    (id, label) and (id, component) for every node of the merged graph.
     """
     from ..operators import canonicalize
 
@@ -1021,27 +1024,24 @@ def incremental_label_propagation(
         base_labels = label_propagation(
             base_und, iters=iters, checkpoint_every=checkpoint_every
         )
-    else:
-        base_labels = base_labels.select("id", "label")
-    # stored component index of the base graph (min-id representative)
+    base_labels = base_labels.select("id", "label")
     if base_comp is None:
         base_comp = canonicalize.connected_components(
             base_und, src="cid", dst="nbr_id"
         )
-    else:
-        base_comp = base_comp.select("id", "component")
+    base_comp = base_comp.select("id", "component")
     delta_nodes = delta_und.select(F.col("cid").alias("id")).distinct()
     # components hit by any delta endpoint — small: one per touched
-    # community, broadcast back to carve the affected node set
-    affected = (
-        base_comp.join(delta_nodes, "id").select("component").distinct()
+    # community, broadcast back to carve the touched node set, which
+    # both outputs read (materialized once)
+    affected = base_comp.join(delta_nodes, "id").select("component").distinct()
+    touched = base_comp.join(F.broadcast(affected), "component").localCheckpoint(
+        eager=True
     )
     refresh_nodes = (
-        base_comp.join(F.broadcast(affected), "component")
-        .select("id")
-        .unionByName(delta_nodes)  # covers brand-new nodes
-        .distinct()
+        touched.select("id").unionByName(delta_nodes).distinct()  # + new nodes
     )
+
     merged = base_und.unionByName(delta_und).distinct()
     # affected components are edge-closed: filtering on cid keeps the
     # symmetric partner row (nbr is in the same component)
@@ -1049,8 +1049,20 @@ def incremental_label_propagation(
     refreshed = label_propagation(
         refresh_und, iters=iters, checkpoint_every=checkpoint_every
     )
-    untouched = base_labels.join(refresh_nodes, "id", "left_anti")
-    return untouched.unionByName(refreshed)
+    labels = base_labels.join(refresh_nodes, "id", "left_anti").unionByName(
+        refreshed
+    )
+
+    mapping_edges = touched.select(
+        F.col("id").alias("cid"), F.col("component").alias("nbr_id")
+    )
+    new_comp = canonicalize.connected_components(
+        delta_und.unionByName(mapping_edges), src="cid", dst="nbr_id"
+    )
+    comp = base_comp.join(new_comp.select("id"), "id", "left_anti").unionByName(
+        new_comp
+    )
+    return labels, comp
 
 
 def community_hierarchy(
@@ -2544,9 +2556,7 @@ def shortest_paths(
     return dist.select("id", F.round("dist", 6).alias("dist")).orderBy("dist", "id")
 
 
-def taxonomy_closure(
-    isa: DataFrame, max_depth: int = 4, truncate: bool = False
-) -> DataFrame:
+def taxonomy_closure(isa: DataFrame, max_depth: int = 4) -> DataFrame:
     """Depth-bounded transitive closure of the ``is_a`` taxonomy:
     (desc_id, anc_id, depth) for every ancestor reachable in at most
     ``max_depth`` hops, depth = the SHORTEST such chain — the subsumption
@@ -2594,23 +2604,15 @@ def taxonomy_closure(
             .agg(F.min("depth").alias("depth"))
         )
         # clo is referenced twice per round (frontier filter + union),
-        # so the logical tree doubles per round.  Whether truncating
-        # pays depends on the CONSUMER: a query that references the
-        # returned closure once plans/executes the 2^max_depth
-        # duplication cheaper than mid-loop toRdd checkpoints
-        # (kg_taxonomy_reduction 1.35 s untruncated vs 1.77 s
-        # truncated, same window), while a consumer that EMBEDS the
-        # closure in further self-joined subtrees (wu_palmer) must
-        # truncate or re-execute the duplicated branches
-        # (kg_wu_palmer 5.9 s untruncated vs 3.8 s truncated).
-        if truncate and (d % 2 == 0 or d == max_depth - 1):
+        # so an untruncated logical tree doubles per round (2^max_depth
+        # plan nodes); a lazy checkpoint every other round keeps the
+        # plan linear in max_depth
+        if d % 2 == 0 or d == max_depth - 1:
             clo = clo.localCheckpoint(eager=False)
     return clo.orderBy("desc_id", "anc_id")
 
 
-def taxonomy_layers(
-    isa: DataFrame, max_depth: int = 4, truncate: bool = False
-) -> DataFrame:
+def taxonomy_layers(isa: DataFrame, max_depth: int = 4) -> DataFrame:
     """Topological layer assignment over the ``is_a`` DAG: roots (no
     parent edge) sit at layer 0, every other concept at
     max(parent layer) + 1 — the longest ancestor chain, i.e. the
@@ -2661,8 +2663,8 @@ def taxonomy_layers(
             .groupBy("id")
             .agg(F.max("layer").alias("layer"))
         )
-        # truncate= trade-off: see the taxonomy_closure note
-        if truncate and (_d % 2 == 1 or _d == max_depth - 1):
+        # lineage truncation: see the taxonomy_closure note
+        if _d % 2 == 1 or _d == max_depth - 1:
             layers = layers.localCheckpoint(eager=False)
     parents = isa.groupBy(F.col("child_id").alias("id")).agg(
         F.count(F.lit(1)).alias("n_parents")
@@ -5301,8 +5303,8 @@ def wu_palmer_similarity(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as ex:
-        f_clo = ex.submit(taxonomy_closure, isa, max_depth=max_depth, truncate=True)
-        f_lay = ex.submit(taxonomy_layers, isa, max_depth=max_depth, truncate=True)
+        f_clo = ex.submit(taxonomy_closure, isa, max_depth=max_depth)
+        f_lay = ex.submit(taxonomy_layers, isa, max_depth=max_depth)
         clo, layers = f_clo.result(), f_lay.result().select("id", "layer")
     nodes = layers.select("id")
     anc = clo.select(
@@ -5348,8 +5350,8 @@ def wu_palmer_similarity(
         )
     )
     # enc is both sides of the pair self-join: one lazy checkpoint
-    # keeps the (untruncated) closure/layers subtree from being
-    # planned twice — and the encoded relation materializes once
+    # keeps the closure/layers subtree from being planned twice — and
+    # the encoded relation materializes once
     enc = enc.localCheckpoint(eager=False)
     common = enc.select(F.col("n").alias("a"), "ac", "k").join(
         enc.select(F.col("n").alias("b"), "ac"), "ac"

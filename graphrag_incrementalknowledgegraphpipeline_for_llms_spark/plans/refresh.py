@@ -1,5 +1,6 @@
-"""Refresh-after-batch: the daily-delta entry point that ties the
-engine's incremental pieces into ONE call.
+"""Refresh-after-batch: the ONE entry point that writes a batch's
+graph and its analytics (the HTTP ``POST /v1/refresh`` and the
+streaming sink in streaming/incremental.py both call it).
 
 A 100-TB GraphRAG deployment does not rebuild its graph or its
 analytics when a new crawl lands; it runs, per batch:
@@ -9,33 +10,43 @@ analytics when a new crawl lands; it runs, per batch:
    checkpoint high-water mark skips already-seen pages and the
    merge-on-read delta path measured 11.1 s vs 36.8 s copy-on-write
    for a +10% batch, see sources/catalog.py),
-2. a WARM-START PageRank over the post-batch concept graph
+2. the compaction policy: ``catalog.maybe_compact`` folds the
+   ``nodes``/``edges`` deltas once a table holds more than the
+   catalog's default bound of them — one rewrite per that many
+   batches (LSM-style cadence), so read-time resolution stays bounded
+   while writes stay O(batch),
+3. a WARM-START PageRank over the post-batch concept graph
    (``pagerank_und(init=stored_scores)`` — power iteration's error
    decays geometrically from the starting distance, so yesterday's
    scores need ~1/3 of the cold iterations: measured cold-10 11.6 s
    vs warm-3 4.5 s on the 10x graph),
-3. an INCREMENTAL community refresh
-   (``incremental_label_propagation`` with the STORED label table and
-   component index — recomputes only the components the delta
-   touches, which equals full-graph LPA row-for-row by the
-   component-locality theorem in its docstring).
+4. an INCREMENTAL community refresh (``incremental_communities`` with
+   the STORED label table and component index — recomputes labels and
+   components only for the components the delta touches, which equals
+   a full-graph LPA/CC row-for-row by the component-locality argument
+   in its docstring).
 
 The refreshed analytics land back in the catalog
 (``analytics_pagerank``, ``analytics_communities``,
 ``analytics_components``) so the NEXT batch warm-starts from them —
 the same incremental regime the graph tables already live in.  Each
 refresh also appends a row to the ``analytics_refresh_log`` lineage
-table (batch pages/mentions/triples counts + per-stage wall times),
-mirroring the per-partition lineage rows the pipeline itself writes.
+table (batch pages/mentions/triples counts, per-stage wall times and
+the ``edges`` version the stored labels/components describe), written
+LAST so it marks the refresh as complete.
 
 Freshness/eventual-exactness contract: PageRank is returned after a
 FIXED warm iteration count, so scores are within power-iteration
 tolerance of the fixed point (and converge to it as batches keep
-landing — the fixed point is start-independent); community labels are
-EXACT (equal to a cold full-graph LPA at the same ``lpa_iters``) as
-long as every batch goes through this entry point, because the stored
-labels are then always the full-graph labeling of the pre-batch graph
-— pinned by tests/test_refresh.py against a cold rebuild.
+landing — the fixed point is start-independent), whatever wrote the
+graph in between.  Community labels and components are EXACT (equal
+to a cold full-graph LPA at the same ``lpa_iters`` / a cold CC): the
+incremental step only runs when the last refresh-log row records the
+current ``edges`` version, i.e. when the stored tables describe the
+pre-batch graph.  A graph write outside this entry point (a direct
+``run_pipeline`` call) or a crash between the pipeline commit and the
+log row leaves the versions unequal, and the refresh recomputes both
+tables cold — pinned by tests/test_refresh.py against a cold rebuild.
 
 Reference parity note: the reference pipeline re-runs its Neo4j
 import and lets the database re-derive query-time analytics
@@ -51,7 +62,6 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators import canonicalize
 from ..sources.catalog import ParquetCatalog
@@ -79,6 +89,17 @@ def _und(edges: DataFrame) -> DataFrame:
     )
 
 
+def _analytics_edges_version(spark: SparkSession, catalog: ParquetCatalog) -> int | None:
+    """The ``edges`` version the stored labels/components describe, as
+    recorded by the newest refresh-log row; None without a record."""
+    v = catalog.current_version(REFRESH_LOG_TABLE)
+    # the newest append only: one row, whatever the log's length
+    newest = catalog.read_version_delta(spark, REFRESH_LOG_TABLE, v) if v else None
+    if newest is None or "edges_version" not in newest.columns:
+        return None
+    return newest.first()["edges_version"]
+
+
 def refresh_after_batch(
     spark: SparkSession,
     pages: DataFrame,
@@ -87,19 +108,19 @@ def refresh_after_batch(
     pagerank_iters_cold: int = 10,
     pagerank_iters_warm: int = 3,
     lpa_iters: int = 5,
-    graph_mode: str = "mor",
     **pipeline_kwargs,
 ) -> RefreshResult:
     """Ingest one page batch and refresh the stored graph analytics
     incrementally.  See the module docstring for the regime; all
-    ``run_pipeline`` keywords (extract_from_html, url_dedup, ...)
-    pass through.
+    ``run_pipeline`` keywords (extract_from_html, url_dedup, epoch_id,
+    ...) pass through, except ``graph_mode``: a refresh always merges
+    on read.
 
     Scale shape: beyond the pipeline itself, the refresh adds one
     pre-batch edge snapshot read (column-pruned: 4 id/label columns),
     the warm PageRank (``pagerank_iters_warm`` join+agg rounds over
-    the concept adjacency), and the touched-component LPA (bounded by
-    the delta's community sizes).  Nothing here scans page content.
+    the concept adjacency), and the touched-component LPA/CC (bounded
+    by the delta's community sizes).  Nothing here scans page content.
     """
     timings: dict[str, int] = {}
 
@@ -111,25 +132,36 @@ def refresh_after_batch(
 
         return done
 
-    # ---- pre-batch concept edge snapshot (for the LPA delta) ----
+    # ---- pre-batch concept edge snapshot (for the community delta),
+    # taken only when the stored labels/components describe it ----
     d = clock("pre_snapshot")
-    pre_edges = catalog.read(spark, "edges")
+    prev_labels = catalog.read(spark, LABELS_TABLE)
+    prev_comp = catalog.read(spark, COMP_TABLE)
     base_und = None
-    if pre_edges is not None:
-        base_und = _und(pre_edges).localCheckpoint(eager=True)
+    if (
+        prev_labels is not None
+        and prev_comp is not None
+        and _analytics_edges_version(spark, catalog)
+        == catalog.current_version("edges")
+    ):
+        base_und = _und(catalog.read(spark, "edges")).localCheckpoint(eager=True)
     d()
 
     # ---- 1. O(batch) pipeline pass ----
     d = clock("pipeline")
-    res = run_pipeline(
-        spark, pages, catalog, graph_mode=graph_mode, **pipeline_kwargs
-    )
+    res = run_pipeline(spark, pages, catalog, graph_mode="mor", **pipeline_kwargs)
     d()
 
-    post_edges = catalog.read(spark, "edges")
-    und = _und(post_edges).localCheckpoint(eager=True)
+    # ---- 2. compaction policy ----
+    d = clock("compact")
+    for t in ("nodes", "edges"):
+        catalog.maybe_compact(spark, t)
+    d()
 
-    # ---- 2. warm-start PageRank ----
+    edges_version = catalog.current_version("edges")
+    und = _und(catalog.read(spark, "edges")).localCheckpoint(eager=True)
+
+    # ---- 3. warm-start PageRank ----
     d = clock("pagerank")
     prev_pr = catalog.read(spark, PR_TABLE)
     warm = prev_pr is not None
@@ -144,57 +176,27 @@ def refresh_after_batch(
     pr_rows = pr.count()
     d()
 
-    # ---- 3. incremental communities ----
+    # ---- 4. communities: incremental over the stored tables, else cold ----
     d = clock("communities")
-    prev_labels = catalog.read(spark, LABELS_TABLE)
-    prev_comp = catalog.read(spark, COMP_TABLE)
-    delta_und = None
-    if base_und is not None:
+    if base_und is None:
+        labels = q.label_propagation(und, iters=lpa_iters, prepared=True)
+        comp = canonicalize.connected_components(und, src="cid", dst="nbr_id")
+    else:
         # delta = edges in the post view absent from the pre view;
         # only (cid, nbr_id) pairs shuffle here
         delta_und = und.join(base_und, ["cid", "nbr_id"], "left_anti")
-    if base_und is None or prev_labels is None or prev_comp is None:
-        labels = q.label_propagation(und, iters=lpa_iters, prepared=True)
-    else:
-        labels = q.incremental_label_propagation(
+        labels, comp = q.incremental_communities(
             base_und,
             delta_und,
             iters=lpa_iters,
             base_labels=prev_labels,
             base_comp=prev_comp,
         )
+    # materialize inside THIS clock so the lineage row attributes the
+    # LPA/CC cost to the communities stage, not to the persist writes
     labels = labels.localCheckpoint(eager=True)
     label_rows = labels.count()
-    # component index: incrementally maintained like the labels.
-    # Deltas only ever MERGE components, so CC over (delta edges +
-    # the stored (id, component) mapping edges of the TOUCHED
-    # components) reproduces the full-graph result for every touched
-    # node — the mapping edges contract each old component to its
-    # min-id representative in one round, and min-id over the merged
-    # node set equals the full recompute's representative.  Untouched
-    # rows are reused verbatim.  O(touched), not O(graph); pinned
-    # against a cold full-graph CC in tests/test_refresh.py.
-    if base_und is None or prev_comp is None:
-        comp = canonicalize.connected_components(und, src="cid", dst="nbr_id")
-    else:
-        delta_nodes = delta_und.select(F.col("cid").alias("id")).distinct()
-        affected = prev_comp.join(delta_nodes, "id").select("component").distinct()
-        touched = prev_comp.join(F.broadcast(affected), "component")
-        mapping_edges = touched.select(
-            F.col("id").alias("cid"), F.col("component").alias("nbr_id")
-        )
-        new_part = canonicalize.connected_components(
-            delta_und.select("cid", "nbr_id").unionByName(mapping_edges),
-            src="cid",
-            dst="nbr_id",
-        )
-        comp = prev_comp.join(
-            new_part.select("id"), "id", "left_anti"
-        ).unionByName(new_part)
-    # materialize inside THIS clock so the lineage row attributes the
-    # CC cost to the communities stage, not to the persist writes
     comp = comp.localCheckpoint(eager=True)
-    comp.count()
     d()
 
     # ---- persist analytics for the next batch's warm start ----
@@ -215,13 +217,17 @@ def refresh_after_batch(
                 label_rows,
                 bool(warm),
                 json.dumps(dict(timings)),
+                edges_version,
             )
         ],
         "snapshot_id long, pages long, mentions long, triples long, "
-        "pr_rows long, label_rows long, warm_start boolean, stage_ms string",
+        "pr_rows long, label_rows long, warm_start boolean, stage_ms string, "
+        "edges_version long",
     )
     # O(1) fast-append (new data dir + manifest entry) — NOT
-    # read+union+overwrite, which rewrites the whole log every batch
+    # read+union+overwrite, which rewrites the whole log every batch.
+    # Written last: its edges_version is what marks the stored
+    # labels/components above as current
     catalog.append(spark, log_row, REFRESH_LOG_TABLE)
 
     return RefreshResult(

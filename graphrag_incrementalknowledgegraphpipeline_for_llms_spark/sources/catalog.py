@@ -64,7 +64,10 @@ re-runs against it.  The mapping:
    current_version / snapshots   table.history() / .snapshots metadata
    ============================  =========================================
 
-4. **Callers don't change**: pipeline/refresh/streaming only touch the
+4. **Callers don't change**: the writers are ``plans.pipeline``
+   (a cold build) and ``plans.refresh`` (each later batch: pipeline,
+   ``maybe_compact`` and the stored analytics; the streaming sink and
+   ``POST /v1/refresh`` both go through it), and they only touch the
    methods above; content_rid winner selection and the family-split
    pre-dedup stay (they implement the reference's LWW semantics, which
    Iceberg MERGE alone does not).
@@ -710,9 +713,9 @@ class ParquetCatalog:
         winner resolution from degrading as small batches accumulate
         (each delta adds a scan input + rows to the resolution
         shuffle).  Returns the new snapshot version, or None when under
-        the bound.  Streaming sinks call this per microbatch: amortized
-        cost is one rewrite every ``max_deltas`` batches, i.e. the
-        classic LSM-style compaction cadence."""
+        the bound.  ``plans.refresh.refresh_after_batch`` calls this
+        per batch: amortized cost is one rewrite every ``max_deltas``
+        batches, i.e. the classic LSM-style compaction cadence."""
         if len(self._delta_entries(name)) <= max_deltas:
             return None
         return self.compact(spark, name)

@@ -1,10 +1,11 @@
-"""Incremental LPA refresh == full-graph LPA, exactly.
+"""Incremental community refresh == full-graph LPA/CC, exactly.
 
-The theorem (plans/queries.incremental_label_propagation): synchronous
-LPA is a pure function of each connected component's edge set, so
-reusing stored labels for components with no delta endpoint and
-re-running LPA only on delta-touched components reproduces the
-full-graph labeling row-for-row.  The fixtures exercise every way a
+The theorem (plans/queries.incremental_communities): synchronous
+LPA and connected components are pure functions of each connected
+component's edge set, so reusing stored labels/components for
+components with no delta endpoint and recomputing only the
+delta-touched components reproduces the full-graph labeling and
+component index row-for-row.  The fixtures exercise every way a
 delta can interact with the component index:
 
 - an edge INSIDE one base component (labels of that component may
@@ -13,10 +14,14 @@ delta can interact with the component index:
 - an edge attaching a NEW node to an existing component,
 - a delta-only component of brand-new nodes,
 - an untouched component whose stored labels must survive verbatim.
+
+The fold tests chain the function the way plans/refresh.py does: each
+batch's labels and components become the next batch's stored tables.
 """
 
 from pyspark.sql import functions as F
 
+from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import canonicalize
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import queries as q
 
 
@@ -29,6 +34,14 @@ def _sym(spark, pairs):
 
 def _labels(df):
     return {(r["id"], r["label"]) for r in df.collect()}
+
+
+def _comps(df):
+    return {(r["id"], r["component"]) for r in df.collect()}
+
+
+def _full_cc(und):
+    return canonicalize.connected_components(und, src="cid", dst="nbr_id")
 
 
 # four base components: triangles A, B, D and a 4-chain C
@@ -48,9 +61,10 @@ DELTA = [
 
 def test_incremental_equals_full(spark):
     base, delta = _sym(spark, BASE), _sym(spark, DELTA)
-    full = q.label_propagation(base.unionByName(delta).distinct(), iters=5)
-    incr = q.incremental_label_propagation(base, delta, iters=5)
-    assert _labels(incr) == _labels(full)
+    merged = base.unionByName(delta).distinct()
+    labels, comp = q.incremental_communities(base, delta, iters=5)
+    assert _labels(labels) == _labels(q.label_propagation(merged, iters=5))
+    assert _comps(comp) == _comps(_full_cc(merged))
 
 
 def test_untouched_component_labels_reused(spark):
@@ -60,7 +74,7 @@ def test_untouched_component_labels_reused(spark):
     (the delta actually changed something)."""
     base, delta = _sym(spark, BASE), _sym(spark, DELTA)
     base_labels = _labels(q.label_propagation(base, iters=5))
-    incr = _labels(q.incremental_label_propagation(base, delta, iters=5))
+    incr = _labels(q.incremental_communities(base, delta, iters=5)[0])
     d_rows = {t for t in base_labels if t[0].startswith("d")}
     assert d_rows and d_rows == {t for t in incr if t[0].startswith("d")}
     assert {t[0] for t in incr} == {t[0] for t in base_labels} | {"n1", "n2", "n3"}
@@ -106,5 +120,82 @@ def test_conductance_bridged_triangles(spark):
 
 def test_empty_delta_is_identity(spark):
     base = _sym(spark, BASE)
-    incr = q.incremental_label_propagation(base, base.limit(0), iters=5)
-    assert _labels(incr) == _labels(q.label_propagation(base, iters=5))
+    labels, comp = q.incremental_communities(base, base.limit(0), iters=5)
+    assert _labels(labels) == _labels(q.label_propagation(base, iters=5))
+    assert _comps(comp) == _comps(_full_cc(base))
+
+
+# -- folding batches through the stored tables (the refresh regime) ----
+
+BATCH1 = [
+    ("a1", "a2"), ("a2", "a3"), ("a1", "a3"),
+    ("b1", "b2"), ("b2", "b3"), ("b1", "b3"),
+    ("d1", "d2"), ("d2", "d3"), ("d1", "d3"),
+]
+BATCH2 = [
+    ("a3", "b1"),          # merges A and B
+    ("d1", "d2"),          # duplicate of a stored edge
+    ("n1", "n2"),          # brand-new component
+]
+BATCH3 = [
+    ("d3", "n1"),          # merges D with the new component
+    ("c1", "c2"), ("c2", "c3"),  # another new component
+]
+
+
+def _fold(spark, state, batch):
+    """Fold one batch into the stored (edges, labels, components): cold
+    for the first batch, incremental over the stored tables after."""
+    delta = _sym(spark, batch)
+    if state is None:
+        und = delta.distinct()
+        labels, comp = q.label_propagation(und, iters=5), _full_cc(und)
+    else:
+        base, base_labels, base_comp = state
+        und = base.unionByName(delta).distinct()
+        labels, comp = q.incremental_communities(
+            base, delta, iters=5, base_labels=base_labels, base_comp=base_comp
+        )
+    return (
+        und.localCheckpoint(eager=True),
+        labels.localCheckpoint(eager=True),
+        comp.localCheckpoint(eager=True),
+    )
+
+
+def _assert_equals_full(state):
+    und, labels, comp = state
+    assert _labels(labels) == _labels(q.label_propagation(und, iters=5))
+    assert _comps(comp) == _comps(_full_cc(und))
+
+
+def test_incremental_index_equals_full_rebuild(spark):
+    """After each folded batch the labels and components equal a
+    from-scratch LPA/CC over the union of every batch so far."""
+    state = None
+    for batch in (BATCH1, BATCH2, BATCH3):
+        state = _fold(spark, state, batch)
+        _assert_equals_full(state)
+
+
+def test_replay_is_idempotent(spark):
+    state = _fold(spark, _fold(spark, None, BATCH1), BATCH2)
+    replayed = _fold(spark, state, BATCH2)
+    assert _labels(replayed[1]) == _labels(state[1])
+    assert _comps(replayed[2]) == _comps(state[2])
+
+
+def test_untouched_component_not_rewritten(spark):
+    """A batch touching only component A leaves the B and D rows of
+    both tables as they were, and the result still equals a full
+    rebuild."""
+    before = _fold(spark, None, BATCH1)
+    after = _fold(spark, before, [("a1", "a4")])
+
+    def others(rows):
+        return {t for t in rows if not t[0].startswith("a")}
+
+    assert others(_labels(before[1]))
+    assert others(_labels(after[1])) == others(_labels(before[1]))
+    assert others(_comps(after[2])) == others(_comps(before[2]))
+    _assert_equals_full(after)

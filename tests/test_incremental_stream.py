@@ -23,7 +23,7 @@ def test_stream_matches_batch(spark, catalog, tmp_path):
     pipeline.run_pipeline(spark, pages, batch_cat, extract_from_html=True)
 
     for t in ["nodes", "edges", "triples"]:
-        # streaming defaults to graph_mode="mor", whose nodes carry the
+        # streaming merges on read (graph_mode="mor"), whose nodes carry the
         # internal _complete tiebreak column — content must still match
         # the cow batch run exactly
         da = catalog.read(spark, t)
@@ -33,42 +33,28 @@ def test_stream_matches_batch(spark, catalog, tmp_path):
         b = sorted(tuple(r) for r in batch_cat.read(spark, t).collect())
         assert a == b, t
 
-
-def test_stream_communities_matches_full_rebuild(spark, tmp_path):
-    """Two edge-file drops through stream_communities_dir == one
-    full-graph LPA over everything ingested; the second start consumes
-    only the new files (checkpoint) and merges components."""
+    # the sink runs refresh_after_batch: the streamed catalog carries
+    # stored communities equal to a cold LPA/CC of its graph
+    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import (
+        canonicalize,
+    )
     from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import (
-        community_index as ci,
-    )
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import queries as q
-    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import (
-        ParquetCatalog,
+        queries,
+        refresh,
     )
 
-    b1 = [("a1", "a2"), ("a2", "a3"), ("a1", "a3"),
-          ("b1", "b2"), ("b2", "b3"), ("b1", "b3")]
-    b2 = [("a3", "b1"), ("n1", "n2")]
-    cat = ParquetCatalog(str(tmp_path / "cat"))
-    edges_dir = str(tmp_path / "edges")
-    ckpt = str(tmp_path / "ckpt")
-
-    spark.createDataFrame(b1, "cid string, nbr_id string").write.mode(
-        "append"
-    ).parquet(edges_dir)
-    incremental.stream_communities_dir(
-        spark, edges_dir, cat, ckpt, iters=5
-    ).awaitTermination(300)
-    spark.createDataFrame(b2, "cid string, nbr_id string").write.mode(
-        "append"
-    ).parquet(edges_dir)
-    incremental.stream_communities_dir(
-        spark, edges_dir, cat, ckpt, iters=5
-    ).awaitTermination(300)
-
-    sym = ci._sym(
-        spark.createDataFrame(b1 + b2, "u string, v string")
+    und = (
+        queries.undirected_concept_edges(catalog.read(spark, "edges"))
+        .select("cid", "nbr_id")
+        .distinct()
+        .localCheckpoint(eager=True)
     )
-    want = {(r["id"], r["label"]) for r in q.label_propagation(sym, iters=5).collect()}
-    got = {(r["id"], r["label"]) for r in ci.read_labels(spark, cat).collect()}
-    assert got == want and got
+    labels = catalog.read(spark, refresh.LABELS_TABLE).select("id", "label")
+    comp = catalog.read(spark, refresh.COMP_TABLE).select("id", "component")
+    assert {tuple(r) for r in labels.collect()} == {
+        tuple(r) for r in queries.label_propagation(und, iters=5).collect()
+    }
+    assert {tuple(r) for r in comp.collect()} == {
+        tuple(r)
+        for r in canonicalize.connected_components(und, src="cid", dst="nbr_id").collect()
+    }

@@ -17,6 +17,7 @@ warm-start PageRank + touched-component LPA).  The gates:
 import shutil
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark import datagen
@@ -152,3 +153,132 @@ class TestRefreshAfterBatch:
         assert len(log) == 2
         assert [r["warm_start"] for r in log] == [False, True]
         assert [r["pages"] for r in log] == [80, 20]
+        # the newest row records the edges version the stored
+        # labels/components describe
+        assert log[-1]["edges_version"] == inc_cat.current_version("edges")
+
+
+# -- stored analytics stay exact when the graph moves outside a refresh --
+
+def _text_pages(spark, hour, texts):
+    from datetime import datetime, timedelta
+
+    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.streaming.incremental import (
+        PAGES_SCHEMA,
+    )
+
+    t0 = datetime(2025, 1, 1) + timedelta(hours=hour)
+    return spark.createDataFrame(
+        [
+            (f"http://example.org/{hour}/{i}", t0 + timedelta(minutes=i), None, t, "en")
+            for i, t in enumerate(texts)
+        ],
+        PAGES_SCHEMA,
+    )
+
+
+def _assert_analytics_match_cold(spark, cat):
+    """The stored labels/components equal a cold LPA/CC of the
+    catalog's current graph."""
+    from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import (
+        canonicalize,
+    )
+
+    def rows(df, *cols):
+        return {tuple(r) for r in df.select(*cols).collect()}
+
+    und = _und(spark, cat).localCheckpoint(eager=True)
+    assert rows(cat.read(spark, refresh.LABELS_TABLE), "id", "label") == rows(
+        queries.label_propagation(und, iters=5), "id", "label"
+    )
+    assert rows(cat.read(spark, refresh.COMP_TABLE), "id", "component") == rows(
+        canonicalize.connected_components(und, src="cid", dst="nbr_id"), "id", "component"
+    )
+
+
+def test_write_outside_refresh_recomputes_cold(spark, tmp_path):
+    """A graph write that bypasses refresh_after_batch leaves the
+    stored tables describing an older graph; the next refresh must
+    notice (edges version mismatch) and recompute them cold."""
+    cat = ParquetCatalog(str(tmp_path / "cat"))
+    refresh.refresh_after_batch(
+        spark, _text_pages(spark, 0, ["Alpha is a Beta.", "Gamma is a Delta."]), cat
+    )
+    pipeline.run_pipeline(
+        spark,
+        _text_pages(spark, 1, ["Beta is a Epsilon.", "Epsilon is part of Omega."]),
+        cat,
+        graph_mode="mor",
+    )
+    refresh.refresh_after_batch(spark, _text_pages(spark, 2, ["Delta is a Zeta."]), cat)
+    _assert_analytics_match_cold(spark, cat)
+
+
+def test_crash_before_persist_recomputes_cold(spark, tmp_path, monkeypatch):
+    """A refresh that dies after its graph commit but before the
+    labels overwrite, replayed: the replay ingests nothing new, yet
+    the stored tables must end up describing the post-batch graph."""
+    cat = ParquetCatalog(str(tmp_path / "cat"))
+    refresh.refresh_after_batch(
+        spark, _text_pages(spark, 0, ["Alpha is a Beta.", "Gamma is a Delta."]), cat
+    )
+    batch = _text_pages(spark, 1, ["Beta is a Epsilon.", "Delta is a Zeta."])
+    orig = ParquetCatalog.overwrite
+    crashed = []
+
+    def crash_once(self, df, name, *a, **kw):
+        if name == refresh.LABELS_TABLE and not crashed:
+            crashed.append(name)
+            raise RuntimeError("injected crash")
+        return orig(self, df, name, *a, **kw)
+
+    monkeypatch.setattr(ParquetCatalog, "overwrite", crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        refresh.refresh_after_batch(spark, batch, cat)
+    r = refresh.refresh_after_batch(spark, batch, cat)
+    assert crashed and r.pipeline.pages == 0
+    _assert_analytics_match_cold(spark, cat)
+
+
+def test_refresh_compacts_graph_deltas(spark, tmp_path, monkeypatch):
+    """With the delta bound lowered to 1, three refreshes leave
+    nodes/edges with at most one merge-on-read delta each, and the
+    graph still equals a cold rebuild of the same pages."""
+    import functools
+
+    monkeypatch.setattr(
+        ParquetCatalog,
+        "maybe_compact",
+        functools.partialmethod(ParquetCatalog.maybe_compact, max_deltas=1),
+    )
+    compacted = []
+    orig = ParquetCatalog.compact
+
+    def spy(self, spark, name):
+        compacted.append(name)
+        return orig(self, spark, name)
+
+    monkeypatch.setattr(ParquetCatalog, "compact", spy)
+    texts = [
+        ["Alpha is a Beta.", "Gamma is a Delta."],
+        ["Beta is a Epsilon.", "Epsilon is part of Omega."],
+        ["Delta is a Zeta.", "Omega is a Sigma."],
+    ]
+    batches = [_text_pages(spark, hour, b) for hour, b in enumerate(texts)]
+    cat = ParquetCatalog(str(tmp_path / "inc"))
+    for batch in batches:
+        refresh.refresh_after_batch(spark, batch, cat)
+    assert {"nodes", "edges"} <= set(compacted)
+    for t in ("nodes", "edges"):
+        assert len(cat._delta_entries(t)) <= 1, t
+
+    cold = ParquetCatalog(str(tmp_path / "cold"))
+    pipeline.run_pipeline(
+        spark, functools.reduce(DataFrame.unionByName, batches), cold, incremental=False
+    )
+    for t in ("nodes", "edges"):
+        got = cat.read(spark, t).drop("_complete")
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, cold.read(spark, t).select(*got.columns).collect())
+        ), t
+    _assert_analytics_match_cold(spark, cat)
