@@ -5,7 +5,8 @@ The reference streams per-op Cypher MERGEs into Neo4j
 two columnar tables — ``nodes(label, id, props...)`` and
 ``edges(src_label, src_id, rel, dst_label, dst_id, confidence,
 evidence, updated_at)`` — upserted per batch through the catalog's
-MERGE (Iceberg ``MERGE INTO`` shape).  Semantics preserved:
+merge-on-read MERGE (Iceberg ``MERGE INTO`` shape; nodes carry a
+``_complete`` tiebreak column).  Semantics preserved:
 
 * insert-or-overwrite-all-props, last-write-wins (Neo4jSink.scala:138-164)
 * edge-before-node tolerance: placeholder endpoint nodes created when
@@ -131,12 +132,6 @@ def relation_edges(triples: DataFrame, updated_at) -> DataFrame:
     )
 
 
-# default bucket count for the nodes/edges tables: merges rewrite only
-# buckets containing update keys (catalog._commit_bucketed).  At 10^12
-# docs raise to O(10^3-10^4) so per-bucket files stay 128-512 MB.
-DEFAULT_GRAPH_BUCKETS = 32
-
-
 def batch_edges(mentions: DataFrame, triples: DataFrame, updated_at) -> DataFrame:
     """Key-unique edge batch for one pipeline pass, deduped per family
     with the cheapest correct machinery (callers pass it to
@@ -182,9 +177,7 @@ def upsert_graph(
     nodes_table: str = "nodes",
     edges_table: str = "edges",
     check_placeholders: bool = True,
-    buckets: int | None = DEFAULT_GRAPH_BUCKETS,
     edges_unique: bool = False,
-    mode: str = "cow",
 ) -> None:
     """G2+G3+G4: MERGE nodes and edges, then backfill placeholder
     endpoint nodes for edges whose endpoints are not (yet) present.
@@ -194,114 +187,77 @@ def upsert_graph(
     caller guarantees the node batch covers every edge endpoint (the
     pipeline does — edges derive from the same chunks).
 
-    ``mode``:
-    * ``"cow"`` (default) — bucket-pruned copy-on-write MERGE: reads
-      stay plain scans, but a merge rewrites every touched bucket, so
-      a small batch against a big graph costs O(graph/buckets-touched).
-    * ``"mor"`` — merge-on-read delta append: each batch lands in
-      O(batch) regardless of graph size (the incremental-ingest win);
-      reads pay winner resolution until ``catalog.compact``.  Node
-      completeness is materialized as a ``_complete`` column (MOR
-      tiebreaks persist in the table spec, so they must be real
-      columns); resolution is "deterministic" under the same
-      (tiebreak..., content_rid) total order as the CoW path, so
-      incremental == full still holds.  MOR tables are unbucketed —
-      pick the mode per table by write/read balance."""
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
-    # completeness tiebreak: real node rows must beat placeholder
-    # (all-null-prop) rows whenever both compete for a key — the
-    # catalog's residual tiebreak is a content hash, which would pick
-    # arbitrarily
-    completeness = sum(
-        (F.col(c).isNotNull().cast("int") for c in NODE_COLUMNS[2:]),
-        F.lit(0),
-    )
+    Both tables merge on read (``catalog.merge_upsert_mor``): the first
+    batch is the base, written in one overwrite; each later batch lands
+    as an O(batch) delta regardless of graph size, which reads resolve
+    until ``catalog.maybe_compact`` folds them.  Node completeness is
+    materialized as a ``_complete`` column (merge-on-read tiebreaks
+    persist in the table spec, so they must be real columns) so that
+    real node rows beat placeholder rows.  Resolution is
+    "deterministic" under the (tiebreak..., content_rid) total order,
+    so an incremental build equals a cold one."""
     if nodes is not None:
-        if mode == "mor":
-            catalog.merge_upsert_mor(
-                spark, nodes_table,
-                nodes.withColumn("_complete", completeness),
-                keys=["label", "id"], tiebreak=["_complete"],
-                resolution="deterministic",
-            )
-        else:
-            catalog.merge_upsert(
-                spark, nodes_table, nodes, keys=["label", "id"],
-                tiebreak=[completeness],
-                resolution="deterministic", buckets=buckets,
-            )
-    if edges is not None:
-        # tiebreak leads with updated_at: the reference Neo4j sink is
-        # last-write-wins (Neo4jSink.scala:138-164), so a LATER re-score
-        # must replace the stored edge even at lower confidence;
-        # confidence only breaks same-timestamp ties (within-batch
-        # determinism — the pipeline stamps one updated_at per batch)
-        if mode == "mor":
-            catalog.merge_upsert_mor(
-                spark,
-                edges_table,
-                edges,
-                keys=EDGE_KEY,
-                tiebreak=["updated_at", "confidence"],
-                resolution="deterministic",
-                assume_unique=edges_unique,
-            )
-        else:
-            catalog.merge_upsert(
-                spark,
-                edges_table,
-                edges,
-                keys=EDGE_KEY,
-                tiebreak=["updated_at", "confidence"],
-                resolution="deterministic",
-                buckets=buckets,
-                assume_unique=edges_unique,
-            )
-        if not check_placeholders:
-            return
-        # placeholder endpoints (Neo4jSink.scala:170-173): MERGE creates
-        # bare nodes so an edge can arrive before its node rows.
-        endpoints = (
-            edges.select(F.col("src_label").alias("label"), F.col("src_id").alias("id"))
-            .unionByName(
-                edges.select(F.col("dst_label").alias("label"), F.col("dst_id").alias("id"))
-            )
-            .distinct()
+        # completeness tiebreak: real node rows must beat placeholder
+        # (all-null-prop) rows whenever both compete for a key — the
+        # catalog's residual tiebreak is a content hash, which would
+        # pick arbitrarily
+        completeness = sum(
+            (F.col(c).isNotNull().cast("int") for c in NODE_COLUMNS[2:]),
+            F.lit(0),
         )
-        existing = catalog.read(spark, nodes_table)
-        if existing is not None:
-            missing = endpoints.join(
-                existing.select("label", "id"), on=["label", "id"], how="left_anti"
-            )
-        else:
-            missing = endpoints
-        placeholders = missing.select(
-            "label",
-            "id",
-            *[
-                (F.lit(None).cast("int") if c.startswith("span_") else _NULL_STR()).alias(c)
-                for c in NODE_COLUMNS[2:]
-            ],
+        _merge_nodes(spark, catalog, nodes_table, nodes.withColumn("_complete", completeness))
+    if edges is None:
+        return
+    # tiebreak leads with updated_at: the reference Neo4j sink is
+    # last-write-wins (Neo4jSink.scala:138-164), so a LATER re-score
+    # must replace the stored edge even at lower confidence;
+    # confidence only breaks same-timestamp ties (within-batch
+    # determinism — the pipeline stamps one updated_at per batch)
+    catalog.merge_upsert_mor(
+        spark,
+        edges_table,
+        edges,
+        keys=EDGE_KEY,
+        tiebreak=["updated_at", "confidence"],
+        resolution="deterministic",
+        assume_unique=edges_unique,
+    )
+    if not check_placeholders:
+        return
+    # placeholder endpoints (Neo4jSink.scala:170-173): MERGE creates
+    # bare nodes so an edge can arrive before its node rows.
+    endpoints = (
+        edges.select(F.col("src_label").alias("label"), F.col("src_id").alias("id"))
+        .unionByName(
+            edges.select(F.col("dst_label").alias("label"), F.col("dst_id").alias("id"))
         )
-        if placeholders.limit(1).count() > 0:
-            # key-novel by the anti-join, so this merge is a pure
-            # insert; routed through the same mode's merge so a fresh
-            # nodes table is created with the layout/spec the real
-            # node merges will use.  In mor mode a later REAL node row
-            # beats the placeholder via the _complete tiebreak.
-            if mode == "mor":
-                catalog.merge_upsert_mor(
-                    spark, nodes_table,
-                    placeholders.withColumn("_complete", F.lit(0)),
-                    keys=["label", "id"], tiebreak=["_complete"],
-                    resolution="deterministic",
-                )
-            else:
-                catalog.merge_upsert(
-                    spark, nodes_table, placeholders, keys=["label", "id"],
-                    resolution="deterministic", buckets=buckets,
-                )
+        .distinct()
+    )
+    existing = catalog.read_keys(spark, nodes_table, ["label", "id"])
+    if existing is not None:
+        missing = endpoints.join(existing, on=["label", "id"], how="left_anti")
+    else:
+        missing = endpoints
+    placeholders = missing.select(
+        "label",
+        "id",
+        *[
+            (F.lit(None).cast("int") if c.startswith("span_") else _NULL_STR()).alias(c)
+            for c in NODE_COLUMNS[2:]
+        ],
+        F.lit(0).alias("_complete"),
+    )
+    if placeholders.limit(1).count() > 0:
+        # key-novel by the anti-join, so this merge is a pure insert; a
+        # later REAL node row beats the placeholder via _complete
+        _merge_nodes(spark, catalog, nodes_table, placeholders)
+
+
+def _merge_nodes(spark, catalog, name: str, nodes: DataFrame) -> None:
+    catalog.merge_upsert_mor(
+        spark, name, nodes, keys=["label", "id"], tiebreak=["_complete"],
+        resolution="deterministic",
+    )
 
 
 def encode_graph_ints(
@@ -403,8 +359,7 @@ def graph_diff(
     hash/concat_ws both skip nulls, which would make (x, null) equal
     (null, x)); columns are joined with a \\x01 separator so adjacent
     values cannot alias.  The comparison is one full-outer equi-join
-    per table on its merge key — the same key the catalog buckets by,
-    so at scale the join co-locates without a shuffle."""
+    per table on its merge key."""
 
     def _prep(df: DataFrame, key_cols: list[str], alias: str) -> DataFrame:
         others = [c for c in df.columns if c not in key_cols]

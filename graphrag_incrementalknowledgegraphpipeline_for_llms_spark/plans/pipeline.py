@@ -6,7 +6,7 @@ chunk, GraphRagJob.scala:288,307):
 
   pages scan -> [incremental filter vs checkpoint] -> html->text
   -> chunks -> with_concepts (ONE Arrow UDF pass: concepts + evidence)
-  -> mentions (explode)                     -> nodes/edges MERGE
+  -> mentions (explode)                     -> nodes/edges merge-on-read MERGE
   -> candidate pairs (array combinatorics)  -> deterministic scorer
   -> triples [optional canonicalization]    -> typed edges MERGE
   -> lineage + checkpoint rows
@@ -90,6 +90,16 @@ def _distinct_chunks(chunks: DataFrame) -> DataFrame:
     return chunks.groupBy(*keys).agg(F.max("warc_ts").alias("warc_ts")).select(*chunks.columns)
 
 
+def _high_water_mark(catalog: ParquetCatalog):
+    """The newest ``max_warc_ts`` any batch checkpointed, or None.  The
+    checkpoint table is written driver-side by ``commit_rows``, so it is
+    read back the same way: no Spark job."""
+    import pyarrow.compute as pc
+
+    cp = catalog.read_arrow(CHECKPOINT_TABLE, ["max_warc_ts"])
+    return None if cp is None else pc.max(cp["max_warc_ts"]).as_py()
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -104,7 +114,7 @@ def run_pipeline(
     extraction_strategy: str = "heuristic",
     dedup_pages: bool = False,
     url_dedup: bool = False,
-    graph_mode: str = "cow",
+    graph_mode: str = "mor",
     svo: bool = False,
 ) -> PipelineResult:
     """The extraction output is written once to a catalog stage table
@@ -114,13 +124,15 @@ def run_pipeline(
     A batch may hold the same page twice; it is made distinct by
     ``chunk_id`` before anything is counted or written.
 
-    ``graph_mode``: how nodes/edges merge into the graph tables —
-    ``"cow"`` (bucket-pruned copy-on-write; best read performance) or
-    ``"mor"`` (merge-on-read delta appends; O(batch) incremental cost
-    regardless of graph size — measured: a +10% batch against a
-    200k-page graph cost 86% of a full rebuild under cow and ~O(batch)
-    under mor; compact periodically).  See graph.upsert_graph.
+    Nodes and edges merge on read (see graph.upsert_graph): into an
+    empty catalog the batch is written as the base in one overwrite per
+    table; every later batch is an O(batch) delta, folded by
+    ``catalog.maybe_compact`` (``plans.refresh`` runs it per batch).
+    ``graph_mode`` is accepted only as ``"mor"``, the one write mode,
+    for callers that still name it.
     """
+    if graph_mode != "mor":
+        raise ValueError(f"graph_mode must be 'mor', the one graph write mode; got {graph_mode!r}")
     timings: dict[str, int] = {}
 
     def clock(name):
@@ -133,10 +145,7 @@ def run_pipeline(
 
     # ---- incremental gate: only pages past the last checkpoint ts ----
     d = clock("scan_filter")
-    last_ts = None
-    cp = catalog.read(spark, CHECKPOINT_TABLE)
-    if incremental and cp is not None:
-        last_ts = cp.agg(F.max("max_warc_ts").alias("m")).collect()[0]["m"]
+    last_ts = _high_water_mark(catalog) if incremental else None
     if last_ts is not None:
         pages = pages.where(F.col("warc_ts") > F.lit(last_ts))
     # guarantee the UDF stage gets enough splits: small-file inputs
@@ -213,9 +222,10 @@ def run_pipeline(
         # pages (chunk_id = sha256(url+text) ignores warc_ts); without
         # this anti-join a re-crawl would re-append duplicate
         # mentions/triples rows.  Cost shape: a 16-byte-key anti-join
-        # against a single column-pruned scan of the Chunk node ids.
+        # against a column-pruned key scan of the Chunk node ids (no
+        # merge-on-read winner resolution, no chunk text).
         known = (
-            catalog.read(spark, "nodes")
+            catalog.read_keys(spark, "nodes", ["label", "id"])
             .where(F.col("label") == "Chunk")
             .select(F.col("id").alias("chunk_id"))
         )
@@ -324,7 +334,7 @@ def run_pipeline(
         # from the same chunks/mentions), so the placeholder backfill
         # scan is skipped; external edge-first writers call
         # upsert_graph directly
-        graph.upsert_graph(spark, catalog, nodes=nodes, edges=None, mode=graph_mode)
+        graph.upsert_graph(spark, catalog, nodes=nodes, edges=None)
 
     # phase 1: the three table writes are independent (distinct
     # tables, all derived from the staged extraction), and the lineage
@@ -361,7 +371,7 @@ def run_pipeline(
     edges = graph.batch_edges(mentions_t, triples_t, updated_at)
     graph.upsert_graph(
         spark, catalog, nodes=None, edges=edges,
-        check_placeholders=False, edges_unique=True, mode=graph_mode,
+        check_placeholders=False, edges_unique=True,
     )
     d()
 

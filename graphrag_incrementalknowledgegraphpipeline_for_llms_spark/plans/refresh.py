@@ -5,11 +5,11 @@ streaming sink in streaming/incremental.py both call it).
 A 100-TB GraphRAG deployment does not rebuild its graph or its
 analytics when a new crawl lands; it runs, per batch:
 
-1. the extraction pipeline in incremental mode with MOR graph merges
-   (``run_pipeline`` — O(batch) regardless of graph size; the
-   checkpoint high-water mark skips already-seen pages and the
-   merge-on-read delta path measured 11.1 s vs 36.8 s copy-on-write
-   for a +10% batch, see sources/catalog.py),
+1. the extraction pipeline in incremental mode (``run_pipeline`` —
+   O(batch) regardless of graph size: the checkpoint high-water mark
+   skips already-seen pages and the graph merges land as merge-on-read
+   deltas, which measured 11.1 s against 36.8 s for a copy-on-write
+   merge of a +10% batch),
 2. the compaction policy: ``catalog.maybe_compact`` folds the
    ``nodes``/``edges`` deltas once a table holds more than the
    catalog's default bound of them — one rewrite per that many
@@ -113,8 +113,7 @@ def refresh_after_batch(
     """Ingest one page batch and refresh the stored graph analytics
     incrementally.  See the module docstring for the regime; all
     ``run_pipeline`` keywords (extract_from_html, url_dedup, epoch_id,
-    ...) pass through, except ``graph_mode``: a refresh always merges
-    on read.
+    ...) pass through.
 
     Scale shape: beyond the pipeline itself, the refresh adds one
     pre-batch edge snapshot read (column-pruned: 4 id/label columns),
@@ -149,7 +148,7 @@ def refresh_after_batch(
 
     # ---- 1. O(batch) pipeline pass ----
     d = clock("pipeline")
-    res = run_pipeline(spark, pages, catalog, graph_mode="mor", **pipeline_kwargs)
+    res = run_pipeline(spark, pages, catalog, **pipeline_kwargs)
     d()
 
     # ---- 2. compaction policy ----

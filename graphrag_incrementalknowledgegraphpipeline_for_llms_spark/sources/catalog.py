@@ -5,11 +5,15 @@ snapshot-driven incremental reads.  The sandbox image ships no Iceberg
 jars, so this module provides a parquet-backed catalog with the SAME
 API shape: manifest-listed snapshot versions per table, an atomic
 current pointer, O(batch) appends (new data dir + manifest entry, like
-an Iceberg fast-append), ``merge_upsert`` (= MERGE INTO emulation via
-dedup + anti-join + union, copy-on-write like Iceberg's default MERGE),
-and snapshot ids for checkpoint/lineage.  On a real cluster swap
-:class:`ParquetCatalog` for an Iceberg catalog: ``merge_upsert``
-becomes a single ``MERGE INTO`` statement and snapshots come from
+an Iceberg fast-append), ``merge_upsert_mor`` (= MERGE INTO with
+``write.merge.mode=merge-on-read``: an O(batch) delta dir, resolved per
+key at read time and folded by compaction — the graph tables' only
+write; into an empty table it is one plain overwrite), ``merge_upsert``
+(copy-on-write MERGE: dedup + anti-join + union, kept for the
+non-incremental flat-table path and as the conformance reference), and
+snapshot ids for checkpoint/lineage.  On a real cluster swap
+:class:`ParquetCatalog` for an Iceberg catalog: each merge becomes a
+single ``MERGE INTO`` statement and snapshots come from
 Iceberg metadata — callers don't change.
 
 MERGE semantics replicated from the reference's Neo4j sink
@@ -33,11 +37,12 @@ re-runs against it.  The mapping:
        spark.sql.catalog.kg.type = hadoop          # or hive/rest
        spark.sql.catalog.kg.warehouse = <root>
 
-2. **DDL** (per table; bucket_spec maps to Iceberg's bucket transform)::
+2. **DDL** (per table; unpartitioned — bucket transforms are not part
+   of the swap contract, since no read path prunes by bucket and a
+   graph batch touches every bucket)::
 
        CREATE TABLE kg.db.nodes (...) USING iceberg
-       PARTITIONED BY (bucket(<n>, <key>))
-       TBLPROPERTIES ('write.merge.mode'='copy-on-write')   -- or merge-on-read
+       TBLPROPERTIES ('write.merge.mode'='merge-on-read')
 
 3. **Method mapping**:
 
@@ -50,7 +55,9 @@ re-runs against it.  The mapping:
                                  WHEN NOT MATCHED THEN INSERT *
                                  (KEEP the _winner_dedup pre-pass: Iceberg
                                  MERGE raises on duplicate source keys)
-   mode="mor" delta appends      'write.merge.mode'='merge-on-read'
+   merge_upsert_mor(keys, tb)    the same MERGE INTO on a table with
+                                 'write.merge.mode'='merge-on-read'
+   read_keys(keys)               SELECT DISTINCT <keys> FROM t
    maybe_compact / compaction    CALL kg.system.rewrite_data_files(t)
    read_as_of(v)                 SELECT ... VERSION AS OF <snapshot_id>
    is_append_version /           snapshot summary 'operation' == 'append' /
@@ -149,23 +156,6 @@ class ParquetCatalog:
     def _tdir(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    # -- bucket spec (Iceberg: partition spec with a bucket transform) --------
-    def _spec_path(self, name: str) -> str:
-        return os.path.join(self._tdir(name), "_spec.json")
-
-    def bucket_spec(self, name: str) -> dict | None:
-        """{"keys": [...], "n": int} when the table is hash-bucketed."""
-        p = self._spec_path(name)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_spec(self, name: str, keys: list[str], n: int) -> None:
-        os.makedirs(self._tdir(name), exist_ok=True)
-        with open(self._spec_path(name), "w") as f:
-            json.dump({"keys": list(keys), "n": int(n)}, f)
-
     def _pointer(self, name: str) -> str:
         return os.path.join(self._tdir(name), "_current")
 
@@ -179,38 +169,21 @@ class ParquetCatalog:
     def _manifest_path(self, name: str, version: int) -> str:
         return os.path.join(self._tdir(name), f"m{version:05d}.json")
 
-    def _manifest(self, name: str, version: int):
-        """List[str] of data dirs (append/overwrite tables) OR
-        {"buckets": {bucket_id: data_dir}} (bucketed tables)."""
+    def _manifest(self, name: str, version: int) -> list[str]:
+        """The data dirs (relative to the table dir) of ``version``."""
         if version == 0:
             return []
         with open(self._manifest_path(name, version)) as f:
             return json.load(f)
 
-    @staticmethod
-    def _manifest_paths(manifest, buckets: list[int] | None = None) -> list[str]:
-        """Relative data paths for a manifest; for bucketed manifests
-        optionally restricted to the given bucket ids (bucket pruning —
-        the Iceberg partition-pruning analog)."""
-        if isinstance(manifest, dict):
-            bm = manifest["buckets"]
-            items = bm.items() if buckets is None else (
-                (str(b), bm[str(b)]) for b in buckets if str(b) in bm
-            )
-            return [os.path.join(d, f"_bucket={b}") for b, d in items]
-        return list(manifest)
-
-    @staticmethod
-    def _manifest_dirs(manifest) -> set[str]:
-        """Top-level data dirs referenced by a manifest (for GC)."""
-        if isinstance(manifest, dict):
-            return set(manifest["buckets"].values())
-        return set(manifest)
-
-    def data_dirs(self, name: str, buckets: list[int] | None = None) -> list[str]:
+    def data_dirs(self, name: str) -> list[str]:
         t = self._tdir(name)
-        m = self._manifest(name, self.current_version(name))
-        return [os.path.join(t, p) for p in self._manifest_paths(m, buckets)]
+        return [os.path.join(t, d) for d in self._manifest(name, self.current_version(name))]
+
+    def _data_files(self, name: str) -> list[str]:
+        return [
+            f for d in self.data_dirs(name) for f in sorted(glob.glob(os.path.join(d, "*.parquet")))
+        ]
 
     def exists(self, name: str) -> bool:
         return self.current_version(name) > 0
@@ -230,9 +203,7 @@ class ParquetCatalog:
 
     def _delta_entries(self, name: str) -> list[str]:
         m = self._manifest(name, self.current_version(name))
-        if isinstance(m, dict):
-            return []
-        return [d for d in m if os.path.basename(d).startswith("e")]
+        return [d for d in m if d.startswith("e")]
 
     def read(
         self, spark: SparkSession, name: str, merge_schema: bool = False
@@ -255,6 +226,35 @@ class ParquetCatalog:
             return r.parquet(*dirs)
         return self._resolve_mor(spark, name, mor)
 
+    def read_keys(self, spark: SparkSession, name: str, keys: list[str]) -> DataFrame | None:
+        """The table's distinct key tuples, equal to
+        ``read(...).select(*keys).distinct()``.  On a merge-on-read
+        table with ``deterministic`` resolution every key of a base or
+        delta row survives resolution (there are no tombstones), so
+        this is a column-pruned scan of the key columns — no winner
+        resolution, no payload bytes.  A ``replace`` table with deltas
+        may hold tombstones and falls back to the resolved read."""
+        dirs = self.data_dirs(name)
+        if not dirs:
+            return None
+        mor = self.mor_spec(name)
+        if mor and mor["resolution"] == "replace" and self._delta_entries(name):
+            return self.read(spark, name).select(*keys).distinct()
+        return spark.read.parquet(*dirs).select(*keys).distinct()
+
+    def read_arrow(self, name: str, columns: list[str]):
+        """Driver-side read of a small table into a pyarrow Table — no
+        Spark job; the counterpart of :meth:`commit_rows` (checkpoints,
+        lineage).  Plain tables only: merge-on-read deltas are not
+        resolved.  None when the table does not exist."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        files = self._data_files(name)
+        if not files:
+            return None
+        return pa.concat_tables(pq.read_table(f, columns=columns) for f in files)
+
     def _resolve_mor(
         self, spark: SparkSession, name: str, mor: dict, manifest=None
     ) -> DataFrame:
@@ -270,8 +270,8 @@ class ParquetCatalog:
             if manifest is not None
             else self._manifest(name, self.current_version(name))
         )
-        base = [d for d in m if not os.path.basename(d).startswith("e")]
-        deltas = [d for d in m if os.path.basename(d).startswith("e")]
+        base = [d for d in m if not d.startswith("e")]
+        deltas = [d for d in m if d.startswith("e")]
         parts = []
         if base:
             parts.append(
@@ -280,7 +280,7 @@ class ParquetCatalog:
                 )
             )
         for d in deltas:
-            seq = int(os.path.basename(d)[1:6])
+            seq = int(d[1:6])
             parts.append(
                 spark.read.parquet(os.path.join(t, d)).withColumn("_seq", F.lit(seq))
             )
@@ -313,16 +313,12 @@ class ParquetCatalog:
         if version < 1 or version > self.current_version(name):
             raise KeyError(f"table {name!r} has no snapshot {version}")
         m = self._manifest(name, version)
-        t = self._tdir(name)
-        paths = [os.path.join(t, p) for p in self._manifest_paths(m)]
-        if not paths:
+        if not m:
             return None
         mor = self.mor_spec(name)
-        if mor and not isinstance(m, dict) and any(
-            os.path.basename(d).startswith("e") for d in m
-        ):
+        if mor and any(d.startswith("e") for d in m):
             return self._resolve_mor(spark, name, mor, manifest=m)
-        return spark.read.parquet(*paths)
+        return spark.read.parquet(*[os.path.join(self._tdir(name), d) for d in m])
 
     def is_append_version(self, name: str, version: int) -> bool:
         """True iff snapshot ``version`` only ADDED data dirs (a
@@ -330,19 +326,15 @@ class ParquetCatalog:
         overwrite/compact/merge drops or replaces dirs — its
         read_version_delta is a rewritten dir, NOT a row-level delta
         (incremental consumers must rebuild)."""
-        cur = self._manifest_dirs(self._manifest(name, version))
-        prev = self._manifest_dirs(self._manifest(name, version - 1)) if version > 1 else set()
-        return prev <= cur
+        return set(self._manifest(name, version - 1)) <= set(self._manifest(name, version))
 
     def read_version_delta(self, spark: SparkSession, name: str, version: int) -> DataFrame | None:
         """Rows ADDED by snapshot ``version`` (its newest data dir) —
         the incremental-read primitive (Iceberg: incremental scan
         between snapshots).  For an append commit this is exactly the
         appended batch."""
-        m = self._manifest(name, version)
-        prev = self._manifest(name, version - 1) if version > 1 else []
-        prev_dirs = self._manifest_dirs(prev)
-        new = [p for p in self._manifest_paths(m) if p.split(os.sep)[0] not in prev_dirs]
+        prev = set(self._manifest(name, version - 1))
+        new = [d for d in self._manifest(name, version) if d not in prev]
         if not new:
             return None
         return spark.read.parquet(*[os.path.join(self._tdir(name), d) for d in new])
@@ -370,10 +362,9 @@ class ParquetCatalog:
 
         Scale shape: two time-travel reads + three key-partitioned
         equi-joins (insert/delete via anti-joins, updates via an
-        inner join filtered on a row-content hash) — on a bucketed
-        table both sides share the same layout, so the joins shuffle
-        nothing new.  Row equality is an md5 over the sorted shared
-        non-key columns with an explicit null bitmap (to_json drops
+        inner join filtered on a row-content hash).  Row equality is
+        an md5 over the sorted shared non-key columns with an explicit
+        null bitmap (to_json drops
         null fields; the bitmap keeps NULL ≠ 'null-shaped absence').
         Schema evolution: output carries the UNION of both versions'
         columns (null-filled), so a diff across an add-column commit
@@ -514,11 +505,7 @@ class ParquetCatalog:
         the logical count, or compact first."""
         import pyarrow.parquet as pq
 
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for d in self.data_dirs(name)
-            for f in glob.glob(os.path.join(d, "*.parquet"))
-        )
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in self._data_files(name))
 
     def _commit(self, name: str, df: DataFrame, mode: str = "overwrite", prefix: str = "d") -> int:
         """Write a new data dir, record a new manifest, atomically flip
@@ -548,9 +535,7 @@ class ParquetCatalog:
         # prefixes: base dirs are d*, merge-on-read delta dirs are e*
         # — once compact()/overwrite supersedes a delta it must be
         # expired like any other dir or MOR tables grow unboundedly.
-        keep = self._manifest_dirs(manifest) | (
-            self._manifest_dirs(self._manifest(name, cur)) if cur else set()
-        )
+        keep = set(manifest) | set(self._manifest(name, cur))
         for d in glob.glob(os.path.join(self._tdir(name), "[de]*")):
             if os.path.basename(d) not in keep:
                 shutil.rmtree(d, ignore_errors=True)
@@ -571,66 +556,7 @@ class ParquetCatalog:
         return df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
 
     def overwrite(self, df: DataFrame, name: str, sort_cols: list[str] | None = None) -> int:
-        spec = self.bucket_spec(name)
-        if spec is not None:
-            return self._commit_bucketed(name, df, spec, replace_all=True)
         return self._commit(name, self._apply_sort(df, sort_cols), mode="overwrite")
-
-    # -- bucketed layout (Iceberg: bucket(n, keys) partition transform) -------
-    def _bucket_col(self, spec: dict):
-        return F.pmod(F.xxhash64(*spec["keys"]), F.lit(spec["n"])).cast("int")
-
-    def _commit_bucketed(
-        self,
-        name: str,
-        df: DataFrame,
-        spec: dict,
-        replace_all: bool = False,
-        drop_buckets: list[int] | None = None,
-    ) -> int:
-        """Write ``df`` partitioned by bucket into a new data dir and
-        update the bucket->dir manifest: buckets present in ``df`` now
-        point at the new dir; other buckets keep their previous dir
-        (untouched — zero IO).  ``replace_all`` drops prior buckets
-        entirely (overwrite semantics).  ``drop_buckets``: bucket ids
-        whose manifest entry must NOT survive if ``df`` writes no rows
-        for them (a delete that empties a bucket would otherwise leave
-        the old dir referenced and resurrect the deleted rows)."""
-        cur = self.current_version(name)
-        v = cur + 1
-        ddir = f"d{v:05d}"
-        out = os.path.join(self._tdir(name), ddir)
-        n_tasks = max(1, min(spec["n"], 256))
-        (
-            df.withColumn("_bucket", self._bucket_col(spec))
-            .repartition(n_tasks, F.col("_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(out)
-        )
-        written = {
-            d.split("=", 1)[1]: ddir
-            for d in os.listdir(out)
-            if d.startswith("_bucket=")
-        }
-        prev = {} if replace_all or cur == 0 else dict(
-            self._manifest(name, cur)["buckets"]
-            if isinstance(self._manifest(name, cur), dict)
-            else {}
-        )
-        prev.update(written)
-        for b in drop_buckets or []:
-            if str(b) not in written:
-                prev.pop(str(b), None)
-        manifest = {"buckets": prev}
-        with open(self._manifest_path(name, v), "w") as f:
-            json.dump(manifest, f)
-        tmp = self._pointer(name) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._pointer(name))
-        self._gc(name, manifest, cur)
-        return v
 
     def commit_rows(self, name: str, rows: list[dict], schema, mode: str = "append") -> int:
         """Driver-side commit of a SMALL row set (lineage, checkpoints)
@@ -661,48 +587,24 @@ class ParquetCatalog:
     # -- row-level DELETE (Iceberg DELETE FROM, copy-on-write) ----------------
     def delete_keys(self, spark: SparkSession, name: str, keys_df: DataFrame) -> int:
         """Key-based delete: remove rows whose key columns match any
-        row of ``keys_df``.  On a bucketed table only buckets
-        containing delete keys are read and rewritten (the
-        MERGE-style file-pruning path — O(touched buckets), not
-        O(table)); unbucketed tables fall back to a full anti-join
-        rewrite."""
-        keys = keys_df.columns
-        spec = self.bucket_spec(name)
-        if spec is not None and list(spec["keys"]) == keys:
-            kdf = keys_df.withColumn("_ub", self._bucket_col(spec))
-            touched = sorted(r["_ub"] for r in kdf.select("_ub").distinct().collect())
-            dirs = self.data_dirs(name, buckets=touched)
-            if not dirs:
-                return self.current_version(name)
-            existing = spark.read.parquet(*dirs)
-            kept = existing.join(keys_df, on=keys, how="left_anti")
-            # rewrite ONLY the touched buckets; others keep their dirs;
-            # a bucket fully emptied by the delete must leave the
-            # manifest (drop_buckets), not keep its old dir
-            return self._commit_bucketed(name, kept, spec, drop_buckets=touched)
+        row of ``keys_df`` — an anti-join rewrite of the table."""
         df = self.read(spark, name)
         if df is None:
             raise KeyError(f"no such table: {name!r}")
-        kept = df.join(keys_df, on=keys, how="left_anti")
-        if spec is not None:
-            return self._commit_bucketed(name, kept, spec, replace_all=True)
+        kept = df.join(keys_df, on=keys_df.columns, how="left_anti")
         return self._commit(name, kept, mode="overwrite")
 
     # -- maintenance (Iceberg: rewrite_data_files / expire_snapshots) ---------
     def compact(self, spark: SparkSession, name: str) -> int:
-        """Rewrite the current snapshot into one consolidated data dir
-        (bucketed tables keep their bucket layout).  Incremental
-        appends accumulate one dir per batch; at 100 TB this is the
-        periodic rewrite_data_files job that restores large scan
-        splits.  Readers are unaffected: the pointer flips atomically
-        and the previous snapshot's dirs are retained until the next
-        commit's GC."""
+        """Rewrite the current snapshot into one consolidated data dir.
+        Incremental appends and merge-on-read deltas accumulate one dir
+        per batch; at 100 TB this is the periodic rewrite_data_files
+        job that restores large scan splits.  Readers are unaffected:
+        the pointer flips atomically and the previous snapshot's dirs
+        are retained until the next commit's GC."""
         df = self.read(spark, name)
         if df is None:
             return 0
-        spec = self.bucket_spec(name)
-        if spec is not None:
-            return self._commit_bucketed(name, df, spec, replace_all=True)
         return self._commit(name, df, mode="overwrite")
 
     def maybe_compact(
@@ -737,12 +639,6 @@ class ParquetCatalog:
     def append(
         self, spark: SparkSession, df: DataFrame, name: str, sort_cols: list[str] | None = None
     ) -> int:
-        spec = self.bucket_spec(name)
-        if spec is not None:
-            # bucketed tables keep one dir per bucket — an append is a
-            # key-novel merge (callers guarantee novelty, e.g. the
-            # placeholder backfill's anti-join)
-            return self.merge_upsert(spark, name, df, keys=spec["keys"], resolution="deterministic")
         df = self._apply_sort(df, sort_cols)
         if not self.exists(name):
             return self._commit(name, df, mode="overwrite")
@@ -762,9 +658,10 @@ class ParquetCatalog:
         """Merge-on-read MERGE: the batch is written as a DELTA dir in
         O(batch) — no base data is read or rewritten (Iceberg's
         ``write.merge.mode=merge-on-read`` analog; the copy-on-write
-        path is :meth:`merge_upsert`).  ``read`` reconciles base and
-        deltas per key at scan time; :meth:`compact` folds deltas back
-        into the base (the periodic rewrite job).
+        path is :meth:`merge_upsert`).  Into an empty table the batch
+        is the base: one plain overwrite commit.  ``read`` reconciles
+        base and deltas per key at scan time; :meth:`compact` folds
+        deltas back into the base (the periodic rewrite job).
 
         ``assume_unique``: skip the within-batch winner selection when
         the caller guarantees key-unique updates (e.g. the pipeline's
@@ -774,19 +671,13 @@ class ParquetCatalog:
 
         Trade: writes are O(batch) regardless of table size — the
         incremental-ingest win — while reads pay a winner-resolution
-        shuffle until compaction.  Right when batches are frequent and
-        small relative to the table; the CoW bucketed path is right
-        when reads dominate.
+        shuffle until compaction (``maybe_compact`` bounds the delta
+        count).
 
         ``tiebreak`` must be column NAMES here (they are persisted in
         ``_mor.json`` for read-time resolution).  ``resolution`` as in
         :meth:`merge_upsert`; with ``"replace"``, newer deltas beat
         older deltas beat base (last-write-wins across commits)."""
-        if self.bucket_spec(name) is not None:
-            raise ValueError(
-                f"table {name!r} is hash-bucketed (copy-on-write with bucket "
-                "pruning); merge-on-read deltas are for unbucketed tables"
-            )
         tiebreak = list(tiebreak or [])
         if not all(isinstance(t, str) for t in tiebreak):
             raise TypeError("merge_upsert_mor tiebreaks must be column names")
@@ -850,19 +741,18 @@ class ParquetCatalog:
         keys: list[str],
         tiebreak: list[str] | None = None,
         resolution: str = "replace",
-        buckets: int | None = None,
-        assume_unique: bool = False,
     ) -> int:
         """``MERGE INTO name t USING updates s ON <keys> WHEN MATCHED
-        THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``.
+        THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``, rewriting
+        the table (copy-on-write).  The pipeline's non-incremental
+        ``mentions``/``triples`` writes use it; the graph tables merge
+        on read (:meth:`merge_upsert_mor`).
 
         ``tiebreak``: column names OR Column expressions that lead the
         winner ordering when a batch contains duplicate keys
         (deterministic last-write-wins stand-in; max wins, so e.g.
         highest confidence).  Remaining ties break by the row's content
-        hash — any fixed total order works.  Callers needing
-        "real rows beat placeholder rows" pass a completeness
-        expression as a tiebreak (see graph.upsert_graph).
+        hash — any fixed total order works.
 
         ``resolution``:
         * ``"replace"`` — true MERGE: a matched source row replaces the
@@ -873,58 +763,11 @@ class ParquetCatalog:
           independent of how rows were split across incremental
           batches (run(A);run(B) == run(A∪B) — FIXTURES.md §6).
         """
-        spec = self.bucket_spec(name)
-        if spec is None and buckets:
-            if self.exists(name):
-                raise ValueError(
-                    f"table {name!r} already exists unbucketed; bucket specs "
-                    "must be set before the first commit"
-                )
-            spec = {"keys": list(keys), "n": int(buckets)}
-            self._write_spec(name, keys, buckets)
-
-        touched: list[int] | None = None
-        if spec is not None and self.exists(name):
-            # ---- bucket pruning (copy-on-write MERGE, Iceberg analog):
-            # only buckets that contain update keys are read, merged and
-            # rewritten; every other bucket keeps its existing data dir
-            # untouched in the new manifest.  The probe costs one full
-            # pass of the updates plan, so it runs ONLY when there is a
-            # table to prune — on a first write (no existing snapshot)
-            # it would recompute the whole batch chain to learn bucket
-            # ids nothing reads (measured: the probe doubled the
-            # pipeline's node/edge build on fresh catalogs).
-            updates = updates.withColumn("_ub", self._bucket_col(spec))
-            touched = sorted(
-                r["_ub"] for r in updates.select("_ub").distinct().collect()
-            )
-            updates = updates.drop("_ub")
-            dirs = self.data_dirs(name, buckets=touched)
-            existing = spark.read.parquet(*dirs) if dirs else None
-        elif spec is not None:
-            existing = None
-        else:
-            existing = self.read(spark, name)
+        existing = self.read(spark, name)
         pool = updates
         if resolution == "deterministic" and existing is not None:
             matched = existing.join(updates.select(*keys).distinct(), on=keys, how="left_semi")
             pool = updates.unionByName(matched.select(*updates.columns))
-        elif assume_unique:
-            # caller guarantees key-unique updates (e.g. the pipeline's
-            # family-wise pre-deduped edge batch) and nothing competes:
-            # skip the winner machinery entirely
-            deduped = updates
-            if existing is None:
-                if spec is not None:
-                    return self._commit_bucketed(name, deduped, spec)
-                return self._commit(name, deduped)
-            kept = existing.join(deduped.select(*keys).distinct(), on=keys, how="left_anti")
-            merged = kept.select(*existing.columns).unionByName(
-                deduped.select(*existing.columns)
-            )
-            if spec is not None:
-                return self._commit_bucketed(name, merged, spec)
-            return self._commit(name, merged)
         # winner per key = max_by over (tiebreak..., _rid): a total
         # order (rid = content hash stands in for the full row as the
         # final tiebreak), so batch-split independent and stable across
@@ -932,13 +775,9 @@ class ParquetCatalog:
         tb_exprs = [F.col(t) if isinstance(t, str) else t for t in (tiebreak or [])]
         deduped = _winner_dedup(pool, keys, tb_exprs)
         if existing is None:
-            if spec is not None:
-                return self._commit_bucketed(name, deduped, spec)
             return self._commit(name, deduped)
         kept = existing.join(deduped.select(*keys).distinct(), on=keys, how="left_anti")
         # the USING-join reorders key columns to the front — restore the
         # table's schema order so snapshots keep a stable column layout
         merged = kept.select(*existing.columns).unionByName(deduped.select(*existing.columns))
-        if spec is not None:
-            return self._commit_bucketed(name, merged, spec)
         return self._commit(name, merged)

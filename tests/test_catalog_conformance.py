@@ -17,12 +17,14 @@ thin interface:
 7. merge-on-read resolution order (delta seq > base; tombstones;
    compaction folds without changing the logical table)
 8. schema evolution (add-column null-fill via merge_schema)
-9. spec immutability (bucket spec / mor spec cannot silently change)
+9. spec immutability (a mor spec cannot silently change)
 10. expire/GC invariants (retained snapshots stay readable, expired
     dirs actually leave the filesystem)
 11. row-level CDC changelog between snapshots (snapshot_diff =
     create_changelog_view parity: insert/delete/update_before/
     update_after images, null-bitmap row equality, schema evolution)
+12. key scans (read_keys = SELECT DISTINCT keys over the resolved
+    table)
 
 Reference parity notes: MERGE ON keys / WHEN MATCHED UPDATE / WHEN NOT
 MATCHED INSERT mirrors the reference's Neo4j MERGE upserts
@@ -165,13 +167,6 @@ class TestMergeSemantics:
         catalog.merge_upsert(spark, "s2", _mk(spark, a + b), keys=["k"], tiebreak=["conf"], resolution="deterministic")
         assert _rows(catalog.read(spark, "s1")) == _rows(catalog.read(spark, "s2"))
 
-    def test_bucket_spec_immutable(self, spark, catalog):
-        catalog.overwrite(_mk(spark, [(1, "a", 0.5)]), "t")
-        with pytest.raises(ValueError, match="bucket"):
-            catalog.merge_upsert(
-                spark, "t", _mk(spark, [(2, "b", 0.5)]), keys=["k"], buckets=4
-            )
-
 
 class TestMorConformance:
     def test_resolution_order_delta_beats_base(self, spark, catalog):
@@ -210,10 +205,38 @@ class TestMorConformance:
         with pytest.raises(ValueError, match="mor spec"):
             catalog.merge_upsert_mor(spark, "t", _mk(spark, [(2, "b", 0.5)]), keys=["k"], tiebreak=[])
 
-    def test_mor_rejected_on_bucketed_table(self, spark, catalog):
-        catalog.merge_upsert(spark, "t", _mk(spark, [(1, "a", 0.5)]), keys=["k"], buckets=4)
-        with pytest.raises(ValueError, match="bucketed"):
-            catalog.merge_upsert_mor(spark, "t", _mk(spark, [(2, "b", 0.5)]), keys=["k"])
+
+class TestReadKeys:
+    """Contract 12: read_keys is the distinct key set of the resolved
+    table, whatever the layout."""
+
+    @staticmethod
+    def _same_keys(spark, catalog, name):
+        got = sorted(tuple(r) for r in catalog.read_keys(spark, name, ["k"]).collect())
+        want = sorted(tuple(r) for r in catalog.read(spark, name).select("k").distinct().collect())
+        assert got == want
+        return got
+
+    def test_plain_table(self, spark, catalog):
+        catalog.overwrite(_mk(spark, [(1, "a", 0.5), (2, "b", 0.5)]), "t")
+        catalog.append(spark, _mk(spark, [(2, "c", 0.5), (3, "d", 0.5)]), "t")
+        assert self._same_keys(spark, catalog, "t") == [(1,), (2,), (3,)]
+
+    def test_deterministic_mor_table_with_deltas(self, spark, catalog):
+        for b in ([(1, "a", 0.5), (2, "b", 0.5)], [(2, "B", 0.9), (3, "c", 0.5)]):
+            catalog.merge_upsert_mor(
+                spark, "t", _mk(spark, b), keys=["k"], tiebreak=["conf"],
+                resolution="deterministic",
+            )
+        if _is_parquet_manifest_impl(catalog):
+            assert catalog._delta_entries("t")
+        assert self._same_keys(spark, catalog, "t") == [(1,), (2,), (3,)]
+
+    def test_replace_mor_table_with_tombstone(self, spark, catalog):
+        catalog.merge_upsert_mor(spark, "t", _mk(spark, [(1, "a", 0.5), (2, "b", 0.5)]), keys=["k"])
+        catalog.merge_upsert_mor(spark, "t", _mk(spark, [(3, "c", 0.5)]), keys=["k"])
+        catalog.delete_keys_mor(spark, "t", spark.createDataFrame([(1,)], "k long"))
+        assert self._same_keys(spark, catalog, "t") == [(2,), (3,)]
 
 
 class TestSchemaEvolution:

@@ -121,11 +121,6 @@ class TestMorMerge:
             cat.merge_upsert_mor(
                 spark, "t", _mk(spark, [(2, "b", 0.5)]), keys=["k"], resolution="deterministic"
             )
-        cat.merge_upsert(
-            spark, "bkt", _mk(spark, [(1, "a", 0.5)]), keys=["k"], buckets=4
-        )
-        with pytest.raises(ValueError, match="hash-bucketed"):
-            cat.merge_upsert_mor(spark, "bkt", _mk(spark, [(2, "b", 0.5)]), keys=["k"])
 
     def test_incremental_delta_read(self, spark, tmp_path):
         cat = ParquetCatalog(str(tmp_path))
@@ -133,43 +128,6 @@ class TestMorMerge:
         v = cat.merge_upsert_mor(spark, "t", _mk(spark, [(2, "b", 0.5)]), keys=["k"])
         inc = cat.read_version_delta(spark, "t", v)
         assert _rows(inc) == [(2, "b", 0.5)]
-
-
-class TestDelete:
-    def test_delete_keys_bucket_pruned(self, spark, tmp_path):
-        import glob as _glob
-        import os as _os
-
-        cat = ParquetCatalog(str(tmp_path))
-        rows = [(i, f"v{i}", 0.5) for i in range(64)]
-        cat.merge_upsert(spark, "t", _mk(spark, rows), keys=["k"], buckets=8)
-        # record untouched buckets' dirs
-        before = dict(cat._manifest("t", cat.current_version("t"))["buckets"])
-        keys = spark.createDataFrame([(1,), (9,)], "k long")
-        cat.delete_keys(spark, "t", keys)
-        after = dict(cat._manifest("t", cat.current_version("t"))["buckets"])
-        got = sorted(r["k"] for r in cat.read(spark, "t").collect())
-        assert got == sorted(set(range(64)) - {1, 9})
-        # only the touched buckets changed dir
-        changed = {b for b in before if before[b] != after.get(b)}
-        spec = cat.bucket_spec("t")
-        from pyspark.sql import functions as _F
-
-        touched = {
-            str(r["_b"])
-            for r in keys.withColumn("_b", cat._bucket_col(spec)).collect()
-        }
-        assert changed == touched
-
-    def test_delete_empties_bucket(self, spark, tmp_path):
-        cat = ParquetCatalog(str(tmp_path))
-        cat.merge_upsert(spark, "t", _mk(spark, [(1, "a", 0.5), (2, "b", 0.5)]), keys=["k"], buckets=4)
-        # delete EVERY key in bucket(1): the bucket must leave the manifest
-        cat.delete_keys(spark, "t", spark.createDataFrame([(1,)], "k long"))
-        assert sorted(r["k"] for r in cat.read(spark, "t").collect()) == [2]
-        cat.delete_keys(spark, "t", spark.createDataFrame([(2,)], "k long"))
-        rd = cat.read(spark, "t")
-        assert rd is None or rd.count() == 0
 
 
 class TestMorTombstones:

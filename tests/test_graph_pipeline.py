@@ -105,37 +105,32 @@ class TestPipeline:
         for t in ["nodes", "edges", "mentions", "triples"]:
             assert _table(spark, catalog, t) == _table(spark, full_cat, t), t
 
-    def test_mor_graph_mode_matches_cow(self, spark, tmp_path):
-        """graph_mode="mor" (O(batch) delta appends) resolves to the
-        same graph as cow full-rebuild: same total order (tiebreaks +
-        content_rid) on both paths, so incremental-mor == full-cow;
-        compaction folds the deltas without changing content."""
+    def test_incremental_deltas_match_cold_build(self, spark, tmp_path):
+        """An incremental build, whose second batch lands as
+        merge-on-read deltas, resolves to the same graph as a cold
+        build of all pages (one overwrite per table): both use one
+        total order (tiebreaks + content_rid).  Compaction folds the
+        deltas without changing content."""
         from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import (
             ParquetCatalog,
         )
 
         pages = datagen.pages_df(spark, 60)
         a = pages.orderBy("warc_ts").limit(42)
-        mor_cat = ParquetCatalog(str(tmp_path / "mor"))
-        pipeline.run_pipeline(spark, a, mor_cat, extract_from_html=True, graph_mode="mor")
-        pipeline.run_pipeline(spark, pages, mor_cat, extract_from_html=True, graph_mode="mor")
-        assert mor_cat._delta_entries("edges")  # batches landed as deltas
+        inc_cat = ParquetCatalog(str(tmp_path / "inc"))
+        pipeline.run_pipeline(spark, a, inc_cat, extract_from_html=True)
+        pipeline.run_pipeline(spark, pages, inc_cat, extract_from_html=True)
+        cold_cat = ParquetCatalog(str(tmp_path / "cold"))
+        pipeline.run_pipeline(spark, pages, cold_cat, extract_from_html=True)
 
-        cow_cat = ParquetCatalog(str(tmp_path / "cow"))
-        pipeline.run_pipeline(spark, pages, cow_cat, extract_from_html=True)
-
-        def rows(cat, t, drop=()):
-            df = cat.read(spark, t)
-            for c in drop:
-                df = df.drop(c)
-            return sorted(tuple(r) for r in df.collect())
-
-        assert rows(mor_cat, "nodes", drop=("_complete",)) == rows(cow_cat, "nodes")
-        assert rows(mor_cat, "edges") == rows(cow_cat, "edges")
-        before = rows(mor_cat, "edges")
-        mor_cat.compact(spark, "edges")
-        assert mor_cat._delta_entries("edges") == []
-        assert rows(mor_cat, "edges") == before
+        for t in ("nodes", "edges"):
+            assert inc_cat._delta_entries(t), t  # the batch landed as a delta
+            assert cold_cat._delta_entries(t) == [], t
+            before = _table(spark, inc_cat, t)
+            assert before == _table(spark, cold_cat, t), t
+            inc_cat.compact(spark, t)
+            assert inc_cat._delta_entries(t) == [], t
+            assert _table(spark, inc_cat, t) == before, t
 
     def test_recrawl_identical_pages_no_duplicates(self, spark, catalog):
         """FIXTURES.md §6 re-crawl scenario: identical pages with a
@@ -152,11 +147,8 @@ class TestPipeline:
         for t, before in snap.items():
             assert _table(spark, catalog, t) == before, t
 
-    @pytest.mark.parametrize("graph_mode", ["cow", "mor"])
     @pytest.mark.parametrize("extract_from_html", [True, False])
-    def test_page_twice_in_one_batch_counts_once(
-        self, spark, tmp_path, graph_mode, extract_from_html
-    ):
+    def test_page_twice_in_one_batch_counts_once(self, spark, tmp_path, extract_from_html):
         """A batch holding the same (url, text) twice, the second copy
         crawled later, builds the same graph as the batch holding it
         once: the batch is made distinct by chunk_id before mentions are
@@ -173,16 +165,37 @@ class TestPipeline:
         cats = []
         for tag, batch in (("once", pages), ("twice", twice)):
             cat = ParquetCatalog(str(tmp_path / tag))
-            res = pipeline.run_pipeline(
-                spark, batch, cat,
-                extract_from_html=extract_from_html, graph_mode=graph_mode,
-            )
+            res = pipeline.run_pipeline(spark, batch, cat, extract_from_html=extract_from_html)
             assert res.pages == 8, tag
             hwm = cat.read(spark, pipeline.CHECKPOINT_TABLE).collect()[0]["max_warc_ts"]
             assert hwm == batch.agg(F.max("warc_ts")).collect()[0][0], tag
             cats.append(cat)
         for t in ["nodes", "edges", "mentions", "triples"]:
             assert _table(spark, cats[0], t) == _table(spark, cats[1], t), t
+
+    def test_high_water_mark_is_exclusive(self, spark, catalog):
+        """A page crawled exactly at the checkpointed warc_ts is
+        skipped; one crawled 1 µs later is admitted."""
+        from datetime import timedelta
+
+        pages = datagen.pages_df(spark, 5)
+        pipeline.run_pipeline(spark, pages, catalog)
+        mark = pages.agg(F.max("warc_ts")).collect()[0][0]
+        later = spark.createDataFrame(
+            [
+                ("http://example.org/at-mark", mark, "Alpha is a Beta."),
+                ("http://example.org/after-mark", mark + timedelta(microseconds=1), "Gamma is a Delta."),
+            ],
+            "url string, warc_ts timestamp, text string",
+        )
+        assert pipeline.run_pipeline(spark, later, catalog).pages == 1
+        docs = {
+            r["doc_id"]
+            for r in catalog.read(spark, "nodes")
+            .where(F.col("doc_id").startswith("http://example.org/"))
+            .collect()
+        }
+        assert docs == {"http://example.org/after-mark"}
 
     def test_lineage_written(self, spark, catalog):
         pages = datagen.pages_df(spark, 20)
@@ -212,45 +225,6 @@ class TestPipeline:
             assert r["chunk_id"] == p.chunk_id_for(r["doc_id"], r["text"])
 
 
-class TestBucketedMerge:
-    """Bucket-pruned copy-on-write MERGE (catalog._commit_bucketed)."""
-
-    def test_untouched_buckets_keep_their_data_dir(self, spark, catalog):
-        import json, os
-
-        rows = [(f"k{i}", f"v{i}") for i in range(200)]
-        df = spark.createDataFrame(rows, "id string, val string")
-        catalog.merge_upsert(spark, "t", df, keys=["id"], buckets=8)
-        m1 = catalog._manifest("t", catalog.current_version("t"))["buckets"]
-        assert set(m1.values()) == {"d00001"} and len(m1) == 8
-
-        upd = spark.createDataFrame([("k0", "NEW")], "id string, val string")
-        catalog.merge_upsert(spark, "t", upd, keys=["id"])
-        m2 = catalog._manifest("t", catalog.current_version("t"))["buckets"]
-        # exactly one bucket rewritten; the other 7 still point at d00001
-        assert sorted(set(m2.values())) == ["d00001", "d00002"]
-        assert sum(1 for v in m2.values() if v == "d00002") == 1
-
-        got = {r["id"]: r["val"] for r in catalog.read(spark, "t").collect()}
-        assert len(got) == 200 and got["k0"] == "NEW" and got["k1"] == "v1"
-
-    def test_bucketed_read_after_many_merges(self, spark, catalog):
-        df = spark.createDataFrame([(f"k{i}", i) for i in range(50)], "id string, v long")
-        catalog.merge_upsert(spark, "t2", df, keys=["id"], buckets=4)
-        for step in range(3):
-            upd = spark.createDataFrame([(f"k{step}", 100 + step)], "id string, v long")
-            catalog.merge_upsert(spark, "t2", upd, keys=["id"])
-        got = {r["id"]: r["v"] for r in catalog.read(spark, "t2").collect()}
-        assert len(got) == 50
-        assert got["k0"] == 100 and got["k1"] == 101 and got["k2"] == 102 and got["k5"] == 5
-
-    def test_bucketed_rejects_late_spec(self, spark, catalog):
-        df = spark.createDataFrame([("a", 1)], "id string, v long")
-        catalog.merge_upsert(spark, "t3", df, keys=["id"])  # unbucketed
-        with pytest.raises(ValueError):
-            catalog.merge_upsert(spark, "t3", df, keys=["id"], buckets=4)
-
-
 class TestCatalogMaintenance:
     def test_compact_append_table(self, spark, catalog):
         import glob as g
@@ -265,26 +239,6 @@ class TestCatalogMaintenance:
         assert len(catalog.data_dirs("t_app")) == 1
         after = sorted(tuple(r) for r in catalog.read(spark, "t_app").collect())
         assert after == before
-
-    def test_compact_bucketed_table(self, spark, catalog):
-        df = spark.createDataFrame([(f"k{i}", i) for i in range(40)], "id string, v long")
-        catalog.merge_upsert(spark, "t_b", df, keys=["id"], buckets=4)
-        for i in range(3):
-            upd = spark.createDataFrame([(f"k{i}", 100 + i)], "id string, v long")
-            catalog.merge_upsert(spark, "t_b", upd, keys=["id"])
-        m = catalog._manifest("t_b", catalog.current_version("t_b"))["buckets"]
-        assert len(set(m.values())) > 1  # fragmented across commit dirs
-        catalog.compact(spark, "t_b")
-        m2 = catalog._manifest("t_b", catalog.current_version("t_b"))["buckets"]
-        assert len(set(m2.values())) == 1  # one consolidated dir
-        got = {r["id"]: r["v"] for r in catalog.read(spark, "t_b").collect()}
-        assert len(got) == 40 and got["k0"] == 100 and got["k5"] == 5
-        # spec survives compaction: further merges stay bucket-pruned
-        catalog.merge_upsert(
-            spark, "t_b",
-            spark.createDataFrame([("k9", 999)], "id string, v long"), keys=["id"],
-        )
-        assert catalog.read(spark, "t_b").where("id='k9'").collect()[0]["v"] == 999
 
     def test_expire_snapshots(self, spark, catalog):
         import glob as g

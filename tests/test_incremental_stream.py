@@ -23,13 +23,7 @@ def test_stream_matches_batch(spark, catalog, tmp_path):
     pipeline.run_pipeline(spark, pages, batch_cat, extract_from_html=True)
 
     for t in ["nodes", "edges", "triples"]:
-        # streaming merges on read (graph_mode="mor"), whose nodes carry the
-        # internal _complete tiebreak column — content must still match
-        # the cow batch run exactly
-        da = catalog.read(spark, t)
-        if "_complete" in da.columns:
-            da = da.drop("_complete")
-        a = sorted(tuple(r) for r in da.collect())
+        a = sorted(tuple(r) for r in catalog.read(spark, t).collect())
         b = sorted(tuple(r) for r in batch_cat.read(spark, t).collect())
         assert a == b, t
 

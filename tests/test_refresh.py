@@ -196,6 +196,40 @@ def _assert_analytics_match_cold(spark, cat):
     )
 
 
+def test_default_build_then_refresh_equals_cold(spark, tmp_path):
+    """Build, then stay fresh: a cold build with ``run_pipeline``'s
+    defaults, then ``refresh_after_batch`` on the next batch, gives the
+    graph of a cold build over both batches and stored labels and
+    components equal to a cold LPA/CC.  The cold build writes each
+    graph table as one unbucketed data dir, which the refresh's
+    merge-on-read deltas resolve against."""
+    import os
+
+    pages = datagen.pages_df(spark, 40)
+    cutoff = (
+        pages.select(F.col("warc_ts").cast("long").alias("t")).orderBy("t").collect()[29]["t"]
+    )
+    cat = ParquetCatalog(str(tmp_path / "inc"))
+    pipeline.run_pipeline(
+        spark, pages.where(F.col("warc_ts").cast("long") <= cutoff), cat, extract_from_html=True
+    )
+    layout = {
+        t: (len(cat.data_dirs(t)), os.path.exists(os.path.join(cat.root, t, "_spec.json")))
+        for t in ("nodes", "edges")
+    }
+    r = refresh.refresh_after_batch(spark, pages, cat, extract_from_html=True)
+    assert r.pipeline.pages == 10
+    assert layout == {"nodes": (1, False), "edges": (1, False)}
+
+    cold = ParquetCatalog(str(tmp_path / "cold"))
+    pipeline.run_pipeline(spark, pages, cold, extract_from_html=True)
+    for t in ("nodes", "edges"):
+        assert sorted(map(tuple, cat.read(spark, t).collect())) == sorted(
+            map(tuple, cold.read(spark, t).collect())
+        ), t
+    _assert_analytics_match_cold(spark, cat)
+
+
 def test_write_outside_refresh_recomputes_cold(spark, tmp_path):
     """A graph write that bypasses refresh_after_batch leaves the
     stored tables describing an older graph; the next refresh must
@@ -208,7 +242,6 @@ def test_write_outside_refresh_recomputes_cold(spark, tmp_path):
         spark,
         _text_pages(spark, 1, ["Beta is a Epsilon.", "Epsilon is part of Omega."]),
         cat,
-        graph_mode="mor",
     )
     refresh.refresh_after_batch(spark, _text_pages(spark, 2, ["Delta is a Zeta."]), cat)
     _assert_analytics_match_cold(spark, cat)

