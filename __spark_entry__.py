@@ -3,7 +3,7 @@
 ``entry(spark)`` runs the flagship concept-search (Q2) over the sf0.001
 documents table end-to-end (extraction -> graph -> search).
 
-``queries()`` maps each of the 108 ``kg_*`` keys to a Spark query over
+``queries()`` maps each of the 107 ``kg_*`` keys to a Spark query over
 an ``sf_dir`` of parquet tables: KG construction (mentions, pairs, PMI,
 triples, SVO frames), search and retrieval (concept, text, BM25,
 hybrid, evidence, neighbors, GraphRAG local/global/drift search and
@@ -2005,16 +2005,6 @@ def q_kg_maximal_matching(spark, sf_dir):
     return q.maximal_matching(pairs).orderBy("a_id", "b_id")
 
 
-def q_kg_taxonomy_reduction(spark, sf_dir):
-    """Transitive reduction audit of the is_a taxonomy
-    (queries.taxonomy_reduction): every direct edge with the minimum
-    alternative-chain length (2..4) that makes it redundant, NULL =
-    the edge is in the reduction — the cleanup dual of
-    kg_taxonomy_closure that strips the skip-level is_a assertions
-    extractors emit."""
-    return q.taxonomy_reduction(_isa_edges(spark, sf_dir), max_depth=4)
-
-
 def q_kg_centralization(spark, sf_dir):
     """Freeman degree centralization of the co-occurrence graph
     (queries.degree_centralization): 1.0 = one mega-hub (salt THAT
@@ -2523,7 +2513,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_vertex_cover": q_kg_vertex_cover,
         "kg_label_spreading": q_kg_label_spreading,
         "kg_reciprocity": q_kg_reciprocity,
-        "kg_taxonomy_reduction": q_kg_taxonomy_reduction,
         "kg_centralization": q_kg_centralization,
         "kg_topo_layers": q_kg_topo_layers,
         "kg_graph_sparsify": q_kg_graph_sparsify,
@@ -3863,18 +3852,6 @@ SELECT id AS concept_id, lb AS wl_label FROM wl3 ORDER BY concept_id""",
         "kg_vertex_cover": f"""WITH {PAIRS_CTE},{_matching_sql(8, final="SELECT id FROM (SELECT a_id AS id FROM mmat_8 UNION SELECT b_id FROM mmat_8) ORDER BY id")}""",
         "kg_label_spreading": f"""WITH {PAIRS_CTE},
 {_label_spreading_sql(5)}""",
-        # transitive reduction: min alternative chain = first hop +
-        # min closure depth (c3 = depths 1..3 -> chains 2..4)
-        "kg_taxonomy_reduction": f"""WITH {TRIPLES_CTE},
-{_ISA_CLOSURE_CTES},
-alt AS (SELECT e.desc_id AS child_id, c.anc_id AS parent_id,
-               CAST(MIN(c.depth) + 1 AS INT) AS redundant_via_depth
-        FROM isa e JOIN c3 c ON e.anc_id = c.desc_id
-        WHERE e.desc_id <> c.anc_id
-        GROUP BY e.desc_id, c.anc_id)
-SELECT i.desc_id AS child_id, i.anc_id AS parent_id, a.redundant_via_depth
-FROM isa i LEFT JOIN alt a ON i.desc_id = a.child_id AND i.anc_id = a.parent_id
-ORDER BY child_id, parent_id""",
         "kg_centralization": f"""WITH {PAIRS_CTE},
 cadj0 AS (SELECT DISTINCT a_id AS cid, b_id AS nbr_id FROM pairs UNION SELECT b_id, a_id FROM pairs),
 cadj AS (SELECT cid, nbr_id FROM cadj0 WHERE cid <> nbr_id),

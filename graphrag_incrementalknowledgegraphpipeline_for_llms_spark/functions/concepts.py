@@ -98,7 +98,7 @@ HTML_ENRICH_STRUCT = T.StructType(
 
 def _make_html_enrich_udf(extractor):
     """html->text + concept extraction FUSED into one Arrow pass: the
-    chained-UDF plan (extract_text_udf -> _enrich_udf) pays two
+    chained-UDF plan (an html->text UDF, then _enrich_udf) pays two
     JVM<->Python round trips per batch with the full text payload on
     the wire both times; fusing halves that and keeps one Python worker
     per task instead of two."""

@@ -4,11 +4,11 @@ re-expressed as one declarative Spark plan + catalog MERGEs).
 Stages (single extraction pass — the reference ran extraction twice per
 chunk, GraphRagJob.scala:288,307):
 
-  pages scan -> [incremental filter vs checkpoint] -> html->text
+  pages scan -> incremental filter vs checkpoint -> html->text
   -> chunks -> with_concepts (ONE Arrow UDF pass: concepts + evidence)
   -> mentions (explode)                     -> nodes/edges merge-on-read MERGE
   -> candidate pairs (array combinatorics)  -> deterministic scorer
-  -> triples [optional canonicalization]    -> typed edges MERGE
+  -> triples                                -> typed edges MERGE
   -> lineage + checkpoint rows
 
 Action budget (the driver-side job count is the fixed cost that
@@ -16,9 +16,8 @@ dominates small batches and is pure overhead at 100 TB):
   1 stats aggregation on the persisted enriched DF (page/mention
   counts, url ranges, max warc_ts — all in one job), then one write
   per output table.  Row counts for lineage come from parquet footers
-  (no Spark job).  When the incremental filter guarantees
-  batch-disjoint keys, mentions/triples use plain appends instead of
-  MERGE windows.
+  (no Spark job).  The incremental filter guarantees batch-disjoint
+  chunks, so mentions/triples are plain appends, not MERGE windows.
 
 Scale notes: the only wide operations are the MERGE anti-joins and the
 distinct over concepts; everything upstream is narrow per-partition
@@ -42,6 +41,8 @@ from ..sources.catalog import ParquetCatalog
 
 CHECKPOINT_TABLE = "checkpoints"
 LINEAGE_TABLE = "lineage"
+# the ``updated_at`` every edge row carries: fixed, so a rebuild of the
+# same pages writes the same rows
 DEFAULT_UPDATED_AT = datetime(2025, 1, 1, tzinfo=timezone.utc)
 
 
@@ -105,19 +106,24 @@ def run_pipeline(
     pages: DataFrame,
     catalog: ParquetCatalog,
     *,
-    incremental: bool = True,
     extract_from_html: bool = False,
-    alias_pairs: DataFrame | None = None,
-    updated_at=DEFAULT_UPDATED_AT,
     scan_partitions: int | None = None,
     epoch_id: int | None = None,
     extraction_strategy: str = "heuristic",
-    dedup_pages: bool = False,
-    url_dedup: bool = False,
     graph_mode: str = "mor",
-    svo: bool = False,
 ) -> PipelineResult:
-    """The extraction output is written once to a catalog stage table
+    """Add one batch of pages to the graph in ``catalog``.
+
+    Ingestion is always incremental: pages at or below the checkpoint
+    high-water mark (the newest ``max_warc_ts`` any batch committed)
+    are skipped, and so are re-crawls whose chunk is already a Chunk
+    node.  A rerun of the same batch therefore processes 0 pages and
+    leaves every table unchanged, and a rebuild is a build into an
+    empty catalog (no mark, no Chunk nodes: every page is new).
+    Because batches never repeat a chunk, ``mentions`` and ``triples``
+    take plain appends.
+
+    The extraction output is written once to a catalog stage table
     and re-read by every downstream consumer (columnar, pruned scans;
     the pattern a 100 TB pipeline uses between stages anyway).
 
@@ -145,7 +151,7 @@ def run_pipeline(
 
     # ---- incremental gate: only pages past the last checkpoint ts ----
     d = clock("scan_filter")
-    last_ts = _high_water_mark(catalog) if incremental else None
+    last_ts = _high_water_mark(catalog)
     if last_ts is not None:
         pages = pages.where(F.col("warc_ts") > F.lit(last_ts))
     # guarantee the UDF stage gets enough splits: small-file inputs
@@ -160,42 +166,11 @@ def run_pipeline(
         scan_partitions = spark.sparkContext.defaultParallelism * 2
     needed = ["url", "warc_ts"] + (["html"] if extract_from_html else ["text"])
     pages = pages.select(*[c for c in needed if c in pages.columns])
-    if url_dedup:
-        # URL-level dedup BEFORE extraction: collapse crawl-spelling
-        # variants (case/www/port/tracking-params/fragment/slash) of
-        # the same fetch, keeping the latest crawl.  Only
-        # (canonical_url, warc_ts, url) shuffles for winner election;
-        # page payloads ride the final semi-join once
-        # (functions/weburl.py).  This is distinct from dedup_pages
-        # (same BYTES under different urls) — url_dedup merges
-        # different SPELLINGS of the same url even when the re-crawl
-        # changed the bytes.
-        from ..functions import weburl
-
-        pages = weburl.dedup_by_canonical_url(pages).drop(
-            "canonical_url", "n_dups"
-        )
     if pages.rdd.getNumPartitions() < scan_partitions:
         # hash-partitioned on the url column itself, so the text path's
         # per-chunk distinct below (keyed on doc_id = url) reuses this
         # shuffle instead of adding one
         pages = pages.repartition(scan_partitions, "url")
-    if dedup_pages:
-        # content-level exact dedup BEFORE the (expensive) extraction
-        # stage: mirror-hosted identical payloads extract once.  Only
-        # (16-byte md5, url) crosses the shuffle; canonical survivor =
-        # min url (deterministic).  Same-url re-crawls are NOT handled
-        # here — the chunk-level anti-join + MERGE idempotency own
-        # that; this gate is for the same bytes under DIFFERENT urls,
-        # which nothing downstream would collapse (chunk_id hashes the
-        # url in).
-        payload = "html" if extract_from_html else "text"
-        winners = (
-            pages.select(F.md5(F.col(payload)).alias("_fp"), "url")
-            .groupBy("_fp")
-            .agg(F.min("url").alias("url"))
-        )
-        pages = pages.join(winners.select("url"), "url", "left_semi")
     d()
 
     # ---- one extraction pass ------------------------------------------------
@@ -216,7 +191,7 @@ def run_pipeline(
         enriched = None  # built below, after the incremental anti-join
 
     def _dedupe_known(df):
-        if not (incremental and catalog.exists("nodes")):
+        if not catalog.exists("nodes"):
             return df
         # the warc_ts high-water mark admits re-crawls of IDENTICAL
         # pages (chunk_id = sha256(url+text) ignores warc_ts); without
@@ -263,71 +238,20 @@ def run_pipeline(
     mentions = cf.mentions_from(enriched)
     candidates = cooccur.candidate_pairs(enriched)
     triples = scorer.triples_from(scorer.score_candidates(candidates))
-    if svo:
-        # OpenIE pattern path (functions/openie.py): case-preserving
-        # frame matches, both arguments entity-linked (full-lemma ->
-        # head backoff, Bloom-gated) against THIS batch's mention
-        # vocabulary, emitted in the same triples schema.  High
-        # precision (explicit lexical frame + both ends resolved), so
-        # confidence sits above the co-occurrence scorer's band.
-        from ..functions import openie
 
-        pattern = openie.link_heads(
-            openie.svo_extract(
-                enriched.select("chunk_id", "text"),
-                id_col="chunk_id",
-                preserve_case=True,
-            ),
-            mentions.select("lemma", "concept_id"),
-        )
-        svo_triples = pattern.where(F.col("subj_id") != F.col("obj_id")).select(
-            "subj_id",
-            # triples-table convention is the scorer's lowercase set
-            # (graph.sanitize_rel_col uppercases into edge types)
-            F.lower(F.col("predicate")).alias("predicate"),
-            "obj_id",
-            # 0.93: above every scorer band (0.5-0.9) and distinct from
-            # all of them, so provenance is readable off the table
-            F.lit(0.93).alias("confidence"),
-            F.substring(
-                F.concat_ws(" ", "subj_lemma", "predicate", "obj_lemma"), 1, 500
-            ).alias("evidence"),
-            F.col("id").alias("chunk_id"),
-        )
-        triples = triples.unionByName(svo_triples)
-    if alias_pairs is not None:
-        from ..operators import canonicalize
-
-        cmap = canonicalize.canonical_concepts(mentions, alias_pairs)
-        triples = canonicalize.rewrite_triples(triples, cmap)
-        triples = triples.persist()
-
-    # disjointness: with the incremental filter active, batches can
-    # never repeat a chunk -> plain appends for the flat tables
-    disjoint = incremental
     d = clock("materialize")
     prev_triples = catalog.count("triples")
     nodes = graph.chunk_nodes(enriched).unionByName(graph.concept_nodes(mentions))
 
+    # the incremental gate guarantees batch-disjoint chunks -> plain
+    # appends for the flat tables
     written: dict[str, int] = {}
 
     def write_mentions():
-        if disjoint:
-            written["mentions"] = catalog.append(spark, mentions, "mentions")
-        else:
-            catalog.merge_upsert(
-                spark, "mentions", mentions,
-                keys=["chunk_id", "concept_id", "lemma", "surface", "origin"],
-            )
+        written["mentions"] = catalog.append(spark, mentions, "mentions")
 
     def write_triples():
-        if disjoint:
-            written["triples"] = catalog.append(spark, triples, "triples")
-        else:
-            catalog.merge_upsert(
-                spark, "triples", triples,
-                keys=["subj_id", "predicate", "obj_id", "chunk_id"],
-            )
+        written["triples"] = catalog.append(spark, triples, "triples")
 
     def write_nodes():
         # this batch's nodes cover every edge endpoint (edges derive
@@ -351,24 +275,18 @@ def run_pipeline(
     n_pages = sum(r["chunk_cnt"] for r in part_stats)
     n_mentions = sum(r["mention_cnt"] or 0 for r in part_stats)
     max_ts = max((r["max_ts"] for r in part_stats), default=None)
-    n_triples = catalog.count("triples") - (prev_triples if disjoint else 0)
-    if not disjoint:
-        n_triples = catalog.count("triples")
+    n_triples = catalog.count("triples") - prev_triples
     d()
 
-    # phase 2: edges derive from the just-committed mentions/triples
-    # tables — re-reading ~tens of MB of columnar data beats
-    # re-running the 50-100x explode+score fan-out a second time
+    # phase 2: edges derive from the just-committed mentions/triples —
+    # re-reading ~tens of MB of columnar data beats re-running the
+    # 50-100x explode+score fan-out a second time.  An incremental
+    # snapshot read: only the data dirs this batch appended (Iceberg
+    # incremental scan), no join needed
     d = clock("graph_merge")
-    if disjoint:
-        # incremental snapshot read: only the data dirs this batch
-        # appended (Iceberg incremental scan) — no join needed
-        mentions_t = catalog.read_version_delta(spark, "mentions", written["mentions"])
-        triples_t = catalog.read_version_delta(spark, "triples", written["triples"])
-    else:
-        mentions_t = catalog.read(spark, "mentions")
-        triples_t = catalog.read(spark, "triples")
-    edges = graph.batch_edges(mentions_t, triples_t, updated_at)
+    mentions_t = catalog.read_version_delta(spark, "mentions", written["mentions"])
+    triples_t = catalog.read_version_delta(spark, "triples", written["triples"])
+    edges = graph.batch_edges(mentions_t, triples_t, DEFAULT_UPDATED_AT)
     graph.upsert_graph(
         spark, catalog, nodes=None, edges=edges,
         check_placeholders=False, edges_unique=True,
@@ -430,6 +348,4 @@ def run_pipeline(
     )
     d()
 
-    if alias_pairs is not None:
-        triples.unpersist()
     return PipelineResult(snapshot_id, n_pages, n_pages, n_mentions, n_triples, timings)

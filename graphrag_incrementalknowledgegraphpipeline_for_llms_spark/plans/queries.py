@@ -4382,61 +4382,6 @@ def reciprocity(edges: DataFrame) -> DataFrame:
     )
 
 
-def taxonomy_reduction(isa: DataFrame, max_depth: int = 4) -> DataFrame:
-    """Transitive REDUCTION of the is_a taxonomy, the cleanup dual of
-    :func:`taxonomy_closure`: drop every direct edge (a, b) that is
-    also implied by an alternative chain a -> x -> ... -> b of length
-    2..``max_depth`` — the redundant "skip-level" is_a assertions an
-    extractor emits when a page states both "X is a mammal" and "X is
-    an animal".  Keeping only the reduction makes rollups count each
-    mention once per path and renders the taxonomy as a clean layered
-    DAG.  On a DAG with the closure depth bound this is exactly the
-    standard transitive reduction; with extraction-noise cycles the
-    rule stays well-defined (an edge survives iff NO alternative
-    2..max_depth chain exists) and deterministic.
-
-    Returns (child_id, parent_id, redundant_via_depth): ALL direct
-    edges with the min alternative-chain length that condemns them
-    (NULL -> the edge is in the reduction), so the caller can either
-    filter ``redundant_via_depth IS NULL`` or audit what was cut.
-
-    Scale shape: one closure run (semi-naive, vocab-bound) + ONE
-    equi-join composing edge x closure + a left join back — all on
-    the concept-vocabulary relation, never the corpus."""
-    edges = (
-        isa.select(
-            F.col("child_id").cast("string").alias("child_id"),
-            F.col("parent_id").cast("string").alias("parent_id"),
-        )
-        .where(F.col("child_id") != F.col("parent_id"))
-        .distinct()
-    )
-    clo = taxonomy_closure(
-        edges.select(F.col("child_id"), F.col("parent_id")), max_depth=max_depth - 1
-    )
-    # alternative chains of length 2..max_depth: first hop a -> x,
-    # then a closure path x -> b of 1..max_depth-1 hops
-    alt = (
-        edges.select(F.col("child_id"), F.col("parent_id").alias("mid"))
-        .join(
-            clo.select(
-                F.col("desc_id").alias("mid"),
-                F.col("anc_id").alias("parent_id"),
-                "depth",
-            ),
-            "mid",
-        )
-        .where(F.col("child_id") != F.col("parent_id"))
-        .groupBy("child_id", "parent_id")
-        .agg((F.min("depth") + F.lit(1)).cast("int").alias("redundant_via_depth"))
-    )
-    return (
-        edges.join(alt, ["child_id", "parent_id"], "left")
-        .select("child_id", "parent_id", "redundant_via_depth")
-        .orderBy("child_id", "parent_id")
-    )
-
-
 def degree_centralization(und: DataFrame) -> DataFrame:
     """Freeman degree centralization: sum(max_degree - degree) over
     nodes, normalized by the star graph's value (n-1)(n-2) — 1.0 for
@@ -5399,8 +5344,8 @@ def typed_triangle_census(triples: DataFrame, max_degree: int = 128) -> DataFram
     triple (r1, r2, r3), how many x -[r1]-> m -[r2]-> y paths are
     CLOSED by a direct x -[r3]-> y edge — :func:`metapath_counts`'
     composition signal upgraded with the consequence edge.  The
-    (is_a, is_a, is_a) cell is taxonomy redundancy (what
-    taxonomy_reduction strips); (causes, is_a, causes) is causal
+    (is_a, is_a, is_a) cell is taxonomy redundancy (skip-level is_a
+    assertions); (causes, is_a, causes) is causal
     inheritance; a cell that composes often but NEVER closes is an
     inference opportunity, one that always closes is extractor
     redundancy.

@@ -5,11 +5,13 @@ streaming sink in streaming/incremental.py both call it).
 A 100-TB GraphRAG deployment does not rebuild its graph or its
 analytics when a new crawl lands; it runs, per batch:
 
-1. the extraction pipeline in incremental mode (``run_pipeline`` —
-   O(batch) regardless of graph size: the checkpoint high-water mark
-   skips already-seen pages and the graph merges land as merge-on-read
+1. the extraction pipeline (``run_pipeline``, which is always
+   incremental — O(batch) regardless of graph size: pages at or below
+   the checkpoint high-water mark are skipped, so a replayed batch
+   processes 0 pages, and the graph merges land as merge-on-read
    deltas, which measured 11.1 s against 36.8 s for a copy-on-write
-   merge of a +10% batch),
+   merge of a +10% batch; a rebuild is a refresh into an empty
+   catalog),
 2. the compaction policy: ``catalog.maybe_compact`` folds the
    ``nodes``/``edges`` deltas once a table holds more than the
    catalog's default bound of them — one rewrite per that many
@@ -111,9 +113,10 @@ def refresh_after_batch(
     **pipeline_kwargs,
 ) -> RefreshResult:
     """Ingest one page batch and refresh the stored graph analytics
-    incrementally.  See the module docstring for the regime; all
-    ``run_pipeline`` keywords (extract_from_html, url_dedup, epoch_id,
-    ...) pass through.
+    incrementally.  See the module docstring for the regime; the
+    ``run_pipeline`` keywords (``extract_from_html``,
+    ``scan_partitions``, ``epoch_id``, ``extraction_strategy``) pass
+    through.
 
     Scale shape: beyond the pipeline itself, the refresh adds one
     pre-batch edge snapshot read (column-pruned: 4 id/label columns),

@@ -72,7 +72,6 @@ def stream_pages_dir(
             spark,
             batch_df,
             catalog,
-            incremental=True,
             extract_from_html=extract_from_html,
             epoch_id=epoch_id,
         )

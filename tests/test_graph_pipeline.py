@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark import datagen
-from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import html as hf
+from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import concepts as cf
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.operators import graph
 from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import pipeline
 
@@ -209,10 +209,17 @@ class TestPipeline:
                 "mention_cnt", "triple_cnt"} <= cols
 
     def test_byte_identity_all_urls(self, spark):
-        """north_rule gate: html->text is byte-identical per url."""
+        """north_rule gate: html->text is byte-identical per url, in the
+        fused html->text->concepts pass that build and refresh run."""
         pages = datagen.pages_df(spark, 100)
-        report = hf.text_identity_report(pages)
-        assert report.where(~F.col("ok")).count() == 0
+
+        def sha_by_url(df):
+            return dict(df.select("url", F.sha2(F.col("text"), 256)).collect())
+
+        expected = sha_by_url(pages)
+        actual = sha_by_url(cf.enrich_pages_from_html(pages.select("url", "html")))
+        assert len(expected) == 100
+        assert actual == expected
 
     def test_chunk_ids_stable_sql_vs_python(self, spark):
         from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import (
@@ -253,92 +260,6 @@ class TestCatalogMaintenance:
         manifests = g.glob(os.path.join(catalog._tdir("t_exp"), "m*.json"))
         assert len(manifests) == 2
         assert catalog.read(spark, "t_exp").count() == 5  # current snapshot intact
-
-
-class TestDedupPages:
-    def test_mirrored_payloads_extract_once(self, spark, tmp_path):
-        """Identical payloads under different urls (mirror hosting)
-        collapse to the min-url copy before extraction; the resulting
-        graph is identical to running on the originals alone."""
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark import datagen
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import pipeline
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import (
-            ParquetCatalog,
-        )
-        from pyspark.sql import functions as F
-
-        pages = datagen.pages_df(spark, 20)
-        mirrored = pages.withColumn("url", F.concat(F.lit("zz-mirror/"), F.col("url")))
-
-        cat_a = ParquetCatalog(str(tmp_path / "a"))
-        ra = pipeline.run_pipeline(spark, pages, cat_a, extract_from_html=True)
-
-        cat_b = ParquetCatalog(str(tmp_path / "b"))
-        rb = pipeline.run_pipeline(
-            spark,
-            pages.unionByName(mirrored),
-            cat_b,
-            extract_from_html=True,
-            dedup_pages=True,
-        )
-        assert rb.pages == ra.pages == 20
-        for t in ["nodes", "edges", "triples"]:
-            a = sorted(tuple(r) for r in cat_a.read(spark, t).collect())
-            b = sorted(tuple(r) for r in cat_b.read(spark, t).collect())
-            assert a == b, t
-
-
-class TestUrlDedupInPipeline:
-    def test_spelling_variants_extract_once_latest_wins(self, spark, tmp_path):
-        """url_dedup=True collapses crawl-spelling variants of the same
-        fetch before extraction, keeping the LATEST crawl — the graph
-        equals running on just the winning spellings."""
-        from datetime import datetime, timezone
-
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.functions import purecore
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import pipeline
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.sources.catalog import (
-            ParquetCatalog,
-        )
-
-        def row(url, day, text):
-            return (
-                url,
-                datetime(2025, 1, day, tzinfo=timezone.utc),
-                purecore.render_html(text),
-                text,
-                "en",
-            )
-
-        schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-        # same canonical page crawled 3 ways; the day-3 re-crawl wins
-        variants = spark.createDataFrame(
-            [
-                row("https://example.com/p?utm_source=x", 1, "Apache Spark is a Query Engine."),
-                row("https://WWW.example.com/p", 3, "Apache Spark is a Data Pipeline."),
-                row("https://example.com/p/", 2, "Apache Spark is a Graph Database."),
-                row("https://example.com/other", 1, "Neural Network causes Language Model."),
-            ],
-            schema,
-        )
-        winners = spark.createDataFrame(
-            [
-                row("https://WWW.example.com/p", 3, "Apache Spark is a Data Pipeline."),
-                row("https://example.com/other", 1, "Neural Network causes Language Model."),
-            ],
-            schema,
-        )
-        cat_a = ParquetCatalog(str(tmp_path / "a"))
-        ra = pipeline.run_pipeline(
-            spark, variants, cat_a, extract_from_html=True, url_dedup=True
-        )
-        cat_b = ParquetCatalog(str(tmp_path / "b"))
-        rb = pipeline.run_pipeline(spark, winners, cat_b, extract_from_html=True)
-        assert ra.pages == rb.pages == 2
-        for t in ["nodes", "edges", "triples"]:
-            a = sorted(tuple(r) for r in cat_a.read(spark, t).collect())
-            b = sorted(tuple(r) for r in cat_b.read(spark, t).collect())
-            assert a == b, t
 
 
 class TestIntEncode:

@@ -3053,68 +3053,6 @@ class TestReciprocity:
         assert row["n_reciprocal"] == 0 and row["reciprocity"] == 0.0
 
 
-class TestTaxonomyReduction:
-    def _isa(self, spark, edges):
-        return spark.createDataFrame(edges, "child_id string, parent_id string")
-
-    def test_skip_level_edge_flagged(self, spark):
-        # x is_a mammal is_a animal, plus the redundant x is_a animal
-        edges = [("x", "mammal"), ("mammal", "animal"), ("x", "animal")]
-        got = {
-            (r["child_id"], r["parent_id"]): r["redundant_via_depth"]
-            for r in queries.taxonomy_reduction(self._isa(spark, edges)).collect()
-        }
-        assert got[("x", "animal")] == 2
-        assert got[("x", "mammal")] is None
-        assert got[("mammal", "animal")] is None
-
-    def test_min_alternative_depth(self, spark):
-        # a->b->c->d chain plus direct a->d (depth-3 alt) and a->c (depth-2)
-        edges = [
-            ("a", "b"), ("b", "c"), ("c", "d"), ("a", "d"), ("a", "c"),
-        ]
-        got = {
-            (r["child_id"], r["parent_id"]): r["redundant_via_depth"]
-            for r in queries.taxonomy_reduction(self._isa(spark, edges)).collect()
-        }
-        assert got[("a", "c")] == 2
-        # a->d has alt chains a->b->c->d (3) and a->c->d (2): min = 2
-        assert got[("a", "d")] == 2
-        assert got[("a", "b")] is None and got[("b", "c")] is None
-
-    def test_reduction_preserves_reachability(self, spark):
-        import random
-
-        rng = random.Random(9)
-        nodes = [f"n{i}" for i in range(14)]
-        # random DAG edges (i -> j only when i < j keeps it acyclic)
-        edges = sorted({
-            (nodes[min(a, b)], nodes[max(a, b)])
-            for a, b in (sorted(rng.sample(range(14), 2)) for _ in range(40))
-        })
-        rows = queries.taxonomy_reduction(self._isa(spark, edges), max_depth=14).collect()
-        kept = [(r["child_id"], r["parent_id"]) for r in rows if r["redundant_via_depth"] is None]
-
-        def reach(es):
-            adj = {}
-            for a, b in es:
-                adj.setdefault(a, set()).add(b)
-            out = set()
-            for s in {a for a, _ in es}:
-                seen, stack = set(), [s]
-                while stack:
-                    v = stack.pop()
-                    for nb in adj.get(v, ()):
-                        if nb not in seen:
-                            seen.add(nb)
-                            stack.append(nb)
-                out |= {(s, t) for t in seen}
-            return out
-
-        assert reach(kept) == reach(edges)
-        assert len(kept) < len(edges)  # something was actually cut
-
-
 class TestDegreeCentralization:
     def test_star_is_one(self, spark):
         star = [("hub", f"l{i}") for i in range(6)]

@@ -225,29 +225,6 @@ class TestPreserveCase:
         assert a == b
 
 
-class TestPipelineSvoStage:
-    def test_svo_flag_adds_linked_triples(self, spark, catalog):
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark import datagen
-        from graphrag_incrementalknowledgegraphpipeline_for_llms_spark.plans import pipeline
-
-        pages = datagen.pages_df(spark, 40)
-        base = pipeline.run_pipeline(spark, pages, catalog, incremental=False)
-        import shutil
-
-        shutil.rmtree(catalog.root, ignore_errors=True)
-        withsvo = pipeline.run_pipeline(
-            spark, pages, catalog, incremental=False, svo=True
-        )
-        assert withsvo.triples > base.triples
-        tri = catalog.read(spark, "triples")
-        svo_rows = tri.where(F.col("confidence") == 0.93)
-        assert svo_rows.count() > 0
-        # every SVO triple has both ends resolved and a known predicate
-        preds = {r.predicate for r in svo_rows.select("predicate").distinct().collect()}
-        assert preds <= {"is_a", "part_of", "causes", "synonym_of"}
-        assert svo_rows.where(F.col("subj_id").isNull() | F.col("obj_id").isNull()).count() == 0
-
-
 class TestStreamingSvo:
     def test_svo_extract_runs_in_structured_streaming(self, spark, tmp_path):
         # svo_extract is pure Catalyst (regexp frames + one generator),

@@ -53,9 +53,7 @@ def two_batch_state(spark, tmp_path_factory):
     )
 
     cold_cat = ParquetCatalog(str(root / "cold"))
-    pipeline.run_pipeline(
-        spark, pages, cold_cat, extract_from_html=True, incremental=False
-    )
+    pipeline.run_pipeline(spark, pages, cold_cat, extract_from_html=True)
     yield spark, inc_cat, cold_cat, r1, r2
     shutil.rmtree(str(root), ignore_errors=True)
 
@@ -306,9 +304,7 @@ def test_refresh_compacts_graph_deltas(spark, tmp_path, monkeypatch):
         assert len(cat._delta_entries(t)) <= 1, t
 
     cold = ParquetCatalog(str(tmp_path / "cold"))
-    pipeline.run_pipeline(
-        spark, functools.reduce(DataFrame.unionByName, batches), cold, incremental=False
-    )
+    pipeline.run_pipeline(spark, functools.reduce(DataFrame.unionByName, batches), cold)
     for t in ("nodes", "edges"):
         got = cat.read(spark, t).drop("_complete")
         assert sorted(map(tuple, got.collect())) == sorted(

@@ -10,7 +10,9 @@ Build the pyfiles zip, then submit:
 
 On a real cluster, swap the master URL; everything else is identical —
 the job only talks to the catalog directory (an object-store path with
-Iceberg in production).
+Iceberg in production).  Like every ingestion, a run is incremental:
+rerunning on the same catalog processes 0 pages; point ``--catalog`` at
+an empty directory to rebuild.
 """
 
 from __future__ import annotations
@@ -28,10 +30,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--pages", required=True, help="pages parquet path")
+    ap.add_argument(
+        "--pages", required=True, help="pages parquet path (url, warc_ts, html)"
+    )
     ap.add_argument("--catalog", required=True, help="catalog root dir")
-    ap.add_argument("--no-incremental", action="store_true")
-    ap.add_argument("--from-html", action="store_true", default=True)
     ap.add_argument("--scan-partitions", type=int, default=None)
     ap.add_argument(
         "--conf",
@@ -70,8 +72,7 @@ def main():
         spark,
         pages,
         ParquetCatalog(args.catalog),
-        incremental=not args.no_incremental,
-        extract_from_html=args.from_html,
+        extract_from_html=True,
         **kwargs,
     )
     dt = time.monotonic() - t0
